@@ -52,7 +52,21 @@ object Session {
       // near-dup queries. The rule only saves generating empty arrays.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+
+  /** Size of Spark's generated-class cache (`spark.sql.codegen.cache.
+    * maxEntries`, default 100). An always-on monitor replans the same
+    * DataFrames every micro-batch; one dark-rendezvous micro-batch alone
+    * generates ~150 distinct classes, so at 100 entries each class is
+    * evicted before the next batch asks for it and every batch compiles
+    * its whole plan again. 1,000 holds several batches' working set;
+    * only stages whose code inlines a per-batch literal (the hour span)
+    * still compile (StreamingGeoSpec's codegen guard). The cache is
+    * a static conf read once per JVM, on the driver and on every
+    * executor, so it belongs to session creation on any cluster, not to
+    * one local box; `tune()` cannot set it on an existing session. */
+  private val CodegenCacheEntries: Int = 1000
 
   /** Tune an externally-created session (Verify/Bench get theirs from the
     * driver contract) to engine defaults that are safe to set post-hoc. */

@@ -220,10 +220,12 @@ object Geo {
           pmod(xxhash64(col("user_id")), lit(saltBuckets.toLong)))
           .otherwise(0L).as("salt"))
     val probe9 = probe
-      // poison drop on the HOME cell, before neighborhood replication
-      .join(broadcast(hot.filter(col("__poison"))
-        .select(col("hour"), col("cy"), col("cx"))),
-        Seq("hour", "cy", "cx"), "left_anti")
+      // poison drop on the HOME cell, before neighborhood replication —
+      // the same broadcast(hot) as the other two joins, so the hot-cell
+      // aggregate runs once and all three reuse its exchange
+      .join(broadcast(hot), Seq("hour", "cy", "cx"), "left")
+      .filter(!coalesce(col("__poison"), lit(false)))
+      .drop("__hot", "__poison")
       .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
       .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
       .select(Seq(col("user_id").as("u1"), col("hour"),
@@ -1015,46 +1017,62 @@ object Geo {
       s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    val gaps = positioned(events)
-      .withColumn("plat", lag(col("lat_e6"), 1).over(w))
-      .withColumn("plon", lag(col("lon_e6"), 1).over(w))
-      .withColumn("pts", lag(col("ts"), 1).over(w))
-      .filter(col("plat").isNotNull)
-      .withColumn("gap_s",
-        unix_timestamp(col("ts")) - unix_timestamp(col("pts")))
-      .filter(col("gap_s") >= minGapS)
-      .select(col("user_id"),
-        date_format(col("pts"), "yyyy-MM-dd HH:mm:ss").as("gap_start"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("gap_end"),
-        col("gap_s"),
-        floor(unix_timestamp(col("pts")) / 3600L).as("h1"),
-        floor(unix_timestamp(col("ts")) / 3600L).as("h2"),
-        col("plat").as("sla"), col("plon").as("slo"),
-        col("lat_e6").as("ela"), col("lon_e6").as("elo"))
-    // r20: BOTH endpoints from ONE explode of a two-struct array —
-    // the earlier union-of-two-selections form evaluated the `gaps`
-    // subtree (the corpus scan + per-vessel window) once per side
-    // (2 Exchanges + 2 Windows in the before plan); same rows, one
-    // corpus pass.
-    val eps = gaps
-      .select(col("user_id"), col("gap_start"), col("gap_end"),
-        col("gap_s"), explode(array(
-          struct(lit(0L).as("ep"), col("h1").as("hour"),
-            col("sla").as("lat_e6"), col("slo").as("lon_e6")),
-          struct(lit(1L).as("ep"), col("h2").as("hour"),
-            col("ela").as("lat_e6"), col("elo").as("lon_e6")))).as("e"))
+    val legs = positioned(events)
+      .withColumn("t", unix_timestamp(col("ts")))
+      .withColumn("pt", lag(col("t"), 1).over(w))
+      .withColumn("pla", lag(col("lat_e6"), 1).over(w))
+      .withColumn("plo", lag(col("lon_e6"), 1).over(w))
+    val hits = bandedPairs(gapEndpoints(legs, minGapS, zones),
+      bandedPoints(events), radiusM,
+      carryProbeCols = Seq("gap_start", "gap_end", "gap_s", "ep", "zid"))
+    rendezvousAlerts(hits, zones)
+      .orderBy(col("user_id"), col("gap_start"), col("gap_end"),
+        col("nearby"), col("gap_s"), col("n_ends"), col("zone_id"),
+        col("min_m"))
+  }
+
+  /** The probe side of q283 and of its always-on form
+    * ([[graft.streaming.StreamingGeo.startDarkRendezvous]]): `legs`
+    * holds fixes (`user_id`, `t` in epoch seconds, `lat_e6`, `lon_e6`)
+    * next to their predecessor's (`pt`, `pla`, `plo`); every leg at
+    * least `minGapS` long is a dark gap, and becomes two endpoint rows
+    * (ep 0 = the gap start, 1 = the reappearance) with the endpoint's
+    * hour, band cell and zone. Both endpoints come from ONE explode of
+    * a two-struct array, so the legs subtree (a per-vessel window) is
+    * evaluated once, not once per endpoint side. Returns (user_id,
+    * gap_start, gap_end, gap_s, ep, hour, lat_e6, lon_e6, cy, cx, zid). */
+  private[graft] def gapEndpoints(legs: DataFrame, minGapS: Long,
+      zones: Seq[(Long, String, Seq[(Long, Long)])]): DataFrame = {
+    def fmt(c: Column): Column =
+      date_format(timestamp_seconds(c), "yyyy-MM-dd HH:mm:ss")
+    legs
+      .filter(col("pla").isNotNull && col("t") - col("pt") >= minGapS)
+      .select(col("user_id"), fmt(col("pt")).as("gap_start"),
+        fmt(col("t")).as("gap_end"), (col("t") - col("pt")).as("gap_s"),
+        explode(array(
+          struct(lit(0L).as("ep"), floor(col("pt") / 3600L).as("hour"),
+            col("pla").as("lat_e6"), col("plo").as("lon_e6")),
+          struct(lit(1L).as("ep"), floor(col("t") / 3600L).as("hour"),
+            col("lat_e6"), col("lon_e6")))).as("e"))
       .select(col("user_id"), col("gap_start"), col("gap_end"),
         col("gap_s"), col("e.ep").as("ep"), col("e.hour").as("hour"),
         col("e.lat_e6").as("lat_e6"), col("e.lon_e6").as("lon_e6"))
       .withColumn("cy", (col("lat_e6") + 5000L).divide(5000L).cast("long"))
       .withColumn("cx", (col("lon_e6") + 5000L).divide(5000L).cast("long"))
       .withColumn("zid", zoneIdExpr(col("lon_e6"), col("lat_e6"), zones))
-    val hits = bandedPairs(eps, bandedPoints(events), radiusM,
-        carryProbeCols = Seq("gap_start", "gap_end", "gap_s", "ep", "zid"))
-      .filter(col("u1") =!= col("u2"))
+  }
+
+  /** q283's roll-up of [[bandedPairs]] hits (endpoints from
+    * [[gapEndpoints]] as the probe, their payload carried): per (gap,
+    * nearby vessel), how many endpoints were near, the closest approach
+    * and the zone of the closest endpoint. Shared with the streaming
+    * form so the two emit the same rows. */
+  private[graft] def rendezvousAlerts(hits: DataFrame,
+      zones: Seq[(Long, String, Seq[(Long, Long)])]): DataFrame = {
     val zname = coalesce(zones.sortBy(_._1).map { case (id, nm, _) =>
       when(col("zone_id") === id, lit(nm)) } :+ lit("open_sea"): _*)
     hits
+      .filter(col("u1") =!= col("u2"))
       .groupBy(col("u1").as("user_id"), col("gap_start"), col("gap_end"),
         col("gap_s"), col("u2").as("nearby"))
       // argmin on the lexicographic struct: closest approach wins, a
@@ -1066,9 +1084,6 @@ object Geo {
       .select(col("user_id"), col("gap_start"), col("gap_end"),
         col("gap_s"), col("nearby"), col("n_ends"), col("zone_id"),
         col("zone_name"), col("__am").getField("m").as("min_m"))
-      .orderBy(col("user_id"), col("gap_start"), col("gap_end"),
-        col("nearby"), col("gap_s"), col("n_ends"), col("zone_id"),
-        col("min_m"))
   }
 
   /** Zone EXPOSURE — vessel-time per zone, measured on the RESAMPLED

@@ -2,11 +2,13 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.etl.Writers
 import graft.queries.Geo
@@ -305,16 +307,29 @@ object StreamingGeo {
     * keep ([[Geo.bandedPairs]], gap identity + endpoint zone carried
     * as inert probe payload — exactly the batch q283's shape).
     *
-    * Per batch: new gaps = consecutive-fix pairs of (previous last
-    * fix ∪ batch fixes) at least `minGapS` apart whose LATER fix is
-    * in this batch (intra-batch gaps included); their endpoints probe
-    * the index bounded to the ENDPOINT hour span (a gap-start hour
-    * reaches back up to the gap's length — size the retention horizon
-    * to the longest gap you want endpoint-paired; [[retainIndex]]
-    * prunes `last/` snapshots alongside `open/`). Alerts land under
-    * `alerts/batch=<id>` in the batch q283's exact output shape;
-    * index/occ partitions follow the [[start]] layout, so one outDir
-    * can serve this monitor and retention together.
+    * Per batch:
+    *   - the raw batch is cached, so the landed files are scanned once
+    *     (`numInputRows` counts each landed fix once);
+    *   - ONE per-vessel window over (previous last fix ∪ batch fixes)
+    *     puts each fix next to its predecessor and flags each vessel's
+    *     newest fix; it is cached and feeds both the gaps and the next
+    *     snapshot;
+    *   - new gaps = legs at least `minGapS` long whose LATER fix is in
+    *     this batch (intra-batch gaps included), two endpoint rows each
+    *     ([[Geo.gapEndpoints]], the batch q283's derivation);
+    *   - one tiny aggregate over the endpoints bounds the index/occ
+    *     reads to the ENDPOINT hour span (a gap-start hour reaches back
+    *     up to the gap's length — size the [[retainIndex]] horizon to
+    *     the longest gap you want endpoint-paired);
+    *   - alerts land under `alerts/batch=<id>` in the batch q283's
+    *     exact output shape ([[Geo.rendezvousAlerts]]); index/occ
+    *     partitions follow the [[start]] layout, so one outDir can
+    *     serve this monitor and retention together;
+    *   - the new `last/batch=<id>` snapshot lands, and every snapshot
+    *     older than the one this batch read is deleted (a crash replay
+    *     of this batch reads that one again).
+    * Persisted state is read with explicit schemas, so no read runs a
+    * footer-inference job.
     *
     * Contracts (the startEpisodes rules): arrival-order processing
     * (the late-data-correct history is the batch q283), hour-aligned
@@ -345,85 +360,57 @@ object StreamingGeo {
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         val indexDir = s"$outDir/index"
         val occDir = s"$outDir/occ"
+        val lastDir = s"$outDir/last"
         val ptCols = Seq("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx")
           .map(col)
-        val pts = points(batch).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val cached = collection.mutable.Buffer.empty[DataFrame]
+        def keep(df: DataFrame): DataFrame = {
+          cached += df.persist(StorageLevel.MEMORY_AND_DISK); df
+        }
         try {
+          val raw = keep(batch)
+          val pts = keep(points(raw))
           // previous per-vessel last-fix snapshot (newest id < bid —
           // a crash-replayed batch reads the state from BEFORE itself
           // and reproduces its own outputs, the open/ pattern)
-          val lastDir = new Path(s"$outDir/last")
-          val prevId =
-            if (fs.exists(lastDir))
-              fs.listStatus(lastDir).map(_.getPath.getName)
-                .filter(_.startsWith("batch="))
-                .map(_.stripPrefix("batch=").toLong)
-                .filter(_ < bid).sorted.lastOption
-            else None
+          val lastIds = snapshotIds(fs, lastDir)
+          val prevId = lastIds.filter(_ < bid).lastOption
           val prev: DataFrame = prevId match {
-            case Some(p) => spark.read.parquet(s"$outDir/last/batch=$p")
+            case Some(p) =>
+              spark.read.schema(LastSchema).parquet(s"$lastDir/batch=$p")
             case None => Seq.empty[(Long, Long, Long, Long, Long)]
-              .toDF("user_id", "t", "event_id", "lat_e6", "lon_e6")
+              .toDF(LastSchema.fieldNames.toIndexedSeq: _*)
           }
-          // gap detection over (previous last fix ∪ batch fixes) —
-          // the RAW fix sequence (q283 gaps are fix-level, not
-          // hour-representative); new gaps end at a batch fix
-          val bFix = Geo.positioned(batch)
+          // gap legs over (previous last fix ∪ batch fixes) — the RAW
+          // fix sequence (q283 gaps are fix-level, not hour-
+          // representative); the same window flags each vessel's newest
+          // fix for the next snapshot
+          val bFix = Geo.positioned(raw)
             .select(col("user_id"), unix_timestamp(col("ts")).as("t"),
               col("event_id"), col("lat_e6"), col("lon_e6"))
-          val uni = prev
-            .select(col("user_id"), col("t"), col("event_id"),
-              col("lat_e6"), col("lon_e6"))
-            .withColumn("from_state", lit(true))
-            .unionByName(bFix.withColumn("from_state", lit(false)))
           val wu = Window.partitionBy(col("user_id"))
             .orderBy(col("t"), col("event_id"))
-          val gaps = uni
+          val legs = keep(prev.withColumn("from_state", lit(true))
+            .unionByName(bFix.withColumn("from_state", lit(false)))
             .withColumn("pt", lag(col("t"), 1).over(wu))
             .withColumn("pla", lag(col("lat_e6"), 1).over(wu))
             .withColumn("plo", lag(col("lon_e6"), 1).over(wu))
-            .filter(col("pt").isNotNull && !col("from_state") &&
-              col("t") - col("pt") >= minGapS)
-            .select(col("user_id"),
-              date_format(timestamp_seconds(col("pt")),
-                "yyyy-MM-dd HH:mm:ss").as("gap_start"),
-              date_format(timestamp_seconds(col("t")),
-                "yyyy-MM-dd HH:mm:ss").as("gap_end"),
-              (col("t") - col("pt")).as("gap_s"),
-              floor(col("pt") / 3600L).as("h1"),
-              floor(col("t") / 3600L).as("h2"),
-              col("pla").as("sla"), col("plo").as("slo"),
-              col("lat_e6").as("ela"), col("lon_e6").as("elo"))
-          def endp(ep: Long, hc: String, lac: String,
-              loc: String): DataFrame =
-            gaps.select(col("user_id"), col("gap_start"), col("gap_end"),
-              col("gap_s"), lit(ep).as("ep"), col(hc).as("hour"),
-              col(lac).as("lat_e6"), col(loc).as("lon_e6"))
-          val eps = endp(0L, "h1", "sla", "slo")
-            .unionByName(endp(1L, "h2", "ela", "elo"))
-            .withColumn("cy",
-              (col("lat_e6") + 5000L).divide(5000L).cast("long"))
-            .withColumn("cx",
-              (col("lon_e6") + 5000L).divide(5000L).cast("long"))
-            .withColumn("zid",
-              Geo.zoneIdExpr(col("lon_e6"), col("lat_e6"), zones))
+            .withColumn("newest", lead(lit(true), 1).over(wu).isNull))
+          // new gaps end at a batch fix
+          val eps = Geo.gapEndpoints(legs.filter(!col("from_state")),
+            minGapS, zones)
           // index reads bounded to the ENDPOINT hour span (pairing
           // matches equal hours only); gap-start hours reach back, so
           // the span covers [oldest gap start, newest batch hour]
           val spanRow = eps.agg(min(col("hour")), max(col("hour"))).head
-          val span: Option[(Long, Long)] =
-            if (spanRow.isNullAt(0)) None
-            else Some((spanRow.getLong(0), spanRow.getLong(1)))
-          def inSpan(c: Column): Column = span match {
-            case Some((lo, hi)) => c.between(lo, hi)
-            case None           => lit(false)
-          }
+          def inSpan(c: Column): Column =
+            if (spanRow.isNullAt(0)) lit(false)
+            else c.between(spanRow.getLong(0), spanRow.getLong(1))
           val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
             .agg(count(lit(1)).as("n"))
           val earlier =
             if (fs.exists(new Path(indexDir)))
-              spark.read.parquet(indexDir)
+              spark.read.schema(IndexSchema).parquet(indexDir)
                 .filter(col("batch") < bid && inSpan(col("hour")))
                 .select(ptCols: _*)
             else pts.select(ptCols: _*).limit(0)
@@ -432,7 +419,7 @@ object StreamingGeo {
           val idxAll = earlier.unionByName(pts.select(ptCols: _*))
           val prevOcc =
             if (fs.exists(new Path(occDir)))
-              spark.read.parquet(occDir)
+              spark.read.schema(OccSchema).parquet(occDir)
                 .filter(col("batch") < bid && inSpan(col("hour")))
                 .select(col("hour"), col("cy"), col("cx"), col("n"))
             else occBatch.limit(0)
@@ -442,24 +429,9 @@ object StreamingGeo {
             .filter(col("occ") >
               math.min(hotOccupancy, maxCellOccupancy)))
           val hits = Geo.bandedPairs(eps, idxAll, radiusM, hotOccupancy,
-              saltBuckets, hot, maxCellOccupancy,
-              carryProbeCols =
-                Seq("gap_start", "gap_end", "gap_s", "ep", "zid"))
-            .filter(col("u1") =!= col("u2"))
-          val zname = coalesce(zones.sortBy(_._1).map { case (id, nm, _) =>
-            when(col("zone_id") === id, lit(nm)) } :+
-            lit("open_sea"): _*)
-          hits
-            .groupBy(col("u1").as("user_id"), col("gap_start"),
-              col("gap_end"), col("gap_s"), col("u2").as("nearby"))
-            .agg(count(lit(1)).as("n_ends"),
-              min(struct(col("m"), col("ep"), col("zid"))).as("__am"))
-            .withColumn("zone_id", col("__am").getField("zid"))
-            .withColumn("zone_name", zname)
-            .select(col("user_id"), col("gap_start"), col("gap_end"),
-              col("gap_s"), col("nearby"), col("n_ends"),
-              col("zone_id"), col("zone_name"),
-              col("__am").getField("m").as("min_m"))
+            saltBuckets, hot, maxCellOccupancy,
+            carryProbeCols = Seq("gap_start", "gap_end", "gap_s", "ep", "zid"))
+          Geo.rendezvousAlerts(hits, zones)
             .write.mode("overwrite")
             .option("compression", Writers.DefaultCompression)
             .parquet(s"$outDir/alerts/batch=$bid")
@@ -473,21 +445,47 @@ object StreamingGeo {
             .write.mode("overwrite")
             .option("compression", Writers.DefaultCompression)
             .parquet(s"$indexDir/batch=$bid")
-          uni
-            .withColumn("rn", row_number().over(
-              Window.partitionBy(col("user_id"))
-                .orderBy(col("t").desc, col("event_id").desc)))
-            .filter(col("rn") === 1)
-            .select(col("user_id"), col("t"), col("event_id"),
-              col("lat_e6"), col("lon_e6"))
+          legs.filter(col("newest"))
+            .select(LastSchema.fieldNames.toIndexedSeq.map(col): _*)
             .write.mode("overwrite")
             .option("compression", Writers.DefaultCompression)
-            .parquet(s"$outDir/last/batch=$bid")
-        } finally { pts.unpersist(); () }
+            .parquet(s"$lastDir/batch=$bid")
+          pruneSnapshots(fs, lastDir, lastIds, prevId)
+        } finally { cached.foreach(_.unpersist()) }
         ()
       }
       .start()
   }
+
+  /** Column layout of the persisted per-batch state, given on every read
+    * so a micro-batch never runs a footer-inference job to learn it:
+    * the (hour, cell) position index, its occupancy summaries (both
+    * with their `batch` partition column) and the last-fix snapshot. */
+  private def longs(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType)))
+  private val IndexSchema =
+    longs("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx", "batch")
+  private val OccSchema = longs("hour", "cy", "cx", "n", "batch")
+  private val LastSchema = longs("user_id", "t", "event_id", "lat_e6", "lon_e6")
+
+  /** Ids of the `<dir>/batch=<id>` state snapshots, ascending. */
+  private def snapshotIds(fs: FileSystem, dir: String): Seq[Long] = {
+    val d = new Path(dir)
+    if (!fs.exists(d)) Nil
+    else fs.listStatus(d).map(_.getPath.getName)
+      .filter(_.startsWith("batch="))
+      .map(_.stripPrefix("batch=").toLong).sorted.toSeq
+  }
+
+  /** Once a micro-batch has written its own snapshot, drop every
+    * snapshot older than `read`, the one it started from: the next
+    * batch reads this batch's snapshot, and a crash replay of this
+    * batch reads `read` again, so nothing older is ever read. Keeps
+    * state at two snapshots instead of one per batch forever. */
+  private def pruneSnapshots(fs: FileSystem, dir: String, ids: Seq[Long],
+      read: Option[Long]): Unit =
+    ids.filter(b => read.exists(b < _))
+      .foreach(b => fs.delete(new Path(s"$dir/batch=$b"), true))
 
   def start(spark: SparkSession, landingDir: String, outDir: String,
       radiusM: Long = 500L,
@@ -535,14 +533,14 @@ object StreamingGeo {
           val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
             .agg(count(lit(1)).as("n"))
           if (fs.exists(new Path(indexDir))) {
-            val earlier = spark.read.parquet(indexDir)
+            val earlier = spark.read.schema(IndexSchema).parquet(indexDir)
               .filter(col("batch") < bid && inSpan(col("hour")))
             // hot (port) cells from the INCREMENTAL per-batch occupancy
             // summaries — cell-grid-sized reads, so finding ports never
             // re-scans the whole position index each micro-batch
             val prevOcc =
               if (fs.exists(new Path(occDir)))
-                spark.read.parquet(occDir)
+                spark.read.schema(OccSchema).parquet(occDir)
                   .filter(col("batch") < bid && inSpan(col("hour")))
                   .select(col("hour"), col("cy"), col("cx"), col("n"))
               else occBatch.limit(0)
@@ -605,7 +603,8 @@ object StreamingGeo {
     * parquet SNAPSHOT per batch (`open/batch=<id>`, overwrite —
     * replay-idempotent exactly like the index partitions; a replayed
     * batch reads the snapshot from BEFORE itself and reproduces its
-    * own outputs bit for bit). Outputs: `closed/batch=<id>` (episodes
+    * own outputs bit for bit; older snapshots are deleted as soon as
+    * nothing can read them). Outputs: `closed/batch=<id>` (episodes
     * that ended, >= minHours only — q269's emission rule) and
     * `alerts/batch=<id>` (one row per episode at the moment it first
     * reaches minHours).
@@ -679,7 +678,7 @@ object StreamingGeo {
           // alert stream, the episode fold needs EVERY pair-hour)
           val idxAll =
             if (fs.exists(new Path(indexDir)))
-              spark.read.parquet(indexDir)
+              spark.read.schema(IndexSchema).parquet(indexDir)
                 .filter(col("batch") < bid && inSpan(col("hour")))
                 .select(ptCols: _*).unionByName(pts.select(ptCols: _*))
             else pts.select(ptCols: _*)
@@ -692,7 +691,7 @@ object StreamingGeo {
             .agg(count(lit(1)).as("n"))
           val prevOcc =
             if (fs.exists(new Path(occDir)))
-              spark.read.parquet(occDir)
+              spark.read.schema(OccSchema).parquet(occDir)
                 .filter(col("batch") < bid && inSpan(col("hour")))
                 .select(col("hour"), col("cy"), col("cx"), col("n"))
             else occBatch.limit(0)
@@ -713,17 +712,12 @@ object StreamingGeo {
           // the span aggregate's max, no extra pass
           val hwm: Option[Long] = span.map(_._2)
           // open-episode snapshot from BEFORE this batch (max id < bid)
-          val openDir = new Path(s"$outDir/open")
-          val prevId =
-            if (fs.exists(openDir))
-              fs.listStatus(openDir).map(_.getPath.getName)
-                .filter(_.startsWith("batch="))
-                .map(_.stripPrefix("batch=").toLong)
-                .filter(_ < bid).sorted.lastOption
-            else None
+          val openDir = s"$outDir/open"
+          val openIds = snapshotIds(fs, openDir)
+          val prevId = openIds.filter(_ < bid).lastOption
           val open: Dataset[EpState] = prevId match {
-            case Some(p) => spark.read
-              .parquet(s"$outDir/open/batch=$p").as[EpState]
+            case Some(p) => spark.read.schema(Encoders.product[EpState].schema)
+              .parquet(s"$openDir/batch=$p").as[EpState]
             case None => spark.emptyDataset[EpState]
           }
           val folded = open.groupByKey(s => (s.u1, s.u2))
@@ -782,6 +776,7 @@ object StreamingGeo {
             land("alert", "alerts")
             land("open", "open")
           } finally { routed.unpersist(); () }
+          pruneSnapshots(fs, openDir, openIds, prevId)
           // per-batch occupancy + index append, the start() layout
           occBatch.write.mode("overwrite")
             .option("compression", Writers.DefaultCompression)
@@ -814,43 +809,21 @@ object StreamingGeo {
     * as everywhere else in this family. Decisions read ONLY the
     * cell-grid-sized occ summaries, never the index itself.
     *
-    * [[startEpisodes]]' per-batch OPEN-STATE snapshots
-    * (`open/batch=<id>`) and [[startDarkRendezvous]]' last-fix
-    * snapshots (`last/batch=<id>`) are also pruned — a micro-batch
-    * reads only the newest snapshot before itself, and a crash replay
-    * reaches at most one batch back, so all but the newest
-    * `keepOpenSnapshots` are dead weight that would otherwise accrete
-    * one full state copy per batch forever. The closed/alerts OUTPUT logs are never
-    * touched (they are the product, not state). Maintenance op under
-    * the single-writer contract: run while the stream is down, like
-    * compact/vacuum. Returns the dropped index batch ids. */
+    * The monitors prune their own superseded state snapshots
+    * (`open/`, `last/`) as they go, and the closed/alerts OUTPUT logs
+    * are never touched (they are the product, not state). Maintenance
+    * op under the single-writer contract: run while the stream is
+    * down, like compact/vacuum. Returns the dropped index batch ids. */
   def retainIndex(spark: SparkSession, outDir: String,
-      horizonHours: Long, keepOpenSnapshots: Int = 4): Seq[Long] = {
+      horizonHours: Long): Seq[Long] = {
     require(horizonHours >= 1L, s"need horizonHours >= 1, got $horizonHours")
-    require(keepOpenSnapshots >= 2,
-      s"need keepOpenSnapshots >= 2 (newest + crash-replay fallback), " +
-        s"got $keepOpenSnapshots")
     val occDir = s"$outDir/occ"
     val fs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // state-snapshot pruning: episodes' open/ and dark-rendezvous'
-    // last/ both follow the newest-snapshot-read rule, so all but the
-    // newest keepOpenSnapshots are dead weight
-    Seq("open", "last").foreach { sub =>
-      val d = new Path(s"$outDir/$sub")
-      if (fs.exists(d))
-        fs.listStatus(d).map(_.getPath.getName)
-          .filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong)
-          .sorted.dropRight(keepOpenSnapshots)
-          .foreach(b =>
-            fs.delete(new Path(s"$outDir/$sub/batch=$b"), true))
-    }
     if (!fs.exists(new Path(occDir))) return Seq.empty
-    val byBatch = spark.read.parquet(occDir)
-      // the batch= partition column infers as int — cast, don't assume
-      .groupBy(col("batch").cast("long").as("b"))
-      .agg(max(col("hour")).cast("long").as("max_hour"))
+    val byBatch = spark.read.schema(OccSchema).parquet(occDir)
+      .groupBy(col("batch"))
+      .agg(max(col("hour")))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     if (byBatch.isEmpty) return Seq.empty
     val hwm = byBatch.map(_._2).max

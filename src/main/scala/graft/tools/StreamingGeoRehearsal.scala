@@ -2,6 +2,10 @@ package graft.tools
 
 import java.sql.Timestamp
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 import graft.core.Session
@@ -26,6 +30,11 @@ import graft.streaming.StreamingGeo.GeoEv
   * load) while the landed history grows — per-batch wall must stay
   * FLAT because the endpoint-span index reads are hour-bounded (the
   * same contract as the proximity monitor's batch-span reads).
+  *
+  * Every drain's line also carries the Spark jobs it ran and the
+  * classes it code-generated: once the generated-class cache holds a
+  * micro-batch's working set, a steady drain compiles only the stages
+  * that inline a per-batch literal.
   */
 object StreamingGeoRehearsal {
 
@@ -40,6 +49,11 @@ object StreamingGeoRehearsal {
     val spark: SparkSession = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
+    val jobs = new AtomicLong()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
 
     val landing = java.nio.file.Files
       .createTempDirectory("graft-sgeo-in").toString
@@ -75,7 +89,11 @@ object StreamingGeoRehearsal {
 
     (0 until waves).foreach { w =>
       land(w)
+      val (j0, c0) = (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
       val (_, t) = sec(drain())
+      Thread.sleep(500) // listener bus drains asynchronously
+      val nJobs = jobs.get - j0
+      val nCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       val idxBatches = Option(new java.io.File(s"$out/index")
         .listFiles()).map(_.count(_.getName.startsWith("batch=")))
         .getOrElse(0)
@@ -83,7 +101,7 @@ object StreamingGeoRehearsal {
         if (mode == "rendezvous")
           spark.read.parquet(s"$out/alerts").count()
         else -1L
-      println(f"""[scale] {"tool":"streaming_geo","mode":"$mode","wave":$w,"users":$users,"batch_sec":$t%.2f,"index_batches":$idxBatches,"alerts":$alerts}""")
+      println(f"""[scale] {"tool":"streaming_geo","mode":"$mode","wave":$w,"users":$users,"batch_sec":$t%.2f,"jobs":$nJobs,"compiles":$nCompiles,"index_batches":$idxBatches,"alerts":$alerts}""")
     }
     // retention: drop partitions past the pairing horizon, then one
     // more wave against the bounded table

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingGeo
@@ -488,7 +489,7 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
       s"missing=${(expect -- got).take(5)} extra=${(got -- expect).take(5)}")
   }
 
-  test("retainIndex prunes open-state snapshots to the newest K " +
+  test("startEpisodes keeps only the two newest open-state snapshots " +
       "(closed/alerts logs untouched) and the episode stream " +
       "continues correctly after pruning") {
     import spark.implicits._
@@ -510,20 +511,20 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
     val users = (1L to 100L)
     def wave(k: Long, hour: Long): Seq[GeoEv] =
       users.map(u => GeoEv(u * 10 + k, u, ts(60 + hour * 3600)))
-    (0 to 2).foreach { i => land(s"w$i.parquet", wave(i.toLong,
-      i.toLong)); drain() }
-    def openBatches(): Seq[Long] = new java.io.File(s"$out/open")
+    def batches(sub: String): Seq[Long] = new java.io.File(s"$out/$sub")
       .listFiles().map(_.getName).filter(_.startsWith("batch="))
       .map(_.stripPrefix("batch=").toLong).sorted.toSeq
-    assert(openBatches() == Seq(0L, 1L, 2L))
-    // huge horizon: no index batch is past it — only snapshots prune
-    val dropped = StreamingGeo.retainIndex(spark, out, 100000L,
-      keepOpenSnapshots = 2)
-    assert(dropped.isEmpty)
-    assert(openBatches() == Seq(1L, 2L))
-    // the stream keeps folding correctly against the kept snapshot
-    land("w3.parquet", wave(3L, 3L)); drain()
-    val openId = openBatches().max
+    // each batch drops the snapshots older than the one it read
+    val kept = (0 to 3).map { i =>
+      land(s"w$i.parquet", wave(i.toLong, i.toLong)); drain()
+      batches("open")
+    }
+    assert(kept == Seq(Seq(0L), Seq(0L, 1L), Seq(1L, 2L), Seq(2L, 3L)),
+      kept.toString)
+    // the output logs keep every batch's partition
+    assert(batches("closed") == (0L to 3L) &&
+      batches("alerts") == (0L to 3L))
+    val openId = batches("open").max
     val got = (spark.read.parquet(s"$out/open/batch=$openId")
       .filter(org.apache.spark.sql.functions.col("n_hours") >= 2L)
       .collect()
@@ -541,6 +542,100 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
     assert(batch.nonEmpty)
     assert(got == batch,
       s"missing=${(batch -- got).take(3)} extra=${(got -- batch).take(3)}")
+  }
+
+  /** A dark-rendezvous feed for the tests below: `users` vessels, wave
+    * `w` holding every vessel's fix at second 60 + 7,200·w, so with a
+    * one-hour `minGapS` every wave after the first closes one dark gap
+    * per vessel. `wave(w)` lands it; `drain()` runs the monitor to the
+    * end of what has landed and returns the query. */
+  private class RendezvousFeed(tag: String, users: Long = 300L) {
+    import spark.implicits._
+    val landing: String = java.nio.file.Files
+      .createTempDirectory(s"graft-$tag-in").toString
+    val out: String = java.nio.file.Files
+      .createTempDirectory(s"graft-$tag-out").toString
+    var landed: Seq[GeoEv] = Nil
+    def wave(w: Int): Seq[GeoEv] = {
+      val evs = (1L to users).map(u => GeoEv(u * 1000 + w, u,
+        ts(60 + w * 7200L)))
+      val tmp = java.nio.file.Files
+        .createTempDirectory(s"graft-$tag-wave").toString
+      evs.toDS().coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath,
+        java.nio.file.Paths.get(landing, s"w$w.parquet"))
+      landed ++= evs
+      evs
+    }
+    def drain(): org.apache.spark.sql.streaming.StreamingQuery = {
+      val q = StreamingGeo.startDarkRendezvous(spark, landing, out,
+        minGapS = 3600L)
+      q.awaitTermination()
+      q
+    }
+    def alerts(): Set[Seq[Any]] = spark.read.parquet(s"$out/alerts")
+      .drop("batch").collect().map(_.toSeq).toSet
+    def expected(): Set[Seq[Any]] = graft.queries.Geo
+      .darkRendezvous(landed.map(e => (e.event_id, e.user_id, e.ts))
+        .toDF("event_id", "user_id", "ts"), minGapS = 3600L)
+      .collect().map(_.toSeq).toSet
+    def snapshots(): Seq[Long] = new java.io.File(s"$out/last")
+      .listFiles().map(_.getName).filter(_.startsWith("batch="))
+      .map(_.stripPrefix("batch=").toLong).sorted.toSeq
+  }
+
+  test("startDarkRendezvous keeps only the two newest last-fix " +
+      "snapshots; replaying the last batch (its commit deleted) " +
+      "reproduces identical alerts") {
+    val f = new RendezvousFeed("drs")
+    (0 until 5).foreach { w => f.wave(w); f.drain() }
+    assert(f.snapshots() == Seq(3L, 4L), f.snapshots().toString)
+    val before = f.alerts()
+    assert(before.nonEmpty, "the feed produced no rendezvous — vacuous")
+    assert(before == f.expected())
+    // crash after batch 4's sink write, before its commit: the restart
+    // re-runs batch 4 from snapshot 3
+    val commits = new java.io.File(s"${f.out}/_checkpoint/commits")
+    Seq("4", ".4.crc").foreach(n => new java.io.File(commits, n).delete())
+    f.drain()
+    assert(new java.io.File(commits, "4").exists(), "batch 4 not replayed")
+    assert(f.alerts() == before)
+    assert(f.snapshots() == Seq(3L, 4L), f.snapshots().toString)
+  }
+
+  test("startDarkRendezvous scans each micro-batch's input once: " +
+      "numInputRows equals the fixes landed") {
+    val f = new RendezvousFeed("drn")
+    (0 until 2).foreach { w =>
+      val n = f.wave(w).size.toLong
+      val q = f.drain()
+      assert(q.lastProgress.numInputRows == n,
+        s"wave $w: ${q.lastProgress.numInputRows} input rows for $n fixes")
+    }
+  }
+
+  test("startDarkRendezvous steady state: a micro-batch after the " +
+      "first few compiles almost no new code (the codegen cache holds " +
+      "a batch's classes)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val f = new RendezvousFeed("drc")
+    // one always-on query, as deployed: a wave lands, the query drains it
+    val q = StreamingGeo.startDarkRendezvous(spark, f.landing, f.out,
+      minGapS = 3600L, trigger = Trigger.ProcessingTime(0L))
+    val compiles = try (0 until 5).map { w =>
+      val c0 = compiled
+      f.wave(w)
+      // an idle trigger that listed the landing dir just before the wave
+      // arrived can end processAllAvailable early: wait for the commit
+      while (!new java.io.File(s"${f.out}/_checkpoint/commits/$w").exists())
+        q.processAllAvailable()
+      compiled - c0
+    } finally q.stop()
+    info(s"classes compiled per micro-batch: $compiles")
+    assert(compiles.last < 25, s"compiles per micro-batch: $compiles")
   }
 
   test("startDarkGaps: cumulative stream output == batch q280 EXACTLY " +
