@@ -12,18 +12,20 @@ Sources of truth:
   - a graft.Verify dump dir (default /tmp/verify_out): registry size =
     query dirs, oracle coverage = oracle_sql.json entries, rows-only =
     diff (these are LOCAL facts: what exists, not what's verified)
-  - sbt's JUnit XML under target/test-reports: suite + test counts
+  - target/suite-counts.json, written by DocsGuardSpec: the suites and
+    tests on the test classpath (ScalaTest suites + ScalaCheck
+    Properties), the counts that spec checks README against
 
 Usage: python3 scripts/sync_docs.py [verifyDumpDir]
-Run after `sbt test` + `runMain graft.Verify ...`; rewrites the counts
-in place and prints what changed.
+Run after `sbt test` (or `sbt "testOnly graft.DocsGuardSpec"`) +
+`runMain graft.Verify ...`; rewrites the counts in place and prints what
+changed.
 """
 import glob
 import json
 import os
 import re
 import sys
-import xml.etree.ElementTree as ET
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,19 +54,16 @@ def driver_gate():
 
 
 def test_counts():
-    suites, tests = 0, 0
-    for p in glob.glob(os.path.join(REPO, "target/test-reports/TEST-*.xml")):
-        # skip stale XML from renamed/deleted suites (DocsGuardSpec
-        # applies the same filter via Class.forName)
-        cls = os.path.basename(p)[len("TEST-"):-len(".xml")]
-        src = os.path.join(REPO, "src/test/scala",
-                           cls.replace(".", "/") + ".scala")
-        if not os.path.exists(src):
-            continue
-        root = ET.parse(p).getroot()
-        suites += 1
-        tests += int(root.get("tests", 0))
-    return suites, tests
+    """(suites, tests) DocsGuardSpec derived from the test classpath and
+    wrote to target/suite-counts.json — the same counts it checks
+    README against."""
+    path = os.path.join(REPO, "target/suite-counts.json")
+    if not os.path.exists(path):
+        sys.exit("no target/suite-counts.json - run "
+                 "`sbt \"testOnly graft.DocsGuardSpec\"` first")
+    with open(path) as f:
+        d = json.load(f)
+    return d["suites"], d["tests"]
 
 
 def patch(path, subs):

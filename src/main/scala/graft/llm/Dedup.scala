@@ -175,7 +175,7 @@ object Dedup {
     * semantics, pinned equivalent in FnsSpec/DedupSpec).
     *
     * The self-join is left to the planner (SortMergeJoin): a
-    * shuffle_hash hint measures ~15% faster at sf0.1 (DiagJaccard), but
+    * shuffle_hash hint measured ~15% faster at sf0.1 (warm, one box), but
     * SHJ's build side doesn't spill — on a 100 TB index one fat
     * partition would OOM where SMJ degrades to disk. Deliberate choice
     * of robustness over the local win.

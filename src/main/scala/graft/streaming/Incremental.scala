@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -8,8 +8,8 @@ import graft.etl.{Readers, SchemaOptimizer, Writers}
 
 /** The streaming successor of the reference's per-day ingest+preprocess
   * loop (SURVEY.md §3.2/§7.1 item 9): a Structured Streaming file source
-  * watches the landing prefix the Ingestor writes to, and every
-  * micro-batch runs the SchemaOptimizer pipeline incrementally —
+  * ([[MicroBatch]]) watches the landing prefix the Ingestor writes to,
+  * and every micro-batch runs the SchemaOptimizer pipeline incrementally —
   * multi-token null normalization, duplicate-column drop, date parsing,
   * downcasts, quarantine split — appending to an optimized parquet table
   * plus a quarantine audit table.
@@ -35,27 +35,17 @@ object Incremental {
       dateCols: Seq[String] = Seq(),
       dropPattern: Option[String] = Some(".*_ar$"),
       checkpoint: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val stream = spark.readStream
-      .option("header", "true")
-      .schema(schema)
-      .csv(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation",
-        checkpoint.getOrElse(s"$outDir/_checkpoint"))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cleaned = Readers.normalizeAllNullMarkers(batch)
-        val (optimized, quarantined) =
-          SchemaOptimizer.optimize(cleaned, dropPattern, dateCols)
-        optimized.write.mode("append")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/optimized")
-        quarantined.write.mode("append")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/quarantine")
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "csv"),
+        checkpoint.getOrElse(s"$outDir/_checkpoint"), trigger) { b =>
+      val cleaned = Readers.normalizeAllNullMarkers(b.df)
+      val (optimized, quarantined) =
+        SchemaOptimizer.optimize(cleaned, dropPattern, dateCols)
+      optimized.write.mode("append")
+        .option("compression", Writers.DefaultCompression)
+        .parquet(s"$outDir/optimized")
+      quarantined.write.mode("append")
+        .option("compression", Writers.DefaultCompression)
+        .parquet(s"$outDir/quarantine")
+    }
 }

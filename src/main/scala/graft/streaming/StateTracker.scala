@@ -161,17 +161,11 @@ object StateTracker {
       outDir: String, idleMs: Long, watermarkDelay: String = "10 seconds",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[TrackEv].schema)
-      .parquet(landingDir)
+    val evs = MicroBatch.source(spark, landingDir,
+        Encoders.product[TrackEv].schema)
       .withWatermark("ts", watermarkDelay)
       .as[TrackEv]
-    runsEvicting(evs, idleMs).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .format("parquet")
-      .option("path", s"$outDir/runs")
-      .start()
+    MicroBatch.appendFiles(runsEvicting(evs, idleMs),
+      s"$outDir/_checkpoint", trigger, s"$outDir/runs")
   }
 }

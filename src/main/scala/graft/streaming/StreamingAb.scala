@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigger}
 
-import graft.etl.Writers
 import graft.queries.Advanced
 
 /** Always-on A/B experiment monitor — the streaming form of the batch
@@ -86,25 +85,14 @@ object StreamingAb {
       conversion: String = "purchase",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[AbEv].schema)
-      .parquet(landingDir)
+    val evs = MicroBatch.source(spark, landingDir,
+        Encoders.product[AbEv].schema)
       .as[AbEv]
-    deltas(evs, conversion).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[AbDelta], bid: Long) =>
-        batch.write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/deltas/batch=$bid")
-        Advanced.zFromCounts(countsFrom(spark, s"$outDir/deltas"))
-          .withColumn("batch_id", lit(bid))
-          .coalesce(1).write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/readouts/batch=$bid")
-        ()
-      }
-      .start()
+    MicroBatch.run(deltas(evs, conversion), s"$outDir/_checkpoint",
+        trigger) { b =>
+      b.write(b.df, s"$outDir/deltas")
+      b.write(Advanced.zFromCounts(countsFrom(spark, s"$outDir/deltas"))
+        .withColumn("batch_id", lit(b.id)).coalesce(1), s"$outDir/readouts")
+    }
   }
 }

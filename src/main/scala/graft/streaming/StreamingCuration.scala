@@ -189,8 +189,7 @@ object StreamingCuration {
       Some(spark.table(table))
     } else {
       val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) Some(spark.read.parquet(path)) else None
+      if (fsOf(spark, p).exists(p)) Some(spark.read.parquet(path)) else None
     }
 
   def start(
@@ -207,63 +206,48 @@ object StreamingCuration {
     val trainFpTbl = stateTable(stateDir, "train_fp")
     val testDocsTbl = stateTable(stateDir, "test_docs")
     val buckets = pinnedBuckets(spark, stateDir)
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // split + fingerprint computed ONCE per batch, reused across the
-        // probe, retro-probe, and both state appends
-        val t = batch.select(
-            col("doc_id"), Curation.splitCol.as("split"),
-            TextOps.fingerprint(col("text")).as("fp"))
-          .localCheckpoint(true)
-        val newTrain = t.filter(col("split") === "train")
-          .select(col("fp")).distinct()
-        val newTest = t.filter(col("split") === "test")
-          .select(col("doc_id"), col("fp"))
-        // new test docs vs train history and vs this batch's own train
-        // fps — separate probes keep the stored side's bucketing live
-        // (duplicate hits are fine: the fold distinct-counts doc_id)
-        val contStored = readState(spark, trainFpTbl, trainFpDir)
-          .map(st => newTest.join(st, Seq("fp"), "left_semi"))
-        val contBatch = newTest.join(newTrain, Seq("fp"), "left_semi")
-        // new train fingerprints vs already-stored test docs (late train)
-        val contLate = readState(spark, testDocsTbl, testDocsDir)
-          .map(_.join(newTrain, Seq("fp"), "left_semi"))
-        // state appends FIRST, then the distinct-folded contaminated
-        // output, then the additive mixture counts LAST: if anything up
-        // to the mixture write fails (including an append racing a
-        // compaction), the checkpoint replay re-appends rows that every
-        // downstream fold distinct-counts away — and the one sink whose
-        // fold is NOT idempotent (mixture sums) runs only once, on the
-        // attempt that reaches it. Probing after the append is sound:
-        // the extra self-hits it can surface are exactly contBatch's,
-        // and the fold distinct-counts doc_id.
-        appendState(newTrain, trainFpTbl, trainFpDir, "fp", buckets)
-        appendState(newTest, testDocsTbl, testDocsDir, "fp", buckets)
-        (Seq(contBatch) ++ contStored ++ contLate)
-          .reduce(_ unionByName _)
-          .select(col("doc_id"))
-          .write.mode("append")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/contaminated")
-        Curation.mixtureCounts(batch, rates, defaultRate)
-          .write.mode("append")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/mixture")
-        // drop the batch snapshot's persisted RDD before the closure
-        // returns — in always-on mode an unreleased localCheckpoint pins
-        // one block set PER MICRO-BATCH (the r9 leak class; Bench fails
-        // it loud for registry queries, this is the streaming analog)
-        t.unpersist()
-        graft.llm.Dedup.checkpointRdd(t)
-          .foreach(_.unpersist(blocking = false))
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      // split + fingerprint computed ONCE per batch, reused across the
+      // probe, retro-probe, and both state appends
+      val t = b.pin(b.df.select(
+          col("doc_id"), Curation.splitCol.as("split"),
+          TextOps.fingerprint(col("text")).as("fp")))
+      val newTrain = t.filter(col("split") === "train")
+        .select(col("fp")).distinct()
+      val newTest = t.filter(col("split") === "test")
+        .select(col("doc_id"), col("fp"))
+      // new test docs vs train history and vs this batch's own train
+      // fps — separate probes keep the stored side's bucketing live
+      // (duplicate hits are fine: the fold distinct-counts doc_id)
+      val contStored = readState(spark, trainFpTbl, trainFpDir)
+        .map(st => newTest.join(st, Seq("fp"), "left_semi"))
+      val contBatch = newTest.join(newTrain, Seq("fp"), "left_semi")
+      // new train fingerprints vs already-stored test docs (late train)
+      val contLate = readState(spark, testDocsTbl, testDocsDir)
+        .map(_.join(newTrain, Seq("fp"), "left_semi"))
+      // state appends FIRST, then the distinct-folded contaminated
+      // output, then the additive mixture counts LAST: if anything up
+      // to the mixture write fails (including an append racing a
+      // compaction), the checkpoint replay re-appends rows that every
+      // downstream fold distinct-counts away — and the one sink whose
+      // fold is NOT idempotent (mixture sums) runs only once, on the
+      // attempt that reaches it. Probing after the append is sound:
+      // the extra self-hits it can surface are exactly contBatch's,
+      // and the fold distinct-counts doc_id.
+      appendState(newTrain, trainFpTbl, trainFpDir, "fp", buckets)
+      appendState(newTest, testDocsTbl, testDocsDir, "fp", buckets)
+      (Seq(contBatch) ++ contStored ++ contLate)
+        .reduce(_ unionByName _)
+        .select(col("doc_id"))
+        .write.mode("append")
+        .option("compression", Writers.DefaultCompression)
+        .parquet(s"$outDir/contaminated")
+      Curation.mixtureCounts(b.df, rates, defaultRate)
+        .write.mode("append")
+        .option("compression", Writers.DefaultCompression)
+        .parquet(s"$outDir/mixture")
+    }
   }
 
   /** Streaming N-GRAM decontamination — the q77 semantics incrementally
@@ -298,45 +282,33 @@ object StreamingCuration {
     val trainGramTbl = stateTable(stateDir, "train_grams")
     val testGramTbl = stateTable(stateDir, "test_grams")
     val buckets = pinnedBuckets(spark, stateDir)
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val grams = graft.llm.Curation.gramKeys(batch, n).localCheckpoint(true)
-        val newTrain = grams.filter(col("split") === "train")
-          .select(col("k")).distinct()
-        val newTest = grams.filter(col("split") === "test")
-          .select(col("doc_id"), col("k"))
-        // forward probes: vs stored train grams (bucketed side stays
-        // exchange-free) and vs this batch's own train grams
-        val hitsStored = readState(spark, trainGramTbl, trainGramDir)
-          .map(st => newTest.join(st, Seq("k"), "left_semi"))
-        val hitsBatch = newTest.join(newTrain, Seq("k"), "left_semi")
-        // retro-probe: new train grams vs already-stored test grams
-        val hitsLate = readState(spark, testGramTbl, testGramDir)
-          .map(_.join(newTrain, Seq("k"), "left_semi"))
-        // appends before the hits write (see start(): replays after a
-        // loud append-race failure re-append rows the distinct folds
-        // ignore; self-hits surfaced by probing post-append are exactly
-        // hitsBatch's pairs)
-        appendState(newTrain, trainGramTbl, trainGramDir, "k", buckets)
-        appendState(newTest, testGramTbl, testGramDir, "k", buckets)
-        (Seq(hitsBatch) ++ hitsStored ++ hitsLate)
-          .reduce(_ unionByName _)
-          .write.mode("append")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/gram_hits")
-        // release the per-batch snapshot (see start(): always-on mode
-        // otherwise pins one block set per micro-batch)
-        grams.unpersist()
-        graft.llm.Dedup.checkpointRdd(grams)
-          .foreach(_.unpersist(blocking = false))
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      val grams = b.pin(Curation.gramKeys(b.df, n))
+      val newTrain = grams.filter(col("split") === "train")
+        .select(col("k")).distinct()
+      val newTest = grams.filter(col("split") === "test")
+        .select(col("doc_id"), col("k"))
+      // forward probes: vs stored train grams (bucketed side stays
+      // exchange-free) and vs this batch's own train grams
+      val hitsStored = readState(spark, trainGramTbl, trainGramDir)
+        .map(st => newTest.join(st, Seq("k"), "left_semi"))
+      val hitsBatch = newTest.join(newTrain, Seq("k"), "left_semi")
+      // retro-probe: new train grams vs already-stored test grams
+      val hitsLate = readState(spark, testGramTbl, testGramDir)
+        .map(_.join(newTrain, Seq("k"), "left_semi"))
+      // appends before the hits write (see start(): replays after a
+      // loud append-race failure re-append rows the distinct folds
+      // ignore; self-hits surfaced by probing post-append are exactly
+      // hitsBatch's pairs)
+      appendState(newTrain, trainGramTbl, trainGramDir, "k", buckets)
+      appendState(newTest, testGramTbl, testGramDir, "k", buckets)
+      (Seq(hitsBatch) ++ hitsStored ++ hitsLate)
+        .reduce(_ unionByName _)
+        .write.mode("append")
+        .option("compression", Writers.DefaultCompression)
+        .parquet(s"$outDir/gram_hits")
+    }
   }
 
   /** Streaming SEMANTIC decontamination — the q105 semantics
@@ -376,54 +348,41 @@ object StreamingCuration {
     val testTbl = stateTable(stateDir, "test_vecs")
     val buckets = pinnedBuckets(spark, stateDir)
     val cb = spark.read.parquet(codebookDir).select(col("cell"), col("cv"))
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.llm.Similarity
-        // assign + split computed ONCE per batch, reused by both
-        // probes, the retro-probe, and both state appends
-        val t = Similarity.ivfAssign(cb,
-            batch.select(col("vec_id"),
-              col("embedding").cast("array<double>").as("v")),
-            probes = 1)
-          .select(col("cell"), col("vec_id"), col("v"),
-            Similarity.vecSplitCol.as("split"))
-          .localCheckpoint(true)
-        val newTrain = t.filter(col("split") === "train")
-          .select(col("cell"), col("vec_id").as("tid"), col("v").as("tv"))
-        val newTest = t.filter(col("split") === "test")
-          .select(col("cell"), col("vec_id"), col("v"))
-        val sim = Similarity.cosine(col("v"), col("tv"))
-        def hits(test: DataFrame, train: DataFrame): DataFrame =
-          test.join(train, Seq("cell"))
-            .filter(sim >= minCos)
-            .select(col("vec_id"), col("tid"), sim.as("sim"))
-        val hitsStored = readState(spark, trainTbl, trainDir)
-          .map(st => hits(newTest, st))
-        val hitsBatch = hits(newTest, newTrain)
-        val hitsLate = readState(spark, testTbl, testDir)
-          .map(st => hits(st, newTrain))
-        // appends first (see start(): a replay after an append-race
-        // failure re-appends rows the distinct fold ignores)
-        appendState(newTrain, trainTbl, trainDir, "cell", buckets)
-        appendState(newTest, testTbl, testDir, "cell", buckets)
-        (Seq(hitsBatch) ++ hitsStored ++ hitsLate)
-          .reduce(_ unionByName _)
-          .write.mode("append")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/sem_hits")
-        // release the per-batch snapshot (see start(): always-on mode
-        // otherwise pins one block set per micro-batch)
-        t.unpersist()
-        graft.llm.Dedup.checkpointRdd(t)
-          .foreach(_.unpersist(blocking = false))
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      import graft.llm.Similarity
+      // assign + split computed ONCE per batch, reused by both
+      // probes, the retro-probe, and both state appends
+      val t = b.pin(Similarity.ivfAssign(cb,
+          b.df.select(col("vec_id"),
+            col("embedding").cast("array<double>").as("v")),
+          probes = 1)
+        .select(col("cell"), col("vec_id"), col("v"),
+          Similarity.vecSplitCol.as("split")))
+      val newTrain = t.filter(col("split") === "train")
+        .select(col("cell"), col("vec_id").as("tid"), col("v").as("tv"))
+      val newTest = t.filter(col("split") === "test")
+        .select(col("cell"), col("vec_id"), col("v"))
+      val sim = Similarity.cosine(col("v"), col("tv"))
+      def hits(test: DataFrame, train: DataFrame): DataFrame =
+        test.join(train, Seq("cell"))
+          .filter(sim >= minCos)
+          .select(col("vec_id"), col("tid"), sim.as("sim"))
+      val hitsStored = readState(spark, trainTbl, trainDir)
+        .map(st => hits(newTest, st))
+      val hitsBatch = hits(newTest, newTrain)
+      val hitsLate = readState(spark, testTbl, testDir)
+        .map(st => hits(st, newTrain))
+      // appends first (see start(): a replay after an append-race
+      // failure re-appends rows the distinct fold ignores)
+      appendState(newTrain, trainTbl, trainDir, "cell", buckets)
+      appendState(newTest, testTbl, testDir, "cell", buckets)
+      (Seq(hitsBatch) ++ hitsStored ++ hitsLate)
+        .reduce(_ unionByName _)
+        .write.mode("append")
+        .option("compression", Writers.DefaultCompression)
+        .parquet(s"$outDir/sem_hits")
+    }
   }
 
   /** Accumulated per-test-vector semantic contamination — equal to the
@@ -565,8 +524,7 @@ object StreamingCuration {
     */
   def ngramContaminationTotals(spark: SparkSession, stateDir: String,
       outDir: String): DataFrame = {
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, new Path(stateDir))
     val nTest = spark.read.parquet(s"$stateDir/test_grams")
       .agg(countDistinct(col("doc_id")).as("n_test"))
     val hitsDir = s"$outDir/gram_hits"
@@ -587,8 +545,7 @@ object StreamingCuration {
     */
   def contaminationCounts(spark: SparkSession, stateDir: String,
       outDir: String): DataFrame = {
-    val fs = new Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, new Path(stateDir))
     // distinct, not count(1): a batch replayed after an append-race
     // failure re-appends its test docs, and n_test must not inflate
     val nTest = spark.read.parquet(s"$stateDir/test_docs")

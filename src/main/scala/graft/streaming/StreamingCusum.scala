@@ -168,7 +168,8 @@ object StreamingCusum {
     m
   }
 
-  /** File-landing wiring (the StreamingTrend.startLevels shape):
+  /** File-landing wiring ([[MicroBatch.appendFiles]], the
+    * StreamingTrend.startLevels shape):
     * parquet event drops under `landingDir` stream through [[alarms]]
     * into `outDir/cusum`, exactly-once per file via the checkpoint. */
   def start(spark: SparkSession, landingDir: String, baselinePath: String,
@@ -176,17 +177,11 @@ object StreamingCusum {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
     val base = readBaseline(spark, baselinePath)
-    val evs = spark.readStream
-      .schema(Encoders.product[CusumEv].schema)
-      .parquet(landingDir)
+    val evs = MicroBatch.source(spark, landingDir,
+        Encoders.product[CusumEv].schema)
       .withWatermark("ts", watermarkDelay)
       .as[CusumEv]
-    alarms(evs, base, idleMs).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .format("parquet")
-      .option("path", s"$outDir/cusum")
-      .start()
+    MicroBatch.appendFiles(alarms(evs, base, idleMs),
+      s"$outDir/_checkpoint", trigger, s"$outDir/cusum")
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -14,10 +15,10 @@ import graft.llm.Dedup
   * Every micro-batch of new documents is MinHash-signed and banded ONCE
   * (map-side), probes the persisted corpus band index with the
   * (band, band_hash) equi-join for near-dup candidates against
-  * everything ingested before it, then appends its own bands to the
-  * index. The corpus is never re-signed — per-batch work is
-  * proportional to the batch, the historical index is only ever read
-  * and appended.
+  * everything ingested before it, then lands its own bands as the
+  * index's `batch=<id>` partition. The corpus is never re-signed —
+  * per-batch work is proportional to the batch, the historical index
+  * is only ever read and extended.
   *
   * At 100 TB the index parquet is partitioned/bucketed by band_hash so
   * the probe join co-locates — `buckets > 0` lands EXACTLY that layout
@@ -42,7 +43,7 @@ object StreamingDedup {
     * Plain-directory layout stays the default (buckets = 0): bucket
     * specs live in the session catalog (the PairStore caveat — a
     * warehouse deployment makes them durable across sessions), and
-    * [[ensureIdx]] re-registers a prior session's partitions on
+    * [[StoredIndex]] re-registers a prior session's partitions on
     * first touch. Writes keep the replay-idempotence contract: one
     * `batch=<id>` partition per micro-batch, a replayed batch
     * REPLACES its own partition, probes read only `batch < bid`.
@@ -51,36 +52,15 @@ object StreamingDedup {
     * (32 here — the PairStore.NumBuckets convention). With FEWER
     * buckets than the session's partitions the planner anchors the
     * join's co-partitioning at the larger count and re-shuffles the
-    * stored side anyway (verified in DiagBucketedProbe: 8 buckets
-    * under a 32-partition session → `Exchange hashpartitioning(g, 32)`
-    * ABOVE the bucketed scan; 32 buckets → no stored-side exchange). */
+    * stored side anyway (measured, SCALE.md r19: 8 buckets under a
+    * 32-partition session → `Exchange hashpartitioning(g, 32)` ABOVE
+    * the bucketed scan; 32 buckets → no stored-side exchange, which
+    * StreamingDedupSpec's bucketed gram index test pins on the span
+    * monitor's real left-semi probe). */
   private def idxTableName(dir: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
     s"graft_sidx_${md.take(12)}"
-  }
-
-  /** Ensure the bucketed index table over `dir` exists in the session
-    * catalog (idempotent; re-registers existing partitions when a new
-    * session first touches a prior session's index). Returns the
-    * table name. */
-  private def ensureIdx(spark: SparkSession, dir: String, cols: String,
-      key: String, buckets: Int): String = {
-    val name = idxTableName(dir)
-    if (!spark.catalog.tableExists(name)) {
-      // RECOVER PARTITIONS lists the location — make sure it exists
-      // (first batch of a fresh stream creates the table before any
-      // partition has landed)
-      val p = new Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(p)
-      spark.sql(
-        s"CREATE TABLE $name ($cols, batch BIGINT) USING PARQUET " +
-          s"PARTITIONED BY (batch) " +
-          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-          s"LOCATION '$dir'")
-      spark.sql(s"ALTER TABLE $name RECOVER PARTITIONS")
-    }
-    name
   }
 
   /** Run `body` with bucketed scans FORCED on (scoped, restored
@@ -105,35 +85,76 @@ object StreamingDedup {
       try body finally spark.conf.set(k, prev)
     }
 
-  /** One micro-batch's rows into its own `batch=<id>` partition of
-    * the bucketed index (replay: the partition is dropped first, so a
-    * recomputed batch replaces itself — the startExact layout rule
-    * carried to the catalog form). The pre-write repartition uses the
-    * SAME murmur3-pmod hash as the bucket-id assignment, so each task
-    * holds exactly one bucket's rows and the partition lands as ONE
-    * file per bucket — without it every task can write every bucket
-    * (tasks × buckets small files per batch, and a long-lived stream's
-    * scan cost is driven by file count). Cost: one batch-sized
-    * exchange per write, constant per the flat-probe contract. */
-  private def writeIdx(spark: SparkSession, name: String, dir: String,
-      df: DataFrame, bid: Long, key: String, buckets: Int): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION (batch=$bid)")
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(s"$dir/batch=$bid"), true)
-    df.repartition(buckets, col(key))
-      .withColumn("batch", lit(bid))
-      .write.mode("append").format("parquet")
-      .partitionBy("batch")
-      .bucketBy(buckets, key).sortBy(key)
-      .option("compression", Writers.DefaultCompression)
-      .saveAsTable(name)
+  /** A monitor's stored index for one micro-batch, in the layout
+    * `buckets` selects: `batch=<id>` parquet partitions under `dir`
+    * (0), or the bucketed catalog table over the same partitions
+    * (> 0). Either way the batch reads only EARLIER batches and
+    * replaces its own partition, so a batch replayed after a lost
+    * commit reproduces itself instead of adding a second copy. */
+  private final class StoredIndex(spark: SparkSession, b: MicroBatch.Batch,
+      dir: String, cols: String, key: String, buckets: Int) {
+
+    /** The bucketed table over `dir`, registered in the session catalog
+      * on first touch (re-registering a prior session's partitions). */
+    private val table: Option[String] =
+      if (buckets <= 0) None
+      else {
+        val name = idxTableName(dir)
+        if (!spark.catalog.tableExists(name)) {
+          // RECOVER PARTITIONS lists the location — make sure it exists
+          // (first batch of a fresh stream creates the table before any
+          // partition has landed)
+          b.fs(dir).mkdirs(new Path(dir))
+          spark.sql(
+            s"CREATE TABLE $name ($cols, batch BIGINT) USING PARQUET " +
+              s"PARTITIONED BY (batch) " +
+              s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
+              s"LOCATION '$dir'")
+          spark.sql(s"ALTER TABLE $name RECOVER PARTITIONS")
+        }
+        Some(name)
+      }
+
+    /** Every earlier batch's rows; None before the first write. */
+    val earlier: Option[DataFrame] = table match {
+      case Some(name) =>
+        // key-bucketed catalog read: the stored side of the probe join
+        // is pre-partitioned on the key — exchange-free
+        Some(spark.table(name).filter(col("batch") < b.id).drop("batch"))
+      case None if b.exists(dir) =>
+        Some(spark.read.parquet(dir).filter(col("batch") < b.id)
+          .drop("batch"))
+      case None => None
+    }
+
+    /** Replace this batch's partition with `df`. In the bucketed layout
+      * the partition is dropped first, and the pre-write repartition
+      * uses the SAME murmur3-pmod hash as the bucket-id assignment, so
+      * each task holds exactly one bucket's rows and the partition lands
+      * as ONE file per bucket — without it every task can write every
+      * bucket (tasks × buckets small files per batch, and a long-lived
+      * stream's scan cost is driven by file count). Cost: one
+      * batch-sized exchange per write, constant per the flat-probe
+      * contract. */
+    def write(df: DataFrame): Unit = table match {
+      case Some(name) =>
+        spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION (batch=${b.id})")
+        b.fs(dir).delete(new Path(s"$dir/batch=${b.id}"), true)
+        df.repartition(buckets, col(key))
+          .withColumn("batch", lit(b.id))
+          .write.mode("append").format("parquet")
+          .partitionBy("batch")
+          .bucketBy(buckets, key).sortBy(key)
+          .option("compression", Writers.DefaultCompression)
+          .saveAsTable(name)
+      case None => b.write(df, dir)
+    }
   }
 
   /** Start the streaming dedup. `docs` schema must carry doc_id + text.
-    * Candidates (d_new, d_old, est_jaccard) land under `outDir/candidates`;
-    * the growing band index under `indexDir`.
+    * Candidates (d_new, d_old, est_jaccard) land under
+    * `outDir/candidates/batch=<id>`; the growing band index under
+    * `indexDir` ([[StoredIndex]]).
     */
   def start(
       spark: SparkSession,
@@ -143,75 +164,22 @@ object StreamingDedup {
       outDir: String,
       minEstJaccard: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow(),
-      buckets: Int = 0): StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val fs = new Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // bands computed ONCE per batch, reused for probe + append
-        val batchBands = Dedup.minhashBands(batch).localCheckpoint(true)
-        withBucketedScan(spark, buckets > 0) {
-          try {
-            val idxTbl =
-              if (buckets > 0)
-                Some(ensureIdx(spark, indexDir,
-                  "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, " +
-                    "band_hash BIGINT", "band_hash", buckets))
-              else None
-            val corpusOpt: Option[DataFrame] = idxTbl match {
-              case Some(name) =>
-                // band_hash-bucketed catalog read: the corpus side of the
-                // probe join is pre-partitioned — exchange-free; the
-                // batch < bid filter keeps replays strictly new-vs-earlier
-                Some(spark.table(name).filter(col("batch") < bid)
-                  .drop("batch"))
-              case None if fs.exists(new Path(indexDir)) =>
-                Some(spark.read.parquet(indexDir))
-              case None => None
-            }
-            corpusOpt.foreach { corpus =>
-              val cands = Dedup.incrementalCandidatesFromBands(
-                batchBands, corpus, minEstJaccard)
-              idxTbl match {
-                case Some(_) =>
-                  // bucketed mode rides the batch=<id> overwrite layout:
-                  // a crash-replayed batch replaces its own candidates
-                  cands.write.mode("overwrite")
-                    .option("compression", Writers.DefaultCompression)
-                    .parquet(s"$outDir/candidates/batch=$bid")
-                case None =>
-                  cands.write.mode("append")
-                    .option("compression", Writers.DefaultCompression)
-                    .parquet(s"$outDir/candidates")
-              }
-            }
-            idxTbl match {
-              case Some(name) =>
-                writeIdx(spark, name, indexDir, batchBands, bid,
-                  "band_hash", buckets)
-              case None =>
-                batchBands.write.mode("append")
-                  .option("compression", Writers.DefaultCompression)
-                  .parquet(indexDir)
-            }
-          } finally
-            // release the checkpoint blocks before the batch closure
-            // returns: in always-on mode every micro-batch would otherwise
-            // pin one RDD's blocks forever — the exact persisted-RDD leak
-            // class that degraded ~100 downstream queries 35% in r9
-            // (zero-persisted-RDD-delta discipline, StreamingDedupSpec pin)
-            Dedup.checkpointRdd(batchBands).foreach(_.unpersist(blocking = false))
+      buckets: Int = 0): StreamingQuery =
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      // bands computed ONCE per batch, reused for probe + append
+      val batchBands = b.pin(Dedup.minhashBands(b.df))
+      withBucketedScan(spark, buckets > 0) {
+        val idx = new StoredIndex(spark, b, indexDir,
+          "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, band_hash BIGINT",
+          "band_hash", buckets)
+        idx.earlier.foreach { corpus =>
+          b.write(Dedup.incrementalCandidatesFromBands(
+            batchBands, corpus, minEstJaccard), s"$outDir/candidates")
         }
+        idx.write(batchBands)
       }
-      .start()
-  }
+    }
 
   /** Always-on CONTENT-LEVEL MEDIA dedup — [[start]]'s shape for the
     * binary modality: every micro-batch of media rows is perceptual-
@@ -220,8 +188,10 @@ object StreamingDedup {
     * band index with the (band, chunk) equi-join for near-identical
     * payloads against everything ingested before (certified by Hamming
     * distance on the signatures riding the rows — the payload bytes
-    * never leave their batch), then appends its own bands to the index.
-    * Candidates (d_new, d_old, hamming) land under `outDir/candidates`.
+    * never leave their batch), then lands its own bands as the index's
+    * `batch=<id>` partition.
+    * Candidates (d_new, d_old, hamming) land under
+    * `outDir/candidates/batch=<id>`.
     * Media arrives base64-encoded in the landing JSON (`media_b64`) —
     * JSON carries no raw bytes; a parquet/binary landing feed plugs in
     * by swapping the decode projection.
@@ -235,104 +205,34 @@ object StreamingDedup {
       maxHamming: Int = 6,
       trigger: Trigger = Trigger.AvailableNow(),
       buckets: Int = 0): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, unbase64}
+    import org.apache.spark.sql.functions.unbase64
     import graft.llm.Multimodal
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val fs = new Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // bands computed ONCE per batch, reused for probe + append
-        val batchBands = Multimodal.phashBands(
-            batch.select(col("doc_id"),
-              unbase64(col("media_b64")).as("media")))
-          .localCheckpoint(true)
-        withBucketedScan(spark, buckets > 0) {
-          try {
-            val idxTbl =
-              if (buckets > 0)
-                Some(ensureIdx(spark, indexDir,
-                  "doc_id BIGINT, phash BIGINT, band INT, chunk BIGINT",
-                  "chunk", buckets))
-              else None
-            val corpusOpt: Option[DataFrame] = idxTbl match {
-              case Some(name) =>
-                // chunk-bucketed catalog read — stored side exchange-free
-                Some(spark.table(name).filter(col("batch") < bid)
-                  .drop("batch"))
-              case None if fs.exists(new Path(indexDir)) =>
-                Some(spark.read.parquet(indexDir))
-              case None => None
-            }
-            corpusOpt.foreach { corpus =>
-              val cands = Multimodal.incrementalPhashCandidates(
-                batchBands, corpus, maxHamming)
-              idxTbl match {
-                case Some(_) =>
-                  cands.write.mode("overwrite")
-                    .option("compression", Writers.DefaultCompression)
-                    .parquet(s"$outDir/candidates/batch=$bid")
-                case None =>
-                  cands.write.mode("append")
-                    .option("compression", Writers.DefaultCompression)
-                    .parquet(s"$outDir/candidates")
-              }
-            }
-            idxTbl match {
-              case Some(name) =>
-                writeIdx(spark, name, indexDir, batchBands, bid,
-                  "chunk", buckets)
-              case None =>
-                batchBands.write.mode("append")
-                  .option("compression", Writers.DefaultCompression)
-                  .parquet(indexDir)
-            }
-          } finally
-            // zero-persisted-RDD-delta: see start()
-            Dedup.checkpointRdd(batchBands).foreach(_.unpersist(blocking = false))
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      // bands computed ONCE per batch, reused for probe + append
+      val batchBands = b.pin(Multimodal.phashBands(
+        b.df.select(col("doc_id"), unbase64(col("media_b64")).as("media"))))
+      withBucketedScan(spark, buckets > 0) {
+        val idx = new StoredIndex(spark, b, indexDir,
+          "doc_id BIGINT, phash BIGINT, band INT, chunk BIGINT",
+          "chunk", buckets)
+        idx.earlier.foreach { corpus =>
+          b.write(Multimodal.incrementalPhashCandidates(
+            batchBands, corpus, maxHamming), s"$outDir/candidates")
         }
+        idx.write(batchBands)
       }
-      .start()
+    }
   }
 
-  /** Always-on EXACT dedup — the stage SCALE.md's rehearsal proved must
-    * run BEFORE any near-dup banding (clone groups cost Ω(m²) in the
-    * banded joins): each micro-batch keeps one representative per
-    * content fingerprint (md5(text), min doc_id within the batch),
-    * drops docs whose fingerprint was seen in ANY earlier batch, writes
-    * survivors under `outDir/unique`, and records its fingerprints in
-    * the seen-set.
-    *
-    * Exactly-once by construction, without locks: the seen-set is laid
-    * out as one `batch=<id>` partition per micro-batch, the probe reads
-    * only partitions with `batch < current`, and BOTH writes overwrite
-    * their own batch partition — so a replayed batch recomputes the
-    * identical survivor set (its own partial state partition is
-    * invisible to the probe) and overwrites, never duplicates.
-    *
-    * Scale shape: the seen-set is probed with a broadcast LEFT SEMI of
-    * the batch's (small) fingerprint set and only the (bounded, <=
-    * batch-sized) hits are broadcast back for the anti join — the
-    * historical seen-set is scanned map-side but NEVER shuffled, the
-    * per-batch exchange cost is the batch's own fingerprints. At 100 TB
-    * the fp partitions compact like any small-file state (see
-    * StreamingCuration.compactState for the lease pattern; here
-    * compaction must preserve the batch=N layout the idempotency
-    * depends on, so fold files WITHIN partitions only).
-    */
   /** Always-on VERBATIM-SPAN containment probe — the streaming form of
     * [[graft.llm.Dedup.exactSubstringSpans]], new-doc-vs-corpus instead
     * of corpus-vs-corpus: each micro-batch is reduced ONCE (map-side)
     * to positional depth-L suffix keys, probes the persisted gram index
     * (g → doc_id, p) for matches against everything ingested in EARLIER
     * batches, runs the same gaps-and-islands reduction as the batch
-    * operator to recover maximal shared runs, then appends its own
-    * grams to the index. Spans (d_new, d_old, p_new, p_old, len ≥
+    * operator to recover maximal shared runs, then lands its own
+    * grams in the index. Spans (d_new, d_old, p_new, p_old, len ≥
     * minRun) land under `outDir/spans` — the always-on "does this new
     * document quote the corpus verbatim" signal (licensing headers,
     * boilerplate, cross-crawl plagiarism) the batch q137 family answers
@@ -374,100 +274,59 @@ object StreamingDedup {
       maxDf: Int = Dedup.DefaultMaxShingleDf,
       trigger: Trigger = Trigger.AvailableNow(),
       buckets: Int = 0): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // suffix keys computed ONCE per batch, reused for probe + append
-        // (wide=false: a micro-batch frame keeps the AQE-coalescible
-        // spread — 32 pinned tasks per small batch is pure overhead)
-        val docsB = batch.select(col("doc_id"), col("text"))
-        val grams = Dedup.positionalGrams(docsB, minRun, wide = false)
-          .localCheckpoint(true)
-        var spans: DataFrame = null
-        withBucketedScan(spark, buckets > 0) {
-          try {
-            val fs = new Path(indexDir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            // bucketed form: the index reads g-pre-partitioned through
-            // the catalog — every probe join below leaves the stored
-            // side exchange-free; only the batch's grams shuffle
-            val idxTbl =
-              if (buckets > 0)
-                Some(ensureIdx(spark, indexDir,
-                  "doc_id BIGINT, p BIGINT, g BIGINT", "g", buckets))
-              else None
-            val idxOpt: Option[DataFrame] = idxTbl match {
-              case Some(name) =>
-                Some(spark.table(name).filter(col("batch") < bid)
-                  .drop("batch"))
-              case None if fs.exists(new Path(indexDir)) =>
-                Some(spark.read.parquet(indexDir)
-                  .filter(col("batch") < bid)) // replay: own part invisible
-              case None => None
-            }
-            idxOpt.foreach { idx =>
-              val hits = idx
-                .join(grams.select(col("g")).distinct(), Seq("g"), "left_semi")
-              val hot = hits.groupBy(col("g")).agg(count(lit(1)).as("dfc"))
-                .filter(col("dfc") > maxDf)
-                .select(col("g"))
-              val m = grams
-                .select(col("doc_id").as("d1"), col("p").as("p1"), col("g"))
-                .join(hot, Seq("g"), "left_anti")
-                .join(hits.select(col("doc_id").as("d2"), col("p").as("p2"),
-                  col("g")), Seq("g"))
-                // a doc_id re-ingested in a later batch would self-match
-                // on diagonal 0 and silently EMPTY its own clean output
-                // (ADVICE r12) — the probe contract is new-vs-earlier
-                .filter(col("d1") =!= col("d2"))
-                .select(col("d1"), col("d2"), col("p1"), col("p2"))
-              // reused by the span write AND the clean derivation
-              spans = Dedup.diagonalIslands(m, minRun).localCheckpoint(true)
-              spans
-                .select(col("d1").as("d_new"), col("d2").as("d_old"),
-                  col("p1").as("p_new"), col("p2").as("p_old"), col("len"))
-                .write.mode("overwrite")
-                .option("compression", Writers.DefaultCompression)
-                .parquet(s"$outDir/spans/batch=$bid")
-            }
-            // span-cut output: the new doc's copy of every matched run is
-            // the duplicate (the corpus came first — keep-first by
-            // arrival); with no prior index the batch passes through
-            val cov =
-              if (spans != null)
-                spans.select(col("d1").as("doc_id"), col("p1").as("s"),
-                  (col("p1") + col("len") - 1).as("e"))
-              else docsB.select(col("doc_id"), lit(1L).as("s"), lit(0L).as("e"))
-                .limit(0)
-            Dedup.cutIntervals(docsB, cov)
-              .write.mode("overwrite")
-              .option("compression", Writers.DefaultCompression)
-              .parquet(s"$outDir/clean/batch=$bid")
-            idxTbl match {
-              case Some(name) =>
-                writeIdx(spark, name, indexDir,
-                  grams.select(col("doc_id"), col("p"), col("g")), bid,
-                  "g", buckets)
-              case None =>
-                grams.write.mode("overwrite")
-                  .option("compression", Writers.DefaultCompression)
-                  .parquet(s"$indexDir/batch=$bid")
-            }
-          } finally {
-            // zero-persisted-RDD-delta: see start()
-            Dedup.checkpointRdd(grams).foreach(_.unpersist(blocking = false))
-            if (spans != null)
-              Dedup.checkpointRdd(spans).foreach(_.unpersist(blocking = false))
-          }
+    import org.apache.spark.sql.functions.count
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      // suffix keys computed ONCE per batch, reused for probe + append
+      // (wide=false: a micro-batch frame keeps the AQE-coalescible
+      // spread — 32 pinned tasks per small batch is pure overhead)
+      val docsB = b.df.select(col("doc_id"), col("text"))
+      val grams = b.pin(Dedup.positionalGrams(docsB, minRun, wide = false))
+      withBucketedScan(spark, buckets > 0) {
+        // bucketed form: the index reads g-pre-partitioned through
+        // the catalog — every probe join below leaves the stored
+        // side exchange-free; only the batch's grams shuffle
+        val idx = new StoredIndex(spark, b, indexDir,
+          "doc_id BIGINT, p BIGINT, g BIGINT", "g", buckets)
+        val spans = idx.earlier.map { earlier =>
+          val hits = earlier
+            .join(grams.select(col("g")).distinct(), Seq("g"), "left_semi")
+          val hot = hits.groupBy(col("g")).agg(count(lit(1)).as("dfc"))
+            .filter(col("dfc") > maxDf)
+            .select(col("g"))
+          val m = grams
+            .select(col("doc_id").as("d1"), col("p").as("p1"), col("g"))
+            .join(hot, Seq("g"), "left_anti")
+            .join(hits.select(col("doc_id").as("d2"), col("p").as("p2"),
+              col("g")), Seq("g"))
+            // a doc_id re-ingested in a later batch would self-match
+            // on diagonal 0 and silently EMPTY its own clean output
+            // (ADVICE r12) — the probe contract is new-vs-earlier
+            .filter(col("d1") =!= col("d2"))
+            .select(col("d1"), col("d2"), col("p1"), col("p2"))
+          // reused by the span write AND the clean derivation
+          val islands = b.pin(Dedup.diagonalIslands(m, minRun))
+          b.write(islands
+            .select(col("d1").as("d_new"), col("d2").as("d_old"),
+              col("p1").as("p_new"), col("p2").as("p_old"), col("len")),
+            s"$outDir/spans")
+          islands
         }
+        // span-cut output: the new doc's copy of every matched run is
+        // the duplicate (the corpus came first — keep-first by
+        // arrival); with no prior index the batch passes through
+        val cov = spans match {
+          case Some(sp) =>
+            sp.select(col("d1").as("doc_id"), col("p1").as("s"),
+              (col("p1") + col("len") - 1).as("e"))
+          case None =>
+            docsB.select(col("doc_id"), lit(1L).as("s"), lit(0L).as("e"))
+              .limit(0)
+        }
+        b.write(Dedup.cutIntervals(docsB, cov), s"$outDir/clean")
+        idx.write(grams)
       }
-      .start()
+    }
   }
 
   /** Always-on FUZZY VOCABULARY probe — the streaming form of the q174
@@ -499,81 +358,42 @@ object StreamingDedup {
       outDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       buckets: Int = 0): StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, levenshtein, lit}
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val vocabB = graft.llm.Fuzzy.vocab(batch) // (tok, c)
-        // variants computed ONCE per batch, reused for probe + append
-        val vars = graft.llm.Fuzzy.deletionVariants(vocabB)
-          .localCheckpoint(true)
-        withBucketedScan(spark, buckets > 0) {
-          try {
-            val fs = new Path(indexDir)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val idxTbl =
-              if (buckets > 0)
-                Some(ensureIdx(spark, indexDir,
-                  "tok STRING, variant STRING", "variant", buckets))
-              else None
-            val idxOpt: Option[DataFrame] = idxTbl match {
-              case Some(name) =>
-                // variant-bucketed catalog read: the candidate join (the
-                // corpus-sized one) leaves the stored side exchange-free;
-                // the tok-distinct anti-join side reduces map-side to
-                // vocabulary size before its exchange either way
-                Some(spark.table(name).filter(col("batch") < bid)
-                  .drop("batch"))
-              case None if fs.exists(new Path(indexDir)) =>
-                Some(spark.read.parquet(indexDir)
-                  .filter(col("batch") < bid)) // replay: own part invisible
-              case None => None
-            }
-            idxOpt.foreach { idx =>
-              // novel spellings only: a token already in the earlier
-              // vocabulary is established, not a typo alert
-              val novel = vars.join(
-                idx.select(col("tok")).distinct(), Seq("tok"), "left_anti")
-              val cands = novel.as("n")
-                .join(idx.select(col("tok").as("tok_known"), col("variant"))
-                  .distinct(), Seq("variant"))
-                .select(col("tok").as("tok_new"), col("tok_known"))
-                .distinct()
-              cands
-                .withColumn("dist",
-                  levenshtein(col("tok_new"), col("tok_known")).cast("long"))
-                .filter(col("dist") > 0 &&
-                  col("dist") <= graft.llm.Fuzzy.MaxDist)
-                .join(vocabB.select(col("tok").as("tok_new"),
-                  col("c").as("c_new")), Seq("tok_new"))
-                .select(col("tok_new"), col("tok_known"), col("dist"),
-                  col("c_new"))
-                .write.mode("overwrite")
-                .option("compression", Writers.DefaultCompression)
-                .parquet(s"$outDir/alerts/batch=$bid")
-            }
-            idxTbl match {
-              case Some(name) =>
-                writeIdx(spark, name, indexDir,
-                  vars.select(col("tok"), col("variant")), bid,
-                  "variant", buckets)
-              case None =>
-                vars.write.mode("overwrite")
-                  .option("compression", Writers.DefaultCompression)
-                  .parquet(s"$indexDir/batch=$bid")
-            }
-          } finally {
-            // zero-persisted-RDD-delta: see start()
-            Dedup.checkpointRdd(vars).foreach(_.unpersist(blocking = false))
-          }
+    import org.apache.spark.sql.functions.levenshtein
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      val vocabB = graft.llm.Fuzzy.vocab(b.df) // (tok, c)
+      // variants computed ONCE per batch, reused for probe + append
+      val vars = b.pin(graft.llm.Fuzzy.deletionVariants(vocabB))
+      withBucketedScan(spark, buckets > 0) {
+        // variant-bucketed form: the candidate join (the corpus-sized
+        // one) leaves the stored side exchange-free; the tok-distinct
+        // anti-join side reduces map-side to vocabulary size before its
+        // exchange either way
+        val idx = new StoredIndex(spark, b, indexDir,
+          "tok STRING, variant STRING", "variant", buckets)
+        idx.earlier.foreach { earlier =>
+          // novel spellings only: a token already in the earlier
+          // vocabulary is established, not a typo alert
+          val novel = vars.join(
+            earlier.select(col("tok")).distinct(), Seq("tok"), "left_anti")
+          val cands = novel.as("n")
+            .join(earlier.select(col("tok").as("tok_known"), col("variant"))
+              .distinct(), Seq("variant"))
+            .select(col("tok").as("tok_new"), col("tok_known"))
+            .distinct()
+          b.write(cands
+            .withColumn("dist",
+              levenshtein(col("tok_new"), col("tok_known")).cast("long"))
+            .filter(col("dist") > 0 &&
+              col("dist") <= graft.llm.Fuzzy.MaxDist)
+            .join(vocabB.select(col("tok").as("tok_new"),
+              col("c").as("c_new")), Seq("tok_new"))
+            .select(col("tok_new"), col("tok_known"), col("dist"),
+              col("c_new")), s"$outDir/alerts")
         }
+        idx.write(vars)
       }
-      .start()
+    }
   }
 
   /** Streaming exact dedup through Spark's OWN stateful operator —
@@ -602,23 +422,41 @@ object StreamingDedup {
       outDir: String,
       delay: String = "10 minutes",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    spark.readStream
-      .schema(schema)
-      .json(landingDir)
-      .select(col("doc_id"), col("text"), col("ts"),
-        md5(col("text")).as("fp"))
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark("fp")
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .option("compression", Writers.DefaultCompression)
-      .option("path", s"$outDir/unique")
-      .trigger(trigger)
-      .format("parquet")
-      .start()
+    import org.apache.spark.sql.functions.md5
+    MicroBatch.appendFiles(
+      MicroBatch.source(spark, landingDir, schema, "json")
+        .select(col("doc_id"), col("text"), col("ts"),
+          md5(col("text")).as("fp"))
+        .withWatermark("ts", delay)
+        .dropDuplicatesWithinWatermark("fp"),
+      s"$outDir/_checkpoint", trigger, s"$outDir/unique")
   }
 
+  /** Always-on EXACT dedup — the stage SCALE.md's rehearsal proved must
+    * run BEFORE any near-dup banding (clone groups cost Ω(m²) in the
+    * banded joins): each micro-batch keeps one representative per
+    * content fingerprint (md5(text), min doc_id within the batch),
+    * drops docs whose fingerprint was seen in ANY earlier batch, writes
+    * survivors under `outDir/unique`, and records its fingerprints in
+    * the seen-set.
+    *
+    * Exactly-once by construction, without locks: the seen-set is laid
+    * out as one `batch=<id>` partition per micro-batch, the probe reads
+    * only partitions with `batch < current`, and BOTH writes overwrite
+    * their own batch partition — so a replayed batch recomputes the
+    * identical survivor set (its own partial state partition is
+    * invisible to the probe) and overwrites, never duplicates.
+    *
+    * Scale shape: the seen-set is probed with a broadcast LEFT SEMI of
+    * the batch's (small) fingerprint set and only the (bounded, <=
+    * batch-sized) hits are broadcast back for the anti join — the
+    * historical seen-set is scanned map-side but NEVER shuffled, the
+    * per-batch exchange cost is the batch's own fingerprints. At 100 TB
+    * the fp partitions compact like any small-file state (see
+    * StreamingCuration.compactState for the lease pattern; here
+    * compaction must preserve the batch=N layout the idempotency
+    * depends on, so fold files WITHIN partitions only).
+    */
   def startExact(
       spark: SparkSession,
       landingDir: String,
@@ -627,48 +465,27 @@ object StreamingDedup {
       outDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-        val batchDocs = batch
-          .select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).drop("rn")
-          .localCheckpoint(true) // reused by probe + both writes
-        val fs = new Path(stateDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val survivors =
-          if (fs.exists(new Path(stateDir))) {
-            val seen = spark.read.parquet(stateDir)
-              .filter(col("batch") < bid) // replay: own partial state invisible
-            val hits = seen
-              .join(broadcast(batchDocs.select(col("fp"))), Seq("fp"), "left_semi")
-              .select(col("fp")).distinct()
-            batchDocs.join(broadcast(hits), Seq("fp"), "left_anti")
-          } else batchDocs
-        val kept = survivors.localCheckpoint(true)
-        try {
-          kept.select(col("doc_id"), col("text"), col("fp"))
-            .write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$outDir/unique/batch=$bid")
-          kept.select(col("fp"))
-            .write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$stateDir/batch=$bid")
-        } finally {
-          // zero-persisted-RDD-delta: see start()
-          Dedup.checkpointRdd(kept).foreach(_.unpersist(blocking = false))
-          Dedup.checkpointRdd(batchDocs).foreach(_.unpersist(blocking = false))
-        }
-      }
-      .start()
+    import org.apache.spark.sql.functions.{broadcast, md5, row_number}
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
+      val batchDocs = b.pin(b.df // reused by probe + both writes
+        .select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).drop("rn"))
+      val survivors =
+        if (b.exists(stateDir)) {
+          val seen = spark.read.parquet(stateDir)
+            .filter(col("batch") < b.id) // replay: own partial state invisible
+          val hits = seen
+            .join(broadcast(batchDocs.select(col("fp"))), Seq("fp"), "left_semi")
+            .select(col("fp")).distinct()
+          batchDocs.join(broadcast(hits), Seq("fp"), "left_anti")
+        } else batchDocs
+      val kept = b.pin(survivors)
+      b.write(kept.select(col("doc_id"), col("text"), col("fp")),
+        s"$outDir/unique")
+      b.write(kept.select(col("fp")), stateDir)
+    }
   }
 }

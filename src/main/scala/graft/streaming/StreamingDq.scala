@@ -1,11 +1,11 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.{Dq, Writers}
+import graft.etl.Dq
 
 /** Always-on data-quality monitor — the streaming form of `dq diff`:
   * every micro-batch's profile (null rates, distinct ratios, numeric
@@ -44,20 +44,11 @@ object StreamingDq {
     require(fs.exists(new Path(s"$baselineDir/null_profile")),
       s"no dq baseline at $baselineDir - run `dq <sf> <table> $baselineDir` first")
 
-    val stream = spark.readStream
-      .schema(schema)
-      .json(landingDir)
-
-    stream.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        Dq.driftFrames(
-          Dq.storedMetrics(spark, baselineDir), Dq.liveMetrics(batch), tol)
-          .write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/alerts/batch=$bid")
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      b.write(Dq.driftFrames(
+        Dq.storedMetrics(spark, baselineDir), Dq.liveMetrics(b.df), tol),
+        s"$outDir/alerts")
+    }
   }
 }

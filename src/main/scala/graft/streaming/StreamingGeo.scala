@@ -8,9 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
-import graft.etl.Writers
 import graft.queries.Geo
 
 /** Always-on proximity monitor — the streaming form of the batch q264
@@ -107,16 +105,14 @@ object StreamingGeo {
       zones: Seq[(Long, String, Seq[(Long, Long)])] = Geo.Zones)
       : StreamingQuery = {
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[GeoEv].schema)
-      .parquet(landingDir)
+    val evs = geoSource(spark, landingDir)
     // the registry (literal or [[Geo.loadZones]]-loaded) compiles into
     // the projection at query START — still zero join, zero broadcast
     val zoned = Geo.positioned(evs)
       .select(col("user_id"), col("event_id"), col("ts"),
         Geo.zoneIdExpr(col("lon_e6"), col("lat_e6"), zones).as("zid"))
       .as[ZoneEv]
-    zoned.groupByKey(_.user_id)
+    MicroBatch.appendFiles(zoned.groupByKey(_.user_id)
       .flatMapGroupsWithState[ZoneState, ZoneVisit](
         org.apache.spark.sql.streaming.OutputMode.Append(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
@@ -141,14 +137,7 @@ object StreamingGeo {
           }
           if (st != null) state.update(st)
           out.result().iterator
-      }
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .format("parquet")
-      .option("path", s"$outDir/visits")
-      .start()
+      }, s"$outDir/_checkpoint", trigger, s"$outDir/visits")
   }
 
   /** [[startResample]]'s typed input: one positioned fix. */
@@ -178,13 +167,11 @@ object StreamingGeo {
     require(stepS > 0 && maxGapS >= stepS,
       s"need 0 < stepS <= maxGapS, got stepS=$stepS maxGapS=$maxGapS")
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[GeoEv].schema)
-      .parquet(landingDir)
+    val evs = geoSource(spark, landingDir)
     def hup(lo: Long, hi: Long, num: Long, den: Long): Long =
       if (hi >= lo) lo + (2 * (hi - lo) * num + den) / (2 * den)
       else lo - (2 * (lo - hi) * num + den) / (2 * den)
-    Geo.positioned(evs).as[PosEv]
+    MicroBatch.appendFiles(Geo.positioned(evs).as[PosEv]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[FixState, GridFix](
         org.apache.spark.sql.streaming.OutputMode.Append(),
@@ -215,14 +202,7 @@ object StreamingGeo {
           }
           if (st != null) state.update(st)
           out.result().iterator
-      }
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .format("parquet")
-      .option("path", s"$outDir/grid")
-      .start()
+      }, s"$outDir/_checkpoint", trigger, s"$outDir/grid")
   }
 
   /** [[startDarkGaps]]'s per-vessel state: the LAST fix's epoch
@@ -254,10 +234,8 @@ object StreamingGeo {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(minGapS >= 1L, s"need minGapS >= 1, got $minGapS")
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[GeoEv].schema)
-      .parquet(landingDir)
-    evs.select(col("user_id"), col("event_id"), col("ts"))
+    val evs = geoSource(spark, landingDir)
+    MicroBatch.appendFiles(evs.select(col("user_id"), col("event_id"), col("ts"))
       .as[GeoEv]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[GapState, DarkGap](
@@ -279,14 +257,7 @@ object StreamingGeo {
           }
           if (st != null) state.update(st)
           out.result().iterator
-      }
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .format("parquet")
-      .option("path", s"$outDir/gaps")
-      .start()
+      }, s"$outDir/_checkpoint", trigger, s"$outDir/gaps")
   }
 
   /** One representative point per (vessel, hour) with band cells —
@@ -294,6 +265,20 @@ object StreamingGeo {
     * and streaming joins can never drift. */
   private def points(batch: DataFrame): DataFrame =
     Geo.bandedPoints(batch)
+
+  /** The index columns of a [[points]] row. */
+  private val PtCols = Seq("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx")
+    .map(col)
+
+  /** The landing dir of [[GeoEv]] parquet fixes every monitor here reads. */
+  private def geoSource(spark: SparkSession, landingDir: String): DataFrame =
+    MicroBatch.source(spark, landingDir, Encoders.product[GeoEv].schema)
+
+  /** Hour-clustered index files: range-partition + sort by hour, so each
+    * parquet file covers a narrow hour band and the monitors'
+    * span-bounded index reads prune whole files by footer stats. */
+  private def hourClustered(pts: DataFrame): DataFrame =
+    pts.repartitionByRange(col("hour")).sortWithinPartitions(col("hour"))
 
   /** Always-on DARK RENDEZVOUS monitor — q283's streaming form: the
     * transshipment alert ("went dark next to X, reappeared next to
@@ -349,112 +334,85 @@ object StreamingGeo {
     require(radiusM * 9 <= 5000L,
       s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[GeoEv].schema)
-      .parquet(landingDir)
-    evs.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val fs = new Path(outDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val indexDir = s"$outDir/index"
-        val occDir = s"$outDir/occ"
-        val lastDir = s"$outDir/last"
-        val ptCols = Seq("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx")
-          .map(col)
-        val cached = collection.mutable.Buffer.empty[DataFrame]
-        def keep(df: DataFrame): DataFrame = {
-          cached += df.persist(StorageLevel.MEMORY_AND_DISK); df
-        }
-        try {
-          val raw = keep(batch)
-          val pts = keep(points(raw))
-          // previous per-vessel last-fix snapshot (newest id < bid —
-          // a crash-replayed batch reads the state from BEFORE itself
-          // and reproduces its own outputs, the open/ pattern)
-          val lastIds = snapshotIds(fs, lastDir)
-          val prevId = lastIds.filter(_ < bid).lastOption
-          val prev: DataFrame = prevId match {
-            case Some(p) =>
-              spark.read.schema(LastSchema).parquet(s"$lastDir/batch=$p")
-            case None => Seq.empty[(Long, Long, Long, Long, Long)]
-              .toDF(LastSchema.fieldNames.toIndexedSeq: _*)
-          }
-          // gap legs over (previous last fix ∪ batch fixes) — the RAW
-          // fix sequence (q283 gaps are fix-level, not hour-
-          // representative); the same window flags each vessel's newest
-          // fix for the next snapshot
-          val bFix = Geo.positioned(raw)
-            .select(col("user_id"), unix_timestamp(col("ts")).as("t"),
-              col("event_id"), col("lat_e6"), col("lon_e6"))
-          val wu = Window.partitionBy(col("user_id"))
-            .orderBy(col("t"), col("event_id"))
-          val legs = keep(prev.withColumn("from_state", lit(true))
-            .unionByName(bFix.withColumn("from_state", lit(false)))
-            .withColumn("pt", lag(col("t"), 1).over(wu))
-            .withColumn("pla", lag(col("lat_e6"), 1).over(wu))
-            .withColumn("plo", lag(col("lon_e6"), 1).over(wu))
-            .withColumn("newest", lead(lit(true), 1).over(wu).isNull))
-          // new gaps end at a batch fix
-          val eps = Geo.gapEndpoints(legs.filter(!col("from_state")),
-            minGapS, zones)
-          // index reads bounded to the ENDPOINT hour span (pairing
-          // matches equal hours only); gap-start hours reach back, so
-          // the span covers [oldest gap start, newest batch hour]
-          val spanRow = eps.agg(min(col("hour")), max(col("hour"))).head
-          def inSpan(c: Column): Column =
-            if (spanRow.isNullAt(0)) lit(false)
-            else c.between(spanRow.getLong(0), spanRow.getLong(1))
-          val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
-            .agg(count(lit(1)).as("n"))
-          val earlier =
-            if (fs.exists(new Path(indexDir)))
-              spark.read.schema(IndexSchema).parquet(indexDir)
-                .filter(col("batch") < bid && inSpan(col("hour")))
-                .select(ptCols: _*)
-            else pts.select(ptCols: _*).limit(0)
-          // the batch's own reps join too: a reappearance hour's other
-          // vessels usually land in the SAME batch (hour-aligned feed)
-          val idxAll = earlier.unionByName(pts.select(ptCols: _*))
-          val prevOcc =
-            if (fs.exists(new Path(occDir)))
-              spark.read.schema(OccSchema).parquet(occDir)
-                .filter(col("batch") < bid && inSpan(col("hour")))
-                .select(col("hour"), col("cy"), col("cx"), col("n"))
-            else occBatch.limit(0)
-          val hot = Some(prevOcc.unionByName(occBatch)
-            .groupBy(col("hour"), col("cy"), col("cx"))
-            .agg(sum(col("n")).as("occ"))
-            .filter(col("occ") >
-              math.min(hotOccupancy, maxCellOccupancy)))
-          val hits = Geo.bandedPairs(eps, idxAll, radiusM, hotOccupancy,
-            saltBuckets, hot, maxCellOccupancy,
-            carryProbeCols = Seq("gap_start", "gap_end", "gap_s", "ep", "zid"))
-          Geo.rendezvousAlerts(hits, zones)
-            .write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$outDir/alerts/batch=$bid")
-          // occ + index partitions, the start() layout (retention-
-          // compatible); then the merged last-fix snapshot
-          occBatch.write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$occDir/batch=$bid")
-          pts.repartitionByRange(col("hour"))
-            .sortWithinPartitions(col("hour"))
-            .write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$indexDir/batch=$bid")
-          legs.filter(col("newest"))
-            .select(LastSchema.fieldNames.toIndexedSeq.map(col): _*)
-            .write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$lastDir/batch=$bid")
-          pruneSnapshots(fs, lastDir, lastIds, prevId)
-        } finally { cached.foreach(_.unpersist()) }
-        ()
+    val indexDir = s"$outDir/index"
+    val occDir = s"$outDir/occ"
+    val lastDir = s"$outDir/last"
+    MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
+        trigger) { b =>
+      val fs = b.fs(outDir)
+      val bid = b.id
+      val raw = b.keep(b.df)
+      val pts = b.keep(points(raw))
+      // previous per-vessel last-fix snapshot (newest id < bid —
+      // a crash-replayed batch reads the state from BEFORE itself
+      // and reproduces its own outputs, the open/ pattern)
+      val lastIds = snapshotIds(fs, lastDir)
+      val prevId = lastIds.filter(_ < bid).lastOption
+      val prev: DataFrame = prevId match {
+        case Some(p) =>
+          spark.read.schema(LastSchema).parquet(s"$lastDir/batch=$p")
+        case None => Seq.empty[(Long, Long, Long, Long, Long)]
+          .toDF(LastSchema.fieldNames.toIndexedSeq: _*)
       }
-      .start()
+      // gap legs over (previous last fix ∪ batch fixes) — the RAW
+      // fix sequence (q283 gaps are fix-level, not hour-
+      // representative); the same window flags each vessel's newest
+      // fix for the next snapshot
+      val bFix = Geo.positioned(raw)
+        .select(col("user_id"), unix_timestamp(col("ts")).as("t"),
+          col("event_id"), col("lat_e6"), col("lon_e6"))
+      val wu = Window.partitionBy(col("user_id"))
+        .orderBy(col("t"), col("event_id"))
+      val legs = b.keep(prev.withColumn("from_state", lit(true))
+        .unionByName(bFix.withColumn("from_state", lit(false)))
+        .withColumn("pt", lag(col("t"), 1).over(wu))
+        .withColumn("pla", lag(col("lat_e6"), 1).over(wu))
+        .withColumn("plo", lag(col("lon_e6"), 1).over(wu))
+        .withColumn("newest", lead(lit(true), 1).over(wu).isNull))
+      // new gaps end at a batch fix
+      val eps = Geo.gapEndpoints(legs.filter(!col("from_state")),
+        minGapS, zones)
+      // index reads bounded to the ENDPOINT hour span (pairing
+      // matches equal hours only); gap-start hours reach back, so
+      // the span covers [oldest gap start, newest batch hour]
+      val spanRow = eps.agg(min(col("hour")), max(col("hour"))).head
+      def inSpan(c: Column): Column =
+        if (spanRow.isNullAt(0)) lit(false)
+        else c.between(spanRow.getLong(0), spanRow.getLong(1))
+      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
+        .agg(count(lit(1)).as("n"))
+      val earlier =
+        if (b.exists(indexDir))
+          spark.read.schema(IndexSchema).parquet(indexDir)
+            .filter(col("batch") < bid && inSpan(col("hour")))
+            .select(PtCols: _*)
+        else pts.select(PtCols: _*).limit(0)
+      // the batch's own reps join too: a reappearance hour's other
+      // vessels usually land in the SAME batch (hour-aligned feed)
+      val idxAll = earlier.unionByName(pts.select(PtCols: _*))
+      val prevOcc =
+        if (b.exists(occDir))
+          spark.read.schema(OccSchema).parquet(occDir)
+            .filter(col("batch") < bid && inSpan(col("hour")))
+            .select(col("hour"), col("cy"), col("cx"), col("n"))
+        else occBatch.limit(0)
+      val hot = Some(prevOcc.unionByName(occBatch)
+        .groupBy(col("hour"), col("cy"), col("cx"))
+        .agg(sum(col("n")).as("occ"))
+        .filter(col("occ") >
+          math.min(hotOccupancy, maxCellOccupancy)))
+      val hits = Geo.bandedPairs(eps, idxAll, radiusM, hotOccupancy,
+        saltBuckets, hot, maxCellOccupancy,
+        carryProbeCols = Seq("gap_start", "gap_end", "gap_s", "ep", "zid"))
+      b.write(Geo.rendezvousAlerts(hits, zones), s"$outDir/alerts")
+      // occ + index partitions, the start() layout (retention-
+      // compatible); then the merged last-fix snapshot
+      b.write(occBatch, occDir)
+      b.write(hourClustered(pts), indexDir)
+      b.write(legs.filter(col("newest"))
+        .select(LastSchema.fieldNames.toIndexedSeq.map(col): _*), lastDir)
+      pruneSnapshots(fs, lastDir, lastIds, prevId)
+    }
   }
 
   /** Column layout of the persisted per-batch state, given on every read
@@ -494,100 +452,75 @@ object StreamingGeo {
       maxCellOccupancy: Long = Geo.DefaultMaxCellOccupancy): StreamingQuery = {
     require(radiusM * 9 <= 5000L,
       s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
-    val evs = spark.readStream
-      .schema(Encoders.product[GeoEv].schema)
-      .parquet(landingDir)
-    evs.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val fs = new Path(outDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val indexDir = s"$outDir/index"
-        val occDir = s"$outDir/occ"
-        // persist: the representative-point window otherwise replays
-        // for the span aggregate, the occ summary, the band-join probe
-        // and the index write (~4x per batch — ADVICE r18); released
-        // before the batch closure returns (zero-persisted-RDD-delta)
-        val pts = points(batch).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // the batch's hour span: pairing matches EQUAL hours only, so
-          // index rows outside [min_hour, max_hour] cannot join — one
-          // tiny aggregate (the hwm pattern) bounds every index/occ read
-          // to the batch's span instead of the whole landed history,
-          // keeping per-batch cost O(batch hour span), not O(stream age)
-          val spanRow = pts.agg(min(col("hour")), max(col("hour"))).head
-          val span: Option[(Long, Long)] =
-            if (spanRow.isNullAt(0)) None
-            else Some((spanRow.getLong(0), spanRow.getLong(1)))
-          def inSpan(c: Column): Column = span match {
-            case Some((lo, hi)) => c.between(lo, hi)
-            case None           => lit(false)
-          }
-          // the batch's own per-cell occupancy — reused for the occ
-          // write below AND unioned into the hot/poison summary, so a
-          // poison (over-cap) cell formed ENTIRELY within this batch is
-          // excluded immediately, not one batch late (the cap is the
-          // OOM guard, which must see the current batch's points)
-          val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
-            .agg(count(lit(1)).as("n"))
-          if (fs.exists(new Path(indexDir))) {
-            val earlier = spark.read.schema(IndexSchema).parquet(indexDir)
-              .filter(col("batch") < bid && inSpan(col("hour")))
-            // hot (port) cells from the INCREMENTAL per-batch occupancy
-            // summaries — cell-grid-sized reads, so finding ports never
-            // re-scans the whole position index each micro-batch
-            val prevOcc =
-              if (fs.exists(new Path(occDir)))
-                spark.read.schema(OccSchema).parquet(occDir)
-                  .filter(col("batch") < bid && inSpan(col("hour")))
-                  .select(col("hour"), col("cy"), col("cx"), col("n"))
-              else occBatch.limit(0)
-            val hot = Some(prevOcc.unionByName(occBatch)
-              .groupBy(col("hour"), col("cy"), col("cx"))
-              .agg(sum(col("n")).as("occ"))
-              .filter(col("occ") >
-                math.min(hotOccupancy, maxCellOccupancy)))
-            // THE q264 band join ([[Geo.bandedPairs]]): 3x3 probe
-            // replication, exact verify, and the occupancy-salted
-            // hot-cell path — the port mega-cell spreads over salt
-            // lanes here exactly as in the batch form
-            Geo.bandedPairs(pts, earlier, radiusM, hotOccupancy,
-                saltBuckets, hot, maxCellOccupancy)
-              .filter(col("u1") =!= col("u2"))
-              .select(col("u1").as("u_new"), col("u2").as("u_old"),
-                col("hour"), col("m"))
-              .distinct()
-              .write.mode("overwrite")
-              .option("compression", Writers.DefaultCompression)
-              .parquet(s"$outDir/alerts/batch=$bid")
-          } else
-            // land an empty alert partition so readers see every batch
-            pts.limit(0)
-              .select(col("user_id").as("u_new"),
-                col("user_id").as("u_old"), col("hour"),
-                lit(0L).as("m"))
-              .write.mode("overwrite")
-              .option("compression", Writers.DefaultCompression)
-              .parquet(s"$outDir/alerts/batch=$bid")
-          // per-batch occupancy summary beside the index (batch=<id>
-          // overwrite, replay-idempotent like everything else here)
-          occBatch.write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$occDir/batch=$bid")
-          // hour-clustered index files: range-partition + sort by hour
-          // so each parquet file covers a narrow hour band and the
-          // span-bounded reads above prune whole files by footer stats
-          pts.repartitionByRange(col("hour"))
-            .sortWithinPartitions(col("hour"))
-            .write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$indexDir/batch=$bid")
-        } finally { pts.unpersist(); () }
-        ()
+    val indexDir = s"$outDir/index"
+    val occDir = s"$outDir/occ"
+    MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
+        trigger) { b =>
+      val bid = b.id
+      // kept: the representative-point window otherwise replays for the
+      // span aggregate, the occ summary, the band-join probe and the
+      // index write (~4x per batch)
+      val pts = b.keep(points(b.df))
+      // the batch's hour span: pairing matches EQUAL hours only, so
+      // index rows outside [min_hour, max_hour] cannot join — one
+      // tiny aggregate (the hwm pattern) bounds every index/occ read
+      // to the batch's span instead of the whole landed history,
+      // keeping per-batch cost O(batch hour span), not O(stream age)
+      val spanRow = pts.agg(min(col("hour")), max(col("hour"))).head
+      val span: Option[(Long, Long)] =
+        if (spanRow.isNullAt(0)) None
+        else Some((spanRow.getLong(0), spanRow.getLong(1)))
+      def inSpan(c: Column): Column = span match {
+        case Some((lo, hi)) => c.between(lo, hi)
+        case None           => lit(false)
       }
-      .start()
+      // the batch's own per-cell occupancy — reused for the occ
+      // write below AND unioned into the hot/poison summary, so a
+      // poison (over-cap) cell formed ENTIRELY within this batch is
+      // excluded immediately, not one batch late (the cap is the
+      // OOM guard, which must see the current batch's points)
+      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
+        .agg(count(lit(1)).as("n"))
+      val alerts =
+        if (b.exists(indexDir)) {
+          val earlier = spark.read.schema(IndexSchema).parquet(indexDir)
+            .filter(col("batch") < bid && inSpan(col("hour")))
+          // hot (port) cells from the INCREMENTAL per-batch occupancy
+          // summaries — cell-grid-sized reads, so finding ports never
+          // re-scans the whole position index each micro-batch
+          val prevOcc =
+            if (b.exists(occDir))
+              spark.read.schema(OccSchema).parquet(occDir)
+                .filter(col("batch") < bid && inSpan(col("hour")))
+                .select(col("hour"), col("cy"), col("cx"), col("n"))
+            else occBatch.limit(0)
+          val hot = Some(prevOcc.unionByName(occBatch)
+            .groupBy(col("hour"), col("cy"), col("cx"))
+            .agg(sum(col("n")).as("occ"))
+            .filter(col("occ") >
+              math.min(hotOccupancy, maxCellOccupancy)))
+          // THE q264 band join ([[Geo.bandedPairs]]): 3x3 probe
+          // replication, exact verify, and the occupancy-salted
+          // hot-cell path — the port mega-cell spreads over salt
+          // lanes here exactly as in the batch form
+          Geo.bandedPairs(pts, earlier, radiusM, hotOccupancy,
+              saltBuckets, hot, maxCellOccupancy)
+            .filter(col("u1") =!= col("u2"))
+            .select(col("u1").as("u_new"), col("u2").as("u_old"),
+              col("hour"), col("m"))
+            .distinct()
+        } else
+          // an empty alert partition, so readers see every batch
+          pts.limit(0)
+            .select(col("user_id").as("u_new"),
+              col("user_id").as("u_old"), col("hour"),
+              lit(0L).as("m"))
+      b.write(alerts, s"$outDir/alerts")
+      // per-batch occupancy summary beside the index (batch=<id>
+      // overwrite, replay-idempotent like everything else here)
+      b.write(occBatch, occDir)
+      b.write(hourClustered(pts), indexDir)
+    }
   }
 
   /** Always-on CO-TRAVEL EPISODES — q269's streaming form: the convoy
@@ -640,156 +573,131 @@ object StreamingGeo {
     require(minHours >= 1L && maxGapHours >= 1L,
       s"need minHours/maxGapHours >= 1, got $minHours/$maxGapHours")
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[GeoEv].schema)
-      .parquet(landingDir)
-    evs.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val fs = new Path(outDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val indexDir = s"$outDir/index"
-        val occDir = s"$outDir/occ"
-        // persist: the representative-point window otherwise replays for
-        // the span aggregate, the index-union probe, the occ summary and
-        // the index write (ADVICE r18, the start() fix applied here
-        // too); released before the batch closure returns
-        val pts = points(batch).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val ptCols = Seq("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx")
-            .map(col)
-          // batch hour span (one tiny aggregate): pairing matches EQUAL
-          // hours only, so index/occ rows outside the span cannot join —
-          // every persisted read below is bounded to the span, keeping
-          // per-batch cost O(batch hour span) instead of O(stream age);
-          // max doubles as the eviction high-water
-          val spanRow = pts.agg(min(col("hour")), max(col("hour"))).head
-          val span: Option[(Long, Long)] =
-            if (spanRow.isNullAt(0)) None
-            else Some((spanRow.getLong(0), spanRow.getLong(1)))
-          def inSpan(c: Column): Column = span match {
-            case Some((lo, hi)) => c.between(lo, hi)
-            case None           => lit(false)
-          }
-          // index side: every earlier batch's points PLUS this batch's
-          // own (new-new pairs are this stream's job too — unlike the
-          // alert stream, the episode fold needs EVERY pair-hour)
-          val idxAll =
-            if (fs.exists(new Path(indexDir)))
-              spark.read.schema(IndexSchema).parquet(indexDir)
-                .filter(col("batch") < bid && inSpan(col("hour")))
-                .select(ptCols: _*).unionByName(pts.select(ptCols: _*))
-            else pts.select(ptCols: _*)
-          // batch's own occupancy — reused for the occ write below and
-          // unioned into the hot/poison summary so the over-cap guard
-          // (output-affecting: it is the OOM bound) sees a poison cell
-          // the moment it forms, including one formed entirely within
-          // this batch; hotness (salting) gains the same freshness free
-          val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
-            .agg(count(lit(1)).as("n"))
-          val prevOcc =
-            if (fs.exists(new Path(occDir)))
-              spark.read.schema(OccSchema).parquet(occDir)
-                .filter(col("batch") < bid && inSpan(col("hour")))
-                .select(col("hour"), col("cy"), col("cx"), col("n"))
-            else occBatch.limit(0)
-          val hot = Some(prevOcc.unionByName(occBatch)
-            .groupBy(col("hour"), col("cy"), col("cx"))
-            .agg(sum(col("n")).as("occ"))
-            .filter(col("occ") >
-              math.min(hotOccupancy, maxCellOccupancy)))
-          val ph = Geo.bandedPairs(pts, idxAll, radiusM, hotOccupancy,
-              saltBuckets, hot, maxCellOccupancy)
-            .filter(col("u1") =!= col("u2"))
-            .select(least(col("u1"), col("u2")).as("u1"),
-              greatest(col("u1"), col("u2")).as("u2"),
-              col("hour"), col("m"))
-            .groupBy(col("u1"), col("u2"), col("hour"))
-            .agg(min(col("m")).as("m"))
-          // the observed-hour high-water drives deterministic eviction —
-          // the span aggregate's max, no extra pass
-          val hwm: Option[Long] = span.map(_._2)
-          // open-episode snapshot from BEFORE this batch (max id < bid)
-          val openDir = s"$outDir/open"
-          val openIds = snapshotIds(fs, openDir)
-          val prevId = openIds.filter(_ < bid).lastOption
-          val open: Dataset[EpState] = prevId match {
-            case Some(p) => spark.read.schema(Encoders.product[EpState].schema)
-              .parquet(s"$openDir/batch=$p").as[EpState]
-            case None => spark.emptyDataset[EpState]
-          }
-          val folded = open.groupByKey(s => (s.u1, s.u2))
-            .cogroup(ph.select(col("u1"), col("u2"), col("hour"), col("m"))
-              .as[(Long, Long, Long, Long)]
-              .groupByKey(r => (r._1, r._2))) {
-              case ((u1, u2), states, hours) =>
-                val out = Seq.newBuilder[EpOut]
-                var st = states.toSeq.headOption.orNull
-                def close(): Unit = {
-                  if (st.n_hours >= minHours)
-                    out += EpOut("closed", u1, u2, st.start_hour,
-                      st.end_hour, st.n_hours, st.min_m, st.alerted)
-                  st = null
-                }
-                hours.toSeq.sortBy(_._3).foreach { case (_, _, h, m) =>
-                  if (st != null && h <= st.end_hour) {
-                    // at-or-before the open end: replay/straggler no-op
-                  } else {
-                    if (st != null && h - st.end_hour > maxGapHours) close()
-                    st =
-                      if (st == null) EpState(u1, u2, h, h, 1L, m, false)
-                      else st.copy(end_hour = h, n_hours = st.n_hours + 1L,
-                        min_m = math.min(st.min_m, m))
-                    if (st.n_hours >= minHours && !st.alerted) {
-                      st = st.copy(alerted = true)
-                      out += EpOut("alert", u1, u2, st.start_hour, h,
-                        st.n_hours, st.min_m, true)
-                    }
-                  }
-                }
-                // deterministic eviction: nothing in-order can extend
-                if (st != null && hwm.exists(_ - st.end_hour > maxGapHours))
-                  close()
-                if (st != null)
-                  out += EpOut("open", u1, u2, st.start_hour, st.end_hour,
-                    st.n_hours, st.min_m, st.alerted)
-                out.result().iterator
-            }
-          // one computation, three routed sinks: cache the fold (sized
-          // by the ACTIVE pair population, evicted past maxGapHours —
-          // never collected to the driver) instead of replaying the
-          // band join per sink, then release before the batch ends
-          val routed = folded.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            def land(kind: String, dir: String): Unit =
-              routed.filter(_.kind == kind)
-                .select(col("u1"), col("u2"), col("start_hour"),
-                  col("end_hour"), col("n_hours"), col("min_m"),
-                  col("alerted"))
-                .write.mode("overwrite")
-                .option("compression", Writers.DefaultCompression)
-                .parquet(s"$outDir/$dir/batch=$bid")
-            land("closed", "closed")
-            land("alert", "alerts")
-            land("open", "open")
-          } finally { routed.unpersist(); () }
-          pruneSnapshots(fs, openDir, openIds, prevId)
-          // per-batch occupancy + index append, the start() layout
-          occBatch.write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$occDir/batch=$bid")
-          pts.repartitionByRange(col("hour"))
-            .sortWithinPartitions(col("hour"))
-            .write.mode("overwrite")
-            .option("compression", Writers.DefaultCompression)
-            .parquet(s"$indexDir/batch=$bid")
-        } finally { pts.unpersist(); () }
-        ()
+    val indexDir = s"$outDir/index"
+    val occDir = s"$outDir/occ"
+    val openDir = s"$outDir/open"
+    MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
+        trigger) { b =>
+      val fs = b.fs(outDir)
+      val bid = b.id
+      // kept: the representative-point window otherwise replays for the
+      // span aggregate, the index-union probe, the occ summary and the
+      // index write
+      val pts = b.keep(points(b.df))
+      // batch hour span (one tiny aggregate): pairing matches EQUAL
+      // hours only, so index/occ rows outside the span cannot join —
+      // every persisted read below is bounded to the span, keeping
+      // per-batch cost O(batch hour span) instead of O(stream age);
+      // max doubles as the eviction high-water
+      val spanRow = pts.agg(min(col("hour")), max(col("hour"))).head
+      val span: Option[(Long, Long)] =
+        if (spanRow.isNullAt(0)) None
+        else Some((spanRow.getLong(0), spanRow.getLong(1)))
+      def inSpan(c: Column): Column = span match {
+        case Some((lo, hi)) => c.between(lo, hi)
+        case None           => lit(false)
       }
-      .start()
+      // index side: every earlier batch's points PLUS this batch's
+      // own (new-new pairs are this stream's job too — unlike the
+      // alert stream, the episode fold needs EVERY pair-hour)
+      val idxAll =
+        if (b.exists(indexDir))
+          spark.read.schema(IndexSchema).parquet(indexDir)
+            .filter(col("batch") < bid && inSpan(col("hour")))
+            .select(PtCols: _*).unionByName(pts.select(PtCols: _*))
+        else pts.select(PtCols: _*)
+      // batch's own occupancy — reused for the occ write below and
+      // unioned into the hot/poison summary so the over-cap guard
+      // (output-affecting: it is the OOM bound) sees a poison cell
+      // the moment it forms, including one formed entirely within
+      // this batch; hotness (salting) gains the same freshness free
+      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
+        .agg(count(lit(1)).as("n"))
+      val prevOcc =
+        if (b.exists(occDir))
+          spark.read.schema(OccSchema).parquet(occDir)
+            .filter(col("batch") < bid && inSpan(col("hour")))
+            .select(col("hour"), col("cy"), col("cx"), col("n"))
+        else occBatch.limit(0)
+      val hot = Some(prevOcc.unionByName(occBatch)
+        .groupBy(col("hour"), col("cy"), col("cx"))
+        .agg(sum(col("n")).as("occ"))
+        .filter(col("occ") >
+          math.min(hotOccupancy, maxCellOccupancy)))
+      val ph = Geo.bandedPairs(pts, idxAll, radiusM, hotOccupancy,
+          saltBuckets, hot, maxCellOccupancy)
+        .filter(col("u1") =!= col("u2"))
+        .select(least(col("u1"), col("u2")).as("u1"),
+          greatest(col("u1"), col("u2")).as("u2"),
+          col("hour"), col("m"))
+        .groupBy(col("u1"), col("u2"), col("hour"))
+        .agg(min(col("m")).as("m"))
+      // the observed-hour high-water drives deterministic eviction —
+      // the span aggregate's max, no extra pass
+      val hwm: Option[Long] = span.map(_._2)
+      // open-episode snapshot from BEFORE this batch (max id < bid)
+      val openIds = snapshotIds(fs, openDir)
+      val prevId = openIds.filter(_ < bid).lastOption
+      val open: Dataset[EpState] = prevId match {
+        case Some(p) => spark.read.schema(Encoders.product[EpState].schema)
+          .parquet(s"$openDir/batch=$p").as[EpState]
+        case None => spark.emptyDataset[EpState]
+      }
+      val folded = open.groupByKey(s => (s.u1, s.u2))
+        .cogroup(ph.select(col("u1"), col("u2"), col("hour"), col("m"))
+          .as[(Long, Long, Long, Long)]
+          .groupByKey(r => (r._1, r._2))) {
+          case ((u1, u2), states, hours) =>
+            val out = Seq.newBuilder[EpOut]
+            var st = states.toSeq.headOption.orNull
+            def close(): Unit = {
+              if (st.n_hours >= minHours)
+                out += EpOut("closed", u1, u2, st.start_hour,
+                  st.end_hour, st.n_hours, st.min_m, st.alerted)
+              st = null
+            }
+            hours.toSeq.sortBy(_._3).foreach { case (_, _, h, m) =>
+              if (st != null && h <= st.end_hour) {
+                // at-or-before the open end: replay/straggler no-op
+              } else {
+                if (st != null && h - st.end_hour > maxGapHours) close()
+                st =
+                  if (st == null) EpState(u1, u2, h, h, 1L, m, false)
+                  else st.copy(end_hour = h, n_hours = st.n_hours + 1L,
+                    min_m = math.min(st.min_m, m))
+                if (st.n_hours >= minHours && !st.alerted) {
+                  st = st.copy(alerted = true)
+                  out += EpOut("alert", u1, u2, st.start_hour, h,
+                    st.n_hours, st.min_m, true)
+                }
+              }
+            }
+            // deterministic eviction: nothing in-order can extend
+            if (st != null && hwm.exists(_ - st.end_hour > maxGapHours))
+              close()
+            if (st != null)
+              out += EpOut("open", u1, u2, st.start_hour, st.end_hour,
+                st.n_hours, st.min_m, st.alerted)
+            out.result().iterator
+        }
+      // one computation, three routed sinks: keep the fold (sized by
+      // the ACTIVE pair population, evicted past maxGapHours — never
+      // collected to the driver) instead of replaying the band join
+      // per sink
+      val routed = b.keep(folded)
+      def land(kind: String, dir: String): Unit =
+        b.write(routed.filter(_.kind == kind)
+          .select(col("u1"), col("u2"), col("start_hour"),
+            col("end_hour"), col("n_hours"), col("min_m"),
+            col("alerted")), s"$outDir/$dir")
+      land("closed", "closed")
+      land("alert", "alerts")
+      land("open", "open")
+      pruneSnapshots(fs, openDir, openIds, prevId)
+      // per-batch occupancy + index append, the start() layout
+      b.write(occBatch, occDir)
+      b.write(hourClustered(pts), indexDir)
+    }
   }
 
   /** Retention for the persisted position index — the compaction the

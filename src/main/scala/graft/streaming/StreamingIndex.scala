@@ -46,20 +46,13 @@ object StreamingIndex {
     */
   def startPqAppend(spark: SparkSession, landingDir: String,
       schema: StructType, dir: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val stream = spark.readStream.schema(schema).json(landingDir)
-    stream.writeStream
-      .option("checkpointLocation", s"$dir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val stored = spark.read.parquet(s"$dir/codebook")
-        Pq.encode(batch.repartition(col("vec_id")), stored)
-          .write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$dir/codes/batch=$bid")
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$dir/_checkpoint", trigger) { b =>
+      val stored = spark.read.parquet(s"$dir/codebook")
+      b.write(Pq.encode(b.df.repartition(col("vec_id")), stored),
+        s"$dir/codes")
+    }
 
   /** ADC top-k over everything streamed so far (all batch partitions —
     * probes read m-int codes, never raw vectors).

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.etl.Writers
 
 /** Always-on sequence packing — the streaming form of the batch q260
   * (`TextOps.packSequences`): documents arriving in micro-batches are
@@ -87,19 +86,11 @@ object StreamingPack {
   def start(spark: SparkSession, landingDir: String, outDir: String,
       shards: Int = 8, capacity: Long = 512L,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val docs = spark.readStream
-      .schema(Encoders.product[PackDoc].schema)
-      .parquet(landingDir)
-    assignments(sized(docs, shards), capacity).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[Assign], bid: Long) =>
-        batch.write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/assignments/batch=$bid")
-        ()
-      }
-      .start()
+    val docs = MicroBatch.source(spark, landingDir,
+      Encoders.product[PackDoc].schema)
+    MicroBatch.run(assignments(sized(docs, shards), capacity),
+        s"$outDir/_checkpoint", trigger) { b =>
+      b.write(b.df, s"$outDir/assignments")
+    }
   }
 }

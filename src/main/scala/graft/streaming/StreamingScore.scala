@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.Writers
 import graft.llm.{Pca, QualityClassifier}
 
 /** Streaming scoring against STORED model artifacts — the incremental
@@ -39,19 +38,13 @@ object StreamingScore {
       schema: StructType, weightsDir: String, outDir: String,
       label: Column = col("lang") === "en",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).json(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val stored = spark.read.parquet(weightsDir)
-        QualityClassifier
-          .scoreWith(QualityClassifier.features(batch, label), stored)
-          .write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/scores/batch=$bid")
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      val stored = spark.read.parquet(weightsDir)
+      b.write(QualityClassifier
+        .scoreWith(QualityClassifier.features(b.df, label), stored),
+        s"$outDir/scores")
+    }
 
   /** Project arriving vectors (JSON files carrying `schema`, which must
     * include `vec_id`, `label`, `embedding`) onto a stored PCA
@@ -60,21 +53,15 @@ object StreamingScore {
   def startPcaProject(spark: SparkSession, landingDir: String,
       schema: StructType, componentDir: String, outDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).json(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val stored = spark.read.parquet(componentDir)
-        Pca.projectWith(
-            batch.select(col("vec_id"), col("label"),
-              graft.llm.Similarity.asDouble(col("embedding")).as("a")),
-            stored)
-          .write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/proj/batch=$bid")
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      val stored = spark.read.parquet(componentDir)
+      b.write(Pca.projectWith(
+          b.df.select(col("vec_id"), col("label"),
+            graft.llm.Similarity.asDouble(col("embedding")).as("a")),
+          stored),
+        s"$outDir/proj")
+    }
 
   /** Everything scored so far (all batch partitions). */
   def scores(spark: SparkSession, outDir: String): DataFrame =

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.Writers
 import graft.llm.TextOps
 
 /** Always-on Count-Min sketch over an arriving document stream — the
@@ -34,17 +33,10 @@ object StreamingSketch {
   def startCms(spark: SparkSession, landingDir: String, schema: StructType,
       outDir: String, w: Int = 1024,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).json(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        TextOps.cmsSketch(batch, w)
-          .write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/sketch/batch=$bid")
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      b.write(TextOps.cmsSketch(b.df, w), s"$outDir/sketch")
+    }
 
   /** The whole-stream sketch: per-batch partials summed counter-wise. */
   def sketch(spark: SparkSession, outDir: String): DataFrame =
@@ -87,18 +79,11 @@ object StreamingSketch {
   def startHll(spark: SparkSession, landingDir: String, schema: StructType,
       outDir: String, keyCol: String, valCol: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream.schema(schema).json(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        batch.groupBy(col(keyCol))
-          .agg(hll_sketch_agg(col(valCol)).as("sk"))
-          .write.mode("overwrite")
-          .option("compression", Writers.DefaultCompression)
-          .parquet(s"$outDir/hll/batch=$bid")
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger) { b =>
+      b.write(b.df.groupBy(col(keyCol))
+        .agg(hll_sketch_agg(col(valCol)).as("sk")), s"$outDir/hll")
+    }
 
   /** Whole-stream distinct estimates per key: per-batch sketches merged
     * with the lossless `hll_union_agg`, then estimated — identical to

@@ -109,7 +109,8 @@ object StreamingTrend {
       }
   }
 
-  /** File-landing wiring (the StateTracker.startTracking shape):
+  /** File-landing wiring ([[MicroBatch.appendFiles]], the
+    * StateTracker.startTracking shape):
     * parquet drops under `landingDir` stream through [[levelsEvicting]]
     * into `outDir/levels`, exactly-once per file via the checkpoint.
     * `watermarkDelay` bounds how out-of-order arrivals may be and
@@ -119,17 +120,11 @@ object StreamingTrend {
       alpha: Double, idleMs: Long, watermarkDelay: String = "10 seconds",
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import spark.implicits._
-    val evs = spark.readStream
-      .schema(Encoders.product[TrendEv].schema)
-      .parquet(landingDir)
+    val evs = MicroBatch.source(spark, landingDir,
+        Encoders.product[TrendEv].schema)
       .withWatermark("ts", watermarkDelay)
       .as[TrendEv]
-    levelsEvicting(evs, alpha, idleMs).writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .outputMode("append")
-      .trigger(trigger)
-      .format("parquet")
-      .option("path", s"$outDir/levels")
-      .start()
+    MicroBatch.appendFiles(levelsEvicting(evs, alpha, idleMs),
+      s"$outDir/_checkpoint", trigger, s"$outDir/levels")
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -57,18 +57,10 @@ object StreamingUpsert {
       println(s"[upsert-stream] recovered interrupted swap(s): " +
         recovered.toSeq.sorted.map { case (p, s) => s"$p=$s" }
           .mkString(", "))
-    spark.readStream
-      .schema(schema)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation",
-        checkpoint.getOrElse(s"$tableDir.upsert-checkpoint"))
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Writers.upsertPartitioned(spark, tableDir, batch, partCol,
-          keyCols, versionCol)
-        ()
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema),
+        checkpoint.getOrElse(s"$tableDir.upsert-checkpoint"), trigger) { b =>
+      Writers.upsertPartitioned(spark, tableDir, b.df, partCol,
+        keyCols, versionCol)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
@@ -25,15 +25,8 @@ object StreamingVtable {
   def start(spark: SparkSession, landingDir: String, schema: StructType,
       tableDir: String, statsCols: Seq[String] = Seq.empty,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", s"$tableDir/_checkpoint")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        Versioned.commitAppendAt(batch, tableDir, bid, statsCols)
-        ()
-      }
-      .start()
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema),
+        s"$tableDir/_checkpoint", trigger) { b =>
+      Versioned.commitAppendAt(b.df, tableDir, b.id, statsCols)
+    }
 }

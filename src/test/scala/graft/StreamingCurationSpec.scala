@@ -307,6 +307,27 @@ class StreamingCurationSpec extends AnyFunSuite with TestSpark {
       s"append under a compaction lock did not fail loudly: ${messages(ex)}")
   }
 
+  test("a batch whose sink write fails still releases its localCheckpoint snapshot") {
+    val landing = Files.createTempDirectory("sleak-land").toString
+    val state = Files.createTempDirectory("sleak-state").toString
+    val out = Files.createTempDirectory("sleak-out").toString
+    Files.write(Paths.get(landing, "b1.json"),
+      (0L until 50L).map(i =>
+        s"""{"doc_id":$i,"lang":"en","text":"leak doc $i"}""")
+        .mkString("\n").getBytes)
+    // a regular file where the contaminated output dir goes: the batch
+    // pins its snapshot, appends state, then fails writing its output
+    Files.write(Paths.get(out, "contaminated"), "not a dir".getBytes)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingCuration.start(spark, landing, schema, state, out,
+        rates, defaultRate).awaitTermination()
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty,
+      s"failed batch leaked persisted RDDs: ${leaked.toSeq.sorted}")
+  }
+
   test("compaction lease: fresh heartbeats make compactState wait, then fail loudly") {
     val landing = Files.createTempDirectory("slease-land").toString
     val state = Files.createTempDirectory("slease-state").toString

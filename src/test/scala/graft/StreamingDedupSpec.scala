@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +13,8 @@ import graft.streaming.StreamingDedup
   * index for candidates against all PRIOR batches, then appends its own
   * bands — the corpus is never re-signed.
   */
-class StreamingDedupSpec extends AnyFunSuite with TestSpark {
+class StreamingDedupSpec extends AnyFunSuite with TestSpark
+    with AdaptiveSparkPlanHelper {
 
   private val schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
@@ -73,6 +75,72 @@ class StreamingDedupSpec extends AnyFunSuite with TestSpark {
     // the index grew by exactly batch 2's bands
     val bandsAfter2 = spark.read.parquet(index).count()
     assert(bandsAfter2 == 26L * Dedup.Bands, s"index rows: $bandsAfter2")
+  }
+
+  test("start and startMedia: a batch replayed after its commit was " +
+      "lost replaces its candidates and index partition, never adds a copy") {
+    val rng = new scala.util.Random(7)
+    val vocab = Vector("spark", "query", "table", "row", "scan", "join",
+      "hash", "sort", "data", "batch", "window", "merge", "filter", "agg")
+    val base = (0L until 20L).map(i =>
+      i -> Seq.fill(60)(vocab(rng.nextInt(vocab.size))).mkString(" "))
+    val textFiles = Seq(base,
+      (103L, base(3)._2.split(' ').updated(55, "mutated").mkString(" ")) +:
+        base.take(4).map { case (i, t) => (i + 200L, t) })
+      .map(_.map { case (i, t) => s"""{"doc_id":$i,"text":"$t"}""" }
+        .mkString("\n"))
+    val mediaSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("media_b64", StringType)))
+    def payload(seed: Int): Array[Byte] =
+      Array.tabulate[Byte](200)(i => ((i * seed + seed) % 251).toByte)
+    val twin = payload(7).clone()
+    for (i <- twin.indices by 13) twin(i) = ((twin(i) + 1) & 0xFF).toByte
+    val mediaFiles = Seq(
+      Seq(1L -> payload(7), 2L -> payload(29), 3L -> payload(97)),
+      Seq(100L -> twin, 5L -> payload(131), 6L -> payload(29)))
+      .map(_.map { case (i, b) =>
+        s"""{"doc_id":$i,"media_b64":"${
+          java.util.Base64.getEncoder.encodeToString(b)}"}""" }
+        .mkString("\n"))
+
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+    /** Drain each file as its own batch; with `replay`, then delete the
+      * last batch's commit and drain again, so that batch reruns. */
+    def drain(files: Seq[String], replay: Boolean)(
+        start: (String, String, String) => Unit): (Seq[String], Seq[String]) = {
+      val landing = Files.createTempDirectory("sreplay-land").toString
+      val index = Files.createTempDirectory("sreplay-idx").toString + "/idx"
+      val out = Files.createTempDirectory("sreplay-out").toString
+      files.zipWithIndex.foreach { case (f, i) =>
+        Files.write(Paths.get(landing, s"b$i.json"), f.getBytes)
+        start(landing, index, out)
+      }
+      if (replay) {
+        val last = files.size - 1
+        val commit = Paths.get(out, "_checkpoint", "commits", last.toString)
+        Files.delete(commit)
+        Files.deleteIfExists(commit.resolveSibling(s".$last.crc"))
+        assertNoPersistedRddDelta(start(landing, index, out))
+        assert(Files.exists(commit), "the replayed batch did not commit")
+      }
+      (rows(s"$out/candidates"), rows(index))
+    }
+    Seq[(String, Seq[String], (String, String, String) => Unit)](
+      ("start", textFiles, (l, i, o) =>
+        StreamingDedup.start(spark, l, schema, i, o).awaitTermination()),
+      ("startMedia", mediaFiles, (l, i, o) =>
+        StreamingDedup.startMedia(spark, l, mediaSchema, i, o)
+          .awaitTermination())
+    ).foreach { case (name, files, start) =>
+      val (cands, index) = drain(files, replay = false)(start)
+      assert(cands.nonEmpty, s"$name: the fixture must produce candidates")
+      val (cands2, index2) = drain(files, replay = true)(start)
+      assert(cands2 == cands,
+        s"$name: replayed candidates ${cands2.size} vs ${cands.size}")
+      assert(index2 == index,
+        s"$name: replayed index ${index2.size} vs ${index.size} rows")
+    }
   }
 
   test("windowed exact dedup: in-window dups drop even before watermark " +
@@ -304,6 +372,33 @@ class StreamingDedupSpec extends AnyFunSuite with TestSpark {
         s"stored side not read through the bucket spec:\n$plan")
       assert(plan.split("Exchange hashpartitioning").length - 1 == 1,
         s"expected exactly ONE exchange (the probe side):\n$plan")
+      // ... and in the monitor's REAL probe shape: the stored index
+      // left-semi joined against the batch's distinct grams, under the
+      // forced bucketed scan the monitor scopes to each micro-batch
+      val autoBucketed = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+      spark.conf.set(autoBucketed, "false")
+      try {
+        val grams = Dedup.positionalGrams(
+          spark.read.schema(schema).json(s"$landing/b2.json")
+            .select(col("doc_id"), col("text")),
+          Dedup.ExactSubstringMinRun, wide = false)
+        val semi = spark.table(name).filter(col("batch") < 2L).drop("batch")
+          .join(grams.select(col("g")).distinct(), Seq("g"), "left_semi")
+        assert(semi.count() > 0L, "the quote's grams must hit the index")
+        val finalPlan = stripAQEPlan(semi.queryExecution.executedPlan)
+        val join = collectFirst(finalPlan) {
+          case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+        }
+        assert(join.isDefined, s"no join in:\n$finalPlan")
+        val stored = join.get.left
+        assert(collect(stored) {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec
+              if s.bucketedScan => s
+        }.nonEmpty, s"stored side not a bucketed scan:\n$finalPlan")
+        assert(collect(stored) {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+        }.isEmpty, s"an Exchange sits above the stored scan:\n$finalPlan")
+      } finally spark.conf.unset(autoBucketed)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
       spark.sql(s"DROP TABLE IF EXISTS $name")
