@@ -138,9 +138,7 @@ object Main {
         // at every instant, but a crash between its DROP and CREATE
         // leaves the data durable with no catalog entry (and DESCRIBE-
         // based rediscovery impossible) — `pairs register <table> <dir>`
-        // re-creates the entry over the surviving files; if the data dir
-        // itself is gone mid-swap, rename `<dir>.__pre_compact` or
-        // `<dir>__compact_tmp` back to `<dir>` first (each is complete)
+        // puts a dir left mid-swap back and re-creates the entry over it
         case "pairs" :: "compact-bucketed" :: table :: Nil =>
           println(s"files=${graft.llm.PairStore.compactBucketed(spark, table)}")
 
@@ -254,11 +252,12 @@ object Main {
           println(s"upsert table=$tableDir keys=${keys.mkString(",")} " +
             s"version=$versionCol rows=$n")
 
-        // restore a readable table after a crashed upsert (promotes the
-        // staged merged copy, else the set-aside original)
-        case "upsert-recover" :: tableDir :: Nil =>
-          println(s"upsert-recover table=$tableDir state=${
-            Writers.upsertRecover(spark, tableDir)}")
+        // restore a readable table after a crashed upsert or in-place
+        // compact (promotes the complete new copy, else the set-aside
+        // original)
+        case "recover" :: tableDir :: Nil =>
+          println(s"recover table=$tableDir state=${
+            Writers.recoverDir(spark, tableDir)}")
 
         // partition-scoped merge against a hive layout: only the
         // partitions the delta touches are read and rewritten
@@ -292,11 +291,6 @@ object Main {
             println(s"upsert-recover-parts table=$tableDir " +
               s"partition=$part state=$st")
           }
-
-        // restore a readable table after a crashed in-place compact
-        case "compact-recover" :: tableDir :: Nil =>
-          println(s"compact-recover table=$tableDir state=${
-            Writers.compactRecover(spark, tableDir)}")
 
         // streaming SCD2 with idle eviction over a landing dir of
         // parquet events: drain what's landed (AvailableNow), append
@@ -979,7 +973,7 @@ object Main {
         |  media index <docsParquet> <indexDir> | media pairs <docsParquet> | media append <docsParquet> <indexDir>
         |  sketch build <docsParquet> <sketchDir> | sketch append <docsParquet> <sketchDir> | sketch query <sketchDir> <token>...
         |  upsert <tableDir> <deltaParquet> <versionCol> <keyCol...>
-        |  upsert-recover <tableDir> | compact-recover <tableDir>
+        |  recover <tableDir>
         |  upsert-part <tableDir> <deltaParquet> <partCol> <versionCol> <keyCol...>
         |  upsert-stream <landingDir> <tableDir> <partCol> <versionCol> <keyCol...>
         |  upsert-recover-parts <tableDir>

@@ -1,6 +1,5 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,41 +41,9 @@ object KmvStore {
       .option("compression", Writers.DefaultCompression)
       .parquet(path)
 
-  /** Crash recovery for [[append]]'s two-rename swap (ADVICE r18): a
-    * crash between rename(live -> old) and rename(tmp -> live) leaves
-    * the store with no `sketch/` and the only copy of the data under
-    * `sketch_old-<uuid>`. Every reader runs this first: if the live
-    * dir is missing and exactly ONE set-aside dir exists, restore it
-    * (the interrupted append never committed; re-running it is safe —
-    * append is a duplicate no-op by the min-k closure, KmvStoreSpec).
-    * Stranded `sketch_tmp-*` dirs are cleared in the same pass, and
-    * leftover `sketch_old-*` dirs beside a live sketch (a crash
-    * between the second rename and the delete) are superseded and
-    * dropped. Single-writer contract, like the swap itself. */
-  private def recover(spark: SparkSession, dir: String): Unit = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return
-    val live = new Path(sketchDir(dir))
-    val kids = fs.listStatus(base).map(_.getPath)
-    val olds = kids.filter(_.getName.startsWith("sketch_old-"))
-    if (!fs.exists(live)) {
-      require(olds.length <= 1,
-        s"$dir holds ${olds.length} sketch_old-* dirs and no live " +
-          "sketch — manual repair required (single-writer contract " +
-          "violated?)")
-      olds.foreach { o =>
-        require(fs.rename(o, live), s"could not restore $o to $live")
-      }
-    } else olds.foreach(o => fs.delete(o, true))
-    kids.filter(_.getName.startsWith("sketch_tmp-"))
-      .foreach(t => fs.delete(t, true))
-    ()
-  }
-
   /** The stored k (merge and query refuse a mismatch). */
   def readK(spark: SparkSession, dir: String): Int = {
-    recover(spark, dir)
+    Writers.recoverDir(spark, sketchDir(dir))
     spark.read.parquet(metaDir(dir)).head.getAs[Long]("k").toInt
   }
 
@@ -106,11 +73,12 @@ object KmvStore {
     * fold it into the stored sketch via the min-k closure, so
     * `append(build(A), B) == build(A ∪ B)` BIT FOR BIT (pinned in
     * KmvStoreSpec) — a daily drop updates the store at the cost of
-    * the drop, never a corpus rebuild. The merged sketch lands beside
-    * the live one and swaps in with two renames (read-then-overwrite
-    * of the same path would race the lazy scan); a crash between the
-    * renames strands the data under `sketch_old-*`, which [[recover]]
-    * heals at the next read before anything else touches the store. */
+    * the drop, never a corpus rebuild. The merged sketch replaces the
+    * live one through [[Writers.replaceDir]] (read-then-overwrite of
+    * the same path would race the lazy scan); every reader runs
+    * [[Writers.recoverDir]] first, so a crashed append heals at the
+    * next read, and re-running it is safe (append is a duplicate no-op
+    * by the min-k closure, KmvStoreSpec). Single writer per store. */
   def append(df: DataFrame, grpCol: Column, keyCol: Column,
       dir: String): Unit = {
     val spark = df.sparkSession
@@ -123,19 +91,11 @@ object KmvStore {
       .unionByName(slice)
       .distinct()
     val w = Window.partitionBy(col("t")).orderBy(col("h"))
-    val tmp = s"$dir/sketch_tmp-${java.util.UUID.randomUUID()}"
-    writeOut(un.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("t"), col("h")), tmp)
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(sketchDir(dir))
-    val old = new Path(s"$dir/sketch_old-${java.util.UUID.randomUUID()}")
-    require(fs.rename(live, old), s"could not set aside $live")
-    require(fs.rename(new Path(tmp), live),
-      s"could not promote $tmp to $live")
-    fs.delete(old, true)
-    ()
+    Writers.replaceDir(spark, sketchDir(dir)) { stage =>
+      writeOut(un.withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= k)
+        .select(col("t"), col("h")), stage)
+    }
   }
 
   /** Sketch-only merge — NEVER re-scans a corpus: union the stored
@@ -240,9 +200,6 @@ object KmvStore {
   }
 
   /** True iff `dir` holds a sketch (for CLI validation). */
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    recover(spark, dir)
-    val p = new Path(sketchDir(dir))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(spark: SparkSession, dir: String): Boolean =
+    Writers.recoverDir(spark, sketchDir(dir)) != "missing"
 }

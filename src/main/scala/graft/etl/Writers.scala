@@ -182,96 +182,131 @@ object Writers {
     shardManifest(spark, dir, idCol).coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/_manifest")
 
+  /** Replace the directory `live` all or nothing — the engine's form of
+    * the reference's multipart create → upload → complete, abort on any
+    * error (SURVEY OP-02/OP-40), for a table rewritten in place. Every
+    * in-place rewrite in the engine goes through this pair
+    * ([[recoverDir]] is the other half).
+    *
+    * Protocol: any leftover of an earlier crash is recovered first; then
+    * `write` fills the stage [[swapTmp]] (it may read `live` while it
+    * does) and `_SUCCESS` is stamped on it (the committer may have been
+    * configured not to write one); `live` is renamed aside to
+    * [[swapOld]], the stage is renamed in (the original is put back if
+    * that fails) and the set-aside copy is deleted. If `write` throws,
+    * the stage is deleted and `live` is untouched. A `live` that does
+    * not exist yet (or that `write` removed) is simply created.
+    *
+    * Both names are dot-prefixed siblings of `live`, so Spark/Hadoop
+    * listings of the parent skip them: a reader never double-counts a
+    * stage. Readers can find no table at `live` for two metadata renames;
+    * a crash at any instant leaves a complete copy at `live`, at the
+    * marked stage or at the set-aside name, which [[recoverDir]] puts
+    * back. One writer per `live`. On an object store rename is copy +
+    * delete — use a commit-log table format there. Returns what `write`
+    * returns.
+    */
+  def replaceDir[A](spark: org.apache.spark.sql.SparkSession,
+      live: String)(write: String => A): A = {
+    val path = new org.apache.hadoop.fs.Path(live)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(swapTmp(live))
+    val old = new org.apache.hadoop.fs.Path(swapOld(live))
+    recoverDir(spark, live)
+    val out =
+      try write(tmp.toString)
+      catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    val marker = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
+    if (!fs.exists(marker)) fs.createNewFile(marker)
+    val hadLive = fs.exists(path)
+    if (hadLive && !fs.rename(path, old))
+      throw new java.io.IOException(s"replaceDir: rename $path -> $old failed")
+    if (!fs.rename(tmp, path)) {
+      if (hadLive) fs.rename(old, path)
+      throw new java.io.IOException(s"replaceDir: rename $tmp -> $path failed")
+    }
+    if (hadLive) fs.delete(old, true)
+    out
+  }
+
+  /** Put a readable directory back at `live` after a crashed
+    * [[replaceDir]], and clear the leftovers. Returns the state found:
+    *  - "clean": `live` exists; any stage or set-aside copy is stale;
+    *  - "promoted-tmp": `live` was gone and the stage was complete
+    *    (`_SUCCESS`), so the new copy is renamed in;
+    *  - "restored-old": `live` was gone and the stage missing or torn,
+    *    so the set-aside original is renamed back;
+    *  - "missing": no copy anywhere (no table ever existed).
+    * Safe to call unconditionally before opening a table.
+    */
+  def recoverDir(spark: org.apache.spark.sql.SparkSession,
+      live: String): String = {
+    val path = new org.apache.hadoop.fs.Path(live)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(swapTmp(live))
+    val old = new org.apache.hadoop.fs.Path(swapOld(live))
+    def move(from: org.apache.hadoop.fs.Path): Unit =
+      if (!fs.rename(from, path))
+        throw new java.io.IOException(s"recoverDir: rename $from -> $path failed")
+    val state =
+      if (fs.exists(path)) "clean"
+      else if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
+        move(tmp); "promoted-tmp"
+      } else if (fs.exists(old)) { move(old); "restored-old" }
+      else "missing"
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    if (fs.exists(old)) fs.delete(old, true)
+    state
+  }
+
+  /** The stage [[replaceDir]] writes: `.<name>.swap-tmp` beside `live`. */
+  def swapTmp(live: String): String = swapSibling(live, "tmp")
+
+  /** Where [[replaceDir]] sets `live` aside: `.<name>.swap-old`. */
+  def swapOld(live: String): String = swapSibling(live, "old")
+
+  private def swapSibling(live: String, tag: String): String = {
+    val p = new org.apache.hadoop.fs.Path(live)
+    new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.swap-$tag")
+      .toString
+  }
+
   /** Compact a parquet directory's accumulated small files into
     * ~`targetMB` outputs — the maintenance step every streaming append
     * sink (Incremental, StreamingDedup) eventually needs: micro-batches
     * write a few small files each, and at 100 TB a scan's task count and
     * footer-read overhead are driven by FILE count, not byte count.
     *
-    * Output file count = ceil(current bytes / targetMB), rows preserved.
-    * The swap is write-to-temp + rename-aside + rename-in (the
-    * [[upsert]] scheme: a crash at any point leaves a complete readable
-    * copy under `dir`, `.compact-old`, or `.compact-tmp`); on object
-    * stores run it against a quiesced table or use a table format with
-    * commit logs — the compaction itself is the same coalesce+write.
-    * Refuses PARTITIONED layouts: reading them through
-    * `spark.read.parquet(dir)` would fold the partition columns into
-    * the data files and flatten the layout — use [[compactFiles]],
-    * which compacts partition-by-partition.
+    * Output file count = ceil(current bytes / targetMB), rows preserved,
+    * swapped in with [[replaceDir]]. Refuses PARTITIONED layouts:
+    * reading them through `spark.read.parquet(dir)` would fold the
+    * partition columns into the data files and flatten the layout — use
+    * [[compactFiles]], which compacts partition-by-partition.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetMB: Int = 512): Int = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = partitionDirs(fs, path)
-    require(parts.isEmpty,
-      s"compact: $dir holds partition directories (${parts.take(3)
-        .mkString(", ")}…) — in-place compaction would flatten the " +
-        "layout; use compactFiles, which preserves it partition-by-" +
-        "partition")
-    val bytes = fs.getContentSummary(path).getLength
-    val n = math.max(1, math.ceil(bytes / (targetMB * 1024.0 * 1024.0)).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".compact-tmp")
-    spark.read.parquet(dir)
-      // coalesce, not repartition: a narrow concat of input partitions —
-      // compaction has no reason to pay a full re-exchange of the table
-      // (same rule as [[compactFiles]], the to-a-new-dir sibling)
-      .coalesce(n)
-      .write.mode("overwrite")
-      .option("compression", DefaultCompression)
-      .parquet(tmp.toString)
-    // guarantee the completeness marker compactRecover keys off (same
-    // rule as upsertInto — the write just returned, so the stage IS
-    // complete even if the committer skips markers)
-    val cMarker = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    if (!fs.exists(cMarker)) fs.createNewFile(cMarker)
-    val old = new org.apache.hadoop.fs.Path(dir + ".compact-old")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compact: rename $path -> $old failed")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path)
-      throw new java.io.IOException(s"compact: rename $tmp -> $path failed")
+      targetMB: Int = 512): Int =
+    replaceDir(spark, dir) { stage =>
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val parts = partitionDirs(fs, path)
+      require(parts.isEmpty,
+        s"compact: $dir holds partition directories (${parts.take(3)
+          .mkString(", ")}…) — in-place compaction would flatten the " +
+          "layout; use compactFiles, which preserves it partition-by-" +
+          "partition")
+      val bytes = fs.getContentSummary(path).getLength
+      val n = math.max(1, math.ceil(bytes / (targetMB * 1024.0 * 1024.0)).toInt)
+      spark.read.parquet(dir)
+        // coalesce, not repartition: a narrow concat of input partitions —
+        // compaction has no reason to pay a full re-exchange of the table
+        // (same rule as [[compactFiles]], the to-a-new-dir sibling)
+        .coalesce(n)
+        .write.mode("overwrite")
+        .option("compression", DefaultCompression)
+        .parquet(stage)
+      n
     }
-    fs.delete(old, true)
-    n
-  }
 
-  /** Compact a BUCKETED external table's accumulated small files,
-    * preserving the bucket layout (a plain [[compact]] would strip the
-    * bucket ids from the file names and silently demote every later
-    * bucketed join to a re-shuffle). Crash-safe: the compacted copy is
-    * written beside the original first — reading the old table while
-    * writing a new one needs no snapshot — then swapped in with
-    * directory renames, so a complete copy of the data exists on disk
-    * at every instant (the old dir survives as `<path>.__pre_compact`
-    * until the swap completes). The catalog entry is re-created over
-    * the swapped files via DDL, as EXTERNAL (a managed input becomes
-    * external at its same location). Returns the new file count.
-    *
-    * Callers must quiesce writers to the table first — see
-    * [[graft.streaming.StreamingCuration.compactState]]'s lock for the
-    * streaming case. As a backstop against a writer that slipped past
-    * that contract, the table dir's file listing is re-verified
-    * immediately before the swap: if it changed since the snapshot
-    * read, the compaction ABORTS loudly (temp copy deleted, original
-    * untouched) instead of silently dropping the concurrent append.
-    *
-    * Crash recovery — what survives at each step and how to resume:
-    *  - during step 1 (temp write): the original table and its files
-    *    are untouched; delete `<path>__compact_tmp` and the
-    *    `<table>_compact_tmp` catalog entry, re-run.
-    *  - between the DROPs and the first rename: all data still at
-    *    `path`, but no catalog entry — re-register with
-    *    [[registerBucketedTable]] (or the DDL in its doc), then re-run.
-    *  - between the two renames: the original is at
-    *    `<path>.__pre_compact` and the compacted copy at
-    *    `<path>__compact_tmp` — rename either back to `path`, then
-    *    re-register.
-    *  - after the swap, before the CREATE: compacted data is live at
-    *    `path` with no catalog entry — just re-register (done; a
-    *    re-run would also work).
-    */
   /** Latest-wins UPSERT (merge-on-write, SCD type 1) without a table
     * format: after the merge exactly one row per key survives — the one
     * with the highest `versionCol` across the existing table and the
@@ -279,23 +314,10 @@ object Writers {
     * is the truth a CDC feed expects). Replaying the same delta is a
     * no-op by construction.
     *
-    * Swap + crash guarantee (exact, r12 verdict #3): the merged table
-    * is staged at `<dir>.upsert-tmp`, the original renamed aside to
-    * `<dir>.upsert-old`, the staged copy renamed in, then the old copy
-    * deleted. Readers CAN observe a brief no-table-at-`dir` window —
-    * two metadata renames wide, not a recursive delete wide — and a
-    * crash at ANY point leaves at least one complete, readable copy of
-    * the table on disk under a deterministic name:
-    *  - before the first rename: original at `dir` (tmp is garbage);
-    *  - between the renames: old data at `.upsert-old` AND merged data
-    *    at `.upsert-tmp`;
-    *  - after the second rename: merged data live at `dir`
-    *    (`.upsert-old` garbage).
-    * [[upsertRecover]] inspects those states and restores a readable
-    * table at `dir` (preferring the merged copy); ExportSpec walks
-    * every interleaving point through it. On a true object store,
-    * rename is copy+delete — use a commit-log table format there; the
-    * merge reduction carries over unchanged.
+    * The merged table replaces `dir` through [[replaceDir]]; after a
+    * crash, [[recoverDir]] (CLI: `recover <dir>`) restores a readable
+    * table, preferring the merged copy. EtlSpec walks every crash
+    * window.
     *
     * Scale shape: the keep-latest reduction is ONE exchange on the key
     * and a per-key top-1 (the TopKPerKey rewrite turns the filtered
@@ -310,61 +332,29 @@ object Writers {
     */
   def upsert(spark: org.apache.spark.sql.SparkSession, dir: String,
       delta: DataFrame, keyCols: Seq[String], versionCol: String,
-      compression: String = DefaultCompression): Long =
-    upsertInto(spark, new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".upsert-tmp"),
-      new org.apache.hadoop.fs.Path(dir + ".upsert-old"),
-      delta, keyCols, versionCol, compression)
-
-  /** The merge + rename-aside swap core shared by [[upsert]] (tmp/old
-    * beside the table dir) and [[upsertPartitioned]] (tmp/old as
-    * dot-prefixed SIBLINGS inside the table root, hidden from readers).
-    */
-  private def upsertInto(spark: org.apache.spark.sql.SparkSession,
-      path: org.apache.hadoop.fs.Path, tmp: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path, delta: DataFrame,
-      keyCols: Seq[String], versionCol: String,
-      compression: String): Long = {
+      compression: String = DefaultCompression): Long = {
     import org.apache.spark.sql.expressions.Window
     require(keyCols.nonEmpty, "upsert: at least one key column")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val incoming = delta.withColumn("_src", lit(1))
-    val merged =
-      if (fs.exists(path))
-        spark.read.parquet(path.toString).withColumn("_src", lit(0))
-          .unionByName(incoming)
-      else incoming
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(versionCol).desc, col("_src").desc)
-    val kept = merged
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_src")
-    kept.write.mode("overwrite")
-      .option("compression", compression)
-      .parquet(tmp.toString)
-    // recovery keys "stage is complete" off the _SUCCESS marker; the
-    // write above just returned, so the stage IS complete — stamp the
-    // marker ourselves if the committer was configured not to
-    // (mapreduce.fileoutputcommitter.marksuccessfuljobs=false would
-    // otherwise make upsertRecover discard a complete merged copy,
-    // ADVICE r13)
-    val marker = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    if (!fs.exists(marker)) fs.createNewFile(marker)
-    val n = spark.read.parquet(tmp.toString).count()
-    // rename-aside swap: never delete before the replacement is in
-    // place — see the crash-state table in the Scaladoc
-    if (fs.exists(old)) fs.delete(old, true)
-    val hadTable = fs.exists(path)
-    if (hadTable && !fs.rename(path, old))
-      throw new java.io.IOException(s"upsert: rename $path -> $old failed")
-    if (!fs.rename(tmp, path)) {
-      // restore the original before failing — no state is lost
-      if (hadTable) fs.rename(old, path)
-      throw new java.io.IOException(s"upsert: rename $tmp -> $path failed")
+    replaceDir(spark, dir) { stage =>
+      val path = new org.apache.hadoop.fs.Path(dir)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val incoming = delta.withColumn("_src", lit(1))
+      val merged =
+        if (fs.exists(path))
+          spark.read.parquet(dir).withColumn("_src", lit(0))
+            .unionByName(incoming)
+        else incoming
+      val w = Window.partitionBy(keyCols.map(col): _*)
+        .orderBy(col(versionCol).desc, col("_src").desc)
+      merged
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1)
+        .drop("_rn", "_src")
+        .write.mode("overwrite")
+        .option("compression", compression)
+        .parquet(stage)
+      spark.read.parquet(stage).count()
     }
-    if (hadTable) fs.delete(old, true)
-    n
   }
 
   /** PARTITION-SCOPED [[upsert]] (r13 verdict #4): against a
@@ -387,17 +377,14 @@ object Writers {
     *    operator would keep both rows — use the table-wide [[upsert]]
     *    (or a commit-log table format) there.
     *
-    * Crash safety is [[upsert]]'s rename-aside per partition, with the
-    * staging dirs as DOT-PREFIXED siblings inside the table root
-    * (`.upsert-tmp-partCol=v` / `.upsert-old-partCol=v`): hidden dirs
-    * are skipped by Spark/Hadoop file listings, so a reader scanning
-    * the whole table mid-upsert never double-counts a staged copy, and
-    * a crash leaves every untouched partition live plus a complete
-    * copy of the in-flight one under a deterministic hidden name —
-    * [[upsertRecoverPartitions]] restores it. Partitions are processed
-    * sequentially; a mid-sequence crash leaves earlier partitions
-    * merged (each delta partition's merge is idempotent — replaying
-    * the same delta is a no-op, so re-running after recovery is safe).
+    * Each touched partition is one [[upsert]] of `dir/partCol=v`, so
+    * its stage and set-aside copy are hidden siblings inside the table
+    * root: a reader scanning the whole table mid-upsert never
+    * double-counts them, and [[upsertRecoverPartitions]] restores every
+    * partition after a crash. Partitions are processed sequentially; a
+    * mid-sequence crash leaves earlier partitions merged (each delta
+    * partition's merge is idempotent — replaying the same delta is a
+    * no-op, so re-running after recovery is safe).
     *
     * Returns the merged row count across touched partitions.
     */
@@ -422,54 +409,16 @@ object Writers {
           "those rows through the table-wide upsert")
     }
     touched.map { p =>
-      val part = s"$partCol=${p.get}"
       val slice = delta
         .filter(col(partCol).cast("string") === p.get).drop(partCol)
-      upsertInto(spark,
-        new org.apache.hadoop.fs.Path(dir, part),
-        new org.apache.hadoop.fs.Path(dir, s".upsert-tmp-$part"),
-        new org.apache.hadoop.fs.Path(dir, s".upsert-old-$part"),
-        slice, keyCols, versionCol, compression)
+      upsert(spark, s"$dir/$partCol=${p.get}", slice, keyCols, versionCol,
+        compression)
     }.sum
   }
 
-  /** Restore a readable table at `dir` after a crashed [[upsert]]:
-    * prefers the staged MERGED copy (`.upsert-tmp`), falls back to
-    * the set-aside original (`.upsert-old`), and clears whichever
-    * leftovers remain. Returns the state it found:
-    * "clean" (table present, no leftovers), "promoted-tmp",
-    * "restored-old", or "missing" (no copy anywhere — nothing staged
-    * before the crash and no table existed).
-    *
-    * "Stage is complete" is keyed off the `_SUCCESS` marker. [[upsert]]
-    * guarantees the marker on its own stages (it stamps one if the
-    * committer was configured with
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` — ADVICE
-    * r13); a marker-less tmp dir is therefore always a TORN stage and
-    * is discarded in favor of the set-aside original.
-    */
-  def upsertRecover(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    recoverSwap(spark, new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".upsert-tmp"),
-      new org.apache.hadoop.fs.Path(dir + ".upsert-old"))
-
-  /** [[upsertRecover]]'s sibling for a crashed in-place [[compact]],
-    * whose swap leaves the same two-suffix states (`.compact-tmp` /
-    * `.compact-old` — ADVICE r13: the window existed with no recover
-    * counterpart). Same preference order: a COMPLETE compacted copy is
-    * promoted, else the set-aside original is restored.
-    */
-  def compactRecover(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String =
-    recoverSwap(spark, new org.apache.hadoop.fs.Path(dir),
-      new org.apache.hadoop.fs.Path(dir + ".compact-tmp"),
-      new org.apache.hadoop.fs.Path(dir + ".compact-old"))
-
-  /** Recover every partition of a hive-layout table after a crashed
-    * [[upsertPartitioned]]: scans the table root for the dot-prefixed
-    * staging leftovers (`.upsert-tmp-partCol=v` / `.upsert-old-…`) and
-    * runs the swap recovery per touched partition. Returns
+  /** [[recoverDir]] for every partition of a hive-layout table after a
+    * crashed [[upsertPartitioned]]: finds the partitions with swap
+    * leftovers among the table root's hidden entries. Returns
     * (partition dir name → state) for every partition that had
     * leftovers — empty map means the table was clean.
     */
@@ -478,98 +427,70 @@ object Writers {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Map.empty
-    val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-    val touched = names.collect {
-      case n if n.startsWith(".upsert-tmp-") =>
-        n.stripPrefix(".upsert-tmp-")
-      case n if n.startsWith(".upsert-old-") =>
-        n.stripPrefix(".upsert-old-")
-    }.distinct
-    touched.map { part =>
-      part -> recoverSwap(spark,
-        new org.apache.hadoop.fs.Path(root, part),
-        new org.apache.hadoop.fs.Path(root, s".upsert-tmp-$part"),
-        new org.apache.hadoop.fs.Path(root, s".upsert-old-$part"))
-    }.toMap
+    val leftover = """\.(.+)\.swap-(?:tmp|old)""".r
+    fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .collect { case leftover(part) => part }.distinct
+      .map(part => part -> recoverDir(spark, s"$dir/$part")).toMap
   }
 
-  private def recoverSwap(spark: org.apache.spark.sql.SparkSession,
-      path: org.apache.hadoop.fs.Path, tmp: org.apache.hadoop.fs.Path,
-      old: org.apache.hadoop.fs.Path): String = {
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def complete(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(p) && fs.exists(
-        new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-    if (fs.exists(path)) {
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(old)) fs.delete(old, true)
-      "clean"
-    } else if (complete(tmp)) {
-      if (!fs.rename(tmp, path))
-        throw new java.io.IOException(s"recover: rename $tmp -> $path failed")
-      if (fs.exists(old)) fs.delete(old, true)
-      "promoted-tmp"
-    } else if (fs.exists(old)) {
-      if (fs.exists(tmp)) fs.delete(tmp, true) // incomplete stage
-      if (!fs.rename(old, path))
-        throw new java.io.IOException(s"recover: rename $old -> $path failed")
-      "restored-old"
-    } else "missing"
-  }
-
+  /** Compact a BUCKETED external table's accumulated small files,
+    * preserving the bucket layout (a plain [[compact]] would strip the
+    * bucket ids from the file names and silently demote every later
+    * bucketed join to a re-shuffle). The compacted copy is written as
+    * [[replaceDir]]'s stage — reading the old table while writing a new
+    * one needs no snapshot — and the catalog entry is re-created over
+    * the swapped files via DDL, as EXTERNAL (a managed input becomes
+    * external at its same location). Returns the new file count.
+    *
+    * Callers must quiesce writers to the table first — see
+    * [[graft.streaming.StreamingCuration.compactState]]'s lock for the
+    * streaming case. As a backstop against a writer that slipped past
+    * that contract, the table dir's file listing is re-verified
+    * immediately before the swap: if it changed since the snapshot
+    * read, the compaction ABORTS loudly (stage deleted, original
+    * untouched) instead of silently dropping the concurrent append.
+    *
+    * The catalog entry is dropped just before the swap. A crash from
+    * there until the re-CREATE leaves the data durable (at `path` or,
+    * mid-swap, at a [[recoverDir]] name) with no catalog entry:
+    * [[registerBucketedTable]] recovers the dir and re-registers it.
+    */
   def compactBucketedTable(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, keyCol: String, buckets: Int,
       compression: String = DefaultCompression): Int = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.catalog.refreshTable(table)
-    val snap = spark.table(table)
-    val schemaDdl = snap.schema.toDDL
     val tmpTbl = s"${table}_compact_tmp"
-    val tmpPath = new org.apache.hadoop.fs.Path(path + "__compact_tmp")
-    spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
-    if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
-    val listing0 = dataListing(fs, p)
-    // 1. durable compacted copy beside the original (a bucketed scan
-    // yields one partition per bucket, so the write emits one file per
-    // bucket without an extra repartition)
-    snap.write.mode("overwrite")
-      .option("compression", compression)
-      .option("path", tmpPath.toString)
-      .bucketBy(buckets, keyCol).sortBy(keyCol)
-      .format("parquet")
-      .saveAsTable(tmpTbl)
-    // concurrent-writer backstop: the temp copy was derived from the
-    // listing as of `listing0`; any change since means an append raced
-    // the compaction and the swap could drop its files — abort with the
-    // original intact rather than lose data
-    val listing1 = dataListing(fs, p)
-    if (listing0 != listing1) {
+    val schemaDdl = replaceDir(spark, path) { stage =>
+      spark.catalog.refreshTable(table)
+      val snap = spark.table(table)
+      val listing0 = dataListing(fs, p)
+      // a bucketed scan yields one partition per bucket, so the write
+      // emits one file per bucket without an extra repartition
       spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
-      fs.delete(tmpPath, true)
-      throw new IllegalStateException(
-        s"compact: $path changed while the compacted copy was being " +
-          "written (a concurrent append?) — aborting with the original " +
-          "table untouched; quiesce writers and re-run")
+      snap.write.mode("overwrite")
+        .option("compression", compression)
+        .option("path", stage)
+        .bucketBy(buckets, keyCol).sortBy(keyCol)
+        .format("parquet")
+        .saveAsTable(tmpTbl)
+      spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
+      // concurrent-writer backstop: the stage was derived from the
+      // listing as of `listing0`; any change since means an append raced
+      // the compaction and the swap could drop its files
+      if (dataListing(fs, p) != listing0)
+        throw new IllegalStateException(
+          s"compact: $path changed while the compacted copy was being " +
+            "written (a concurrent append?) — aborting with the original " +
+            "table untouched; quiesce writers and re-run")
+      // a MANAGED original's files go with this drop — its rows are
+      // already durable in the stage
+      spark.sql(s"DROP TABLE IF EXISTS `$table`")
+      snap.schema.toDDL
     }
-    // 2. swap directories; the old dir survives until the new one is in
-    // place (a MANAGED original is deleted by its drop — its rows are
-    // already durable in the temp copy)
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
-    val pre = new org.apache.hadoop.fs.Path(path + ".__pre_compact")
-    if (fs.exists(pre)) fs.delete(pre, true)
-    if (fs.exists(p) && !fs.rename(p, pre))
-      throw new java.io.IOException(s"compact: could not move $p aside")
-    if (!fs.rename(tmpPath, p))
-      throw new java.io.IOException(
-        s"compact: could not move $tmpPath into place " +
-          s"(previous data preserved at $pre)")
-    // 3. re-register the catalog entry over the swapped files (bucket
-    // ids live in the file names, so DDL keeps the layout live)
-    registerBucketedTable(spark, table, p.toString, keyCol, buckets,
+    // bucket ids live in the file names, so DDL keeps the layout live
+    registerBucketedTable(spark, table, path, keyCol, buckets,
       Some(schemaDdl))
-    fs.delete(pre, true)
     fs.listStatus(p)
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
   }
@@ -592,10 +513,10 @@ object Writers {
   /** (Re-)create the catalog entry for a bucketed EXTERNAL parquet table
     * over files already on disk. This is BOTH the maintenance path for a
     * fresh session whose in-memory catalog forgot the table, AND the
-    * crash-recovery path when a failure between
-    * [[compactBucketedTable]]'s DROP and CREATE leaves the data durable
-    * at `path` with no catalog entry. Schema comes from the files unless
-    * supplied. Equivalent manual DDL:
+    * crash-recovery path for [[compactBucketedTable]]: the dir is put
+    * back with [[recoverDir]] first, so a crash mid-swap needs no manual
+    * rename. Schema comes from the files unless supplied. Equivalent
+    * manual DDL:
     * {{{
     * CREATE TABLE `t` (<schema>) USING PARQUET
     *   CLUSTERED BY (key) SORTED BY (key) INTO n BUCKETS LOCATION 'path'
@@ -607,6 +528,7 @@ object Writers {
   def registerBucketedTable(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, keyCol: String, buckets: Int,
       schemaDdl: Option[String] = None): Unit = {
+    recoverDir(spark, path)
     val ddl = schemaDdl.getOrElse(spark.read.parquet(path).schema.toDDL)
     spark.sql(
       s"""CREATE TABLE `$table` ($ddl) USING PARQUET

@@ -889,19 +889,6 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("comp"), col("rep")).as("comp"))
   }
 
-  /** Connected components over an undirected near-dup pair list: each
-    * doc's component id converges to the MINIMUM doc_id reachable through
-    * pairs — the grouping step that turns pairwise candidates into dedup
-    * clusters (keep the min doc of each component, drop the rest).
-    *
-    * Iterative min-label propagation over the edge list: every round is
-    * one shuffle join (neighbor minimum) + one outer join (label merge),
-    * and rounds needed = graph diameter — tiny for near-dup clusters,
-    * which are band-collision cliques, not long chains. Each round is
-    * localCheckpoint'ed so lineage (and recomputation) doesn't grow with
-    * iterations — the standard shape for iterative graph algorithms on
-    * Spark; at cluster scale swap in `checkpoint` on reliable storage.
-    */
   /** The RDD backing an eagerly localCheckpoint'ed DataFrame — the
     * handle `Dataset.unpersist()` does NOT reach (it only talks to the
     * CacheManager; checkpoint blocks live as persisted RDDs).
@@ -1194,6 +1181,19 @@ object Dedup {
     result
   }
 
+  /** Connected components over an undirected near-dup pair list: each
+    * doc's component id converges to the MINIMUM doc_id reachable through
+    * pairs — the grouping step that turns pairwise candidates into dedup
+    * clusters (keep the min doc of each component, drop the rest).
+    *
+    * Iterative min-label propagation over the edge list: every round is
+    * one shuffle join (neighbor minimum) + one outer join (label merge),
+    * and rounds needed = graph diameter — tiny for near-dup clusters,
+    * which are band-collision cliques, not long chains. Each round is
+    * localCheckpoint'ed so lineage (and recomputation) doesn't grow with
+    * iterations — the standard shape for iterative graph algorithms on
+    * Spark; at cluster scale swap in `checkpoint` on reliable storage.
+    */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     // the final result moves to a RELIABLE checkpoint (files, readable

@@ -163,78 +163,38 @@ object IvfStore {
     * compaction). `repartition(col("cell"))` puts each cell's rows in
     * exactly one task, so the dynamic-partition write emits exactly one
     * file per cell — bounded by the IVF regime (cells ~ sqrt(corpus) →
-    * ~sqrt(corpus) rows per file).
-    *
-    * Crash-safe sibling-write + dir-swap (the
-    * [[graft.etl.Writers.compactBucketedTable]] /
-    * [[graft.streaming.StreamingCuration.compactState]] shape): the
-    * compacted copy is durable at `cells__compact_tmp` BEFORE any
-    * rename, and the previous layout survives at `cells.__pre_compact`
-    * until the new one is in place — a complete copy of the index exists
-    * on disk at every instant. Recovery after a crash mid-swap: if
-    * `cells` is missing, rename whichever of `cells.__pre_compact` or
-    * `cells__compact_tmp` exists back to `cells` (each holds a complete
-    * copy). Callers must quiesce appenders first (same contract as
-    * compactBucketedTable). Returns the new data-file count.
+    * ~sqrt(corpus) rows per file). The compacted layout replaces
+    * `cells` through [[graft.etl.Writers.replaceDir]]; [[recover]]
+    * heals a crash. Callers must quiesce appenders first (same contract
+    * as compactBucketedTable). Returns the new data-file count.
     */
   def compact(spark: SparkSession, dir: String): Int = {
-    val cells = new org.apache.hadoop.fs.Path(s"$dir/cells")
-    val fs = cells.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/cells__compact_tmp")
-    val pre = new org.apache.hadoop.fs.Path(s"$dir/cells.__pre_compact")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.parquet(cells.toString)
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("compression", Writers.DefaultCompression)
-      .partitionBy("cell")
-      .parquet(tmp.toString)
-    if (fs.exists(pre)) fs.delete(pre, true)
-    if (!fs.rename(cells, pre))
-      throw new java.io.IOException(s"ivf compact: could not move $cells aside")
-    if (!fs.rename(tmp, cells))
-      throw new java.io.IOException(
-        s"ivf compact: could not move $tmp into place " +
-          s"(previous index preserved at $pre)")
-    fs.delete(pre, true)
-    dataFileCount(fs, cells)
+    val cells = s"$dir/cells"
+    Writers.replaceDir(spark, cells) { stage =>
+      spark.read.parquet(cells)
+        .repartition(col("cell"))
+        .write.mode("overwrite")
+        .option("compression", Writers.DefaultCompression)
+        .partitionBy("cell")
+        .parquet(stage)
+    }
+    val p = new org.apache.hadoop.fs.Path(cells)
+    dataFileCount(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Mechanical form of [[compact]]'s documented crash recovery: if
-    * `cells` is missing but a complete copy survives at
-    * `cells.__pre_compact` (crash between the two renames) or
-    * `cells__compact_tmp` (crash after moving cells aside), move it
-    * back into place. Returns true if a restore happened, false if the
-    * index was already healthy; throws if `cells` is missing and no
-    * complete copy exists. Safe to call unconditionally before opening
-    * an index.
+  /** [[graft.etl.Writers.recoverDir]] on `cells`: returns true if a copy
+    * was put back, false if the index was already healthy (leftovers
+    * are swept either way); throws if no copy of `cells` exists. Safe to
+    * call unconditionally before opening an index.
     */
-  def recover(spark: SparkSession, dir: String): Boolean = {
-    val cells = new org.apache.hadoop.fs.Path(s"$dir/cells")
-    val fs = cells.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pre = new org.apache.hadoop.fs.Path(s"$dir/cells.__pre_compact")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/cells__compact_tmp")
-    if (fs.exists(cells)) {
-      // healthy (or crashed before the first rename): drop leftovers so
-      // the next compact starts clean
-      if (fs.exists(pre)) fs.delete(pre, true)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      false
-    } else {
-      val src =
-        if (fs.exists(pre)) pre
-        else if (fs.exists(tmp)) tmp
-        else throw new java.io.IOException(
-          s"ivf recover: $cells is missing and neither $pre nor $tmp " +
-            "survives — the index was never built or was deleted")
-      if (!fs.rename(src, cells))
-        throw new java.io.IOException(s"ivf recover: could not move $src to $cells")
-      // at most one sibling can remain; it is now stale
-      if (fs.exists(pre)) fs.delete(pre, true)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      true
+  def recover(spark: SparkSession, dir: String): Boolean =
+    Writers.recoverDir(spark, s"$dir/cells") match {
+      case "clean" => false
+      case "missing" => throw new java.io.IOException(
+        s"ivf recover: $dir/cells is missing and no copy of it survives " +
+          "— the index was never built or was deleted")
+      case _ => true
     }
-  }
 
   /** Parquet data files under `p`, recursively (cell partition dirs). */
   def dataFileCount(fs: org.apache.hadoop.fs.FileSystem,

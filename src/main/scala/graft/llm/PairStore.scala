@@ -184,15 +184,12 @@ object PairStore {
     * quiesce appenders first. Returns the new file count.
     *
     * Crash recovery: a complete copy of the pairs exists on disk at
-    * every instant (see compactBucketedTable's step-by-step doc), but a
-    * crash between its DROP and CREATE leaves the data durable with no
-    * catalog entry — and because this method discovers the path via
-    * DESCRIBE FORMATTED, the table can then no longer be reached through
-    * the API. [[registerBucketed]] (CLI: `pairs register <table> <dir>`)
-    * re-creates the entry over the surviving directory; if the dir
-    * itself vanished mid-swap, rename `<dir>.__pre_compact` or
-    * `<dir>__compact_tmp` back into place first (each holds a complete
-    * copy).
+    * every instant, but a crash between its catalog DROP and CREATE
+    * leaves the data durable with no catalog entry — and because this
+    * method discovers the path via DESCRIBE FORMATTED, the table can
+    * then no longer be reached through the API. [[registerBucketed]]
+    * (CLI: `pairs register <table> <dir>`) puts a dir left mid-swap
+    * back and re-creates the entry over it.
     */
   def compactBucketed(spark: SparkSession, table: String,
       buckets: Int = NumBuckets): Int = {
@@ -206,8 +203,8 @@ object PairStore {
 
   /** Re-create the bucketed pair table's catalog entry over files
     * already on disk — the recovery path after a crash between
-    * [[compactBucketed]]'s DROP and CREATE (the data survives; only the
-    * catalog entry is missing), and the maintenance path for a fresh
+    * [[compactBucketed]]'s DROP and CREATE (the data survives; a dir
+    * left mid-swap is put back first), and the maintenance path for a fresh
     * session whose in-memory catalog forgot the table. `buckets` must
     * match the count the files were written with.
     */

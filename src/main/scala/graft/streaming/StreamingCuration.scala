@@ -424,10 +424,12 @@ object StreamingCuration {
     * Crash-safe: the compacted copy is written to a SIBLING path first —
     * reading the old table while writing a new one needs no snapshot, so
     * the original files stay the durable source of truth until the new
-    * copy is complete — then swapped in with directory renames. At every
-    * instant a complete copy of the state exists ON DISK (the old dir
-    * survives as `<table>.__pre_compact` until the swap finishes); an
-    * executor loss mid-write loses only the temp copy. The earlier
+    * copy is complete — then swapped in with [[Writers.replaceDir]]. At
+    * every instant a complete copy of the state exists ON DISK, and a
+    * crash mid-swap is put back mechanically by the next compaction (it
+    * runs [[Writers.recoverDir]] before re-registering a table the
+    * catalog lacks); an executor loss mid-write loses only the stage.
+    * The earlier
     * in-place form overwrote the only durable copy from a
     * localCheckpoint snapshot, whose executor-memory blocks cannot be
     * recomputed after the truncate (ADVICE r7).
@@ -508,8 +510,10 @@ object StreamingCuration {
         val path = s"$stateDir/$name"
         // a maintenance session (the compact-state CLI) starts with an
         // empty in-memory catalog: re-register the bucketed entry from
-        // the files + the pinned bucket count before compacting
-        if (!spark.catalog.tableExists(tbl) && fs.exists(new Path(path)))
+        // the files (put back first if a crashed swap left them aside) +
+        // the pinned bucket count before compacting
+        if (!spark.catalog.tableExists(tbl) &&
+            Writers.recoverDir(spark, path) != "missing")
           Writers.registerBucketedTable(spark, tbl, path, keyCol, buckets)
         if (!spark.catalog.tableExists(tbl)) None
         else Some(name -> Writers.compactBucketedTable(

@@ -32,8 +32,8 @@ import graft.etl.Writers
   * (upsertPartitioned's contract); a violating batch fails the query
   * loudly rather than mangling the layout.
   *
-  * ONE writer per table: the rename-aside staging names
-  * (`.upsert-tmp-partCol=v`) are deterministic per partition, so two
+  * ONE writer per table: the swap's staging names
+  * (`Writers.swapTmp` of `partCol=v`) are deterministic per partition, so two
   * concurrent upserting streams (or a stream plus the CLI) against the
   * same table race each other's swaps — run a single stream per table
   * (micro-batches within one stream are already serial via

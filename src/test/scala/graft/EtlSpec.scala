@@ -221,7 +221,7 @@ class EtlSpec extends AnyFunSuite with TestSpark {
   test("upsert crash states: a complete copy survives every interleaving point") {
     // r12 verdict #3: the swap is stage -> rename-aside -> rename-in ->
     // delete-old. Construct each crash window's on-disk state directly
-    // and assert upsertRecover restores a readable, correct table.
+    // and assert recoverDir restores a readable, correct table.
     val schema = StructType(Seq(
       StructField("k", LongType), StructField("v", StringType)))
     def tbl(rows: (Long, String)*) = df(schema, rows.map(Row.fromTuple): _*)
@@ -237,35 +237,35 @@ class EtlSpec extends AnyFunSuite with TestSpark {
     // original is the truth, tmp is garbage
     val d1 = Files.createTempDirectory("ups1").toString + "/t"
     tbl(v1.toSeq: _*).write.parquet(d1)
-    tbl(v2.toSeq: _*).write.parquet(d1 + ".upsert-tmp")
-    assert(Writers.upsertRecover(spark, d1) == "clean")
+    tbl(v2.toSeq: _*).write.parquet(Writers.swapTmp(d1))
+    assert(Writers.recoverDir(spark, d1) == "clean")
     assert(vals(d1) == v1)
-    assert(!fs.exists(p(d1 + ".upsert-tmp")))
+    assert(!fs.exists(p(Writers.swapTmp(d1))))
 
     // state 2: crash BETWEEN the renames — no table at dir, but both
     // copies exist; the complete merged copy is promoted
     val d2 = Files.createTempDirectory("ups2").toString + "/t"
-    tbl(v1.toSeq: _*).write.parquet(d2 + ".upsert-old")
-    tbl(v2.toSeq: _*).write.parquet(d2 + ".upsert-tmp")
-    assert(Writers.upsertRecover(spark, d2) == "promoted-tmp")
+    tbl(v1.toSeq: _*).write.parquet(Writers.swapOld(d2))
+    tbl(v2.toSeq: _*).write.parquet(Writers.swapTmp(d2))
+    assert(Writers.recoverDir(spark, d2) == "promoted-tmp")
     assert(vals(d2) == v2)
-    assert(!fs.exists(p(d2 + ".upsert-old")) && !fs.exists(p(d2 + ".upsert-tmp")))
+    assert(!fs.exists(p(Writers.swapOld(d2))) && !fs.exists(p(Writers.swapTmp(d2))))
 
     // state 3: crash AFTER the rename-in, before the old-copy delete
     val d3 = Files.createTempDirectory("ups3").toString + "/t"
     tbl(v2.toSeq: _*).write.parquet(d3)
-    tbl(v1.toSeq: _*).write.parquet(d3 + ".upsert-old")
-    assert(Writers.upsertRecover(spark, d3) == "clean")
+    tbl(v1.toSeq: _*).write.parquet(Writers.swapOld(d3))
+    assert(Writers.recoverDir(spark, d3) == "clean")
     assert(vals(d3) == v2)
-    assert(!fs.exists(p(d3 + ".upsert-old")))
+    assert(!fs.exists(p(Writers.swapOld(d3))))
 
     // state 4: INCOMPLETE stage (no _SUCCESS) + set-aside original —
     // the original is restored, the torn stage discarded
     val d4 = Files.createTempDirectory("ups4").toString + "/t"
-    tbl(v1.toSeq: _*).write.parquet(d4 + ".upsert-old")
-    tbl(v2.toSeq: _*).write.parquet(d4 + ".upsert-tmp")
-    fs.delete(p(d4 + ".upsert-tmp/_SUCCESS"), false)
-    assert(Writers.upsertRecover(spark, d4) == "restored-old")
+    tbl(v1.toSeq: _*).write.parquet(Writers.swapOld(d4))
+    tbl(v2.toSeq: _*).write.parquet(Writers.swapTmp(d4))
+    fs.delete(p(Writers.swapTmp(d4) + "/_SUCCESS"), false)
+    assert(Writers.recoverDir(spark, d4) == "restored-old")
     assert(vals(d4) == v1)
 
     // and the happy path leaves no leftovers at all
@@ -277,7 +277,7 @@ class EtlSpec extends AnyFunSuite with TestSpark {
     Writers.upsert(spark, d5, vtbl((1L, "new", 2L), (2L, "added", 1L)),
       Seq("k"), "ver")
     assert(vals(d5) == v2)
-    assert(!fs.exists(p(d5 + ".upsert-old")) && !fs.exists(p(d5 + ".upsert-tmp")))
+    assert(!fs.exists(p(Writers.swapOld(d5))) && !fs.exists(p(Writers.swapTmp(d5))))
   }
 
   test("partitioned upsert: only touched partitions rewritten; " +
@@ -314,7 +314,7 @@ class EtlSpec extends AnyFunSuite with TestSpark {
       (3L, "c2", "2024-01-02"), (4L, "d1", "2024-01-02")), s"got $got")
     // no staging leftovers
     val leftovers = new java.io.File(root).listFiles()
-      .map(_.getName).filter(_.startsWith(".upsert"))
+      .map(_.getName).filter(_.contains(".swap-"))
     assert(leftovers.isEmpty, leftovers.mkString(","))
     // unsafe partition values are refused loudly, not mangled into dirs
     val err = intercept[IllegalArgumentException] {
@@ -340,17 +340,17 @@ class EtlSpec extends AnyFunSuite with TestSpark {
     // state 1: stage written for dt=a, crash BEFORE the rename-aside.
     // A concurrent reader of the WHOLE table must not see the staged
     // copy (dot-prefixed dirs are skipped by the file index).
-    tbl(1L -> "a-new").write.parquet(s"$root/.upsert-tmp-dt=a")
+    tbl(1L -> "a-new").write.parquet(Writers.swapTmp(s"$root/dt=a"))
     assert(spark.read.parquet(root).count() == 2,
       "reader saw the hidden staged copy")
     assert(Writers.upsertRecoverPartitions(spark, root) ==
       Map("dt=a" -> "clean"))
-    assert(!fs.exists(p(s"$root/.upsert-tmp-dt=a")))
+    assert(!fs.exists(p(Writers.swapTmp(s"$root/dt=a"))))
 
     // state 2: crash BETWEEN the renames on dt=a — partition dir gone,
     // both copies hidden; dt=b untouched and still readable
-    fs.rename(p(s"$root/dt=a"), p(s"$root/.upsert-old-dt=a"))
-    tbl(1L -> "a-new").write.parquet(s"$root/.upsert-tmp-dt=a")
+    fs.rename(p(s"$root/dt=a"), p(Writers.swapOld(s"$root/dt=a")))
+    tbl(1L -> "a-new").write.parquet(Writers.swapTmp(s"$root/dt=a"))
     assert(spark.read.parquet(s"$root/dt=b").count() == 1)
     assert(Writers.upsertRecoverPartitions(spark, root) ==
       Map("dt=a" -> "promoted-tmp"))
@@ -359,9 +359,9 @@ class EtlSpec extends AnyFunSuite with TestSpark {
     assert(gotA == Set(1L -> "a-new"))
 
     // state 3: TORN stage (no _SUCCESS) + set-aside original on dt=b
-    fs.rename(p(s"$root/dt=b"), p(s"$root/.upsert-old-dt=b"))
-    tbl(2L -> "b-new").write.parquet(s"$root/.upsert-tmp-dt=b")
-    fs.delete(p(s"$root/.upsert-tmp-dt=b/_SUCCESS"), false)
+    fs.rename(p(s"$root/dt=b"), p(Writers.swapOld(s"$root/dt=b")))
+    tbl(2L -> "b-new").write.parquet(Writers.swapTmp(s"$root/dt=b"))
+    fs.delete(p(Writers.swapTmp(s"$root/dt=b") + "/_SUCCESS"), false)
     assert(Writers.upsertRecoverPartitions(spark, root) ==
       Map("dt=b" -> "restored-old"))
     val gotB = spark.read.parquet(s"$root/dt=b").collect()
@@ -383,20 +383,20 @@ class EtlSpec extends AnyFunSuite with TestSpark {
       .map(r => (r.getLong(0), r.getString(1))).toSet
     val data = Set(1L -> "x", 2L -> "y")
 
-    // between the renames: only .compact-old + .compact-tmp exist
+    // between the renames: only the set-aside copy + the stage exist
     val d1 = Files.createTempDirectory("cmp1").toString + "/t"
-    tbl(data.toSeq: _*).write.parquet(d1 + ".compact-old")
-    tbl(data.toSeq: _*).write.parquet(d1 + ".compact-tmp")
-    assert(Writers.compactRecover(spark, d1) == "promoted-tmp")
+    tbl(data.toSeq: _*).write.parquet(Writers.swapOld(d1))
+    tbl(data.toSeq: _*).write.parquet(Writers.swapTmp(d1))
+    assert(Writers.recoverDir(spark, d1) == "promoted-tmp")
     assert(vals(d1) == data)
-    assert(!fs.exists(p(d1 + ".compact-old")))
+    assert(!fs.exists(p(Writers.swapOld(d1))))
 
     // torn compacted copy: original restored
     val d2 = Files.createTempDirectory("cmp2").toString + "/t"
-    tbl(data.toSeq: _*).write.parquet(d2 + ".compact-old")
-    tbl(data.toSeq: _*).write.parquet(d2 + ".compact-tmp")
-    fs.delete(p(d2 + ".compact-tmp/_SUCCESS"), false)
-    assert(Writers.compactRecover(spark, d2) == "restored-old")
+    tbl(data.toSeq: _*).write.parquet(Writers.swapOld(d2))
+    tbl(data.toSeq: _*).write.parquet(Writers.swapTmp(d2))
+    fs.delete(p(Writers.swapTmp(d2) + "/_SUCCESS"), false)
+    assert(Writers.recoverDir(spark, d2) == "restored-old")
     assert(vals(d2) == data)
 
     // and a healthy compact leaves a recoverable marker trail: the
@@ -406,7 +406,7 @@ class EtlSpec extends AnyFunSuite with TestSpark {
     tbl(data.toSeq: _*).repartition(4).write.parquet(d3)
     Writers.compact(spark, d3)
     assert(vals(d3) == data)
-    assert(Writers.compactRecover(spark, d3) == "clean")
+    assert(Writers.recoverDir(spark, d3) == "clean")
   }
 
   test("compactFiles refuses a MIXED layout (partition dirs + loose " +

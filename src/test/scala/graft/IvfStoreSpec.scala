@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.Writers
 import graft.llm.{IvfStore, Similarity}
 
 /** Persisted IVF index: stored-index answers must equal the from-scratch
@@ -124,8 +125,8 @@ class IvfStoreSpec extends AnyFunSuite with TestSpark {
     IvfStore.build(vectors, dir)
     val cells = new org.apache.hadoop.fs.Path(s"$dir/cells")
     val fs = cells.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pre = new org.apache.hadoop.fs.Path(s"$dir/cells.__pre_compact")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/cells__compact_tmp")
+    val pre = new org.apache.hadoop.fs.Path(Writers.swapOld(cells.toString))
+    val tmp = new org.apache.hadoop.fs.Path(Writers.swapTmp(cells.toString))
     val expected = IvfStore.topK(spark, dir, queryVec(2L), k = 3,
       excludeId = Some(2L)).collect().toSeq
 

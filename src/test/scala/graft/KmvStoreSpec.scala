@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.etl.KmvStore
+import graft.etl.{KmvStore, Writers}
 import graft.queries.Stats
 
 /** Persisted mergeable KMV sketches: the closure property
@@ -17,6 +17,10 @@ class KmvStoreSpec extends AnyFunSuite with TestSpark {
 
   private def dirOf(): String = java.nio.file.Files
     .createTempDirectory("graft-kmv").toString
+
+  /** The swap leftovers of a store's `sketch/` dir. */
+  private def swapTmp(dir: String) = Writers.swapTmp(s"$dir/sketch")
+  private def swapOld(dir: String) = Writers.swapOld(s"$dir/sketch")
 
   private def sketch(dir: String): Set[(String, Long)] =
     spark.read.parquet(s"$dir/sketch").collect()
@@ -124,8 +128,7 @@ class KmvStoreSpec extends AnyFunSuite with TestSpark {
     KmvStore.append(slice, col("t"), col("kid"), da)
     assert(sketch(da) == sketch(du))
     // no set-aside/tmp litter after the swap
-    val litter = new java.io.File(da).listFiles().map(_.getName)
-      .filter(n => n.startsWith("sketch_tmp") || n.startsWith("sketch_old"))
+    val litter = Seq(swapTmp(da), swapOld(da)).filter(new java.io.File(_).exists)
     assert(litter.isEmpty, litter.mkString(","))
   }
 
@@ -140,13 +143,12 @@ class KmvStoreSpec extends AnyFunSuite with TestSpark {
     // promote never did — plus a stranded tmp from the dead writer
     val base = new java.io.File(da)
     assert(new java.io.File(base, "sketch")
-      .renameTo(new java.io.File(base, "sketch_old-deadbeef")))
-    assert(new java.io.File(base, "sketch_tmp-stranded").mkdir())
+      .renameTo(new java.io.File(swapOld(da))))
+    assert(new java.io.File(swapTmp(da)).mkdir())
     // any read heals: the set-aside sketch is restored, litter cleared
     assert(KmvStore.readK(spark, da) == 8)
     assert(sketch(da) == before)
-    val litter = base.listFiles().map(_.getName)
-      .filter(n => n.startsWith("sketch_tmp") || n.startsWith("sketch_old"))
+    val litter = Seq(swapTmp(da), swapOld(da)).filter(new java.io.File(_).exists)
     assert(litter.isEmpty, litter.mkString(","))
     // the interrupted append re-runs to the exact rebuild state
     KmvStore.append(corpusB, col("t"), col("kid"), da)
@@ -154,12 +156,12 @@ class KmvStoreSpec extends AnyFunSuite with TestSpark {
       col("t"), col("kid"), du, k = 8)
     assert(sketch(da) == sketch(du))
     // the other crash window (between promote and delete) leaves a
-    // superseded sketch_old-* BESIDE the live sketch: dropped, live
+    // superseded set-aside copy BESIDE the live sketch: dropped, live
     // untouched
-    assert(new java.io.File(base, "sketch_old-cafe").mkdir())
+    assert(new java.io.File(swapOld(da)).mkdir())
     assert(KmvStore.exists(spark, da))
     assert(sketch(da) == sketch(du))
-    assert(!new java.io.File(base, "sketch_old-cafe").exists())
+    assert(!new java.io.File(swapOld(da)).exists())
   }
 
   test("merge refuses mismatched k — a silent mixed-k merge would " +

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.Writers
 import graft.llm.{Dedup, PairStore}
 
 /** Persisted pair-table operator: clustering over stored pairs must
@@ -161,6 +162,38 @@ class PairStoreSpec extends AnyFunSuite with TestSpark {
         s"d1 aggregation shuffled after compactBucketed:\n$agg2Plan")
     } finally {
       spark.sql("DROP TABLE IF EXISTS pairs_bkt_inc")
+    }
+  }
+
+  test("registerBucketed puts back a pair dir a crashed compaction left " +
+      "aside; d1 reads stay exchange-free") {
+    val tmp = Files.createTempDirectory("graft-pairs-bkt-rec").toString
+    val loc = s"$tmp/pairs_bkt_rec"
+    val (_, docs) = corpus
+    PairStore.buildBucketed(docs, "pairs_bkt_rec", minJaccard = 0.6,
+      dir = Some(loc))
+    try {
+      PairStore.compactBucketed(spark, "pairs_bkt_rec")
+      val before = PairStore.bucketedPairs(spark, "pairs_bkt_rec")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(before.nonEmpty)
+      // the crash window between the swap's renames: catalog entry
+      // dropped, the pairs only under the set-aside name
+      spark.sql("DROP TABLE pairs_bkt_rec")
+      Files.move(java.nio.file.Paths.get(loc),
+        java.nio.file.Paths.get(Writers.swapOld(loc)))
+      PairStore.registerBucketed(spark, "pairs_bkt_rec", loc)
+      val after = PairStore.bucketedPairs(spark, "pairs_bkt_rec")
+      assert(after.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        == before)
+      val agg = after.groupBy(col("d1")).agg(count(lit(1)).as("n"))
+      agg.collect()
+      val aggPlan = agg.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      assert(!aggPlan.contains("Exchange hashpartitioning"),
+        s"d1 aggregation shuffled after recovery:\n$aggPlan")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS pairs_bkt_rec")
     }
   }
 

@@ -1,0 +1,191 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.etl.Writers
+
+/** Runs a hook on the driver right after a write job commits — the
+  * instant a concurrent appender would land between a compaction's
+  * snapshot and its swap. */
+class RacingCommitProtocol(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path,
+      dynamicPartitionOverwrite) {
+  override def commitJob(jobContext: JobContext,
+      taskCommits: Seq[TaskCommitMessage]): Unit = {
+    super.commitJob(jobContext, taskCommits)
+    RacingCommitProtocol.onCommit()
+  }
+}
+
+object RacingCommitProtocol {
+  @volatile var onCommit: () => Unit = () => ()
+}
+
+/** The crash-safe directory swap every in-place rewrite goes through:
+  * each crash window of [[Writers.replaceDir]] is put back by
+  * [[Writers.recoverDir]], a failing write step leaves the live dir
+  * byte-identical, and no other source file renames directories.
+  */
+class ReplaceDirSpec extends AnyFunSuite with TestSpark {
+
+  private val schema = StructType(Seq(
+    StructField("k", LongType), StructField("v", StringType)))
+  private def tbl(rows: (Long, String)*) = spark.createDataFrame(
+    spark.sparkContext.parallelize(rows.map(Row.fromTuple), 1), schema)
+  private def vals(d: String) = spark.read.parquet(d).collect()
+    .map(r => (r.getLong(0), r.getString(1))).toSet
+  private def exists(d: String) = new java.io.File(d).exists()
+  private def liveDir(): String =
+    Files.createTempDirectory("graft-swap").toString + "/t"
+
+  /** Every file under `d` (relative path → bytes). */
+  private def bytes(d: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(d)
+    Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq)
+      .toMap
+  }
+
+  private val v1 = Set(1L -> "old")
+  private val v2 = Set(1L -> "new", 2L -> "added")
+
+  test("no other main source renames directories: every swap is " +
+      "replaceDir's (Versioned's log commit is its own protocol)") {
+    val root = Paths.get(sys.props("user.dir"), "src/main/scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 1, s"no sources under $root")
+    val allowed = Set("Writers.scala", "Versioned.scala")
+    val offenders = for {
+      f <- files if !allowed(f.getFileName.toString)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains(".rename(")
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      s"directory renames outside Writers.replaceDir:\n${offenders.mkString("\n")}")
+  }
+
+  test("every crash window of the swap is put back by recoverDir") {
+    // before the first rename: the original is live, the stage garbage
+    val d1 = liveDir()
+    tbl(v1.toSeq: _*).write.parquet(d1)
+    tbl(v2.toSeq: _*).write.parquet(Writers.swapTmp(d1))
+    assert(Writers.recoverDir(spark, d1) == "clean")
+    assert(vals(d1) == v1 && !exists(Writers.swapTmp(d1)))
+
+    // between the renames, complete stage: the new copy is promoted
+    val d2 = liveDir()
+    tbl(v1.toSeq: _*).write.parquet(Writers.swapOld(d2))
+    tbl(v2.toSeq: _*).write.parquet(Writers.swapTmp(d2))
+    assert(Writers.recoverDir(spark, d2) == "promoted-tmp")
+    assert(vals(d2) == v2)
+    assert(!exists(Writers.swapOld(d2)) && !exists(Writers.swapTmp(d2)))
+
+    // between the renames, torn stage (no _SUCCESS): original restored
+    val d3 = liveDir()
+    tbl(v1.toSeq: _*).write.parquet(Writers.swapOld(d3))
+    tbl(v2.toSeq: _*).write.parquet(Writers.swapTmp(d3))
+    Files.delete(Paths.get(Writers.swapTmp(d3), "_SUCCESS"))
+    assert(Writers.recoverDir(spark, d3) == "restored-old")
+    assert(vals(d3) == v1)
+    assert(!exists(Writers.swapOld(d3)) && !exists(Writers.swapTmp(d3)))
+
+    // after the promote, before the delete: the new copy stays live
+    val d4 = liveDir()
+    tbl(v2.toSeq: _*).write.parquet(d4)
+    tbl(v1.toSeq: _*).write.parquet(Writers.swapOld(d4))
+    assert(Writers.recoverDir(spark, d4) == "clean")
+    assert(vals(d4) == v2 && !exists(Writers.swapOld(d4)))
+
+    // no table ever existed: nothing to restore, a torn first stage is
+    // cleared, and a swap simply creates the dir
+    val d5 = liveDir()
+    assert(Writers.recoverDir(spark, d5) == "missing")
+    tbl(v2.toSeq: _*).write.parquet(Writers.swapTmp(d5))
+    Files.delete(Paths.get(Writers.swapTmp(d5), "_SUCCESS"))
+    assert(Writers.recoverDir(spark, d5) == "missing")
+    assert(!exists(Writers.swapTmp(d5)))
+    Writers.replaceDir(spark, d5)(s => tbl(v1.toSeq: _*).write.parquet(s))
+    assert(vals(d5) == v1)
+    assert(!exists(Writers.swapOld(d5)) && !exists(Writers.swapTmp(d5)))
+  }
+
+  test("a swap over an unrecovered crash reads the restored original, " +
+      "never an empty table") {
+    // crashed between the renames with a torn stage: only the
+    // set-aside original holds the rows
+    val vschema = StructType(schema.fields :+ StructField("ver", LongType))
+    def vtbl(rows: Row*) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), vschema)
+    val d = liveDir()
+    vtbl(Row(1L, "old", 1L)).write.parquet(Writers.swapOld(d))
+    vtbl(Row(1L, "torn", 2L)).write.parquet(Writers.swapTmp(d))
+    Files.delete(Paths.get(Writers.swapTmp(d), "_SUCCESS"))
+    Writers.upsert(spark, d, vtbl(Row(2L, "added", 1L)), Seq("k"), "ver")
+    val got = spark.read.parquet(d).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got == Set(1L -> "old", 2L -> "added"))
+  }
+
+  test("a failing write step removes the stage and leaves the live dir " +
+      "byte-identical") {
+    val d = liveDir()
+    tbl(v1.toSeq: _*).write.parquet(d)
+    val before = bytes(d)
+    val ex = intercept[IllegalStateException] {
+      Writers.replaceDir(spark, d) { stage =>
+        tbl(v2.toSeq: _*).write.parquet(stage)
+        throw new IllegalStateException("write step failed")
+      }
+    }
+    assert(ex.getMessage == "write step failed")
+    assert(bytes(d) == before)
+    assert(!exists(Writers.swapTmp(d)) && !exists(Writers.swapOld(d)))
+  }
+
+  test("compactBucketedTable aborts when an append races its snapshot: " +
+      "original files and catalog entry untouched") {
+    val tmp = Files.createTempDirectory("graft-swap-race").toString
+    val path = s"$tmp/racy"
+    val table = "swap_race_bkt"
+    spark.range(0, 200).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+      .repartition(4)
+      .write.option("path", path).bucketBy(4, "k").sortBy("k")
+      .format("parquet").saveAsTable(table)
+    val protocolConf = "spark.sql.sources.commitProtocolClass"
+    val protocol = spark.conf.get(protocolConf)
+    try {
+      val before = bytes(path)
+      val rows = spark.table(table).collect().map(_.toString).toSet
+      val racer = Paths.get(path, "part-99999-racer.c000.zstd.parquet")
+      RacingCommitProtocol.onCommit =
+        () => Files.write(racer, Array[Byte](1, 2, 3))
+      spark.conf.set(protocolConf, classOf[RacingCommitProtocol].getName)
+      val ex = intercept[IllegalStateException] {
+        Writers.compactBucketedTable(spark, table, path, "k", 4)
+      }
+      assert(ex.getMessage.contains("concurrent append"), ex.getMessage)
+      assert(bytes(path) - racer.getFileName.toString == before)
+      assert(!exists(Writers.swapTmp(path)) && !exists(Writers.swapOld(path)))
+      assert(spark.catalog.tableExists(table))
+      Files.delete(racer)
+      spark.catalog.refreshTable(table)
+      assert(spark.table(table).collect().map(_.toString).toSet == rows)
+    } finally {
+      RacingCommitProtocol.onCommit = () => ()
+      spark.conf.set(protocolConf, protocol)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_tmp")
+    }
+  }
+}

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.etl.Writers
 import graft.llm.Curation
 import graft.streaming.StreamingCuration
 
@@ -359,6 +360,36 @@ class StreamingCurationSpec extends AnyFunSuite with TestSpark {
     assert(files.keySet == Set("train_fp", "test_docs"))
     val after = StreamingCuration.contaminationCounts(spark, state, out).head()
     assert(after == before, s"compaction changed the answer: $after vs $before")
+  }
+
+  test("compactState puts back a state table a crashed compaction left " +
+      "aside, even with no catalog entry") {
+    val landing = Files.createTempDirectory("srec-land").toString
+    val state = Files.createTempDirectory("srec-state").toString
+    val out = Files.createTempDirectory("srec-out").toString
+    Files.write(Paths.get(landing, "b1.json"),
+      (0L until 50L).map(i =>
+        s"""{"doc_id":$i,"lang":"en","text":"recover doc $i"}""")
+        .mkString("\n").getBytes)
+    StreamingCuration.start(spark, landing, schema, state, out,
+      rates, defaultRate).awaitTermination()
+    StreamingCuration.compactState(spark, state, settleMillis = 0L)
+    val tbl = StreamingCuration.stateTable(state, "train_fp")
+    def trainFp() = spark.read.parquet(s"$state/train_fp").collect()
+      .map(_.toString).toSet
+    val rows = trainFp()
+    val before = StreamingCuration.contaminationCounts(spark, state, out).head()
+    // the crash window between train_fp's swap renames: catalog entry
+    // dropped, the table only under the set-aside name
+    spark.sql(s"DROP TABLE $tbl")
+    Files.move(Paths.get(state, "train_fp"),
+      Paths.get(Writers.swapOld(s"$state/train_fp")))
+    val files = StreamingCuration.compactState(spark, state, settleMillis = 0L)
+    assert(files.keySet == Set("train_fp", "test_docs"))
+    assert(spark.catalog.tableExists(tbl))
+    assert(trainFp() == rows)
+    val after = StreamingCuration.contaminationCounts(spark, state, out).head()
+    assert(after == before, s"recovery changed the answer: $after vs $before")
   }
 
   test("a stale compaction lock is reported with cleanup guidance; force breaks it") {

@@ -89,7 +89,7 @@ class StreamingUpsertSpec extends AnyFunSuite with TestSpark {
     spark.createDataFrame(
       spark.sparkContext.parallelize(
         Seq(Row(1L, "survivor", 1L)), 1), noPart)
-      .write.parquet(s"$table/.upsert-old-dt=a")
+      .write.parquet(Writers.swapOld(s"$table/dt=a"))
     // the stream starts with an empty landing dir: recovery alone must
     // bring dt=a back
     StreamingUpsert.start(spark, landing, table, schema, "dt",
