@@ -20,39 +20,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      Session.tune(s)
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = build()
-
-    // Accretion-vs-environment diagnostic (VERDICT r15 #4): with
-    // SPARK_GRAFT_BENCH_RECYCLE=N the session (and its codegen/catalog/
-    // broadcast state) is torn down and rebuilt every N timed queries.
-    // OFF by default — the official number stays the long-lived-session
-    // behavior. If a suite-wide slowdown flattens under recycling, the
-    // cause is in-JVM accretion; if it persists, the box itself drifted.
-    val recycleEvery = sys.env.get("SPARK_GRAFT_BENCH_RECYCLE")
-      .map(_.toInt).getOrElse(0)
-    var sinceRecycle = 0
-    def maybeRecycle(): Unit = if (recycleEvery > 0) {
-      sinceRecycle += 1
-      if (sinceRecycle >= recycleEvery) {
-        sinceRecycle = 0
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = build()
-      }
-    }
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    Session.tune(spark)
+    spark.sparkContext.setLogLevel("WARN")
 
     /** Cumulative stop-the-world GC seconds across all collectors —
       * per-pass deltas land in the artifact so a growing GC share
@@ -89,6 +65,8 @@ object Bench {
     // LOUD: the query lands in the artifact's `leaked` list and counts
     // into `nfailed` in the compact headline line. The leaked blocks are
     // then dropped so one offender can't poison every query behind it.
+    // The check runs in a `finally`: a query that throws is charged with
+    // the blocks it left, not the query that runs after it.
     val leaked = collection.mutable.Set.empty[String]
     def assertNoLeak(name: String): Unit = {
       val now = spark.sparkContext.getPersistentRDDs
@@ -105,13 +83,12 @@ object Bench {
         sweep()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        assertNoLeak(name)
         true
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
-      }
+      } finally assertNoLeak(name)
 
     // Warm-up pass: JIT + codegen-cache + page-cache the inputs so the
     // timed pass measures steady-state query cost, not JVM startup (the
@@ -143,7 +120,6 @@ object Bench {
         val ok = runOnce(name)
         val sec = (System.nanoTime() - t0) / 1e9
         samples(name) ::= (sec, ok)
-        maybeRecycle()
       }
       passSec(p - 1) = (System.nanoTime() - pt0) / 1e9
       passGc(p - 1) = gcSec() - pg0
@@ -177,7 +153,7 @@ object Bench {
     val passSecJson = passSec.map(s => f"$s%.2f").mkString("[", ",", "]")
     val passGcJson = passGc.map(s => f"$s%.2f").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${qmap(_._1)},"queries_min":${qmap(_._2)},"total_min":${f"$totalMin%.3f"},"failed":$fails,"leaked":$leaks,"hygiene":$hygiene,"recycle":$recycleEvery,"pass_sec":$passSecJson,"pass_gc_sec":$passGcJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${qmap(_._1)},"queries_min":${qmap(_._2)},"total_min":${f"$totalMin%.3f"},"failed":$fails,"leaked":$leaks,"hygiene":$hygiene,"pass_sec":$passSecJson,"pass_gc_sec":$passGcJson,"sf":"$sfDir"}"""
     // Compact line: the r6 official artifact recorded parsed:null
     // because the 79-entry per-query line outgrew the driver's stdout
     // tail window (measured from BENCH_r20.json: the window keeps the

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{Session, Tables}
+import graft.core.{Pins, Session, Tables}
 import graft.etl.{Profiler, SchemaOptimizer, Writers}
 import graft.ingest.Ingestor
 
@@ -167,19 +167,17 @@ object Main {
         // probe the persisted index with a NEW batch's media (cross-batch
         // candidates only — the incremental decision), then append its bands
         case "media" :: "append" :: docsParquet :: indexDir :: Nil =>
-          val bands = graft.llm.Multimodal.phashBands(
-            graft.llm.Multimodal.mediaTable(spark.read.parquet(docsParquet)))
-            .localCheckpoint(true)
-          val cands = graft.llm.Multimodal.incrementalPhashCandidates(
-            bands, spark.read.parquet(indexDir),
-            maxHamming = sys.env.getOrElse("MAX_HAMMING", "6").toInt)
-          cands.show(50, truncate = false)
-          bands.write.mode("append")
-            .option("compression", graft.etl.Writers.DefaultCompression)
-            .parquet(indexDir)
-          // zero-persisted-RDD-delta discipline (matters if this CLI
-          // path is ever driven from a long-lived session)
-          graft.llm.Dedup.checkpointRdd(bands).foreach(_.unpersist(blocking = false))
+          Pins { pins =>
+            val bands = pins.pin(graft.llm.Multimodal.phashBands(
+              graft.llm.Multimodal.mediaTable(spark.read.parquet(docsParquet))))
+            val cands = graft.llm.Multimodal.incrementalPhashCandidates(
+              bands, spark.read.parquet(indexDir),
+              maxHamming = sys.env.getOrElse("MAX_HAMMING", "6").toInt)
+            cands.show(50, truncate = false)
+            bands.write.mode("append")
+              .option("compression", graft.etl.Writers.DefaultCompression)
+              .parquet(indexDir)
+          }
           println(s"bands=${spark.read.parquet(indexDir).count()} dir=$indexDir")
 
         // persisted Count-Min sketch (q152's layout, shared with

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.functions.{Fns, MinHashSig => MinHashSigExpr}
 import graft.queries.Q
 
@@ -745,7 +745,7 @@ object Dedup {
     * corpus-wide.
     */
   def bandRecallReport(docsDf: DataFrame, minJaccard: Double = 0.5,
-      cfgs: Seq[(Int, Int)] = Seq((2, 8), (4, 4), (8, 2))): DataFrame = {
+      cfgs: Seq[(Int, Int)] = Seq((2, 8), (4, 4), (8, 2))): DataFrame = Pins { pins =>
     require(cfgs.nonEmpty && cfgs.forall { case (b, r) =>
       b * r == Md5MinhashK }, s"each bands*rows must equal $Md5MinhashK")
     require(cfgs.map(_._1).distinct.size == cfgs.size,
@@ -757,15 +757,10 @@ object Dedup {
     // pass (df + both tp join sides + both certify joins) AND both
     // banded candidate sides, and each lazy replay re-runs the
     // shingle + md5 + minhash lambda chain (DiagJobs: two 0.8 s jobs
-    // in a 2.0 s query, each recomputing `side`). The q278/q241
-    // discipline: localCheckpoint for the call, land the 3-row report
-    // on a reliable checkpoint, release the blocks before returning
-    // (zero persisted-RDD delta — Bench fails leaks loud).
-    graft.core.Session.ensureCheckpointDir(docsDf.sparkSession)
-    val side = hv.select(col("doc_id"),
+    // in a 2.0 s query, each recomputing `side`).
+    val side = pins.pin(hv.select(col("doc_id"),
       array_distinct(col("hv")).as("hvd"),
-      graft.functions.Fns.md5MinhashSig(col("hv")).as("s"))
-      .localCheckpoint(true)
+      graft.functions.Fns.md5MinhashSig(col("hv")).as("s")))
     // truth: df-capped shared-shingle pairs certified by true Jaccard
     val ex = side.select(col("doc_id"), explode(col("hvd")).as("h"))
     val keep = ex.groupBy("h").agg(count(lit(1)).as("df"))
@@ -804,7 +799,9 @@ object Dedup {
       .filter(col("d1") < col("d2"))
       .select("bands", "rpb", "d1", "d2").distinct()
     val truthCount = truth.agg(count(lit(1)).as("n_truth"))
-    val report = cand
+    // |cfgs|-row grid; the ORDER goes on after landing (a checkpoint
+    // scan does not promise to preserve a pre-checkpoint sort)
+    pins.land(cand
       .join(truth.withColumn("t", lit(1)), Seq("d1", "d2"), "left")
       .groupBy("bands", "rpb")
       .agg(count(lit(1)).as("n_candidates"),
@@ -818,14 +815,8 @@ object Dedup {
           .otherwise(col("n_hits").cast("double") / col("n_truth")), 4)
           .as("recall"),
         round(col("n_hits").cast("double") / col("n_candidates"), 4)
-          .as("precision"))
-      // |cfgs|-row grid: materialize before releasing side's blocks;
-      // the ORDER goes on after (the fleets convention — a checkpoint
-      // scan does not promise to preserve a pre-checkpoint sort)
-      .checkpoint(eager = true)
-    checkpointRdd(side).foreach(_.unpersist(blocking = false))
-    report.orderBy(col("bands"))
-  }
+          .as("precision")))
+  }.orderBy(col("bands"))
 
   /** Banding choice over [[bandRecallReport]]: the one-row decision a
     * dedup run consumes. Rule: among splits whose measured recall at
@@ -889,15 +880,6 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("comp"), col("rep")).as("comp"))
   }
 
-  /** The RDD backing an eagerly localCheckpoint'ed DataFrame — the
-    * handle `Dataset.unpersist()` does NOT reach (it only talks to the
-    * CacheManager; checkpoint blocks live as persisted RDDs).
-    */
-  private[graft] def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
   val PageRankIters = 10
   val PageRankDamping = 0.85
 
@@ -914,17 +896,10 @@ object Dedup {
     * The pair pipeline behind `pairs` is usually the expensive part
     * (LSH banding + exact Jaccard verify), and this function references
     * it from FIVE subplans (degrees twice, orientation, wedge close) —
-    * so it materializes the pair table ONCE via localCheckpoint and
-    * releases the blocks before returning, the pageRank discipline
-    * (zero persisted-RDD delta; result lands on a reliable checkpoint).
+    * so it pins the pair table ONCE for the call.
     */
-  def triangleCounts(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    graft.core.Session.ensureCheckpointDir(spark)
-    val p = pairs.select(col("d1"), col("d2")).localCheckpoint(true)
-    val result = triangleCountsOn(p).checkpoint(eager = true)
-    checkpointRdd(p).foreach(_.unpersist(blocking = false))
-    result
+  def triangleCounts(pairs: DataFrame): DataFrame = Pins { pins =>
+    pins.land(triangleCountsOn(pins.pin(pairs.select(col("d1"), col("d2")))))
   }
 
   /** Local clustering coefficient per node: 2T / (deg·(deg−1)) — the
@@ -935,23 +910,18 @@ object Dedup {
     * one-materialization + degree-oriented machinery; one extra
     * pair-sized aggregate and a left join.
     */
-  def clusteringCoefficients(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    graft.core.Session.ensureCheckpointDir(spark)
-    val p = pairs.select(col("d1"), col("d2")).localCheckpoint(true)
+  def clusteringCoefficients(pairs: DataFrame): DataFrame = Pins { pins =>
+    val p = pins.pin(pairs.select(col("d1"), col("d2")))
     val deg = p.select(col("d1").as("doc_id"))
       .unionAll(p.select(col("d2").as("doc_id")))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("deg"))
-    val coeffs = deg
+    pins.land(deg
       .join(triangleCountsOn(p), Seq("doc_id"), "left")
       .select(col("doc_id"), col("deg"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"),
         round(when(col("deg") >= 2,
           lit(2.0) * coalesce(col("n_tri"), lit(0L)) /
-            (col("deg") * (col("deg") - 1))).otherwise(0.0), 4).as("coeff"))
-    val result = coeffs.checkpoint(eager = true)
-    checkpointRdd(p).foreach(_.unpersist(blocking = false))
-    result
+            (col("deg") * (col("deg") - 1))).otherwise(0.0), 4).as("coeff")))
   }
 
   /** Degree-oriented triangle enumeration over an ALREADY-materialized
@@ -1004,10 +974,8 @@ object Dedup {
     * `pairs` is usually an expensive LSH pipeline and is referenced from
     * three subplans.
     */
-  def degreeAssortativity(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    graft.core.Session.ensureCheckpointDir(spark)
-    val p = pairs.select(col("d1"), col("d2")).localCheckpoint(true)
+  def degreeAssortativity(pairs: DataFrame): DataFrame = Pins { pins =>
+    val p = pins.pin(pairs.select(col("d1"), col("d2")))
     val e = p.select(col("d1").as("src"), col("d2").as("dst"))
       .unionAll(p.select(col("d2").as("src"), col("d1").as("dst")))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -1015,11 +983,8 @@ object Dedup {
     val xy = e
       .join(deg.select(col("n").as("src"), col("deg").as("gs")), Seq("src"))
       .join(deg.select(col("n").as("dst"), col("deg").as("gd")), Seq("dst"))
-    val result = graft.queries.Frontier
-      .pearsonExact(xy, col("gs"), col("gd"), "assortativity")
-      .checkpoint(eager = true)
-    checkpointRdd(p).foreach(_.unpersist(blocking = false))
-    result
+    pins.land(graft.queries.Frontier
+      .pearsonExact(xy, col("gs"), col("gd"), "assortativity"))
   }
 
   /** k-core peel of the pair graph: repeatedly drop nodes with degree
@@ -1036,37 +1001,30 @@ object Dedup {
     *
     * Shape: each round is two semi-joins + one degree aggregate, all
     * keyed on node id (pair-sized equi-shuffles); the edge set is
-    * localCheckpoint'ed per round (bounded lineage, the pageRank
-    * discipline) and the previous round's blocks are released
-    * immediately. Early-exit reads only the edge COUNT per round.
+    * pinned per round (bounded lineage) and the previous round's
+    * blocks are released immediately. Early-exit reads only the edge
+    * COUNT per round.
     */
-  def kCore(pairs: DataFrame, k: Int, maxRounds: Int): DataFrame = {
-    val spark = pairs.sparkSession
-    graft.core.Session.ensureCheckpointDir(spark)
+  def kCore(pairs: DataFrame, k: Int, maxRounds: Int): DataFrame = Pins { pins =>
     def degrees(e: DataFrame): DataFrame = e
       .select(col("d1").as("n")).unionAll(e.select(col("d2").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var e = pairs.select(col("d1"), col("d2")).localCheckpoint(true)
+    var e = pins.pin(pairs.select(col("d1"), col("d2")))
     var nEdges = e.count()
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       val surv = degrees(e).filter(col("deg") >= k).select(col("n"))
-      val e2 = e
+      val e2 = pins.pin(e
         .join(surv.withColumnRenamed("n", "d1"), Seq("d1"), "left_semi")
         .join(surv.withColumnRenamed("n", "d2"), Seq("d2"), "left_semi")
-        .select(col("d1"), col("d2"))
-        .localCheckpoint(true)
+        .select(col("d1"), col("d2")))
       val n2 = e2.count()
-      checkpointRdd(e).foreach(_.unpersist(blocking = false))
+      pins.release(e)
       converged = n2 == nEdges
       e = e2; nEdges = n2; round += 1
     }
-    val result = degrees(e)
-      .select(col("n").as("doc_id"), col("deg"))
-      .checkpoint(eager = true)
-    checkpointRdd(e).foreach(_.unpersist(blocking = false))
-    result
+    pins.land(degrees(e).select(col("n").as("doc_id"), col("deg")))
   }
 
   /** Oracle stages for [[kCore]]: `rounds` unrolled peel rounds over a
@@ -1103,33 +1061,23 @@ object Dedup {
     * aggregate job: edges carry rank/out-degree to their targets, a
     * map-side-combined sum collects it, and the teleport term is a
     * literal — nothing iterative touches the driver. The edge list with
-    * degrees is localCheckpoint'ed once and reused by every iteration;
-    * ranks re-checkpoint every 3 rounds so lineage stays bounded, with an
-    * L1-delta convergence exit at each checkpoint (near-dup graphs are
+    * degrees is pinned once and reused by every iteration; ranks are
+    * re-pinned every 3 rounds so lineage stays bounded, with an
+    * L1-delta convergence exit at each pin (near-dup graphs are
     * cliques that fixpoint in ~1-3 rounds — the iteration budget is a
-    * ceiling, not the cost). The final ranks move to a RELIABLE
-    * checkpoint and every in-memory block this call pinned is released
-    * before returning — zero persisted-RDD delta, the
-    * connectedComponents discipline (r9: leaked edge blocks from this
-    * function degraded ~100 downstream bench queries by ~35%). The
-    * symmetric graph has no dangling nodes, so mass is conserved without
-    * a dangling-sink term. Returns (id, rank) with Σ rank = 1.
+    * ceiling, not the cost). The final ranks land on a reliable
+    * checkpoint. The symmetric graph has no dangling nodes, so mass is
+    * conserved without a dangling-sink term. Returns (id, rank) with
+    * Σ rank = 1.
     */
   def pageRank(pairs: DataFrame, iters: Int = PageRankIters,
       damping: Double = PageRankDamping,
-      tol: Double = 1e-9): DataFrame = {
-    val spark = pairs.sparkSession
-    // final result moves to a RELIABLE checkpoint (the
-    // connectedComponents discipline) so every in-memory block this call
-    // pins can be released deterministically before returning — the r9
-    // bench regression traced to exactly these blocks outliving the call
-    graft.core.Session.ensureCheckpointDir(spark)
+      tol: Double = 1e-9): DataFrame = Pins { pins =>
     val sym = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("cd"))
-    val edges = sym.join(deg, "src").localCheckpoint(true)
-    val nodes = edges.select(col("src").as("id")).distinct()
-      .localCheckpoint(true)
+    val edges = pins.pin(sym.join(deg, "src"))
+    val nodes = pins.pin(edges.select(col("src").as("id")).distinct())
     val n = nodes.count()
     var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
     var prev: Option[DataFrame] = None
@@ -1143,7 +1091,7 @@ object Dedup {
         .select(col("dst").as("id"),
           (lit((1 - damping) / n) + lit(damping) * col("acc")).as("rank"))
       if (i % 3 == 0 || i == iters) {
-        val cp = ranks.localCheckpoint(true)
+        val cp = pins.pin(ranks)
         // convergence exit: near-dup graphs are band-collision cliques
         // where the power iteration reaches its fixpoint in ~1-3 rounds
         // — one small (id,rank)⋈(id,rank) agg per 3-round checkpoint
@@ -1163,20 +1111,13 @@ object Dedup {
             .agg(sum(abs(col("rank") - col("rank_prev"))).as("l1"))
             .head.getDouble(0) <= tol / n
         }
-        // release the previous checkpoint's blocks now that the new one
-        // is materialized (same discipline as connectedComponents)
-        prev.foreach(p => checkpointRdd(p).foreach(_.unpersist(blocking = false)))
+        // the new pin is materialized; the previous one is never read again
+        prev.foreach(pins.release)
         prev = Some(cp)
         ranks = cp
       }
     }
-    // one pass from the last in-memory round to reliable checkpoint
-    // files, then drop every block this call created — zero
-    // persisted-RDD delta (pinned by DedupSpec)
-    val result = ranks.checkpoint(eager = true)
-    prev.foreach(p => checkpointRdd(p).foreach(_.unpersist(blocking = false)))
-    checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-    checkpointRdd(nodes).foreach(_.unpersist(blocking = false))
+    val result = pins.land(ranks)
     lastPageRankIters = i
     result
   }
@@ -1190,29 +1131,22 @@ object Dedup {
     * one shuffle join (neighbor minimum) + one outer join (label merge),
     * and rounds needed = graph diameter — tiny for near-dup clusters,
     * which are band-collision cliques, not long chains. Each round is
-    * localCheckpoint'ed so lineage (and recomputation) doesn't grow with
+    * pinned so lineage (and recomputation) doesn't grow with
     * iterations — the standard shape for iterative graph algorithms on
-    * Spark; at cluster scale swap in `checkpoint` on reliable storage.
+    * Spark; the result lands on a reliable checkpoint.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val spark = pairs.sparkSession
-    // the final result moves to a RELIABLE checkpoint (files, readable
-    // cluster-wide through the checkpoint dir) so every in-memory round
-    // block can be released deterministically before returning; deploys
-    // point this at shared storage, local runs get a temp dir
-    graft.core.Session.ensureCheckpointDir(spark)
-    val edges = pairs
+  def connectedComponents(pairs: DataFrame,
+      maxIters: Int = 20): DataFrame = Pins { pins =>
+    val edges = pins.pin(pairs // probed every round — materialize once
       .select(col("d1").as("src"), col("d2").as("dst"))
-      .unionAll(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-      .localCheckpoint(true) // probed every round — materialize once
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("comp"))
-      .localCheckpoint(true)
-    // handle to the round's checkpoint blocks, released as soon as the
-    // NEXT round materializes — relying on the ContextCleaner to GC
-    // superseded rounds leaves them pinned non-deterministically on
-    // long-lived sessions (round-4 verdict)
-    var labelsRdd = checkpointRdd(labels)
+      .unionAll(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
+    var labels = pins.pin(edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("comp")))
+    // the round's pinned frame, released as soon as the NEXT round
+    // materializes — relying on the ContextCleaner to GC superseded
+    // rounds leaves them pinned non-deterministically on long-lived
+    // sessions
+    var pinned = labels
     var converged = false
     var iters = 0
     while (!converged && iters < maxIters) {
@@ -1220,31 +1154,23 @@ object Dedup {
         .join(labels.select(col("node").as("src"), col("comp")), Seq("src"))
         .groupBy(col("dst")).agg(min(col("comp")).as("nbr_comp"))
         .select(col("dst").as("node"), col("nbr_comp"))
-      val updated = labels.join(nbrMin, Seq("node"), "left")
+      val updated = pins.pin(labels.join(nbrMin, Seq("node"), "left")
         .select(col("node"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
             .as("new_comp"),
-          col("comp"))
-        .localCheckpoint(true)
+          col("comp")))
       converged = updated.filter(col("new_comp") =!= col("comp")).isEmpty
       labels = updated.select(col("node"), col("new_comp").as("comp"))
-      // the new checkpoint is materialized; the previous round's blocks
-      // can never be read again
-      labelsRdd.foreach(_.unpersist(blocking = false))
-      labelsRdd = checkpointRdd(updated)
+      pins.release(pinned)
+      pinned = updated
       iters += 1
     }
-    // one pass from the last in-memory round to checkpoint files, then
-    // drop every block this call created — zero persisted-RDD delta
-    val result = labels.checkpoint(eager = true)
-    labelsRdd.foreach(_.unpersist(blocking = false))
-    checkpointRdd(edges).foreach(_.unpersist(blocking = false))
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds " +
           "(graph diameter exceeds the label-propagation budget — use " +
           "connectedComponentsStar for high-diameter graphs)")
-    result
+    pins.land(labels)
   }
 
   /** Connected components by alternating large-star / small-star
@@ -1262,8 +1188,8 @@ object Dedup {
     * At the joint fixpoint the edge set is a star forest rooted at each
     * component's minimum id — the same (node, comp=min reachable id)
     * contract as [[connectedComponents]], so the two are interchangeable
-    * (DedupSpec pins equality). Rounds are localCheckpoint'ed and
-    * released like the propagation loop; raises if maxIters is hit
+    * (DedupSpec pins equality). Rounds are pinned and released like
+    * the propagation loop; raises if maxIters is hit
     * without reaching the fixpoint rather than returning a partially
     * contracted labeling.
     *
@@ -1281,17 +1207,14 @@ object Dedup {
     * the per-round cost stays one scan (DedupSpec pins label equality
     * vs propagation on every fixture, including the 1000-chain).
     */
-  def connectedComponentsStar(pairs: DataFrame, maxIters: Int = 40): DataFrame = {
-    val spark = pairs.sparkSession
-    graft.core.Session.ensureCheckpointDir(spark)
+  def connectedComponentsStar(pairs: DataFrame,
+      maxIters: Int = 40): DataFrame = Pins { pins =>
     // directed-down canonical edges (u > v), deduped
-    var edges = pairs
+    var edges = pins.pin(pairs
       .select(greatest(col("d1"), col("d2")).as("u"),
         least(col("d1"), col("d2")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
-    var edgesRdd = checkpointRdd(edges)
+      .distinct())
     // (count, xor-of-row-hashes) set signature — ONE scan, no join
     def sig(df: DataFrame): (Long, Long) = {
       val r = df.agg(
@@ -1317,12 +1240,11 @@ object Dedup {
       // (all smaller) neighbors and itself to its minimum neighbor
       val mins2 = large.groupBy(col("u")).agg(min(col("v")).as("m"))
       val withM = large.join(mins2, Seq("u"))
-      val small = withM
+      val small = pins.pin(withM
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
         .unionAll(withM.select(col("u"), col("m").as("v")))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       // fixpoint when the edge set is unchanged: compare this round's
       // signature to the previous round's (carried forward — the single
       // bounded driver job per round); a match is confirmed exactly
@@ -1331,24 +1253,19 @@ object Dedup {
       val smallSig = sig(small)
       converged = smallSig == edgeSig && small.exceptAll(edges).isEmpty
       edgeSig = smallSig
-      edgesRdd.foreach(_.unpersist(blocking = false))
+      pins.release(edges)
       edges = small
-      edgesRdd = checkpointRdd(edges)
       iters += 1
     }
-    if (!converged) {
-      edgesRdd.foreach(_.unpersist(blocking = false))
+    if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIters rounds")
-    }
     // the fixpoint is a star forest (leaf -> root=component min); labels
     // are the leaf edges plus one self-label per root
     val labels = edges.select(col("u").as("node"), col("v").as("comp"))
       .unionAll(edges.select(col("v").as("node"), col("v").as("comp")).distinct())
       .distinct()
-    val result = labels.checkpoint(eager = true)
-    edgesRdd.foreach(_.unpersist(blocking = false))
-    result
+    pins.land(labels)
   }
 
   /** Constants for the oracle-checked MD5 minhash (q65): slot i is the

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.etl.Writers
 
 /** Persisted IVF index — the ANN analog of [[PairStore]].
@@ -95,11 +96,11 @@ object IvfStore {
     */
   def train(vectors: DataFrame, k: Int = Similarity.IvfCells,
       iters: Int = 5, seed: Long = 42L,
-      sampleFraction: Double = 1.0): DataFrame = {
+      sampleFraction: Double = 1.0): DataFrame = Pins { pins =>
     import org.apache.spark.sql.expressions.Window
     // the returned codebook is driver-pinned by the loop's per-iteration
     // collect; with zero iterations the init would still reference the
-    // checkpoint blocks released below
+    // pinned vectors, which are released when this call returns
     require(iters >= 1, s"train needs at least one iteration, got $iters")
     require(sampleFraction > 0.0 && sampleFraction <= 1.0,
       s"sampleFraction must be in (0, 1], got $sampleFraction")
@@ -109,9 +110,8 @@ object IvfStore {
       if (sampleFraction < 1.0)
         vectors.sample(withReplacement = false, sampleFraction, seed)
       else vectors
-    val vecs = base.repartition(col("vec_id"))
-      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-      .localCheckpoint(true)
+    val vecs = pins.pin(base.repartition(col("vec_id"))
+      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v")))
     val w = Window.orderBy(col("h"), col("vec_id"))
     var codebook = vecs
       .select(col("vec_id"), col("v"),
@@ -135,9 +135,6 @@ object IvfStore {
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
         .toDF("cell", "cv")
     }
-    vecs.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
     codebook
   }
 

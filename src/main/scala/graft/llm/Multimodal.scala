@@ -450,8 +450,7 @@ object Multimodal {
     // Media DEDUP GROUPS: connected components over the q131 pair graph
     // — the q56 pairs→clusters step for the binary modality, so a
     // curation run can keep one representative per near-identical
-    // payload cluster. Same CC operator (reliable-checkpoint,
-    // zero-persisted-RDD-delta discipline), recursive-CTE oracle over
+    // payload cluster. Same CC operator, recursive-CTE oracle over
     // the identical banded-Hamming pair rule.
     Q("q136_media_dedup_groups",
       (s, d) =>

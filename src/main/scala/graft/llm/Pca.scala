@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.queries.Q
 
 /** Distributed PCA (top principal component) by power iteration — the
@@ -53,15 +53,15 @@ object Pca {
     * canonicalization — eigenvectors are defined up to sign).
     *
     * `sampleFraction` < 1 bounds every iterated scan to a seeded sample;
-    * the frame (sampled or not) is localCheckpointed once so the loop
-    * re-reads a materialized columnar copy, not the parquet scan.
+    * the frame (sampled or not) is pinned once so the loop re-reads a
+    * materialized columnar copy, not the parquet scan.
     */
   def powerIteration(vecs: DataFrame, iters: Int = 12,
       sampleFraction: Double = 1.0, seed: Long = 42L)
-      : (Array[Double], Array[Double]) = {
+      : (Array[Double], Array[Double]) = Pins { pins =>
     val f0 = if (sampleFraction < 1.0)
       vecs.sample(withReplacement = false, sampleFraction, seed) else vecs
-    val f = f0.select(col("a")).localCheckpoint(true)
+    val f = pins.pin(f0.select(col("a")))
     val dim = f.select(size(col("a"))).head().getInt(0)
     val mu = meanVector(f, dim)
 
@@ -84,10 +84,6 @@ object Pca {
     }
     val kMax = v.indices.maxBy(j => math.abs(v(j)))
     if (v(kMax) < 0) v = v.map(-_)
-    // free the checkpoint's persisted RDD as well — Dataset.unpersist
-    // only reaches the CacheManager (Bench's standing leak assertion)
-    f.unpersist()
-    Dedup.checkpointRdd(f).foreach(_.unpersist(blocking = false))
     (mu, v)
   }
 
@@ -321,14 +317,11 @@ object Pca {
         val vecs = emb(s, d)
           .select(col("vec_id"), col("label"),
             Similarity.asDouble(col("embedding")).as("a"))
-        val f = vecs.select(col("a")).localCheckpoint(true)
-        val dim = f.select(size(col("a"))).head().getInt(0)
-        val mu = meanVector(f, dim)
-        // centroid is computed; release the snapshot (blocks otherwise
-        // outlive the query — Bench's standing leak assertion)
-        f.unpersist()
-        Dedup.checkpointRdd(f).foreach(_.unpersist(blocking = false))
-        componentDf(s, mu, Array.fill(dim)(0.0))
+        val mu = Pins { pins =>
+          val f = pins.pin(vecs.select(col("a")))
+          meanVector(f, f.select(size(col("a"))).head().getInt(0))
+        }
+        componentDf(s, mu, Array.fill(mu.length)(0.0))
           .select(col("j"), col("mu")).coalesce(1)
           .write.mode("overwrite").parquet(Q116CentroidDir)
         val stored = s.read.parquet(Q116CentroidDir)

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.queries.Q
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
@@ -75,7 +75,7 @@ object Pq {
     */
   def train(vectors: DataFrame, m: Int = DefaultM, k: Int = DefaultK,
       iters: Int = 3, seed: Long = 42L,
-      sampleFraction: Double = 1.0): DataFrame = {
+      sampleFraction: Double = 1.0): DataFrame = Pins { pins =>
     require(iters >= 1, s"train needs at least one iteration, got $iters")
     require(sampleFraction > 0.0 && sampleFraction <= 1.0,
       s"sampleFraction must be in (0, 1], got $sampleFraction")
@@ -85,9 +85,8 @@ object Pq {
       if (sampleFraction < 1.0)
         vectors.sample(withReplacement = false, sampleFraction, seed)
       else vectors
-    val vecs = base.repartition(col("vec_id"))
-      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
-      .localCheckpoint(true)
+    val vecs = pins.pin(base.repartition(col("vec_id"))
+      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v")))
     val dim = vecs.select(size(col("v"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dsub = dim / m
@@ -125,9 +124,6 @@ object Pq {
       books = (0 until m).map(s => (0 until k).map(c =>
         means.getOrElse((s, c), books(s)(c))))
     }
-    vecs.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
     books.zipWithIndex.flatMap { case (cells, s) =>
       cells.zipWithIndex.map { case (cv, c) => (s, c, cv.toSeq) }
     }.toDF("sub", "cell", "cv")

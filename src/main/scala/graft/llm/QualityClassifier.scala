@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.queries.Q
 
 /** Distributed logistic-regression quality classifier — the linear core
@@ -58,10 +58,11 @@ object QualityClassifier {
     * cached) feature frame.
     */
   def train(featsDf: DataFrame, iters: Int = 30, lr: Double = 2.0,
-      sampleFraction: Double = 1.0, seed: Long = 42L): Array[Double] = {
-    val f = (if (sampleFraction < 1.0)
-      featsDf.sample(withReplacement = false, sampleFraction, seed)
-    else featsDf).localCheckpoint(true)
+      sampleFraction: Double = 1.0, seed: Long = 42L): Array[Double] = Pins { pins =>
+    val f = pins.pin(
+      if (sampleFraction < 1.0)
+        featsDf.sample(withReplacement = false, sampleFraction, seed)
+      else featsDf)
     var w = Array.fill(Dim)(0.0)
     for (_ <- 0 until iters) {
       val z = (0 until Dim).map(j => col(s"x$j") * lit(w(j)))
@@ -73,13 +74,6 @@ object QualityClassifier {
         avg(err * col("x2")), avg(err * col("x3"))).head()
       w = w.zipWithIndex.map { case (wj, j) => wj - lr * g.getDouble(j) }
     }
-    // Dataset.unpersist alone does NOT free an eager localCheckpoint's
-    // blocks (it only talks to the CacheManager); drop the backing
-    // persisted RDD too, or every train() call pins one snapshot for the
-    // session's lifetime — the r9 pageRank leak class, now failed loud
-    // by Bench's standing zero-persisted-RDD assertion.
-    f.unpersist()
-    Dedup.checkpointRdd(f).foreach(_.unpersist(blocking = false))
     w
   }
 

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.queries.Q
 
 /** Text-analysis operators for LLM training-data pipelines, over the
@@ -183,8 +183,8 @@ object TextOps {
     * winning pair left-to-right. Ties break lexicographically so the
     * merge table is deterministic across runs and partitionings.
     */
-  def bpeTrain(docsDf: DataFrame, numMerges: Int): Seq[(Int, String)] = {
-    val spark = docsDf.sparkSession
+  def bpeTrain(docsDf: DataFrame,
+      numMerges: Int): Seq[(Int, String)] = Pins { pins =>
     val words = docsDf
       .select(explode(tokens(col("text"))).as("w"))
       .filter(col("w") =!= "")
@@ -197,7 +197,7 @@ object TextOps {
             i => col("w").substr(i, lit(1))),
           array(lit("</w>"))).as("sym"),
         col("cnt"))
-    var cur = words.persist()
+    var cur = pins.keep(words)
     cur.count() // materialize before the loop so tokenize runs once
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String)]
     for (step <- 1 to numMerges if merges.size == step - 1) {
@@ -217,7 +217,7 @@ object TextOps {
         merges += ((step, pair))
         // fuse adjacent (a, b) left-to-right, non-overlapping: fold the
         // symbols, replacing a trailing `a` when the next symbol is `b`
-        val next = cur.select(
+        val next = pins.keep(cur.select(
           aggregate(col("sym"),
             array().cast("array<string>"),
             (acc, x) => when(
@@ -225,13 +225,12 @@ object TextOps {
                 x === lit(b),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
               .otherwise(concat(acc, array(x)))).as("sym"),
-          col("cnt")).persist()
+          col("cnt")))
         next.count()
-        cur.unpersist()
+        pins.release(cur)
         cur = next
       }
     }
-    cur.unpersist()
     merges.toList
   }
 

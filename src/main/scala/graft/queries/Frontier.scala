@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Decision-support frontier operators: the remaining classic TPC-H
   * subquery decorrelation shapes (EXISTS with a non-equi correlated
@@ -933,10 +933,10 @@ object Frontier {
     // rows plus a ≤256-row broadcast window; output is the ≤125-cell
     // segment grid.
     Q("q241_rfm",
-      (s, d) => {
+      (s, d) => Pins { pins =>
         val refd = t(s, d, "orders")
           .agg(max(col("o_orderdate")).as("refd"))
-        val per = t(s, d, "orders")
+        val per = pins.pin(t(s, d, "orders")
           .groupBy(col("o_custkey"))
           .agg(max(col("o_orderdate")).as("last_o"),
             count(lit(1)).as("f"),
@@ -944,12 +944,11 @@ object Frontier {
           .crossJoin(broadcast(refd))
           .select(col("o_custkey").as("cid"),
             datediff(col("refd"), col("last_o")).cast("long").as("r_days"),
-            col("f"), (col("mdec") * 100).cast("long").as("m_cents"))
-          // materialize the |customers|-row frame ONCE (the q177
-          // pattern): each blockRank's bounds aggregate and window
-          // pass would otherwise re-execute the orders scan+aggregate
-          // — measured 2x wall at the 10x ord rehearsal
-          .localCheckpoint()
+            col("f"), (col("mdec") * 100).cast("long").as("m_cents")))
+        // `per` is the |customers|-row frame, pinned ONCE: each
+        // blockRank's bounds aggregate and window pass would otherwise
+        // re-execute the orders scan+aggregate — measured 2x wall at
+        // the 10x ord rehearsal
         val ranked = Seq(("r_days", "r_rank"), ("f", "f_rank"),
           ("m_cents", "m_rank")).foldLeft(per) { case (df, (m, out)) =>
             blockRank(df, m, "cid").withColumnRenamed("rank", out)
@@ -969,14 +968,7 @@ object Frontier {
           .groupBy(col("r_score"), col("f_score"), col("m_score"))
           .agg(count(lit(1)).as("n_customers"))
           .orderBy(col("r_score"), col("f_score"), col("m_score"))
-        // land the ≤125-cell grid on a reliable checkpoint, then
-        // RELEASE the localCheckpoint blocks — the q177 zero
-        // persisted-RDD-delta discipline (Bench fails leaks loud)
-        graft.core.Session.ensureCheckpointDir(s)
-        val result = grid.checkpoint(eager = true)
-        graft.llm.Dedup.checkpointRdd(per)
-          .foreach(_.unpersist(blocking = false))
-        result
+        pins.land(grid) // the ≤125-cell grid
       },
       Some("""WITH per AS (
                 SELECT o_custkey AS cid, MAX(o_orderdate) AS last_o,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Geo/trajectory operators — the domain family an AIS-scale position
   * pipeline needs (the reference ingests NOAA AIS vessel-traffic
@@ -727,22 +727,18 @@ object Geo {
     * edge count, episode count, exact total pair-hours. fleet_id is
     * the component's minimum vessel id (deterministic). */
   def fleets(events: DataFrame, radiusM: Long = 500L,
-      minHours: Long = 1L, maxGapHours: Long = 168L): DataFrame = {
+      minHours: Long = 1L, maxGapHours: Long = 168L): DataFrame = Pins { pins =>
     val eps = coTravel(events, radiusM, minHours, maxGapHours)
     // r20: materialize the pair summary ONCE — it feeds BOTH the CC
     // edge list and the per-fleet aggregate below, and as a lazy frame
     // the second consumer REPLAYED the whole band-join + islands
     // pipeline (the query's only corpus-sized work) at the final
-    // action. The q241/q177 discipline: localCheckpoint for the
-    // call's duration, result lands on a reliable checkpoint, blocks
-    // released before returning (zero persisted-RDD delta — Bench
-    // fails leaks loud).
-    val spark = events.sparkSession
-    graft.core.Session.ensureCheckpointDir(spark)
-    val prs = eps.groupBy(col("u1"), col("u2"))
+    // action. The fleet grid lands before prs is released; the ORDER
+    // goes on after (a checkpoint scan does not promise to preserve a
+    // pre-checkpoint sort).
+    val prs = pins.pin(eps.groupBy(col("u1"), col("u2"))
       .agg(count(lit(1)).as("n_episodes"),
-        sum(col("n_hours").cast(Dec)).cast("long").as("hours"))
-      .localCheckpoint(true)
+        sum(col("n_hours").cast(Dec)).cast("long").as("hours")))
     val comps = graft.llm.Dedup.connectedComponentsStar(
       prs.select(col("u1").as("d1"), col("u2").as("d2")))
     val members = comps.groupBy(col("comp"))
@@ -753,15 +749,10 @@ object Geo {
       .agg(count(lit(1)).as("n_pairs"),
         sum(col("n_episodes")).as("n_episodes"),
         sum(col("hours").cast(Dec)).cast("long").as("pair_hours"))
-    val grid = members.join(pairAgg, Seq("comp"))
+    pins.land(members.join(pairAgg, Seq("comp"))
       .select(col("comp").as("fleet_id"), col("n_vessels"),
-        col("n_pairs"), col("n_episodes"), col("pair_hours"))
-      // fleet-grid-sized: materialize before releasing prs' blocks
-      .checkpoint(eager = true)
-    graft.llm.Dedup.checkpointRdd(prs)
-      .foreach(_.unpersist(blocking = false))
-    grid.orderBy(col("n_vessels").desc, col("fleet_id"))
-  }
+        col("n_pairs"), col("n_episodes"), col("pair_hours")))
+  }.orderBy(col("n_vessels").desc, col("fleet_id"))
 
   /** Zone-attributed co-travel — the WHERE to q269/q278's WHO: each
     * qualifying episode's encounter-hours land in the zone containing

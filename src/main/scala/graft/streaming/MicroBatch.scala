@@ -1,15 +1,12 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
+import graft.core.Pins
 import graft.etl.Writers
-import graft.llm.Dedup
 
 /** The one micro-batch runner behind every always-on monitor in this
   * package. A monitor is a file source over its landing dir, a stream
@@ -19,12 +16,12 @@ import graft.llm.Dedup
   * that wiring, so a monitor states only its per-batch work.
   *
   * [[run]] hands each batch body a [[Batch]]: the batch frame and id,
-  * the Hadoop file system, the two ways to hold a frame across several
-  * uses, and the replay-idempotent output write. Everything a body keeps
-  * or pins is released in ONE `finally` after the body returns or
-  * throws: an always-on stream that skipped a release would pin one
-  * block set per micro-batch forever, and a failed batch (an append
-  * racing a compaction, a full disk) must not either.
+  * the Hadoop file system, the batch's [[Pins]] scope, and the
+  * replay-idempotent output write. The runner opens one scope per
+  * batch, so everything a body keeps or pins is released when the body
+  * returns or throws: an always-on stream that skipped a release would
+  * pin one block set per micro-batch forever, and a failed batch (an
+  * append racing a compaction, a full disk) must not either.
   */
 object MicroBatch {
 
@@ -47,8 +44,7 @@ object MicroBatch {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, id: Long) =>
-        val batch = new Batch(df, id)
-        try body(batch) finally batch.release()
+        Pins(pins => body(new Batch(df, id, pins)))
       }
       .start()
 
@@ -64,11 +60,10 @@ object MicroBatch {
       .option("path", path)
       .start()
 
-  /** One micro-batch: its frame `df`, its id, and the frames held for
-    * it until the body ends. */
-  final class Batch private[MicroBatch] (val df: DataFrame, val id: Long) {
-    private val kept = ArrayBuffer.empty[Dataset[_]]
-    private val pinned = ArrayBuffer.empty[DataFrame]
+  /** One micro-batch: its frame `df`, its id, and `pins`, the scope
+    * that holds frames for it until the body ends. */
+  final class Batch private[MicroBatch] (val df: DataFrame, val id: Long,
+      val pins: Pins) {
 
     /** The Hadoop file system that holds `path`. */
     def fs(path: String): FileSystem =
@@ -76,32 +71,11 @@ object MicroBatch {
 
     def exists(path: String): Boolean = fs(path).exists(new Path(path))
 
-    /** Persist `ds` (MEMORY_AND_DISK) for the rest of the batch: a frame
-      * several sinks read is computed once, not once per sink. */
-    def keep[T](ds: Dataset[T]): Dataset[T] = {
-      kept += ds.persist(StorageLevel.MEMORY_AND_DISK)
-      ds
-    }
-
-    /** Eagerly `localCheckpoint` `df` for the rest of the batch: a
-      * materialized snapshot with its lineage cut, so every later use
-      * reads the same rows without re-running the plan that made them. */
-    def pin(df: DataFrame): DataFrame = {
-      val snapshot = df.localCheckpoint(true)
-      pinned += snapshot
-      snapshot
-    }
-
     /** Overwrite `dir/batch=<id>` with `df`: a batch replayed after its
       * commit was lost replaces its own partition, never adds a copy. */
     def write(df: DataFrame, dir: String): Unit =
       df.write.mode("overwrite")
         .option("compression", Writers.DefaultCompression)
         .parquet(s"$dir/batch=$id")
-
-    private[MicroBatch] def release(): Unit = {
-      kept.foreach(_.unpersist())
-      pinned.foreach(Dedup.checkpointRdd(_).foreach(_.unpersist(blocking = false)))
-    }
   }
 }

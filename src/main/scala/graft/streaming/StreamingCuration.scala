@@ -210,7 +210,7 @@ object StreamingCuration {
         s"$outDir/_checkpoint", trigger) { b =>
       // split + fingerprint computed ONCE per batch, reused across the
       // probe, retro-probe, and both state appends
-      val t = b.pin(b.df.select(
+      val t = b.pins.pin(b.df.select(
           col("doc_id"), Curation.splitCol.as("split"),
           TextOps.fingerprint(col("text")).as("fp")))
       val newTrain = t.filter(col("split") === "train")
@@ -284,7 +284,7 @@ object StreamingCuration {
     val buckets = pinnedBuckets(spark, stateDir)
     MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
         s"$outDir/_checkpoint", trigger) { b =>
-      val grams = b.pin(Curation.gramKeys(b.df, n))
+      val grams = b.pins.pin(Curation.gramKeys(b.df, n))
       val newTrain = grams.filter(col("split") === "train")
         .select(col("k")).distinct()
       val newTest = grams.filter(col("split") === "test")
@@ -353,7 +353,7 @@ object StreamingCuration {
       import graft.llm.Similarity
       // assign + split computed ONCE per batch, reused by both
       // probes, the retro-probe, and both state appends
-      val t = b.pin(Similarity.ivfAssign(cb,
+      val t = b.pins.pin(Similarity.ivfAssign(cb,
           b.df.select(col("vec_id"),
             col("embedding").cast("array<double>").as("v")),
           probes = 1)

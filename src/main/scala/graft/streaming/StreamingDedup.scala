@@ -168,7 +168,7 @@ object StreamingDedup {
     MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
         s"$outDir/_checkpoint", trigger) { b =>
       // bands computed ONCE per batch, reused for probe + append
-      val batchBands = b.pin(Dedup.minhashBands(b.df))
+      val batchBands = b.pins.pin(Dedup.minhashBands(b.df))
       withBucketedScan(spark, buckets > 0) {
         val idx = new StoredIndex(spark, b, indexDir,
           "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, band_hash BIGINT",
@@ -210,7 +210,7 @@ object StreamingDedup {
     MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
         s"$outDir/_checkpoint", trigger) { b =>
       // bands computed ONCE per batch, reused for probe + append
-      val batchBands = b.pin(Multimodal.phashBands(
+      val batchBands = b.pins.pin(Multimodal.phashBands(
         b.df.select(col("doc_id"), unbase64(col("media_b64")).as("media"))))
       withBucketedScan(spark, buckets > 0) {
         val idx = new StoredIndex(spark, b, indexDir,
@@ -281,7 +281,7 @@ object StreamingDedup {
       // (wide=false: a micro-batch frame keeps the AQE-coalescible
       // spread — 32 pinned tasks per small batch is pure overhead)
       val docsB = b.df.select(col("doc_id"), col("text"))
-      val grams = b.pin(Dedup.positionalGrams(docsB, minRun, wide = false))
+      val grams = b.pins.pin(Dedup.positionalGrams(docsB, minRun, wide = false))
       withBucketedScan(spark, buckets > 0) {
         // bucketed form: the index reads g-pre-partitioned through
         // the catalog — every probe join below leaves the stored
@@ -305,7 +305,7 @@ object StreamingDedup {
             .filter(col("d1") =!= col("d2"))
             .select(col("d1"), col("d2"), col("p1"), col("p2"))
           // reused by the span write AND the clean derivation
-          val islands = b.pin(Dedup.diagonalIslands(m, minRun))
+          val islands = b.pins.pin(Dedup.diagonalIslands(m, minRun))
           b.write(islands
             .select(col("d1").as("d_new"), col("d2").as("d_old"),
               col("p1").as("p_new"), col("p2").as("p_old"), col("len")),
@@ -363,7 +363,7 @@ object StreamingDedup {
         s"$outDir/_checkpoint", trigger) { b =>
       val vocabB = graft.llm.Fuzzy.vocab(b.df) // (tok, c)
       // variants computed ONCE per batch, reused for probe + append
-      val vars = b.pin(graft.llm.Fuzzy.deletionVariants(vocabB))
+      val vars = b.pins.pin(graft.llm.Fuzzy.deletionVariants(vocabB))
       withBucketedScan(spark, buckets > 0) {
         // variant-bucketed form: the candidate join (the corpus-sized
         // one) leaves the stored side exchange-free; the tok-distinct
@@ -469,7 +469,7 @@ object StreamingDedup {
     MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
         s"$outDir/_checkpoint", trigger) { b =>
       val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-      val batchDocs = b.pin(b.df // reused by probe + both writes
+      val batchDocs = b.pins.pin(b.df // reused by probe + both writes
         .select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).drop("rn"))
@@ -482,7 +482,7 @@ object StreamingDedup {
             .select(col("fp")).distinct()
           batchDocs.join(broadcast(hits), Seq("fp"), "left_anti")
         } else batchDocs
-      val kept = b.pin(survivors)
+      val kept = b.pins.pin(survivors)
       b.write(kept.select(col("doc_id"), col("text"), col("fp")),
         s"$outDir/unique")
       b.write(kept.select(col("fp")), stateDir)

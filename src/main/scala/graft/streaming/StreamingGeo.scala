@@ -341,8 +341,8 @@ object StreamingGeo {
         trigger) { b =>
       val fs = b.fs(outDir)
       val bid = b.id
-      val raw = b.keep(b.df)
-      val pts = b.keep(points(raw))
+      val raw = b.pins.keep(b.df)
+      val pts = b.pins.keep(points(raw))
       // previous per-vessel last-fix snapshot (newest id < bid —
       // a crash-replayed batch reads the state from BEFORE itself
       // and reproduces its own outputs, the open/ pattern)
@@ -363,7 +363,7 @@ object StreamingGeo {
           col("event_id"), col("lat_e6"), col("lon_e6"))
       val wu = Window.partitionBy(col("user_id"))
         .orderBy(col("t"), col("event_id"))
-      val legs = b.keep(prev.withColumn("from_state", lit(true))
+      val legs = b.pins.keep(prev.withColumn("from_state", lit(true))
         .unionByName(bFix.withColumn("from_state", lit(false)))
         .withColumn("pt", lag(col("t"), 1).over(wu))
         .withColumn("pla", lag(col("lat_e6"), 1).over(wu))
@@ -460,7 +460,7 @@ object StreamingGeo {
       // kept: the representative-point window otherwise replays for the
       // span aggregate, the occ summary, the band-join probe and the
       // index write (~4x per batch)
-      val pts = b.keep(points(b.df))
+      val pts = b.pins.keep(points(b.df))
       // the batch's hour span: pairing matches EQUAL hours only, so
       // index rows outside [min_hour, max_hour] cannot join — one
       // tiny aggregate (the hwm pattern) bounds every index/occ read
@@ -583,7 +583,7 @@ object StreamingGeo {
       // kept: the representative-point window otherwise replays for the
       // span aggregate, the index-union probe, the occ summary and the
       // index write
-      val pts = b.keep(points(b.df))
+      val pts = b.pins.keep(points(b.df))
       // batch hour span (one tiny aggregate): pairing matches EQUAL
       // hours only, so index/occ rows outside the span cannot join —
       // every persisted read below is bounded to the span, keeping
@@ -684,7 +684,7 @@ object StreamingGeo {
       // the ACTIVE pair population, evicted past maxGapHours — never
       // collected to the driver) instead of replaying the band join
       // per sink
-      val routed = b.keep(folded)
+      val routed = b.pins.keep(folded)
       def land(kind: String, dir: String): Unit =
         b.write(routed.filter(_.kind == kind)
           .select(col("u1"), col("u2"), col("start_hour"),
