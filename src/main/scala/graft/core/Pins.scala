@@ -1,7 +1,10 @@
 package graft.core
 
+import scala.annotation.tailrec
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
@@ -21,9 +24,30 @@ import org.apache.spark.storage.StorageLevel
   * A result that must outlive the scope goes through [[land]]: a
   * reliable checkpoint is files in the checkpoint dir, not blocks.
   *
+  * [[iterate]] is the one round loop over pinned frames (connected
+  * components by propagation and by star contraction, k-core, PageRank,
+  * BPE merges): it counts rounds against the cap, pins each round's
+  * frame, and releases the previous round's frame only once the new one
+  * is materialized, so a loop holds at most two rounds at a time and
+  * never releases early in any other way. The loops that carry their
+  * state on the driver (PCA power iteration, PQ and IVF k-means, the
+  * quality classifier's gradient steps) pin one frame for the whole
+  * scope and release nothing per round; they stay plain `for` loops,
+  * since routing them through `iterate` would hand it a frame it never
+  * swaps.
+  *
   * This is the only code that knows an eager localCheckpoint's blocks
   * sit in a persisted RDD behind the frame's `LogicalRDD`, which
   * `Dataset.unpersist` (a CacheManager call) never reaches.
+  *
+  * Spark logs `WARN MapPartitionsRDD: RDD <n> was locally checkpointed,
+  * its lineage has been truncated and cannot be recomputed after
+  * unpersisting` on every such release. The warning is for code that
+  * might read the RDD again; a frame is released here only when nothing
+  * reads it again (the previous round, or the end of the scope), and no
+  * other code checkpoints, so the line says nothing. The logger that
+  * emits it, `org.apache.spark.rdd.MapPartitionsRDD`, is set to ERROR
+  * when `Pins` is first used; every other logger keeps its level.
   */
 final class Pins private {
   private val held = ArrayBuffer.empty[(Dataset[_], () => Unit)]
@@ -44,10 +68,38 @@ final class Pins private {
   def keep[T](ds: Dataset[T]): Dataset[T] =
     hold(ds.persist(StorageLevel.MEMORY_AND_DISK))(() => ds.unpersist())
 
-  /** Release `ds` (a frame [[pin]] or [[keep]] returned) before the scope
-    * ends: an iteration round's frame once the next round has
+  /** Run a round loop of at most `cap` rounds from `start`, a frame and
+    * a small driver-side value read from it. Each round, `round` maps the
+    * current frame and value to the next frame, which is pinned; then
+    * `test(prev, value, next)` returns the next value and whether the
+    * loop has converged; then the previous frame is released. A round
+    * that returns its input frame has reached its fixpoint: nothing is
+    * pinned and the loop ends converged. The final frame stays held
+    * until the scope ends. What to do at the cap (return or throw) is
+    * the caller's: [[Pins.Iterated]] says whether the test fired. */
+  def iterate[A](start: (DataFrame, A), cap: Int)(
+      round: (DataFrame, A) => DataFrame)(
+      test: (DataFrame, A, DataFrame) => (A, Boolean)): Pins.Iterated[A] = {
+    @tailrec def loop(prev: DataFrame, value: A, rounds: Int): Pins.Iterated[A] =
+      if (rounds >= cap) Pins.Iterated(prev, value, rounds, converged = false)
+      else {
+        val out = round(prev, value)
+        if (out eq prev) Pins.Iterated(prev, value, rounds + 1, converged = true)
+        else {
+          val next = pin(out)
+          val (v, converged) = test(prev, value, next)
+          release(prev)
+          if (converged) Pins.Iterated(next, v, rounds + 1, converged)
+          else loop(next, v, rounds + 1)
+        }
+      }
+    loop(start._1, start._2, 0)
+  }
+
+  /** Release `ds` before the scope ends (a no-op for a frame this scope
+    * does not hold): [[iterate]]'s previous round, once the next one has
     * materialized. */
-  def release(ds: Dataset[_]): Unit = {
+  private def release(ds: Dataset[_]): Unit = {
     val i = held.indexWhere(_._1 eq ds)
     if (i >= 0) held.remove(i)._2()
   }
@@ -72,10 +124,18 @@ final class Pins private {
 }
 
 object Pins {
+  Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
+
   /** Run `body` with a fresh scope; every frame it still holds is
     * released when it returns or throws. */
   def apply[A](body: Pins => A): A = {
     val pins = new Pins
     try body(pins) finally pins.releaseAll()
   }
+
+  /** The end of an [[Pins.iterate]] loop: the last round's frame and
+    * value, the rounds run, and whether the convergence test fired
+    * (false: the cap ended the loop). */
+  final case class Iterated[A](frame: DataFrame, value: A, rounds: Int,
+      converged: Boolean)
 }

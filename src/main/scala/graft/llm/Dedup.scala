@@ -1009,22 +1009,17 @@ object Dedup {
     def degrees(e: DataFrame): DataFrame = e
       .select(col("d1").as("n")).unionAll(e.select(col("d2").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var e = pins.pin(pairs.select(col("d1"), col("d2")))
-    var nEdges = e.count()
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+    val e0 = pins.pin(pairs.select(col("d1"), col("d2")))
+    val core = pins.iterate((e0, e0.count()), maxRounds) { (e, _) =>
       val surv = degrees(e).filter(col("deg") >= k).select(col("n"))
-      val e2 = pins.pin(e
-        .join(surv.withColumnRenamed("n", "d1"), Seq("d1"), "left_semi")
+      e.join(surv.withColumnRenamed("n", "d1"), Seq("d1"), "left_semi")
         .join(surv.withColumnRenamed("n", "d2"), Seq("d2"), "left_semi")
-        .select(col("d1"), col("d2")))
+        .select(col("d1"), col("d2"))
+    } { (_, nEdges, e2) =>
       val n2 = e2.count()
-      pins.release(e)
-      converged = n2 == nEdges
-      e = e2; nEdges = n2; round += 1
+      (n2, n2 == nEdges)
     }
-    pins.land(degrees(e).select(col("n").as("doc_id"), col("deg")))
+    pins.land(degrees(core.frame).select(col("n").as("doc_id"), col("deg")))
   }
 
   /** Oracle stages for [[kCore]]: `rounds` unrolled peel rounds over a
@@ -1079,46 +1074,40 @@ object Dedup {
     val edges = pins.pin(sym.join(deg, "src"))
     val nodes = pins.pin(edges.select(col("src").as("id")).distinct())
     val n = nodes.count()
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-    var prev: Option[DataFrame] = None
-    var converged = false
-    var i = 0
-    while (i < iters && !converged) {
-      i += 1
-      ranks = edges.join(ranks, col("src") === col("id"))
+    def step(ranks: DataFrame): DataFrame =
+      edges.join(ranks, col("src") === col("id"))
         .groupBy(col("dst"))
         .agg(sum(col("rank") / col("cd")).as("acc"))
         .select(col("dst").as("id"),
           (lit((1 - damping) / n) + lit(damping) * col("acc")).as("rank"))
-      if (i % 3 == 0 || i == iters) {
-        val cp = pins.pin(ranks)
-        // convergence exit: near-dup graphs are band-collision cliques
-        // where the power iteration reaches its fixpoint in ~1-3 rounds
-        // — one small (id,rank)⋈(id,rank) agg per 3-round checkpoint
-        // bounds work on ANY graph instead of always paying the fixed
-        // iteration budget. The exit threshold is tol/n, NOT tol: the
-        // query surface reports rank×n rounded to 4 dp, so a per-node
-        // residual ε becomes n·ε in the output — an n-independent L1
-        // threshold stops being value-identical past n ≈ 8.8e-6/(5.7·tol)
-        // nodes (r10 advice). Scaling by 1/n makes the bound scale-free:
-        // remaining change after an L1 delta δ is <= δ·d/(1-d) ≈ 5.7δ,
-        // so the scaled output error is <= n·5.7·(tol/n) = 5.7·tol —
-        // ~5.7e-9 at the default, 4 orders inside the 5e-5 rounding
-        // half-ulp at ANY node count. tol <= 0 disables the exit (the
-        // fixed-budget path DedupSpec pins equality against).
-        converged = prev.exists { p =>
-          cp.join(p.select(col("id"), col("rank").as("rank_prev")), "id")
-            .agg(sum(abs(col("rank") - col("rank_prev"))).as("l1"))
-            .head.getDouble(0) <= tol / n
-        }
-        // the new pin is materialized; the previous one is never read again
-        prev.foreach(pins.release)
-        prev = Some(cp)
-        ranks = cp
-      }
+    // a round is up to 3 power steps; the value is the steps run so far
+    def stepsAfter(done: Int): Int = (done + 3) min iters
+    val start = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+    val ranks = pins.iterate((start, 0), (iters + 2) / 3) { (r, done) =>
+      (done until stepsAfter(done)).foldLeft(r)((r, _) => step(r))
+    } { (prev, done, cp) =>
+      // convergence exit: near-dup graphs are band-collision cliques
+      // where the power iteration reaches its fixpoint in ~1-3 rounds
+      // — one small (id,rank)⋈(id,rank) agg per 3-step round (from the
+      // second on: the first has no pinned predecessor) bounds work on
+      // ANY graph instead of always paying the fixed iteration budget.
+      // The exit threshold is tol/n, NOT tol: the
+      // query surface reports rank×n rounded to 4 dp, so a per-node
+      // residual ε becomes n·ε in the output — an n-independent L1
+      // threshold stops being value-identical past n ≈ 8.8e-6/(5.7·tol)
+      // nodes (r10 advice). Scaling by 1/n makes the bound scale-free:
+      // remaining change after an L1 delta δ is <= δ·d/(1-d) ≈ 5.7δ,
+      // so the scaled output error is <= n·5.7·(tol/n) = 5.7·tol —
+      // ~5.7e-9 at the default, 4 orders inside the 5e-5 rounding
+      // half-ulp at ANY node count. tol <= 0 disables the exit (the
+      // fixed-budget path DedupSpec pins equality against).
+      (stepsAfter(done), done > 0 &&
+        cp.join(prev.select(col("id"), col("rank").as("rank_prev")), "id")
+          .agg(sum(abs(col("rank") - col("rank_prev"))).as("l1"))
+          .head().getDouble(0) <= tol / n)
     }
-    val result = pins.land(ranks)
-    lastPageRankIters = i
+    val result = pins.land(ranks.frame)
+    lastPageRankIters = ranks.value
     result
   }
 
@@ -1140,37 +1129,32 @@ object Dedup {
     val edges = pins.pin(pairs // probed every round — materialize once
       .select(col("d1").as("src"), col("d2").as("dst"))
       .unionAll(pairs.select(col("d2").as("src"), col("d1").as("dst"))))
-    var labels = pins.pin(edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("comp")))
-    // the round's pinned frame, released as soon as the NEXT round
-    // materializes — relying on the ContextCleaner to GC superseded
-    // rounds leaves them pinned non-deterministically on long-lived
-    // sessions
-    var pinned = labels
-    var converged = false
-    var iters = 0
-    while (!converged && iters < maxIters) {
+    // each round's frame is (node, new_comp, comp): the labels it read
+    // and the labels it made
+    def labels(round: DataFrame): DataFrame =
+      round.select(col("node"), col("new_comp").as("comp"))
+    val start = pins.pin(edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("new_comp")))
+    val fixpoint = pins.iterate((start, ()), maxIters) { (prev, _) =>
+      val cur = labels(prev)
       val nbrMin = edges
-        .join(labels.select(col("node").as("src"), col("comp")), Seq("src"))
+        .join(cur.select(col("node").as("src"), col("comp")), Seq("src"))
         .groupBy(col("dst")).agg(min(col("comp")).as("nbr_comp"))
         .select(col("dst").as("node"), col("nbr_comp"))
-      val updated = pins.pin(labels.join(nbrMin, Seq("node"), "left")
+      cur.join(nbrMin, Seq("node"), "left")
         .select(col("node"),
           least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
             .as("new_comp"),
-          col("comp")))
-      converged = updated.filter(col("new_comp") =!= col("comp")).isEmpty
-      labels = updated.select(col("node"), col("new_comp").as("comp"))
-      pins.release(pinned)
-      pinned = updated
-      iters += 1
+          col("comp"))
+    } { (_, _, updated) =>
+      ((), updated.filter(col("new_comp") =!= col("comp")).isEmpty)
     }
-    if (!converged)
+    if (!fixpoint.converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIters rounds " +
           "(graph diameter exceeds the label-propagation budget — use " +
           "connectedComponentsStar for high-diameter graphs)")
-    pins.land(labels)
+    pins.land(labels(fixpoint.frame))
   }
 
   /** Connected components by alternating large-star / small-star
@@ -1210,7 +1194,7 @@ object Dedup {
   def connectedComponentsStar(pairs: DataFrame,
       maxIters: Int = 40): DataFrame = Pins { pins =>
     // directed-down canonical edges (u > v), deduped
-    var edges = pins.pin(pairs
+    val start = pins.pin(pairs
       .select(greatest(col("d1"), col("d2")).as("u"),
         least(col("d1"), col("d2")).as("v"))
       .filter(col("u") =!= col("v"))
@@ -1221,10 +1205,7 @@ object Dedup {
         count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var edgeSig = sig(edges)
-    var converged = false
-    var iters = 0
-    while (!converged && iters < maxIters) {
+    val fixpoint = pins.iterate((start, sig(start)), maxIters) { (edges, _) =>
       // large-star over the symmetric neighbor view: for each node u,
       // m = min(N(u) ∪ {u}); larger neighbors re-point to m
       val sym = edges.unionAll(
@@ -1240,28 +1221,26 @@ object Dedup {
       // (all smaller) neighbors and itself to its minimum neighbor
       val mins2 = large.groupBy(col("u")).agg(min(col("v")).as("m"))
       val withM = large.join(mins2, Seq("u"))
-      val small = pins.pin(withM
+      withM
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
         .unionAll(withM.select(col("u"), col("m").as("v")))
-        .distinct())
+        .distinct()
+    } { (edges, edgeSig, small) =>
       // fixpoint when the edge set is unchanged: compare this round's
       // signature to the previous round's (carried forward — the single
       // bounded driver job per round); a match is confirmed exactly
       // (counts agree, so one-direction exceptAll emptiness is set
       // equality) so an xor collision can't end the loop early
       val smallSig = sig(small)
-      converged = smallSig == edgeSig && small.exceptAll(edges).isEmpty
-      edgeSig = smallSig
-      pins.release(edges)
-      edges = small
-      iters += 1
+      (smallSig, smallSig == edgeSig && small.exceptAll(edges).isEmpty)
     }
-    if (!converged)
+    if (!fixpoint.converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIters rounds")
     // the fixpoint is a star forest (leaf -> root=component min); labels
     // are the leaf edges plus one self-label per root
+    val edges = fixpoint.frame
     val labels = edges.select(col("u").as("node"), col("v").as("comp"))
       .unionAll(edges.select(col("v").as("node"), col("v").as("comp")).distinct())
       .distinct()

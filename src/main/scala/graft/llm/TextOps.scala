@@ -197,10 +197,8 @@ object TextOps {
             i => col("w").substr(i, lit(1))),
           array(lit("</w>"))).as("sym"),
         col("cnt"))
-    var cur = pins.keep(words)
-    cur.count() // materialize before the loop so tokenize runs once
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String)]
-    for (step <- 1 to numMerges if merges.size == step - 1) {
+    pins.iterate((pins.pin(words), ()), numMerges) { (cur, _) =>
       val top = cur
         .filter(size(col("sym")) >= 2)
         .select(explode(transform(sequence(lit(1), size(col("sym")) - 1),
@@ -211,13 +209,13 @@ object TextOps {
         .orderBy(col("weight").desc, col("pair"))
         .limit(1)
         .collect()
-      if (top.nonEmpty) {
-        val pair = top.head.getString(0)
+      top.headOption.fold(cur) { row =>
+        val pair = row.getString(0)
         val Array(a, b) = pair.split(" ", 2)
-        merges += ((step, pair))
+        merges += ((merges.size + 1, pair))
         // fuse adjacent (a, b) left-to-right, non-overlapping: fold the
         // symbols, replacing a trailing `a` when the next symbol is `b`
-        val next = pins.keep(cur.select(
+        cur.select(
           aggregate(col("sym"),
             array().cast("array<string>"),
             (acc, x) => when(
@@ -225,12 +223,9 @@ object TextOps {
                 x === lit(b),
               concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
               .otherwise(concat(acc, array(x)))).as("sym"),
-          col("cnt")))
-        next.count()
-        pins.release(cur)
-        cur = next
+          col("cnt"))
       }
-    }
+    } { (_, _, _) => ((), false) } // ends when no pair is left to merge
     merges.toList
   }
 

@@ -4,20 +4,21 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.{Readers, SchemaOptimizer, Writers}
+import graft.etl.{Readers, SchemaOptimizer}
 
 /** The streaming successor of the reference's per-day ingest+preprocess
   * loop (SURVEY.md §3.2/§7.1 item 9): a Structured Streaming file source
   * ([[MicroBatch]]) watches the landing prefix the Ingestor writes to,
   * and every micro-batch runs the SchemaOptimizer pipeline incrementally —
   * multi-token null normalization, duplicate-column drop, date parsing,
-  * downcasts, quarantine split — appending to an optimized parquet table
-  * plus a quarantine audit table.
+  * downcasts, quarantine split — writing one `batch=<id>` partition of an
+  * optimized parquet table plus one of a quarantine audit table.
   *
   * At scale this is the always-on form of the batch pipeline: the file
   * source tracks processed files in the checkpoint, so restarts are
-  * exactly-once per input file, and each batch's work is proportional to
-  * newly landed data only.
+  * exactly-once per input file (a batch replayed after its commit was
+  * lost overwrites its own partitions), and each batch's work is
+  * proportional to newly landed data only.
   */
 object Incremental {
 
@@ -41,11 +42,7 @@ object Incremental {
       val cleaned = Readers.normalizeAllNullMarkers(b.df)
       val (optimized, quarantined) =
         SchemaOptimizer.optimize(cleaned, dropPattern, dateCols)
-      optimized.write.mode("append")
-        .option("compression", Writers.DefaultCompression)
-        .parquet(s"$outDir/optimized")
-      quarantined.write.mode("append")
-        .option("compression", Writers.DefaultCompression)
-        .parquet(s"$outDir/quarantine")
+      b.write(optimized, s"$outDir/optimized")
+      b.write(quarantined, s"$outDir/quarantine")
     }
 }
