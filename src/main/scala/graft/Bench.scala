@@ -2,33 +2,28 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 
 import graft.core.Session
 
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * emits ONE bare JSON line on stdout (plus a copy at target/bench.json so
-  * sbt's log decorator can't corrupt the driver's parse — VERDICT r1).
+  * sbt's log decorator can't corrupt the driver's parse).
   *
-  * Each query is materialized through a `noop` write: full execution of
-  * the physical plan (LIMIT-shaped queries included) without collect() or
-  * disk I/O skewing the timing. Failures are recorded per-query instead of
-  * being swallowed.
+  * Each query is materialized through [[materialize]]. Failures are
+  * recorded per-query instead of being swallowed.
   */
 object Bench {
+
+  /** Run `df` to completion the way the bench times it: a `noop` write
+    * executes the whole physical plan (LIMIT-shaped queries included)
+    * without collect() or disk I/O skewing the timing. */
+  def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Session.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.driver(32)
 
     /** Cumulative stop-the-world GC seconds across all collectors —
       * per-pass deltas land in the artifact so a growing GC share
@@ -41,27 +36,10 @@ object Bench {
 
     val names = SparkEntry.queries.keys.toSeq.sorted
 
-    // Diagnostic hygiene knob (r9 verdict #7): with SPARK_GRAFT_BENCH_HYGIENE=1
-    // every query runs against a swept session — cached relations cleared and
-    // any persisted RDD a query leaked dropped before the next timing starts.
-    // OFF by default: the official number measures the long-lived-session
-    // behavior users get, and a leak should SHOW UP there (it did in r9 —
-    // pageRank's pinned checkpoint blocks degraded ~100 downstream queries
-    // by 35%). Turning the knob on isolates whether a regression is
-    // session-state contamination (hygiene run flat vs official run
-    // inflated) or a real per-query plan change (both inflated).
-    val hygiene = sys.env.get("SPARK_GRAFT_BENCH_HYGIENE").contains("1")
-    def sweep(): Unit = if (hygiene) {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
-
-    // STANDING zero-persisted-RDD-delta assertion (r10 verdict #6, no
-    // longer opt-in): a query that returns with more persisted RDDs than
-    // it started with has leaked checkpoint/cache blocks — the r9
-    // pageRank leak class, which silently degraded ~100 downstream
-    // queries 35% and cost a full round of bench signal. Leaks fail
+    // Standing zero-persisted-RDD-delta assertion: a query that returns
+    // with more persisted RDDs than it started with has leaked
+    // checkpoint/cache blocks — the pageRank leak class, which once
+    // silently degraded ~100 downstream queries by 35%. Leaks fail
     // LOUD: the query lands in the artifact's `leaked` list and counts
     // into `nfailed` in the compact headline line. The leaked blocks are
     // then dropped so one offender can't poison every query behind it.
@@ -80,9 +58,7 @@ object Bench {
 
     def runOnce(name: String): Boolean =
       try {
-        sweep()
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        materialize(SparkEntry.queries(name)(spark, sfDir))
         true
       } catch {
         case e: Throwable =>
@@ -108,7 +84,7 @@ object Bench {
     var failed = List.empty[String]
     val samples = collection.mutable.Map
       .empty[String, List[(Double, Boolean)]].withDefaultValue(Nil)
-    // Per-pass wall + GC telemetry (VERDICT r15 #4): pass totals that
+    // Per-pass wall + GC telemetry: pass totals that
     // grow monotonically WITHIN one JVM point at accretion; flat passes
     // under a slow total point at the environment.
     val passSec = Array.fill(passes)(0.0)
@@ -126,8 +102,7 @@ object Bench {
     }
     // Per-query MEDIAN (comparable with earlier rounds) and MIN (the
     // honest steady-state statistic: box contention is strictly additive
-    // noise, so min-of-passes is the least contaminated sample — VERDICT
-    // r6 asked for both after three rounds of driver-box contamination).
+    // noise, so min-of-passes is the least contaminated sample).
     val times = names.map { name =>
       val s = samples(name)
       if (s.exists(!_._2)) failed ::= name
@@ -153,22 +128,19 @@ object Bench {
     val passSecJson = passSec.map(s => f"$s%.2f").mkString("[", ",", "]")
     val passGcJson = passGc.map(s => f"$s%.2f").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${qmap(_._1)},"queries_min":${qmap(_._2)},"total_min":${f"$totalMin%.3f"},"failed":$fails,"leaked":$leaks,"hygiene":$hygiene,"pass_sec":$passSecJson,"pass_gc_sec":$passGcJson,"sf":"$sfDir"}"""
-    // Compact line: the r6 official artifact recorded parsed:null
-    // because the 79-entry per-query line outgrew the driver's stdout
-    // tail window (measured from BENCH_r20.json: the window keeps the
-    // LAST 2000 chars, and sbt's trailing "[success]" line costs ~80 of
-    // them). Print the full line FIRST, then this line LAST so any tail
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":${qmap(_._1)},"queries_min":${qmap(_._2)},"total_min":${f"$totalMin%.3f"},"failed":$fails,"leaked":$leaks,"pass_sec":$passSecJson,"pass_gc_sec":$passGcJson,"sf":"$sfDir"}"""
+    // Compact line: a per-query line outgrows the driver's stdout tail
+    // window (it keeps the LAST 2000 chars, and sbt's trailing
+    // "[success]" line costs ~80 of them). Print the full line FIRST, then this line LAST so any tail
     // window ends on one complete, parseable JSON line. Only a failure
     // COUNT here — the unbounded failed list would regrow this line
     // past the tail window exactly when the build is broken and the
     // artifact matters most; the full list stays in the full line and
     // target/bench.json.
     //
-    // r21 (VERDICT r20 #2/#7): the driver's PERF artifact was per-query
-    // BLIND — parsed.queries was {}, so a one-window phantom regression
-    // (r20's q197 "14.9 s") was indistinguishable from a real one. A
-    // keyed 286-entry map cannot fit 2000 chars even with short keys
+    // With "queries":{} alone the driver's artifact is per-query blind:
+    // a one-window phantom regression looks like a real one. A keyed
+    // 286-entry map cannot fit 2000 chars even with short keys
     // (and qNNN prefixes are not unique: q19/q22), so the compact line
     // carries:
     //   - "qmin": the per-query MIN seconds as a bare ARRAY in sorted
@@ -179,7 +151,7 @@ object Bench {
     //     value set would push the line past the window.
     //   - "noisy": true when the per-pass walls spread by >1.3x
     //     (max/min) — the artifact's own credibility flag: a noisy
-    //     window poisons medians 3-6x (r18/r19/r20 all documented it).
+    //     window poisons medians 3-6x.
     // "queries" stays {} so the driver's existing parse is unchanged.
     val noisy = passSec.max > passSec.min * 1.3
     def qminArr(dec: Int): String =
@@ -192,14 +164,14 @@ object Bench {
       .getOrElse(compactWith("[]"))
     Files.createDirectories(Paths.get("target"))
     Files.writeString(Paths.get("target/bench.json"), full + "\n")
-    // Committed per-query history (VERDICT r11 #6): target/bench.json is
+    // Committed per-query history: target/bench.json is
     // build-dir-only and overwritten per run, and the driver's BENCH_rN
     // tail truncates — append every full line (epoch-stamped) to a
     // repo-root JSONL so round-over-round per-query trends survive
     // without archaeology. The driver commits uncommitted files at
     // round end, so its official run lands here too.
-    // History path anchored to the repo root, not the process cwd
-    // (ADVICE r12): a run launched elsewhere would otherwise scatter
+    // History path anchored to the repo root, not the process cwd: a
+    // run launched elsewhere would otherwise scatter
     // history files or die on a read-only cwd. Resolution order:
     // GRAFT_BENCH_HISTORY env var > nearest ancestor dir holding
     // build.sbt > target/ fallback. Append failures must never fail

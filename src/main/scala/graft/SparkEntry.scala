@@ -17,8 +17,8 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Registry.queries.map { case (name, fn) =>
       // Engine semantics (ANSI off, UTC) must hold no matter who built
-      // the session — the driver's Verify/Bench sessions inherit Spark
-      // 4.1's ANSI-on default otherwise (ADVICE.md r1).
+      // the session — a session built elsewhere inherits Spark 4.1's
+      // ANSI-on default otherwise.
       name -> ((s: SparkSession, d: String) => fn(Session.tune(s), d))
     }
 

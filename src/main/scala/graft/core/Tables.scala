@@ -18,7 +18,7 @@ object Tables {
 
   // Broadcast decisions live at the join sites (see queries.Relational
   // q17/q18: explicit broadcast() on nation/region) rather than as
-  // catalog metadata — ADVICE.md r1 flagged the unused-val drift risk.
+  // catalog metadata: an unused catalog-level setting would drift.
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$sfDir/$name.parquet")

@@ -306,8 +306,8 @@ object Dq {
     *
     * The key is expected UNIQUE per snapshot (NULL counts as a key
     * value like any other). A key carried by MULTIPLE rows on either
-    * side — duplicate non-NULL keys, or 2+ NULL-keyed rows (ADVICE
-    * r13) — has no well-defined row pairing, so instead of emitting
+    * side — duplicate non-NULL keys, or 2+ NULL-keyed rows — has no
+    * well-defined row pairing, so instead of emitting
     * N×M spurious join pairs, each side pre-aggregates to one row per
     * key and the violating keys report as change = `ambiguous`
     * (changed_cols empty): the signal is "this key needs a real

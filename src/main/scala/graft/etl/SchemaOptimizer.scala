@@ -97,23 +97,6 @@ object SchemaOptimizer {
   def castColumns(df: DataFrame, casts: Map[String, DataType]): DataFrame =
     df.withColumns(casts.map { case (c, t) => c -> col(c).cast(t) })
 
-  /** OP-26/27 decision: which columns to treat as dictionary-encoded
-    * categoricals, from Profiler output. Spark keeps StringType (Parquet
-    * dictionary encoding realizes the compression — declared deviation,
-    * SURVEY §7.4); numeric categoricals additionally become strings.
-    */
-  def dictionaryCandidates(
-      profile: Seq[Profiler.ColumnProfile],
-      stringThreshold: Double = 0.1,
-      numericThreshold: Double = 0.01): (Seq[String], Seq[String]) = {
-    val strings = profile.filter(p =>
-      p.dataType == "string" && p.distinctRatio.exists(_ <= stringThreshold))
-    val numerics = profile.filter(p =>
-      p.dataType != "string" && p.isNumeric &&
-        p.distinctRatio.exists(_ <= numericThreshold))
-    (strings.map(_.name), numerics.map(_.name))
-  }
-
   /** Full reference pipeline (§3.1), automated: drop dup columns → parse
     * dates → profile → decide downcasts → quarantine violators → cast.
     * Returns (optimized, quarantined).

@@ -646,8 +646,8 @@ object Writers {
     * (`shard=N` exports, `batch=N` streaming sinks: the layouts this
     * repo's own sinks produce) keep their parquet files in
     * subdirectories, so a top-level-only listing reports an empty
-    * table (ADVICE r12: fileStats said totalBytes=0 and compactFiles
-    * collapsed a partitioned table into ONE file).
+    * table (fileStats would say totalBytes=0 and compactFiles would
+    * collapse a partitioned table into ONE file).
     */
   private def listParquetFiles(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path)
@@ -710,7 +710,7 @@ object Writers {
     * file count and lands under the same relative path in `outDir`, so
     * the partition layout (and partition pruning, and the batch=N
     * idempotency contracts of the streaming sinks) survives — never
-    * the whole table into one giant single-task file (ADVICE r12).
+    * the whole table into one giant single-task file.
     * Returns (files_before, files_after).
     */
   def compactFiles(spark: org.apache.spark.sql.SparkSession, inDir: String,
@@ -733,8 +733,8 @@ object Writers {
     }
     if (parts.isEmpty) compactOne(inDir, outDir)
     else {
-      // MIXED layout (partition dirs PLUS loose top-level data files,
-      // ADVICE r13): the partition recursion would silently drop the
+      // MIXED layout (partition dirs PLUS loose top-level data
+      // files): the partition recursion would silently drop the
       // loose files from outDir and from the counts — fail loudly
       // (the in-place compact's require rule) instead of losing data
       val loose = fs.listStatus(path).toSeq.filter { s =>

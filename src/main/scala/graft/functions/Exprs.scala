@@ -654,7 +654,7 @@ case class IntervalCut(left: Expression, right: Expression)
   // compute() reads the interval fields with getLong; an un-cast
   // struct<mn:int,mx:int> (which the replaced HOF form happily took)
   // would hit a runtime ClassCastException or representation-dependent
-  // garbage — fail at ANALYSIS time instead (ADVICE r13)
+  // garbage — fail at ANALYSIS time instead
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     (left.dataType, right.dataType) match {
@@ -1641,7 +1641,7 @@ case class EwmaFold(child: Expression, alpha: Double)
 
   // compute() reads elements with getDouble; an un-cast array<int>
   // would read garbage bytes — fail at ANALYSIS time instead (the
-  // IntervalCut convention, ADVICE r13; the Fns wrapper casts)
+  // IntervalCut convention; the Fns wrapper casts)
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
@@ -1983,13 +1983,6 @@ object Fns {
     * Md5HyperplaneBuckets; oracle-checkable counterpart of lshBuckets). */
   def md5LshBuckets(vec: Column): Column =
     call_function("graft_lsh_buckets_md5", dbl(vec))
-
-  /** Probe a string column against a serialized Bloom filter literal
-    * (see BloomMightContain). `filterBytes` must be `lit(bytes)`.
-    * For filters bigger than a few KB use [[bloomContainsBroadcast]] —
-    * a literal filter is serialized into every task binary. */
-  def bloomContains(filterBytes: Column, value: Column): Column =
-    call_function("graft_bloom_contains", filterBytes, value)
 
   /** Probe a string column against a BROADCAST serialized Bloom filter
     * (see BloomMightContainBc): tasks carry the handle, not the bytes —

@@ -1504,7 +1504,7 @@ object Dedup {
       .select(col("doc_id"), col("n"), col("s"), col("df"),
         row_number().over(Window.partitionBy(col("doc_id"))
           .orderBy(col("df"), col("s"))).as("rk"))
-    // r21 (VERDICT r20 #1 — cut the candidate volume, guide §2/§3):
+    // Cut the candidate volume:
     //  - df >= 2: a df-1 shingle matches nothing in the self-join, and
     //    prefixes are BIASED toward df-1 rows (they index each doc's
     //    rarest shingles), so dropping them shrinks the join input

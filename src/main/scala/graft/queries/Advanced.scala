@@ -1954,7 +1954,7 @@ object Advanced {
             coalesce(sum(col("bs")).over(wOff), lit(0L)).as("off"))
         val cum = local.join(offs, Seq("g", "blk"))
           .select(col("g"), col("v"), (col("lc") + col("off")).as("cum"))
-        // r21 (VERDICT r20 #4): n per flag from the GRID (Σ cnt — the
+        // n per flag from the GRID (Σ cnt — the
         // same integer by construction), not a second count over base:
         // the old base.groupBy(g) shuffled the corpus a second time
         // where the grid aggregate is value-grid-sized and its exchange

@@ -504,7 +504,7 @@ object Geo {
       val vs = r.getSeq[scala.collection.Seq[Any]](2).map { v =>
         // element nullability checked on the BOXED values: a JSON
         // vertex like [null, 5] would otherwise unbox null to 0L and
-        // load a silently corrupt polygon (ADVICE r18)
+        // load a silently corrupt polygon
         require(v != null && v.length == 2 &&
           v(0) != null && v(1) != null,
           s"zone file $path: each vertex must be [lon_e6, lat_e6], " +
@@ -598,7 +598,7 @@ object Geo {
       zones: Seq[(Long, String, Seq[(Long, Long)])] = Zones): DataFrame = {
     val reps = stopReps(events, maxLegM, minDwellS)
       .select(col("user_id"), col("plat"), col("plon"), col("dw"))
-    // r21 (VERDICT r20 #5): the zone attribution as ONE codegen'd
+    // The zone attribution as ONE codegen'd
     // generator projection instead of the [[zonesFor]] broadcast-join
     // ray cast + parity aggregate + join back (guide §3: eliminate the
     // join outright — the registry is a literal, so each zone's
@@ -813,7 +813,7 @@ object Geo {
   def zoneTransitions(events: DataFrame, maxLegM: Long = 200L,
       minDwellS: Long = 1800L,
       zones: Seq[(Long, String, Seq[(Long, Long)])] = Zones): DataFrame = {
-    // r21 (VERDICT r20 #5): MIN(containing zone_id) with -1 fallback IS
+    // MIN(containing zone_id) with -1 fallback IS
     // [[zoneIdExpr]]'s lowest-id-wins contract verbatim, for ANY
     // registry — so the zonesFor broadcast-join ray cast + parity
     // aggregate + min + join back collapses to one branch-free

@@ -432,7 +432,7 @@ object StreamingCuration {
     * The earlier
     * in-place form overwrote the only durable copy from a
     * localCheckpoint snapshot, whose executor-memory blocks cannot be
-    * recomputed after the truncate (ADVICE r7).
+    * recomputed after the truncate.
     *
     * Concurrency with a RUNNING stream on the same stateDir is a LEASE,
     * not just a tripwire (the r8 form could still drop an append that

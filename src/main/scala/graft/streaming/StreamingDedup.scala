@@ -300,8 +300,8 @@ object StreamingDedup {
             .join(hits.select(col("doc_id").as("d2"), col("p").as("p2"),
               col("g")), Seq("g"))
             // a doc_id re-ingested in a later batch would self-match
-            // on diagonal 0 and silently EMPTY its own clean output
-            // (ADVICE r12) — the probe contract is new-vs-earlier
+            // on diagonal 0 and silently EMPTY its own clean output —
+            // the probe contract is new-vs-earlier
             .filter(col("d1") =!= col("d2"))
             .select(col("d1"), col("d2"), col("p1"), col("p2"))
           // reused by the span write AND the clean derivation

@@ -7,10 +7,10 @@ import graft.core.Session
 import graft.queries.Geo
 
 /** Port-heavy (hot-cell) rehearsal for the banded proximity join
-  * ([[graft.queries.Geo.proximityPairs]] / q264) — the VERDICT r15 #3
-  * ask: the within-cell verify is quadratic in cell-hour occupancy,
-  * and AIS port density is exactly the adversarial regime the uniform
-  * ScaleRehearsal axes never exercise.
+  * ([[graft.queries.Geo.proximityPairs]] / q264): the within-cell
+  * verify is quadratic in cell-hour occupancy, and AIS port density is
+  * exactly the adversarial regime the uniform ScaleRehearsal axes never
+  * exercise.
   *
   * The regime: positions are md5-derived from ids (oracle-replayable),
   * so a "port" cannot be placed directly — instead vessel ids are

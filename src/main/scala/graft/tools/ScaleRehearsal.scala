@@ -1,15 +1,13 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
-import graft.core.{Session, Tables}
+import graft.{Bench, SparkEntry}
+import graft.core.{RunMetrics, Session, Tables}
 
-/** 10x scale rehearsal (VERDICT r8 item 6, dev tool).
+/** 10x scale rehearsal (dev tool).
   *
   * There is no sf1 in /root/testdata, so this synthesizes one under
   * target/: documents and embeddings are unioned MULT times with ids
@@ -19,7 +17,7 @@ import graft.core.{Session, Tables}
   * realistic stress for the banded joins), and the 8 relational tables
   * are copied as-is. Then it runs the named registry queries once each
   * and prints one JSON line per query with wall time plus task-metric
-  * totals (shuffle bytes, spill, peak task memory) from a listener —
+  * totals (shuffle bytes, spill, peak task memory) from [[RunMetrics]] —
   * the evidence SCALE.md needs for where the first knee is.
   *
   * Usage: runMain graft.tools.ScaleRehearsal <outDir> <mult>
@@ -252,36 +250,11 @@ object ScaleRehearsal {
       println(s"[scale] built $outDir at mult=$mult regime=$regime")
     } else println(s"[scale] reusing $outDir")
 
-    // Task-metric totals per query. LongAdders because tasks complete on
-    // listener-bus threads while the query runs.
-    val shuffleRead, shuffleWrite, memSpill, diskSpill = new LongAdder
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
-          shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-          memSpill.add(m.memoryBytesSpilled)
-          diskSpill.add(m.diskBytesSpilled)
-          peakMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-        }
-      }
-    })
-
     names.foreach { name =>
-      Seq(shuffleRead, shuffleWrite, memSpill, diskSpill).foreach(_.reset())
-      peakMem.set(0)
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, outDir)
-        .write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // The listener bus drains asynchronously (and its drain API is
-      // private[spark]); a beat is enough for task-end events at this
-      // scale, and the metrics are diagnostic, not asserted.
-      Thread.sleep(1000)
-      def mb(a: LongAdder) = a.sum() / 1e6
-      println(f"""[scale] {"query":"$name","sec":$sec%.2f,"shuffle_read_mb":${mb(shuffleRead)}%.1f,"shuffle_write_mb":${mb(shuffleWrite)}%.1f,"mem_spill_mb":${mb(memSpill)}%.1f,"disk_spill_mb":${mb(diskSpill)}%.1f,"peak_task_mem_mb":${peakMem.get / 1e6}%.1f}""")
+      val m = RunMetrics.measure(spark)(
+        Bench.materialize(SparkEntry.queries(name)(spark, outDir)))
+      def mb(bytes: Long) = bytes / 1e6
+      println(f"""[scale] {"query":"$name","sec":${m.wall}%.2f,"shuffle_read_mb":${mb(m.shuffleRead)}%.1f,"shuffle_write_mb":${mb(m.shuffleWrite)}%.1f,"mem_spill_mb":${mb(m.memorySpill)}%.1f,"disk_spill_mb":${mb(m.diskSpill)}%.1f,"peak_task_mem_mb":${mb(m.peakExecutionMemory)}%.1f}""")
     }
     spark.stop()
   }

@@ -1,26 +1,24 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.core.Session
+import graft.core.{RunMetrics, Session}
 import graft.streaming.StreamingDedup
 
-/** SCALE evidence for the streaming dedup probes' per-batch cost
-  * (VERDICT r18 #4): the plain-directory gram index re-SHUFFLES the
-  * whole accumulated corpus index at every micro-batch's probe join
-  * (per-batch shuffle-write grows with the CORPUS), while the
+/** SCALE evidence for the streaming dedup probes' per-batch cost: the
+  * plain-directory gram index re-SHUFFLES the whole accumulated corpus
+  * index at every micro-batch's probe join (per-batch shuffle-write
+  * grows with the CORPUS), while the
   * catalog-bucketed layout (`buckets > 0`) leaves the stored side
   * exchange-free — per-batch shuffle-write tracks the BATCH and stays
   * flat as the index grows.
   *
   * Both modes drain the SAME landed waves through
   * [[StreamingDedup.startSpans]]; the run reports per-wave wall +
-  * shuffle-write from a task-metrics listener and asserts the two
+  * shuffle-write from [[RunMetrics]] and asserts the two
   * modes' cumulative span outputs match exactly. Broadcast joins are
   * disabled for the drains: they model the at-scale regime where a
   * real micro-batch's gram set exceeds any broadcast threshold —
@@ -63,14 +61,6 @@ object StreamingDedupRehearsal {
       (0 until docs).map(d => (w * 100000L + d, text(w, d)))
     }
 
-    val shuffleWrite = new LongAdder
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
-
     def run(mode: String, bk: Int): Long = {
       val landing = Files.createTempDirectory(s"sdr-$mode-land").toString
       val index = Files.createTempDirectory(s"sdr-$mode-idx")
@@ -81,13 +71,10 @@ object StreamingDedupRehearsal {
           waveDocs(w).map { case (i, t) =>
             s"""{"doc_id":$i,"text":"$t"}""" }
             .mkString("\n").getBytes("UTF-8"))
-        shuffleWrite.reset()
-        val t0 = System.nanoTime()
-        StreamingDedup.startSpans(spark, landing, schema, index, out,
-          buckets = bk).awaitTermination()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(500) // listener bus drains asynchronously
-        println(f"""[scale] {"tool":"streaming_dedup","mode":"$mode","wave":$w,"batch_sec":$sec%.2f,"shuffle_write_mb":${shuffleWrite.sum() / 1e6}%.1f,"index_docs":${(w + 1) * docs}}""")
+        val m = RunMetrics.measure(spark)(
+          StreamingDedup.startSpans(spark, landing, schema, index, out,
+            buckets = bk).awaitTermination())
+        println(f"""[scale] {"tool":"streaming_dedup","mode":"$mode","wave":$w,"batch_sec":${m.wall}%.2f,"shuffle_write_mb":${m.shuffleWrite / 1e6}%.1f,"index_docs":${(w + 1) * docs}}""")
       }
       val n = spark.read.parquet(s"$out/spans").count()
       println(s"""[scale] {"tool":"streaming_dedup","mode":"$mode","total_spans":$n}""")

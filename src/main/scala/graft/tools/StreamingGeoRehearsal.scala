@@ -2,13 +2,10 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import java.util.concurrent.atomic.AtomicLong
-
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-import graft.core.Session
+import graft.core.{RunMetrics, Session}
 import graft.streaming.StreamingGeo
 import graft.streaming.StreamingGeo.GeoEv
 
@@ -49,11 +46,6 @@ object StreamingGeoRehearsal {
     val spark: SparkSession = Session.local()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
-    val jobs = new AtomicLong()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
 
     val landing = java.nio.file.Files
       .createTempDirectory("graft-sgeo-in").toString
@@ -89,10 +81,8 @@ object StreamingGeoRehearsal {
 
     (0 until waves).foreach { w =>
       land(w)
-      val (j0, c0) = (jobs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
-      val (_, t) = sec(drain())
-      Thread.sleep(500) // listener bus drains asynchronously
-      val nJobs = jobs.get - j0
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val m = RunMetrics.measure(spark)(drain())
       val nCompiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
       val idxBatches = Option(new java.io.File(s"$out/index")
         .listFiles()).map(_.count(_.getName.startsWith("batch=")))
@@ -101,7 +91,7 @@ object StreamingGeoRehearsal {
         if (mode == "rendezvous")
           spark.read.parquet(s"$out/alerts").count()
         else -1L
-      println(f"""[scale] {"tool":"streaming_geo","mode":"$mode","wave":$w,"users":$users,"batch_sec":$t%.2f,"jobs":$nJobs,"compiles":$nCompiles,"index_batches":$idxBatches,"alerts":$alerts}""")
+      println(f"""[scale] {"tool":"streaming_geo","mode":"$mode","wave":$w,"users":$users,"batch_sec":${m.wall}%.2f,"jobs":${m.jobs.size},"compiles":$nCompiles,"index_batches":$idxBatches,"alerts":$alerts}""")
     }
     // retention: drop partitions past the pairing horizon, then one
     // more wave against the bounded table
