@@ -76,21 +76,36 @@ final class Pins private {
     * that returns its input frame has reached its fixpoint: nothing is
     * pinned and the loop ends converged. The final frame stays held
     * until the scope ends. What to do at the cap (return or throw) is
-    * the caller's: [[Pins.Iterated]] says whether the test fired. */
-  def iterate[A](start: (DataFrame, A), cap: Int)(
+    * the caller's: [[Pins.Iterated]] says whether the test fired.
+    *
+    * Every Spark job a round runs carries the job description
+    * `<label> round <n>` (n from 1), so a per-job table says which loop
+    * and round a job belongs to; the caller's own description is back
+    * after each round, and after a round that throws. */
+  def iterate[A](label: String, start: (DataFrame, A), cap: Int)(
       round: (DataFrame, A) => DataFrame)(
       test: (DataFrame, A, DataFrame) => (A, Boolean)): Pins.Iterated[A] = {
+    val sc = start._1.sparkSession.sparkContext
+    val caller = sc.getLocalProperty(Pins.JobDescription)
     @tailrec def loop(prev: DataFrame, value: A, rounds: Int): Pins.Iterated[A] =
       if (rounds >= cap) Pins.Iterated(prev, value, rounds, converged = false)
       else {
-        val out = round(prev, value)
-        if (out eq prev) Pins.Iterated(prev, value, rounds + 1, converged = true)
-        else {
-          val next = pin(out)
-          val (v, converged) = test(prev, value, next)
-          release(prev)
-          if (converged) Pins.Iterated(next, v, rounds + 1, converged)
-          else loop(next, v, rounds + 1)
+        sc.setJobDescription(s"$label round ${rounds + 1}")
+        // None: the round returned its input frame (the fixpoint)
+        val stepped = try {
+          val out = round(prev, value)
+          if (out eq prev) None
+          else {
+            val next = pin(out)
+            Some((next, test(prev, value, next)))
+          }
+        } finally sc.setJobDescription(caller)
+        stepped match {
+          case None => Pins.Iterated(prev, value, rounds + 1, converged = true)
+          case Some((next, (v, converged))) =>
+            release(prev)
+            if (converged) Pins.Iterated(next, v, rounds + 1, converged)
+            else loop(next, v, rounds + 1)
         }
       }
     loop(start._1, start._2, 0)
@@ -124,6 +139,8 @@ final class Pins private {
 }
 
 object Pins {
+  private val JobDescription = "spark.job.description"
+
   Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
 
   /** Run `body` with a fresh scope; every frame it still holds is

@@ -1010,7 +1010,7 @@ object Dedup {
       .select(col("d1").as("n")).unionAll(e.select(col("d2").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
     val e0 = pins.pin(pairs.select(col("d1"), col("d2")))
-    val core = pins.iterate((e0, e0.count()), maxRounds) { (e, _) =>
+    val core = pins.iterate("kCore", (e0, e0.count()), maxRounds) { (e, _) =>
       val surv = degrees(e).filter(col("deg") >= k).select(col("n"))
       e.join(surv.withColumnRenamed("n", "d1"), Seq("d1"), "left_semi")
         .join(surv.withColumnRenamed("n", "d2"), Seq("d2"), "left_semi")
@@ -1083,7 +1083,8 @@ object Dedup {
     // a round is up to 3 power steps; the value is the steps run so far
     def stepsAfter(done: Int): Int = (done + 3) min iters
     val start = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-    val ranks = pins.iterate((start, 0), (iters + 2) / 3) { (r, done) =>
+    val ranks = pins.iterate("pageRank", (start, 0),
+        (iters + 2) / 3) { (r, done) =>
       (done until stepsAfter(done)).foldLeft(r)((r, _) => step(r))
     } { (prev, done, cp) =>
       // convergence exit: near-dup graphs are band-collision cliques
@@ -1135,7 +1136,8 @@ object Dedup {
       round.select(col("node"), col("new_comp").as("comp"))
     val start = pins.pin(edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("new_comp")))
-    val fixpoint = pins.iterate((start, ()), maxIters) { (prev, _) =>
+    val fixpoint = pins.iterate("connectedComponents", (start, ()),
+        maxIters) { (prev, _) =>
       val cur = labels(prev)
       val nbrMin = edges
         .join(cur.select(col("node").as("src"), col("comp")), Seq("src"))
@@ -1205,7 +1207,8 @@ object Dedup {
         count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    val fixpoint = pins.iterate((start, sig(start)), maxIters) { (edges, _) =>
+    val fixpoint = pins.iterate("connectedComponentsStar",
+        (start, sig(start)), maxIters) { (edges, _) =>
       // large-star over the symmetric neighbor view: for each node u,
       // m = min(N(u) ∪ {u}); larger neighbors re-point to m
       val sym = edges.unionAll(

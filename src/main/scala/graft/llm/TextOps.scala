@@ -198,7 +198,7 @@ object TextOps {
           array(lit("</w>"))).as("sym"),
         col("cnt"))
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String)]
-    pins.iterate((pins.pin(words), ()), numMerges) { (cur, _) =>
+    pins.iterate("bpeTrain", (pins.pin(words), ()), numMerges) { (cur, _) =>
       val top = cur
         .filter(size(col("sym")) >= 2)
         .select(explode(transform(sequence(lit(1), size(col("sym")) - 1),

@@ -156,6 +156,13 @@ object Geo {
         (col("lat_e6") + 5000L).divide(5000L).cast("long").as("cy"),
         (col("lon_e6") + 5000L).divide(5000L).cast("long").as("cx"))
 
+  /** The band join's completeness condition: a 5,000-µdeg cell is
+    * ≈ 556 m, so every pair within `radiusM` ≤ 555 m sits in the same
+    * or a neighboring cell, where the 3x3 probe finds it. */
+  private[graft] def requireCellComplete(radiusM: Long): Unit =
+    require(radiusM * 9 <= 5000L,
+      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+
   /** Banded pair candidates with the exact haversine verify — the ONE
     * join both the batch q264 and [[graft.streaming.StreamingGeo]]
     * run: `probe` points replicated to their 3x3 cell neighborhood,
@@ -195,19 +202,19 @@ object Geo {
     // salting can bound — its points are EXCLUDED from pairing on both
     // sides here and REPORTED by [[poisonCells]] (audit, don't
     // explode).
-    // hot-cell source: a caller-maintained (hour, cy, cx, occ) summary
-    // when available (StreamingGeo keeps per-batch occupancy partitions
-    // so a micro-batch never re-scans the whole index just to find
-    // ports); otherwise derived from `index` here — one more replay of
-    // the points subtree, which measured CHEAPER than materializing it
+    // hot-cell source: `hotCells`, a caller-maintained (hour, cy, cx,
+    // occ) summary of every cell, when available (StreamingGeo's
+    // position index keeps per-batch occupancy partitions so a
+    // micro-batch never re-scans the whole index just to find ports);
+    // otherwise derived from `index` here — one more replay of the
+    // points subtree, which measured CHEAPER than materializing it
     // (SCALE.md r17 negative result). ONE bounded broadcast list —
     // cells above EITHER threshold, hot/poison flagged independently —
-    // serves both the salt lanes and the poison drop (a caller-supplied
-    // summary must be filtered the same way; StreamingGeo is).
+    // serves both the salt lanes and the poison drop.
     val hot = hotCells
       .getOrElse(index.groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(count(lit(1)).as("occ"))
-        .filter(col("occ") > math.min(hotOccupancy, maxCellOccupancy)))
+        .agg(count(lit(1)).as("occ")))
+      .filter(col("occ") > math.min(hotOccupancy, maxCellOccupancy))
       .select(col("hour"), col("cy"), col("cx"),
         (col("occ") > hotOccupancy).as("__hot"),
         (col("occ") > maxCellOccupancy).as("__poison"))
@@ -290,8 +297,7 @@ object Geo {
   def proximityPairs(events: DataFrame, radiusM: Long = 500L,
       hotOccupancy: Long = 1024L, saltBuckets: Int = 16,
       maxCellOccupancy: Long = DefaultMaxCellOccupancy): DataFrame = {
-    require(radiusM * 9 <= 5000L, // 5000 µdeg ≈ 556 m; radius ≤ 555 m
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+    requireCellComplete(radiusM)
     // bandedPairs reads the windowed points three times (hot
     // aggregate, probe, index). A localCheckpoint here was MEASURED
     // SLOWER at the 10x users rehearsal (15.1 -> 20.9 s despite
@@ -327,8 +333,7 @@ object Geo {
     * pair. */
   def coTravel(events: DataFrame, radiusM: Long = 500L,
       minHours: Long = 2L, maxGapHours: Long = 168L): DataFrame = {
-    require(radiusM * 9 <= 5000L,
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+    requireCellComplete(radiusM)
     // no localCheckpoint: measured slower, see [[proximityPairs]]
     val pts = bandedPoints(events)
     val hits = bandedPairs(pts, pts, radiusM)
@@ -771,8 +776,7 @@ object Geo {
   def episodeZones(events: DataFrame, radiusM: Long = 500L,
       minHours: Long = 2L, maxGapHours: Long = 168L,
       zones: Seq[(Long, String, Seq[(Long, Long)])] = Zones): DataFrame = {
-    require(radiusM * 9 <= 5000L,
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+    requireCellComplete(radiusM)
     val pts = bandedPoints(events)
     val hits = bandedPairs(pts, pts, radiusM, carryProbePos = true)
       .filter(col("u1") < col("u2"))
@@ -913,8 +917,7 @@ object Geo {
     * pair-hours (deterministic tie order). */
   def encounterHeatmap(events: DataFrame, radiusM: Long = 500L,
       top: Int = 20): DataFrame = {
-    require(radiusM * 9 <= 5000L,
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+    requireCellComplete(radiusM)
     val pts = bandedPoints(events)
     val hits = bandedPairs(pts, pts, radiusM, carryProbePos = true)
       .filter(col("u1") < col("u2"))
@@ -1004,8 +1007,7 @@ object Geo {
       zones: Seq[(Long, String, Seq[(Long, Long)])] = Zones): DataFrame = {
     require(minGapS >= 3600L,
       s"need minGapS >= 3600 (distinct endpoint hours), got $minGapS")
-    require(radiusM * 9 <= 5000L,
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+    requireCellComplete(radiusM)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
     val legs = positioned(events)

@@ -11,32 +11,23 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.queries.Geo
 
-/** Always-on proximity monitor — the streaming form of the batch q264
-  * (`Geo.proximityPairs`): each micro-batch's positions probe a
-  * PERSISTED (hour, cell) position index for earlier vessels within
-  * the radius, then append their own points — live encounter detection
-  * where the batch query is the retrospective report.
+/** Always-on forms of the batch geo queries.
   *
-  * The startFuzzy/startMedia discipline: pairing is strictly
-  * new-vs-earlier (`batch < bid` on the index read), so within-batch
-  * pairs are the BATCH query's job and every cross-batch pair alerts
-  * exactly once — when its later endpoint arrives; both the alert
-  * partition and the index partition land under `batch=<id>` with
-  * overwrite, so a crash-replayed batch reproduces itself (its own
-  * prior index write is excluded by the `batch < bid` filter).
-  * Zero streaming state — the index IS the state, compactable like
-  * any parquet table.
+  * Three band-join monitors — [[StreamingGeo.start]] (proximity, q264),
+  * [[StreamingGeo.startDarkRendezvous]] (q283) and
+  * [[StreamingGeo.startEpisodes]] (q269) — share one persisted (hour,
+  * cell) position index and one per-batch step over it
+  * (`PositionIndex.step`): span-bounded reads of earlier batches, the
+  * hot/poison summary, THE q264 band join ([[Geo.bandedPairs]]) and the
+  * per-batch index/occ writes. Per-batch cost is proportional to batch
+  * x index-cell occupancy, never index². Zero streaming state for the
+  * pairing — the index IS the state, compactable like any parquet
+  * table ([[StreamingGeo.retainIndex]]); rendezvous and episodes add a
+  * per-batch parquet snapshot (`last/`, `open/`).
   *
-  * Per-batch cost: the batch's points (one representative per
-  * (vessel, hour), the q264 pick) against the index partitions via the
-  * same 3x3 smallest-complete-cell band join — proportional to batch
-  * x index-cell occupancy, never index². Hot (port) cells ride
-  * [[Geo.bandedPairs]]' occupancy-aware salting, exactly as in the
-  * batch form — one mega-cell-hour spreads over salt lanes instead of
-  * one quadratic straggler task; hotness comes from INCREMENTAL
-  * per-batch occupancy summaries (`occ/batch=<id>`, cell-grid-sized,
-  * replay-idempotent) so finding ports costs a KB-scale summary read
-  * per micro-batch, never a second full index scan.
+  * The typed-state monitors (zone visits, resampling, dark gaps) keep
+  * a few bytes per vessel in Spark's state store under the
+  * StateTracker arrival-order rule.
   */
 object StreamingGeo {
 
@@ -280,16 +271,90 @@ object StreamingGeo {
   private def hourClustered(pts: DataFrame): DataFrame =
     pts.repartitionByRange(col("hour")).sortWithinPartitions(col("hour"))
 
+  /** [min, max] of `df`'s `hour` column (None when `df` is empty), one
+    * tiny aggregate (the hwm pattern). */
+  private def hourSpan(df: DataFrame): Option[(Long, Long)] = {
+    val r = df.agg(min(col("hour")), max(col("hour"))).head
+    if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+  }
+
+  /** The persisted (hour, cell) position index under `outDir` that the
+    * band-join monitors ([[start]], [[startDarkRendezvous]],
+    * [[startEpisodes]]) keep: `index/batch=<id>` holds each batch's
+    * [[points]], hour-clustered, and `occ/batch=<id>` the batch's
+    * per-cell occupancy, both written with overwrite, so a replayed
+    * batch replaces its own partitions. [[step]] is the one pass a
+    * micro-batch makes over it. */
+  private final class PositionIndex(outDir: String, radiusM: Long,
+      hotOccupancy: Long, saltBuckets: Int, maxCellOccupancy: Long) {
+    Geo.requireCellComplete(radiusM)
+    private val indexDir = s"$outDir/index"
+    private val occDir = s"$outDir/occ"
+
+    /** One micro-batch's pass: `probe` (the batch's own points `pts`,
+      * or rendezvous' gap endpoints) runs THE q264 band join
+      * ([[Geo.bandedPairs]]: 3x3 probe replication, exact verify,
+      * occupancy-salted hot cells) against the index, and `land` gets
+      * the hits and the probe's hour span.
+      *   - Earlier batches' index and occ partitions are read only
+      *     inside the probe's hour span: pairing matches EQUAL hours
+      *     only, so per-batch cost is O(batch hour span), never O(stream
+      *     age). `batch < id` keeps a replayed batch's own earlier write
+      *     out.
+      *   - The hot/poison summary adds the batch's own occupancy to the
+      *     earlier batches', so the over-cap guard (output-affecting: it
+      *     is the OOM bound) sees a poison cell formed entirely within
+      *     this batch, and salting sees a port formed there. Finding
+      *     ports reads the KB-scale occ summaries, never the index.
+      *   - With `withOwn` the batch's own points join the index side
+      *     too (new-new pairs), and the hits are always Some. Without,
+      *     pairing is strictly new-vs-earlier, and a first batch (no
+      *     index yet) gets None and runs no join.
+      *   - After `land`, the batch's occ and index partitions are
+      *     written. */
+    def step(b: MicroBatch.Batch, pts: DataFrame, probe: DataFrame,
+        withOwn: Boolean, carryProbeCols: Seq[String] = Nil)(
+        land: (Option[DataFrame], Option[(Long, Long)]) => Unit): Unit = {
+      val spark = pts.sparkSession
+      val span = hourSpan(probe)
+      def earlier(dir: String, schema: StructType): Option[DataFrame] =
+        if (!b.exists(dir)) None
+        else Some(spark.read.schema(schema).parquet(dir)
+          .filter(col("batch") < b.id && (span match {
+            case Some((lo, hi)) => col("hour").between(lo, hi)
+            case None           => lit(false)
+          })))
+      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
+        .agg(count(lit(1)).as("n"))
+      val own = pts.select(PtCols: _*)
+      val earlierIdx = earlier(indexDir, IndexSchema).map(_.select(PtCols: _*))
+      val index =
+        if (withOwn) Some(earlierIdx.getOrElse(own.limit(0)).unionByName(own))
+        else earlierIdx
+      val hits = index.map { idx =>
+        val occ = earlier(occDir, OccSchema)
+          .fold(occBatch.limit(0))(
+            _.select(col("hour"), col("cy"), col("cx"), col("n")))
+          .unionByName(occBatch)
+          .groupBy(col("hour"), col("cy"), col("cx"))
+          .agg(sum(col("n")).as("occ"))
+        Geo.bandedPairs(probe, idx, radiusM, hotOccupancy, saltBuckets,
+          Some(occ), maxCellOccupancy, carryProbeCols = carryProbeCols)
+      }
+      land(hits, span)
+      b.write(occBatch, occDir)
+      b.write(hourClustered(pts), indexDir)
+    }
+  }
+
   /** Always-on DARK RENDEZVOUS monitor — q283's streaming form: the
     * transshipment alert ("went dark next to X, reappeared next to
     * Y") fires at the micro-batch where the vessel REAPPEARS, not at
     * the nightly batch recompute. Composition of two judged streaming
-    * pieces: gap completion from a per-vessel last-fix SNAPSHOT (the
-    * [[startEpisodes]] open-state pattern — fleet-sized parquet per
-    * batch, replay reads the snapshot from before itself), and the
-    * endpoint proximity probe through THE q264 band join against the
-    * same persisted (hour, cell) position index the other monitors
-    * keep ([[Geo.bandedPairs]], gap identity + endpoint zone carried
+    * pieces: gap completion from a per-vessel last-fix snapshot
+    * ([[withSnapshot]] under `last/`, the [[startEpisodes]] open-state
+    * pattern), and the endpoint proximity probe through the position
+    * index ([[PositionIndex.step]], gap identity + endpoint zone carried
     * as inert probe payload — exactly the batch q283's shape).
     *
     * Per batch:
@@ -302,17 +367,14 @@ object StreamingGeo {
     *   - new gaps = legs at least `minGapS` long whose LATER fix is in
     *     this batch (intra-batch gaps included), two endpoint rows each
     *     ([[Geo.gapEndpoints]], the batch q283's derivation);
-    *   - one tiny aggregate over the endpoints bounds the index/occ
-    *     reads to the ENDPOINT hour span (a gap-start hour reaches back
-    *     up to the gap's length — size the [[retainIndex]] horizon to
-    *     the longest gap you want endpoint-paired);
+    *   - the endpoints probe the index step with the batch's own points
+    *     on the index side (a reappearance hour's other vessels usually
+    *     land in the SAME batch); a gap-start hour reaches back up to
+    *     the gap's length, so size the [[retainIndex]] horizon to the
+    *     longest gap you want endpoint-paired;
     *   - alerts land under `alerts/batch=<id>` in the batch q283's
-    *     exact output shape ([[Geo.rendezvousAlerts]]); index/occ
-    *     partitions follow the [[start]] layout, so one outDir can
-    *     serve this monitor and retention together;
-    *   - the new `last/batch=<id>` snapshot lands, and every snapshot
-    *     older than the one this batch read is deleted (a crash replay
-    *     of this batch reads that one again).
+    *     exact output shape ([[Geo.rendezvousAlerts]]), then the index
+    *     step's occ/index partitions, then the new `last/` snapshot.
     * Persisted state is read with explicit schemas, so no read runs a
     * footer-inference job.
     *
@@ -331,87 +393,46 @@ object StreamingGeo {
       maxCellOccupancy: Long = Geo.DefaultMaxCellOccupancy): StreamingQuery = {
     require(minGapS >= 3600L,
       s"need minGapS >= 3600 (distinct endpoint hours), got $minGapS")
-    require(radiusM * 9 <= 5000L,
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+    val index = new PositionIndex(outDir, radiusM, hotOccupancy,
+      saltBuckets, maxCellOccupancy)
     import spark.implicits._
-    val indexDir = s"$outDir/index"
-    val occDir = s"$outDir/occ"
     val lastDir = s"$outDir/last"
     MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
         trigger) { b =>
-      val fs = b.fs(outDir)
-      val bid = b.id
       val raw = b.pins.keep(b.df)
       val pts = b.pins.keep(points(raw))
-      // previous per-vessel last-fix snapshot (newest id < bid —
-      // a crash-replayed batch reads the state from BEFORE itself
-      // and reproduces its own outputs, the open/ pattern)
-      val lastIds = snapshotIds(fs, lastDir)
-      val prevId = lastIds.filter(_ < bid).lastOption
-      val prev: DataFrame = prevId match {
-        case Some(p) =>
-          spark.read.schema(LastSchema).parquet(s"$lastDir/batch=$p")
-        case None => Seq.empty[(Long, Long, Long, Long, Long)]
-          .toDF(LastSchema.fieldNames.toIndexedSeq: _*)
+      withSnapshot(b, lastDir) { read =>
+        val prev: DataFrame = read match {
+          case Some(p) => spark.read.schema(LastSchema).parquet(p)
+          case None => Seq.empty[(Long, Long, Long, Long, Long)]
+            .toDF(LastSchema.fieldNames.toIndexedSeq: _*)
+        }
+        // gap legs over (previous last fix ∪ batch fixes) — the RAW
+        // fix sequence (q283 gaps are fix-level, not hour-
+        // representative); the same window flags each vessel's newest
+        // fix for the next snapshot
+        val bFix = Geo.positioned(raw)
+          .select(col("user_id"), unix_timestamp(col("ts")).as("t"),
+            col("event_id"), col("lat_e6"), col("lon_e6"))
+        val wu = Window.partitionBy(col("user_id"))
+          .orderBy(col("t"), col("event_id"))
+        val legs = b.pins.keep(prev.withColumn("from_state", lit(true))
+          .unionByName(bFix.withColumn("from_state", lit(false)))
+          .withColumn("pt", lag(col("t"), 1).over(wu))
+          .withColumn("pla", lag(col("lat_e6"), 1).over(wu))
+          .withColumn("plo", lag(col("lon_e6"), 1).over(wu))
+          .withColumn("newest", lead(lit(true), 1).over(wu).isNull))
+        // new gaps end at a batch fix
+        val eps = Geo.gapEndpoints(legs.filter(!col("from_state")),
+          minGapS, zones)
+        index.step(b, pts, eps, withOwn = true,
+            carryProbeCols = Seq("gap_start", "gap_end", "gap_s", "ep", "zid")) {
+          (hits, _) =>
+            b.write(Geo.rendezvousAlerts(hits.get, zones), s"$outDir/alerts")
+        }
+        b.write(legs.filter(col("newest"))
+          .select(LastSchema.fieldNames.toIndexedSeq.map(col): _*), lastDir)
       }
-      // gap legs over (previous last fix ∪ batch fixes) — the RAW
-      // fix sequence (q283 gaps are fix-level, not hour-
-      // representative); the same window flags each vessel's newest
-      // fix for the next snapshot
-      val bFix = Geo.positioned(raw)
-        .select(col("user_id"), unix_timestamp(col("ts")).as("t"),
-          col("event_id"), col("lat_e6"), col("lon_e6"))
-      val wu = Window.partitionBy(col("user_id"))
-        .orderBy(col("t"), col("event_id"))
-      val legs = b.pins.keep(prev.withColumn("from_state", lit(true))
-        .unionByName(bFix.withColumn("from_state", lit(false)))
-        .withColumn("pt", lag(col("t"), 1).over(wu))
-        .withColumn("pla", lag(col("lat_e6"), 1).over(wu))
-        .withColumn("plo", lag(col("lon_e6"), 1).over(wu))
-        .withColumn("newest", lead(lit(true), 1).over(wu).isNull))
-      // new gaps end at a batch fix
-      val eps = Geo.gapEndpoints(legs.filter(!col("from_state")),
-        minGapS, zones)
-      // index reads bounded to the ENDPOINT hour span (pairing
-      // matches equal hours only); gap-start hours reach back, so
-      // the span covers [oldest gap start, newest batch hour]
-      val spanRow = eps.agg(min(col("hour")), max(col("hour"))).head
-      def inSpan(c: Column): Column =
-        if (spanRow.isNullAt(0)) lit(false)
-        else c.between(spanRow.getLong(0), spanRow.getLong(1))
-      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(count(lit(1)).as("n"))
-      val earlier =
-        if (b.exists(indexDir))
-          spark.read.schema(IndexSchema).parquet(indexDir)
-            .filter(col("batch") < bid && inSpan(col("hour")))
-            .select(PtCols: _*)
-        else pts.select(PtCols: _*).limit(0)
-      // the batch's own reps join too: a reappearance hour's other
-      // vessels usually land in the SAME batch (hour-aligned feed)
-      val idxAll = earlier.unionByName(pts.select(PtCols: _*))
-      val prevOcc =
-        if (b.exists(occDir))
-          spark.read.schema(OccSchema).parquet(occDir)
-            .filter(col("batch") < bid && inSpan(col("hour")))
-            .select(col("hour"), col("cy"), col("cx"), col("n"))
-        else occBatch.limit(0)
-      val hot = Some(prevOcc.unionByName(occBatch)
-        .groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(sum(col("n")).as("occ"))
-        .filter(col("occ") >
-          math.min(hotOccupancy, maxCellOccupancy)))
-      val hits = Geo.bandedPairs(eps, idxAll, radiusM, hotOccupancy,
-        saltBuckets, hot, maxCellOccupancy,
-        carryProbeCols = Seq("gap_start", "gap_end", "gap_s", "ep", "zid"))
-      b.write(Geo.rendezvousAlerts(hits, zones), s"$outDir/alerts")
-      // occ + index partitions, the start() layout (retention-
-      // compatible); then the merged last-fix snapshot
-      b.write(occBatch, occDir)
-      b.write(hourClustered(pts), indexDir)
-      b.write(legs.filter(col("newest"))
-        .select(LastSchema.fieldNames.toIndexedSeq.map(col): _*), lastDir)
-      pruneSnapshots(fs, lastDir, lastIds, prevId)
     }
   }
 
@@ -435,91 +456,60 @@ object StreamingGeo {
       .map(_.stripPrefix("batch=").toLong).sorted.toSeq
   }
 
-  /** Once a micro-batch has written its own snapshot, drop every
-    * snapshot older than `read`, the one it started from: the next
-    * batch reads this batch's snapshot, and a crash replay of this
-    * batch reads `read` again, so nothing older is ever read. Keeps
-    * state at two snapshots instead of one per batch forever. */
-  private def pruneSnapshots(fs: FileSystem, dir: String, ids: Seq[Long],
-      read: Option[Long]): Unit =
-    ids.filter(b => read.exists(b < _))
-      .foreach(b => fs.delete(new Path(s"$dir/batch=$b"), true))
+  /** A per-batch state snapshot under `dir` (`last/`, `open/`): `body`
+    * gets the path of the newest `<dir>/batch=<id>` older than this
+    * batch (None on the first), so a crash-replayed batch reads the
+    * state from BEFORE itself and reproduces its own outputs; `body`
+    * writes this batch's snapshot with `b.write`. Then every snapshot
+    * older than the one read is deleted: the next batch reads this
+    * batch's, and a replay of this batch reads the same one again, so
+    * nothing older is ever read. State stays at two snapshots instead
+    * of one per batch forever. */
+  private def withSnapshot(b: MicroBatch.Batch, dir: String)(
+      body: Option[String] => Unit): Unit = {
+    val fs = b.fs(dir)
+    val ids = snapshotIds(fs, dir)
+    val read = ids.filter(_ < b.id).lastOption
+    body(read.map(p => s"$dir/batch=$p"))
+    ids.filter(i => read.exists(i < _))
+      .foreach(i => fs.delete(new Path(s"$dir/batch=$i"), true))
+  }
 
+  /** Always-on proximity monitor — the streaming form of the batch
+    * q264: each micro-batch's points probe the position index
+    * ([[PositionIndex.step]]) for EARLIER vessels within the radius;
+    * alerts land under `alerts/batch=<id>` as (u_new, u_old, hour, m).
+    * Pairing is strictly new-vs-earlier (the batch's own points stay
+    * off the index side), so within-batch pairs are the BATCH query's
+    * job and every cross-batch pair alerts exactly once, when its later
+    * endpoint arrives; the first batch lands an empty alert partition. */
   def start(spark: SparkSession, landingDir: String, outDir: String,
       radiusM: Long = 500L,
       trigger: Trigger = Trigger.AvailableNow(),
       hotOccupancy: Long = 1024L, saltBuckets: Int = 16,
       maxCellOccupancy: Long = Geo.DefaultMaxCellOccupancy): StreamingQuery = {
-    require(radiusM * 9 <= 5000L,
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
-    val indexDir = s"$outDir/index"
-    val occDir = s"$outDir/occ"
+    val index = new PositionIndex(outDir, radiusM, hotOccupancy,
+      saltBuckets, maxCellOccupancy)
     MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
         trigger) { b =>
-      val bid = b.id
       // kept: the representative-point window otherwise replays for the
       // span aggregate, the occ summary, the band-join probe and the
       // index write (~4x per batch)
       val pts = b.pins.keep(points(b.df))
-      // the batch's hour span: pairing matches EQUAL hours only, so
-      // index rows outside [min_hour, max_hour] cannot join — one
-      // tiny aggregate (the hwm pattern) bounds every index/occ read
-      // to the batch's span instead of the whole landed history,
-      // keeping per-batch cost O(batch hour span), not O(stream age)
-      val spanRow = pts.agg(min(col("hour")), max(col("hour"))).head
-      val span: Option[(Long, Long)] =
-        if (spanRow.isNullAt(0)) None
-        else Some((spanRow.getLong(0), spanRow.getLong(1)))
-      def inSpan(c: Column): Column = span match {
-        case Some((lo, hi)) => c.between(lo, hi)
-        case None           => lit(false)
-      }
-      // the batch's own per-cell occupancy — reused for the occ
-      // write below AND unioned into the hot/poison summary, so a
-      // poison (over-cap) cell formed ENTIRELY within this batch is
-      // excluded immediately, not one batch late (the cap is the
-      // OOM guard, which must see the current batch's points)
-      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(count(lit(1)).as("n"))
-      val alerts =
-        if (b.exists(indexDir)) {
-          val earlier = spark.read.schema(IndexSchema).parquet(indexDir)
-            .filter(col("batch") < bid && inSpan(col("hour")))
-          // hot (port) cells from the INCREMENTAL per-batch occupancy
-          // summaries — cell-grid-sized reads, so finding ports never
-          // re-scans the whole position index each micro-batch
-          val prevOcc =
-            if (b.exists(occDir))
-              spark.read.schema(OccSchema).parquet(occDir)
-                .filter(col("batch") < bid && inSpan(col("hour")))
-                .select(col("hour"), col("cy"), col("cx"), col("n"))
-            else occBatch.limit(0)
-          val hot = Some(prevOcc.unionByName(occBatch)
-            .groupBy(col("hour"), col("cy"), col("cx"))
-            .agg(sum(col("n")).as("occ"))
-            .filter(col("occ") >
-              math.min(hotOccupancy, maxCellOccupancy)))
-          // THE q264 band join ([[Geo.bandedPairs]]): 3x3 probe
-          // replication, exact verify, and the occupancy-salted
-          // hot-cell path — the port mega-cell spreads over salt
-          // lanes here exactly as in the batch form
-          Geo.bandedPairs(pts, earlier, radiusM, hotOccupancy,
-              saltBuckets, hot, maxCellOccupancy)
-            .filter(col("u1") =!= col("u2"))
+      index.step(b, pts, pts, withOwn = false) { (hits, _) =>
+        val alerts = hits match {
+          case Some(h) => h.filter(col("u1") =!= col("u2"))
             .select(col("u1").as("u_new"), col("u2").as("u_old"),
               col("hour"), col("m"))
             .distinct()
-        } else
           // an empty alert partition, so readers see every batch
-          pts.limit(0)
+          case None => pts.limit(0)
             .select(col("user_id").as("u_new"),
               col("user_id").as("u_old"), col("hour"),
               lit(0L).as("m"))
-      b.write(alerts, s"$outDir/alerts")
-      // per-batch occupancy summary beside the index (batch=<id>
-      // overwrite, replay-idempotent like everything else here)
-      b.write(occBatch, occDir)
-      b.write(hourClustered(pts), indexDir)
+        }
+        b.write(alerts, s"$outDir/alerts")
+      }
     }
   }
 
@@ -527,20 +517,15 @@ object StreamingGeo {
     * alert fires the moment a pair's episode reaches `minHours`
     * encounter-hours, not at the nightly batch recompute.
     *
-    * Per micro-batch: the batch's points pair against the persisted
-    * index PLUS themselves through THE q269 band join
-    * ([[graft.queries.Geo.bandedPairs]] — every pair-hour with at
-    * least one new endpoint, found exactly once), then each pair's
-    * new hours fold into its OPEN episode by q269's gaps-and-islands
-    * rule (gap > `maxGapHours` closes and restarts). State is a
-    * parquet SNAPSHOT per batch (`open/batch=<id>`, overwrite —
-    * replay-idempotent exactly like the index partitions; a replayed
-    * batch reads the snapshot from BEFORE itself and reproduces its
-    * own outputs bit for bit; older snapshots are deleted as soon as
-    * nothing can read them). Outputs: `closed/batch=<id>` (episodes
-    * that ended, >= minHours only — q269's emission rule) and
-    * `alerts/batch=<id>` (one row per episode at the moment it first
-    * reaches minHours).
+    * Per micro-batch: the batch's points pair against the position
+    * index PLUS themselves ([[PositionIndex.step]] — every pair-hour
+    * with at least one new endpoint, found exactly once), then each
+    * pair's new hours fold into its OPEN episode by q269's
+    * gaps-and-islands rule (gap > `maxGapHours` closes and restarts).
+    * State is a parquet snapshot per batch ([[withSnapshot]] under
+    * `open/`). Outputs: `closed/batch=<id>` (episodes that ended,
+    * >= minHours only — q269's emission rule) and `alerts/batch=<id>`
+    * (one row per episode at the moment it first reaches minHours).
     *
     * Contracts: arrival-order processing per pair (an hour at-or-
     * before the open episode's end drops — the StateTracker rule;
@@ -568,149 +553,104 @@ object StreamingGeo {
       trigger: Trigger = Trigger.AvailableNow(),
       hotOccupancy: Long = 1024L, saltBuckets: Int = 16,
       maxCellOccupancy: Long = Geo.DefaultMaxCellOccupancy): StreamingQuery = {
-    require(radiusM * 9 <= 5000L,
-      s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
+    val index = new PositionIndex(outDir, radiusM, hotOccupancy,
+      saltBuckets, maxCellOccupancy)
     require(minHours >= 1L && maxGapHours >= 1L,
       s"need minHours/maxGapHours >= 1, got $minHours/$maxGapHours")
     import spark.implicits._
-    val indexDir = s"$outDir/index"
-    val occDir = s"$outDir/occ"
     val openDir = s"$outDir/open"
     MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
         trigger) { b =>
-      val fs = b.fs(outDir)
-      val bid = b.id
       // kept: the representative-point window otherwise replays for the
       // span aggregate, the index-union probe, the occ summary and the
       // index write
       val pts = b.pins.keep(points(b.df))
-      // batch hour span (one tiny aggregate): pairing matches EQUAL
-      // hours only, so index/occ rows outside the span cannot join —
-      // every persisted read below is bounded to the span, keeping
-      // per-batch cost O(batch hour span) instead of O(stream age);
-      // max doubles as the eviction high-water
-      val spanRow = pts.agg(min(col("hour")), max(col("hour"))).head
-      val span: Option[(Long, Long)] =
-        if (spanRow.isNullAt(0)) None
-        else Some((spanRow.getLong(0), spanRow.getLong(1)))
-      def inSpan(c: Column): Column = span match {
-        case Some((lo, hi)) => c.between(lo, hi)
-        case None           => lit(false)
-      }
-      // index side: every earlier batch's points PLUS this batch's
-      // own (new-new pairs are this stream's job too — unlike the
-      // alert stream, the episode fold needs EVERY pair-hour)
-      val idxAll =
-        if (b.exists(indexDir))
-          spark.read.schema(IndexSchema).parquet(indexDir)
-            .filter(col("batch") < bid && inSpan(col("hour")))
-            .select(PtCols: _*).unionByName(pts.select(PtCols: _*))
-        else pts.select(PtCols: _*)
-      // batch's own occupancy — reused for the occ write below and
-      // unioned into the hot/poison summary so the over-cap guard
-      // (output-affecting: it is the OOM bound) sees a poison cell
-      // the moment it forms, including one formed entirely within
-      // this batch; hotness (salting) gains the same freshness free
-      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(count(lit(1)).as("n"))
-      val prevOcc =
-        if (b.exists(occDir))
-          spark.read.schema(OccSchema).parquet(occDir)
-            .filter(col("batch") < bid && inSpan(col("hour")))
-            .select(col("hour"), col("cy"), col("cx"), col("n"))
-        else occBatch.limit(0)
-      val hot = Some(prevOcc.unionByName(occBatch)
-        .groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(sum(col("n")).as("occ"))
-        .filter(col("occ") >
-          math.min(hotOccupancy, maxCellOccupancy)))
-      val ph = Geo.bandedPairs(pts, idxAll, radiusM, hotOccupancy,
-          saltBuckets, hot, maxCellOccupancy)
-        .filter(col("u1") =!= col("u2"))
-        .select(least(col("u1"), col("u2")).as("u1"),
-          greatest(col("u1"), col("u2")).as("u2"),
-          col("hour"), col("m"))
-        .groupBy(col("u1"), col("u2"), col("hour"))
-        .agg(min(col("m")).as("m"))
-      // the observed-hour high-water drives deterministic eviction —
-      // the span aggregate's max, no extra pass
-      val hwm: Option[Long] = span.map(_._2)
-      // open-episode snapshot from BEFORE this batch (max id < bid)
-      val openIds = snapshotIds(fs, openDir)
-      val prevId = openIds.filter(_ < bid).lastOption
-      val open: Dataset[EpState] = prevId match {
-        case Some(p) => spark.read.schema(Encoders.product[EpState].schema)
-          .parquet(s"$openDir/batch=$p").as[EpState]
-        case None => spark.emptyDataset[EpState]
-      }
-      val folded = open.groupByKey(s => (s.u1, s.u2))
-        .cogroup(ph.select(col("u1"), col("u2"), col("hour"), col("m"))
-          .as[(Long, Long, Long, Long)]
-          .groupByKey(r => (r._1, r._2))) {
-          case ((u1, u2), states, hours) =>
-            val out = Seq.newBuilder[EpOut]
-            var st = states.toSeq.headOption.orNull
-            def close(): Unit = {
-              if (st.n_hours >= minHours)
-                out += EpOut("closed", u1, u2, st.start_hour,
-                  st.end_hour, st.n_hours, st.min_m, st.alerted)
-              st = null
-            }
-            hours.toSeq.sortBy(_._3).foreach { case (_, _, h, m) =>
-              if (st != null && h <= st.end_hour) {
-                // at-or-before the open end: replay/straggler no-op
-              } else {
-                if (st != null && h - st.end_hour > maxGapHours) close()
-                st =
-                  if (st == null) EpState(u1, u2, h, h, 1L, m, false)
-                  else st.copy(end_hour = h, n_hours = st.n_hours + 1L,
-                    min_m = math.min(st.min_m, m))
-                if (st.n_hours >= minHours && !st.alerted) {
-                  st = st.copy(alerted = true)
-                  out += EpOut("alert", u1, u2, st.start_hour, h,
-                    st.n_hours, st.min_m, true)
+      // new-new pairs are this stream's job too — unlike the alert
+      // stream, the episode fold needs EVERY pair-hour
+      index.step(b, pts, pts, withOwn = true) { (hits, span) =>
+        val ph = hits.get
+          .filter(col("u1") =!= col("u2"))
+          .select(least(col("u1"), col("u2")).as("u1"),
+            greatest(col("u1"), col("u2")).as("u2"),
+            col("hour"), col("m"))
+          .groupBy(col("u1"), col("u2"), col("hour"))
+          .agg(min(col("m")).as("m"))
+        // the observed-hour high-water drives deterministic eviction —
+        // the span aggregate's max, no extra pass
+        val hwm: Option[Long] = span.map(_._2)
+        withSnapshot(b, openDir) { read =>
+          val open: Dataset[EpState] = read match {
+            case Some(p) => spark.read.schema(Encoders.product[EpState].schema)
+              .parquet(p).as[EpState]
+            case None => spark.emptyDataset[EpState]
+          }
+          val folded = open.groupByKey(s => (s.u1, s.u2))
+            .cogroup(ph.select(col("u1"), col("u2"), col("hour"), col("m"))
+              .as[(Long, Long, Long, Long)]
+              .groupByKey(r => (r._1, r._2))) {
+              case ((u1, u2), states, hours) =>
+                val out = Seq.newBuilder[EpOut]
+                var st = states.toSeq.headOption.orNull
+                def close(): Unit = {
+                  if (st.n_hours >= minHours)
+                    out += EpOut("closed", u1, u2, st.start_hour,
+                      st.end_hour, st.n_hours, st.min_m, st.alerted)
+                  st = null
                 }
-              }
+                hours.toSeq.sortBy(_._3).foreach { case (_, _, h, m) =>
+                  if (st != null && h <= st.end_hour) {
+                    // at-or-before the open end: replay/straggler no-op
+                  } else {
+                    if (st != null && h - st.end_hour > maxGapHours) close()
+                    st =
+                      if (st == null) EpState(u1, u2, h, h, 1L, m, false)
+                      else st.copy(end_hour = h, n_hours = st.n_hours + 1L,
+                        min_m = math.min(st.min_m, m))
+                    if (st.n_hours >= minHours && !st.alerted) {
+                      st = st.copy(alerted = true)
+                      out += EpOut("alert", u1, u2, st.start_hour, h,
+                        st.n_hours, st.min_m, true)
+                    }
+                  }
+                }
+                // deterministic eviction: nothing in-order can extend
+                if (st != null && hwm.exists(_ - st.end_hour > maxGapHours))
+                  close()
+                if (st != null)
+                  out += EpOut("open", u1, u2, st.start_hour, st.end_hour,
+                    st.n_hours, st.min_m, st.alerted)
+                out.result().iterator
             }
-            // deterministic eviction: nothing in-order can extend
-            if (st != null && hwm.exists(_ - st.end_hour > maxGapHours))
-              close()
-            if (st != null)
-              out += EpOut("open", u1, u2, st.start_hour, st.end_hour,
-                st.n_hours, st.min_m, st.alerted)
-            out.result().iterator
+          // one computation, three routed sinks: keep the fold (sized by
+          // the ACTIVE pair population, evicted past maxGapHours — never
+          // collected to the driver) instead of replaying the band join
+          // per sink
+          val routed = b.pins.keep(folded)
+          def land(kind: String, dir: String): Unit =
+            b.write(routed.filter(_.kind == kind)
+              .select(col("u1"), col("u2"), col("start_hour"),
+                col("end_hour"), col("n_hours"), col("min_m"),
+                col("alerted")), s"$outDir/$dir")
+          land("closed", "closed")
+          land("alert", "alerts")
+          land("open", "open")
         }
-      // one computation, three routed sinks: keep the fold (sized by
-      // the ACTIVE pair population, evicted past maxGapHours — never
-      // collected to the driver) instead of replaying the band join
-      // per sink
-      val routed = b.pins.keep(folded)
-      def land(kind: String, dir: String): Unit =
-        b.write(routed.filter(_.kind == kind)
-          .select(col("u1"), col("u2"), col("start_hour"),
-            col("end_hour"), col("n_hours"), col("min_m"),
-            col("alerted")), s"$outDir/$dir")
-      land("closed", "closed")
-      land("alert", "alerts")
-      land("open", "open")
-      pruneSnapshots(fs, openDir, openIds, prevId)
-      // per-batch occupancy + index append, the start() layout
-      b.write(occBatch, occDir)
-      b.write(hourClustered(pts), indexDir)
+      }
     }
   }
 
-  /** Retention for the persisted position index — the compaction the
-    * always-on monitors need so the table under them stops growing
-    * without bound: drop every `index/batch=<id>` (and its
-    * `occ/batch=<id>` sibling) whose NEWEST hour has fallen more than
-    * `horizonHours` behind the stream's observed hour high-water.
+  /** Retention for the persisted position index ([[PositionIndex]]) —
+    * the compaction the always-on monitors need so the table under
+    * them stops growing without bound: drop every `index/batch=<id>`
+    * (and its `occ/batch=<id>` sibling) whose NEWEST hour has fallen
+    * more than `horizonHours` behind the stream's observed hour
+    * high-water.
     *
-    * Safety contract: the monitors' per-batch reads are bounded to the
-    * batch's own hour span, so a dropped partition can only be missed
-    * by a batch whose span still reaches back past the horizon — i.e.
-    * data arriving later than `horizonHours` after its event hour.
-    * Size the horizon to the late-data window you accept (for
+    * Safety contract: the index step reads only inside the batch's
+    * hour span, so a dropped partition can only be missed by a batch
+    * whose span still reaches back past the horizon — i.e. data
+    * arriving later than `horizonHours` after its event hour. Size the
+    * horizon to the late-data window you accept (for
     * [[startEpisodes]], at least `maxGapHours` so an episode that is
     * still extendable can always find its pairs); later-than-horizon
     * stragglers are the batch recompute's job, the same escape hatch

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Pins, Tables}
+import graft.core.{Pins, RunMetrics, Tables}
 import graft.llm.{Dedup, IvfStore, Pca, Pq, QualityClassifier, Similarity, TextOps}
 
 /** The pin scope's contracts: it is the only code that checkpoints, every
@@ -113,7 +113,7 @@ class PinsSpec extends AnyFunSuite with TestSpark {
     val leaked = leakedBy {
       val thrown = intercept[RuntimeException] {
         Pins { pins =>
-          pins.iterate((pins.pin(ids(10)), 0), 10) { (f, n) =>
+          pins.iterate("throws", (pins.pin(ids(10)), 0), 10) { (f, n) =>
             if (n == 2) throw boom
             next(f)
           } { (_, n, _) => (n + 1, false) }
@@ -131,7 +131,8 @@ class PinsSpec extends AnyFunSuite with TestSpark {
     var seen = List.empty[Set[Int]] // at each test call: held inside the scope
     var atEnd = Set.empty[Int]
     Pins { pins =>
-      val done = pins.iterate((pins.pin(ids(10)), 0), 10)((f, _) => next(f)) {
+      val done = pins.iterate("held", (pins.pin(ids(10)), 0), 10)(
+        (f, _) => next(f)) {
         (_, n, _) =>
           seen ::= persisted -- outside
           (n + 1, n + 1 == 4)
@@ -152,9 +153,54 @@ class PinsSpec extends AnyFunSuite with TestSpark {
     assert(persisted -- outside == Set.empty, "the scope end left frames held")
     // at the cap the test has not fired
     val capped = Pins { pins =>
-      pins.iterate((ids(10), 0), 2)((f, _) => next(f))((_, n, _) => (n + 1, false))
+      pins.iterate("capped", (ids(10), 0), 2)((f, _) => next(f))(
+        (_, n, _) => (n + 1, false))
     }
     assert(capped.rounds == 2 && !capped.converged && capped.value == 2)
+  }
+
+  test("iterate: round k's jobs carry `<label> round k`; the caller's " +
+      "own description is back after the loop and after a round throws") {
+    val sc = spark.sparkContext
+    def description = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller")
+    try {
+      var inRound = List.empty[String] // the description each test call saw
+      val run = RunMetrics.measure(spark) {
+        Pins { pins =>
+          val done = pins.iterate("demo", (ids(10), 0), 10)(
+              (f, _) => next(f)) { (_, n, nx) =>
+            nx.count()
+            inRound ::= description
+            (n + 1, n + 1 == 3)
+          }
+          assert(done.rounds == 3 && done.converged)
+          assert(description == "caller")
+          done.frame.count()
+        }
+      }
+      assert(inRound.reverse == Seq("demo round 1", "demo round 2",
+        "demo round 3"))
+      val jobs = run.jobs.sortBy(_.id)
+      // each round pins its frame and counts it: at least two jobs a round
+      (1 to 3).foreach { k =>
+        assert(jobs.count(_.description == s"demo round $k") >= 2,
+          s"round $k: ${jobs.map(_.description)}")
+      }
+      assert(jobs.map(_.description).toSet ==
+        Set("demo round 1", "demo round 2", "demo round 3", "caller"),
+        jobs.map(_.description).toString)
+      assert(jobs.last.description == "caller", jobs.last.toString)
+      intercept[IllegalStateException] {
+        Pins { pins =>
+          pins.iterate("boom", (ids(10), 0), 10) { (f, n) =>
+            if (n == 1) throw new IllegalStateException("boom")
+            next(f)
+          } { (_, n, _) => (n + 1, false) }
+        }
+      }
+      assert(description == "caller", "a throwing round kept its label")
+    } finally sc.setJobDescription(null)
   }
 
   test("every routed operator leaves zero persisted-RDD delta") {

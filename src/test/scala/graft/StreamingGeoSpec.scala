@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -433,8 +436,9 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
     import spark.implicits._
     val landing = java.nio.file.Files
       .createTempDirectory("graft-pc-in").toString
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-pc-out").toString
+    def outDir(m: String) = java.nio.file.Files
+      .createTempDirectory(s"graft-pc-$m").toString
+    val (outS, outR, outE) = (outDir("s"), outDir("r"), outDir("e"))
     def land(name: String, evs: Seq[GeoEv]): Unit = {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft-pc-wave").toString
@@ -444,49 +448,96 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(landing, name))
     }
-    // wave 1 (users 1-60, hour 0) seeds the occ store under the cap;
-    // wave 2 (users 101-500, hour 1) forms its over-cap cells with NO
-    // prior occupancy at hour 1 — a lagged summary would miss them
-    val w1u = (1L to 60L); val w2u = (101L to 500L)
-    def drain(): Unit = StreamingGeo.startEpisodes(spark, landing, out,
-      500L, minHours = 1L, maxGapHours = 168L,
-      maxCellOccupancy = 1L).awaitTermination()
-    land("w1.parquet", w1u.map(u => GeoEv(u * 10, u, ts(60))))
-    drain()
-    land("w2.parquet", w2u.map(u => GeoEv(u * 10 + 1, u, ts(3720))))
-    drain()
-    // local occupancy at hour 1: cells with > 1 vessel are poison
-    val pts2 = w2u.map { u =>
-      val (la, lo) = pos(u * 10 + 1, u)
-      (u, la, lo, (la + 5000) / 5000, (lo + 5000) / 5000)
+    // wave 1 (users 1-60 at hour 0, 601-700 at hour 1) seeds the occ
+    // store under the cap; wave 2 (users 1-60 and 101-500, hour 1) forms
+    // its over-cap cells with NO prior occupancy in them — a lagged
+    // summary would miss them. Users 1-60 reappear, so each closes a
+    // dark gap (hour 0 -> hour 1) for the rendezvous monitor, and the
+    // hour-1 points of wave 1 are the earlier index `start` pairs with.
+    def drain(): Unit = {
+      StreamingGeo.start(spark, landing, outS, 500L,
+        maxCellOccupancy = 1L).awaitTermination()
+      StreamingGeo.startDarkRendezvous(spark, landing, outR,
+        minGapS = 3600L, maxCellOccupancy = 1L).awaitTermination()
+      StreamingGeo.startEpisodes(spark, landing, outE,
+        500L, minHours = 1L, maxGapHours = 168L,
+        maxCellOccupancy = 1L).awaitTermination()
     }
-    val poison = pts2.groupBy(p => (p._4, p._5))
-      .filter(_._2.size > 1).keySet
-    val surv = pts2.filterNot(p => poison((p._4, p._5)))
-    def brute(pts: Seq[(Long, Long, Long, Long, Long)], h: Long) = (for {
-      (u1, a1, o1, _, _) <- pts; (u2, a2, o2, _, _) <- pts if u1 < u2
-      m = math.round(hav(a1, o1, a2, o2)) if m <= 500L
-    } yield (u1, u2, h, h, 1L, m)).toSet
-    val h0 = (1700000000L + 60) / 3600; val h1 = h0 + 1
-    val allPairs2 = brute(pts2, h1)
-    val survPairs2 = brute(surv, h1)
-    assert(allPairs2 != survPairs2,
-      "no sub-500m pair inside a poison cell — the plant is vacuous")
-    val pts1 = w1u.map { u =>
-      val (la, lo) = pos(u * 10, u)
-      (u, la, lo, (la + 5000) / 5000, (lo + 5000) / 5000)
+    val gapUsers = (1L to 60L); val w2u = gapUsers ++ (101L to 500L)
+    val wave1 = gapUsers.map(u => GeoEv(u * 10, u, ts(60))) ++
+      (601L to 700L).map(u => GeoEv(u * 10, u, ts(3660)))
+    val wave2 = w2u.map(u => GeoEv(u * 10 + 1, u, ts(3720)))
+    land("w1.parquet", wave1)
+    drain()
+    land("w2.parquet", wave2)
+    drain()
+
+    // brute force: (user, hour, lat, lon, cy, cx) per fix (one per
+    // vessel-hour, so each is its own representative)
+    type Pt = (Long, Long, Long, Long, Long, Long)
+    def pts(evs: Seq[GeoEv]): Seq[Pt] = evs.map { e =>
+      val (la, lo) = pos(e.event_id, e.user_id)
+      (e.user_id, e.ts.getTime / 3600000L, la, lo,
+        (la + 5000) / 5000, (lo + 5000) / 5000)
     }
-    val expect = brute(pts1, h0) ++ survPairs2
-    val openId = new java.io.File(s"$out/open").listFiles()
+    val (b0, b1) = (pts(wave1), pts(wave2))
+    // cells over the cap (1) among the points a batch's summary counts
+    def poison(seen: Seq[Pt]): Set[(Long, Long, Long)] =
+      seen.groupBy(p => (p._2, p._5, p._6)).filter(_._2.size > 1).keySet
+    // (probe user, index user, hour, m): same hour, within 500 m,
+    // neither point in a poison cell
+    def pairs(probe: Seq[Pt], index: Seq[Pt],
+        bad: Set[(Long, Long, Long)]): Set[(Long, Long, Long, Long)] = {
+      def ok(p: Pt) = !bad((p._2, p._5, p._6))
+      (for {
+        a <- probe if ok(a); z <- index if ok(z)
+        if a._1 != z._1 && a._2 == z._2
+        m = math.round(hav(a._3, a._4, z._3, z._4)) if m <= 500L
+      } yield (a._1, z._1, a._2, m)).toSet
+    }
+    // each monitor's output when batch 1's pairs are judged by `bad`:
+    // the true summary (both batches) or a lagged one (batch 0 only)
+    def startAlerts(bad: Set[(Long, Long, Long)]) = pairs(b1, b0, bad)
+    def rendezvous(bad: Set[(Long, Long, Long)]) =
+      pairs((b0 ++ b1).filter(p => gapUsers.contains(p._1)), b0 ++ b1, bad)
+        .groupBy(h => (h._1, h._2))
+        .map { case ((u, v), hs) => (u, v, hs.size.toLong, hs.map(_._4).min) }
+        .toSet
+    def episodes(bad: Set[(Long, Long, Long)]) =
+      (pairs(b0, b0, poison(b0)) ++ pairs(b1, b0 ++ b1, bad))
+        .map { case (u, v, h, m) => (math.min(u, v), math.max(u, v), h, m) }
+        .groupBy(h => (h._1, h._2))
+        .map { case ((u, v), hs) =>
+          val hours = hs.map(_._3)
+          (u, v, hours.min, hours.max, hours.size.toLong, hs.map(_._4).min)
+        }.toSet
+    val (now, lagged) = (poison(b0 ++ b1), poison(b0))
+
+    val gotStart = spark.read.parquet(s"$outS/alerts").collect()
+      .map(r => (r.getAs[Long]("u_new"), r.getAs[Long]("u_old"),
+        r.getAs[Long]("hour"), r.getAs[Long]("m"))).toSet
+    val gotRendezvous = spark.read.parquet(s"$outR/alerts").collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("nearby"),
+        r.getAs[Long]("n_ends"), r.getAs[Long]("min_m"))).toSet
+    val openId = new java.io.File(s"$outE/open").listFiles()
       .map(_.getName).filter(_.startsWith("batch="))
       .map(_.stripPrefix("batch=").toLong).max
-    val got = (spark.read.parquet(s"$out/open/batch=$openId").collect()
-      ++ spark.read.parquet(s"$out/closed").collect())
+    val gotEpisodes = (spark.read.parquet(s"$outE/open/batch=$openId").collect()
+      ++ spark.read.parquet(s"$outE/closed").collect())
       .map(r => (r.getAs[Long]("u1"), r.getAs[Long]("u2"),
         r.getAs[Long]("start_hour"), r.getAs[Long]("end_hour"),
         r.getAs[Long]("n_hours"), r.getAs[Long]("min_m"))).toSet
-    assert(got == expect,
-      s"missing=${(expect -- got).take(5)} extra=${(got -- expect).take(5)}")
+    def check[T](name: String, expect: Set[T], stale: Set[T],
+        got: Set[T]): Unit = {
+      assert(expect != stale, s"$name: no sub-500m pair inside a poison " +
+        "cell formed in batch 1 — the plant is vacuous")
+      assert(got == expect, s"$name: missing=${(expect -- got).take(5)} " +
+        s"extra=${(got -- expect).take(5)}")
+    }
+    check("start", startAlerts(now), startAlerts(lagged), gotStart)
+    check("startDarkRendezvous", rendezvous(now), rendezvous(lagged),
+      gotRendezvous)
+    check("startEpisodes", episodes(now), episodes(lagged), gotEpisodes)
   }
 
   test("startEpisodes keeps only the two newest open-state snapshots " +
@@ -801,5 +852,50 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
       g._2 <= 1700000000L + 33600))
     assert(got == batch,
       s"missing=${(batch -- got).take(5)} extra=${(got -- batch).take(5)}")
+  }
+
+  test("one index step: IndexSchema/OccSchema are read only in " +
+      "PositionIndex and retainIndex, the hot/poison threshold and the " +
+      "cell-completeness check are written once, and one place lists " +
+      "state snapshots") {
+    val main = Paths.get(sys.props("user.dir"), "src/main/scala/graft")
+    val sg = "streaming/StreamingGeo.scala"
+    def lines(rel: String) = Files.readAllLines(main.resolve(rel)).asScala
+    // (file, trimmed code line, 1-based line number); comment lines out
+    val code = for {
+      f <- Seq(sg, "queries/Geo.scala")
+      (line, i) <- lines(f).zipWithIndex
+      c = line.trim
+      if !(c.startsWith("//") || c.startsWith("*") || c.startsWith("/*"))
+    } yield (f, c, i + 1)
+    def where(hits: Seq[(String, String, Int)]) =
+      hits.map { case (f, _, i) => s"$f:$i" }.mkString(", ")
+    // the lines of a member declared at two-space indent, up to its
+    // closing brace
+    def body(decl: String): Range = {
+      val from = lines(sg).indexWhere(_.contains(decl))
+      assert(from >= 0, s"no `$decl` in $sg")
+      (from + 1) to (lines(sg).indexWhere(_ == "  }", from) + 1)
+    }
+    val step = body("private final class PositionIndex(")
+    val retain = body("def retainIndex(")
+    val schemaUses = code.filter { case (_, c, _) =>
+      (c.contains("IndexSchema") || c.contains("OccSchema")) &&
+        !c.startsWith("private val") }
+    assert(schemaUses.exists { case (f, _, i) => f == sg && step.contains(i) },
+      "PositionIndex reads no index/occ partition")
+    val outside = schemaUses.filterNot { case (f, _, i) =>
+      f == sg && (step.contains(i) || retain.contains(i)) }
+    assert(outside.isEmpty, s"index/occ reads outside the index step: " +
+      where(outside))
+    def once(word: String): Unit = {
+      val hits = code.filter(_._2.contains(word))
+      assert(hits.size == 1, s"`$word` at: ${where(hits)}")
+    }
+    once("math.min(hotOccupancy, maxCellOccupancy)")
+    once("radiusM * 9")
+    val listings = code.filter { case (_, c, _) =>
+      c.contains("snapshotIds(") && !c.contains("def snapshotIds") }
+    assert(listings.size == 1, s"snapshotIds called at: ${where(listings)}")
   }
 }
