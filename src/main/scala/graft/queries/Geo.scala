@@ -163,6 +163,19 @@ object Geo {
     require(radiusM * 9 <= 5000L,
       s"radiusM=$radiusM exceeds the 5,000-µdeg cell's completeness bound")
 
+  /** The hot/poison cell list [[bandedPairs]] joins against: the
+    * (hour, cy, cx) cells of `pts` holding more points than EITHER
+    * threshold, as (hour, cy, cx, __hot, __poison) — at most
+    * |pts|/min(hotOccupancy, maxCellOccupancy) rows. */
+  private[graft] def hotCellList(pts: DataFrame, hotOccupancy: Long,
+      maxCellOccupancy: Long): DataFrame =
+    pts.groupBy(col("hour"), col("cy"), col("cx"))
+      .agg(count(lit(1)).as("occ"))
+      .filter(col("occ") > math.min(hotOccupancy, maxCellOccupancy))
+      .select(col("hour"), col("cy"), col("cx"),
+        (col("occ") > hotOccupancy).as("__hot"),
+        (col("occ") > maxCellOccupancy).as("__poison"))
+
   /** Banded pair candidates with the exact haversine verify — the ONE
     * join both the batch q264 and [[graft.streaming.StreamingGeo]]
     * run: `probe` points replicated to their 3x3 cell neighborhood,
@@ -202,22 +215,17 @@ object Geo {
     // salting can bound — its points are EXCLUDED from pairing on both
     // sides here and REPORTED by [[poisonCells]] (audit, don't
     // explode).
-    // hot-cell source: `hotCells`, a caller-maintained (hour, cy, cx,
-    // occ) summary of every cell, when available (StreamingGeo's
-    // position index keeps per-batch occupancy partitions so a
-    // micro-batch never re-scans the whole index just to find ports);
-    // otherwise derived from `index` here — one more replay of the
-    // points subtree, which measured CHEAPER than materializing it
+    // hot-cell source: `hotCells`, a caller-computed [[hotCellList]],
+    // when available (StreamingGeo's index step collects it to the
+    // driver and passes it as a local relation, so an empty list plans
+    // the three joins away and a non-empty one broadcasts without a
+    // job); otherwise derived from `index` here — one more replay of
+    // the points subtree, which measured CHEAPER than materializing it
     // (SCALE.md r17 negative result). ONE bounded broadcast list —
     // cells above EITHER threshold, hot/poison flagged independently —
     // serves both the salt lanes and the poison drop.
-    val hot = hotCells
-      .getOrElse(index.groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(count(lit(1)).as("occ")))
-      .filter(col("occ") > math.min(hotOccupancy, maxCellOccupancy))
-      .select(col("hour"), col("cy"), col("cx"),
-        (col("occ") > hotOccupancy).as("__hot"),
-        (col("occ") > maxCellOccupancy).as("__poison"))
+    val hot = hotCells.getOrElse(
+      hotCellList(index, hotOccupancy, maxCellOccupancy))
     val right = index.join(broadcast(hot), Seq("hour", "cy", "cx"), "left")
       .filter(!coalesce(col("__poison"), lit(false)))
       .select(col("user_id").as("u2"), col("hour"),

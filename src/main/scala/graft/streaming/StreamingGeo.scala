@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -18,9 +20,10 @@ import graft.queries.Geo
   * [[StreamingGeo.startEpisodes]] (q269) — share one persisted (hour,
   * cell) position index and one per-batch step over it
   * (`PositionIndex.step`): span-bounded reads of earlier batches, the
-  * hot/poison summary, THE q264 band join ([[Geo.bandedPairs]]) and the
-  * per-batch index/occ writes. Per-batch cost is proportional to batch
-  * x index-cell occupancy, never index². Zero streaming state for the
+  * hot/poison list counted from those same rows and collected to the
+  * driver, THE q264 band join ([[Geo.bandedPairs]]) and the per-batch
+  * index write. Per-batch cost is proportional to batch x index-cell
+  * occupancy, never index². Zero streaming state for the
   * pairing — the index IS the state, compactable like any parquet
   * table ([[StreamingGeo.retainIndex]]); rendezvous and episodes add a
   * per-batch parquet snapshot (`last/`, `open/`).
@@ -281,68 +284,61 @@ object StreamingGeo {
   /** The persisted (hour, cell) position index under `outDir` that the
     * band-join monitors ([[start]], [[startDarkRendezvous]],
     * [[startEpisodes]]) keep: `index/batch=<id>` holds each batch's
-    * [[points]], hour-clustered, and `occ/batch=<id>` the batch's
-    * per-cell occupancy, both written with overwrite, so a replayed
-    * batch replaces its own partitions. [[step]] is the one pass a
+    * [[points]], hour-clustered, written with overwrite, so a replayed
+    * batch replaces its own partition. [[step]] is the one pass a
     * micro-batch makes over it. */
   private final class PositionIndex(outDir: String, radiusM: Long,
       hotOccupancy: Long, saltBuckets: Int, maxCellOccupancy: Long) {
     Geo.requireCellComplete(radiusM)
     private val indexDir = s"$outDir/index"
-    private val occDir = s"$outDir/occ"
 
     /** One micro-batch's pass: `probe` (the batch's own points `pts`,
       * or rendezvous' gap endpoints) runs THE q264 band join
       * ([[Geo.bandedPairs]]: 3x3 probe replication, exact verify,
       * occupancy-salted hot cells) against the index, and `land` gets
       * the hits and the probe's hour span.
-      *   - Earlier batches' index and occ partitions are read only
-      *     inside the probe's hour span: pairing matches EQUAL hours
-      *     only, so per-batch cost is O(batch hour span), never O(stream
-      *     age). `batch < id` keeps a replayed batch's own earlier write
-      *     out.
-      *   - The hot/poison summary adds the batch's own occupancy to the
-      *     earlier batches', so the over-cap guard (output-affecting: it
-      *     is the OOM bound) sees a poison cell formed entirely within
-      *     this batch, and salting sees a port formed there. Finding
-      *     ports reads the KB-scale occ summaries, never the index.
+      *   - Earlier batches' index partitions are read only inside the
+      *     probe's hour span: pairing matches EQUAL hours only, so
+      *     per-batch cost is O(batch hour span), never O(stream age).
+      *     `batch < id` keeps a replayed batch's own earlier write out.
+      *   - The hot/poison list counts those same span-bounded rows plus
+      *     the batch's own points per cell, so the over-cap guard
+      *     (output-affecting: it is the OOM bound) sees a poison cell
+      *     formed entirely within this batch, and salting sees a port
+      *     formed there. It is collected to the driver (it is bounded by
+      *     points/hotOccupancy, and a broadcast collects it anyway) and
+      *     handed to the join as a local relation: an empty list plans
+      *     the join's three hot-cell lookups away, a non-empty one
+      *     broadcasts without a job.
       *   - With `withOwn` the batch's own points join the index side
       *     too (new-new pairs), and the hits are always Some. Without,
       *     pairing is strictly new-vs-earlier, and a first batch (no
       *     index yet) gets None and runs no join.
-      *   - After `land`, the batch's occ and index partitions are
-      *     written. */
+      *   - After `land`, the batch's index partition is written. */
     def step(b: MicroBatch.Batch, pts: DataFrame, probe: DataFrame,
         withOwn: Boolean, carryProbeCols: Seq[String] = Nil)(
         land: (Option[DataFrame], Option[(Long, Long)]) => Unit): Unit = {
       val spark = pts.sparkSession
       val span = hourSpan(probe)
-      def earlier(dir: String, schema: StructType): Option[DataFrame] =
-        if (!b.exists(dir)) None
-        else Some(spark.read.schema(schema).parquet(dir)
+      val own = pts.select(PtCols: _*)
+      val earlier =
+        if (!b.exists(indexDir)) None
+        else Some(spark.read.schema(IndexSchema).parquet(indexDir)
           .filter(col("batch") < b.id && (span match {
             case Some((lo, hi)) => col("hour").between(lo, hi)
             case None           => lit(false)
-          })))
-      val occBatch = pts.groupBy(col("hour"), col("cy"), col("cx"))
-        .agg(count(lit(1)).as("n"))
-      val own = pts.select(PtCols: _*)
-      val earlierIdx = earlier(indexDir, IndexSchema).map(_.select(PtCols: _*))
+          })).select(PtCols: _*))
       val index =
-        if (withOwn) Some(earlierIdx.getOrElse(own.limit(0)).unionByName(own))
-        else earlierIdx
+        if (withOwn) Some(earlier.getOrElse(own.limit(0)).unionByName(own))
+        else earlier
       val hits = index.map { idx =>
-        val occ = earlier(occDir, OccSchema)
-          .fold(occBatch.limit(0))(
-            _.select(col("hour"), col("cy"), col("cx"), col("n")))
-          .unionByName(occBatch)
-          .groupBy(col("hour"), col("cy"), col("cx"))
-          .agg(sum(col("n")).as("occ"))
+        val hot = Geo.hotCellList(if (withOwn) idx else idx.unionByName(own),
+          hotOccupancy, maxCellOccupancy)
         Geo.bandedPairs(probe, idx, radiusM, hotOccupancy, saltBuckets,
-          Some(occ), maxCellOccupancy, carryProbeCols = carryProbeCols)
+          Some(spark.createDataFrame(hot.collect().toSeq.asJava, hot.schema)),
+          maxCellOccupancy, carryProbeCols = carryProbeCols)
       }
       land(hits, span)
-      b.write(occBatch, occDir)
       b.write(hourClustered(pts), indexDir)
     }
   }
@@ -374,7 +370,7 @@ object StreamingGeo {
     *     longest gap you want endpoint-paired;
     *   - alerts land under `alerts/batch=<id>` in the batch q283's
     *     exact output shape ([[Geo.rendezvousAlerts]]), then the index
-    *     step's occ/index partitions, then the new `last/` snapshot.
+    *     step's index partition, then the new `last/` snapshot.
     * Persisted state is read with explicit schemas, so no read runs a
     * footer-inference job.
     *
@@ -438,13 +434,12 @@ object StreamingGeo {
 
   /** Column layout of the persisted per-batch state, given on every read
     * so a micro-batch never runs a footer-inference job to learn it:
-    * the (hour, cell) position index, its occupancy summaries (both
-    * with their `batch` partition column) and the last-fix snapshot. */
+    * the (hour, cell) position index (with its `batch` partition
+    * column) and the last-fix snapshot. */
   private def longs(names: String*): StructType =
     StructType(names.map(StructField(_, LongType)))
   private val IndexSchema =
     longs("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx", "batch")
-  private val OccSchema = longs("hour", "cy", "cx", "n", "batch")
   private val LastSchema = longs("user_id", "t", "event_id", "lat_e6", "lon_e6")
 
   /** Ids of the `<dir>/batch=<id>` state snapshots, ascending. */
@@ -493,7 +488,7 @@ object StreamingGeo {
     MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
         trigger) { b =>
       // kept: the representative-point window otherwise replays for the
-      // span aggregate, the occ summary, the band-join probe and the
+      // span aggregate, the hot-cell count, the band-join probe and the
       // index write (~4x per batch)
       val pts = b.pins.keep(points(b.df))
       index.step(b, pts, pts, withOwn = false) { (hits, _) =>
@@ -562,8 +557,8 @@ object StreamingGeo {
     MicroBatch.run(geoSource(spark, landingDir), s"$outDir/_checkpoint",
         trigger) { b =>
       // kept: the representative-point window otherwise replays for the
-      // span aggregate, the index-union probe, the occ summary and the
-      // index write
+      // span aggregate, the hot-cell count, the index-union probe and
+      // the index write
       val pts = b.pins.keep(points(b.df))
       // new-new pairs are this stream's job too — unlike the alert
       // stream, the episode fold needs EVERY pair-hour
@@ -642,9 +637,9 @@ object StreamingGeo {
   /** Retention for the persisted position index ([[PositionIndex]]) —
     * the compaction the always-on monitors need so the table under
     * them stops growing without bound: drop every `index/batch=<id>`
-    * (and its `occ/batch=<id>` sibling) whose NEWEST hour has fallen
-    * more than `horizonHours` behind the stream's observed hour
-    * high-water.
+    * whose NEWEST hour has fallen more than `horizonHours` behind the
+    * stream's observed hour high-water (and the `occ/batch=<id>`
+    * summary an outDir of the earlier layout keeps beside it).
     *
     * Safety contract: the index step reads only inside the batch's
     * hour span, so a dropped partition can only be missed by a batch
@@ -654,8 +649,8 @@ object StreamingGeo {
     * [[startEpisodes]], at least `maxGapHours` so an episode that is
     * still extendable can always find its pairs); later-than-horizon
     * stragglers are the batch recompute's job, the same escape hatch
-    * as everywhere else in this family. Decisions read ONLY the
-    * cell-grid-sized occ summaries, never the index itself.
+    * as everywhere else in this family. Decisions read only the
+    * index's `hour` column (one parquet column, grouped by batch).
     *
     * The monitors prune their own superseded state snapshots
     * (`open/`, `last/`) as they go, and the closed/alerts OUTPUT logs
@@ -665,11 +660,11 @@ object StreamingGeo {
   def retainIndex(spark: SparkSession, outDir: String,
       horizonHours: Long): Seq[Long] = {
     require(horizonHours >= 1L, s"need horizonHours >= 1, got $horizonHours")
-    val occDir = s"$outDir/occ"
+    val indexDir = s"$outDir/index"
     val fs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(occDir))) return Seq.empty
-    val byBatch = spark.read.schema(OccSchema).parquet(occDir)
+    if (!fs.exists(new Path(indexDir))) return Seq.empty
+    val byBatch = spark.read.schema(IndexSchema).parquet(indexDir)
       .groupBy(col("batch"))
       .agg(max(col("hour")))
       .collect().map(r => r.getLong(0) -> r.getLong(1))
@@ -678,8 +673,8 @@ object StreamingGeo {
     val drop = byBatch.filter(_._2 < hwm - horizonHours).map(_._1)
       .sorted.toSeq
     drop.foreach { b =>
-      fs.delete(new Path(s"$outDir/index/batch=$b"), true)
-      fs.delete(new Path(s"$occDir/batch=$b"), true)
+      fs.delete(new Path(s"$indexDir/batch=$b"), true)
+      fs.delete(new Path(s"$outDir/occ/batch=$b"), true)
     }
     drop
   }

@@ -10,7 +10,7 @@ import graft.streaming.StreamingGeo
 import graft.streaming.StreamingGeo.GeoEv
 
 /** SCALE evidence for the always-on proximity monitor's per-batch
-  * cost contract: each micro-batch's index/occ reads are BOUNDED to
+  * cost contract: each micro-batch's index reads are BOUNDED to
   * the batch's own hour span, so per-batch wall stays FLAT as the
   * landed history grows (the r17 scale-killer: an unbounded read made
   * it O(total history) per batch). Lands `waves` one-hour waves, each

@@ -93,14 +93,15 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
     val batches = new java.io.File(s"$out/alerts").listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).sorted
     assert(batches.length == 2, batches.toSeq.toString)
-    // the incremental occupancy summaries landed per batch
-    val occ = new java.io.File(s"$out/occ").listFiles()
+    // one index partition per batch, and no occupancy table beside it
+    val idx = new java.io.File(s"$out/index").listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).sorted
-    assert(occ.length == 2, occ.toSeq.toString)
+    assert(idx.length == 2, idx.toSeq.toString)
+    assert(!new java.io.File(s"$out/occ").exists())
   }
 
   test("hot-cell salting engaged everywhere (hotOccupancy=0, lanes " +
-      "from the occ summaries) alerts EXACTLY the unsalted pairs") {
+      "from the index's cell counts) alerts EXACTLY the unsalted pairs") {
     import spark.implicits._
     def run(outDir: String, hot: Long): Set[(Long, Long, Long, Long)] = {
       val landing = java.nio.file.Files
@@ -413,7 +414,7 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
     val dropped = StreamingGeo.retainIndex(spark, out, 100L)
     assert(dropped == Seq(0L, 1L), dropped.toString)
     assert(!new java.io.File(s"$out/index/batch=0").exists())
-    assert(!new java.io.File(s"$out/occ/batch=1").exists())
+    assert(!new java.io.File(s"$out/index/batch=1").exists())
     assert(new java.io.File(s"$out/index/batch=2").exists())
     // the stream keeps pairing against the surviving index
     land("w4.parquet", w2u.map(u => GeoEv(u * 10 + 8, u,
@@ -448,8 +449,8 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(landing, name))
     }
-    // wave 1 (users 1-60 at hour 0, 601-700 at hour 1) seeds the occ
-    // store under the cap; wave 2 (users 1-60 and 101-500, hour 1) forms
+    // wave 1 (users 1-60 at hour 0, 601-700 at hour 1) seeds the
+    // index under the cap; wave 2 (users 1-60 and 101-500, hour 1) forms
     // its over-cap cells with NO prior occupancy in them — a lagged
     // summary would miss them. Users 1-60 reappear, so each closes a
     // dark gap (hour 0 -> hour 1) for the rendezvous monitor, and the
@@ -689,6 +690,21 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
     assert(compiles.last < 25, s"compiles per micro-batch: $compiles")
   }
 
+  test("startDarkRendezvous steady state: a drain runs at most 20 Spark " +
+      "jobs (the hot-cell list is collected once, and an empty one plans " +
+      "the band join's three hot-cell joins away)") {
+    val f = new RendezvousFeed("drj")
+    (0 until 2).foreach { w => f.wave(w); f.drain() }
+    val jobs = (2 until 5).map { w =>
+      f.wave(w)
+      graft.core.RunMetrics.measure(spark)(f.drain()).jobs.size
+    }
+    info(s"Spark jobs per drain: $jobs")
+    // job counts vary by one or two from run to run: bound the minimum
+    assert(jobs.min <= 20, s"Spark jobs per drain: $jobs")
+    assert(f.alerts() == f.expected())
+  }
+
   test("startDarkGaps: cumulative stream output == batch q280 EXACTLY " +
       "on the landed prefix — gaps straddling micro-batches alert at " +
       "the reappearance fix, quiet legs stay silent, re-drain adds " +
@@ -854,7 +870,7 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
       s"missing=${(batch -- got).take(5)} extra=${(got -- batch).take(5)}")
   }
 
-  test("one index step: IndexSchema/OccSchema are read only in " +
+  test("one index step: IndexSchema is read only in " +
       "PositionIndex and retainIndex, the hot/poison threshold and the " +
       "cell-completeness check are written once, and one place lists " +
       "state snapshots") {
@@ -880,13 +896,12 @@ class StreamingGeoSpec extends AnyFunSuite with TestSpark {
     val step = body("private final class PositionIndex(")
     val retain = body("def retainIndex(")
     val schemaUses = code.filter { case (_, c, _) =>
-      (c.contains("IndexSchema") || c.contains("OccSchema")) &&
-        !c.startsWith("private val") }
+      c.contains("IndexSchema") && !c.startsWith("private val") }
     assert(schemaUses.exists { case (f, _, i) => f == sg && step.contains(i) },
-      "PositionIndex reads no index/occ partition")
+      "PositionIndex reads no index partition")
     val outside = schemaUses.filterNot { case (f, _, i) =>
       f == sg && (step.contains(i) || retain.contains(i)) }
-    assert(outside.isEmpty, s"index/occ reads outside the index step: " +
+    assert(outside.isEmpty, s"index reads outside the index step: " +
       where(outside))
     def once(word: String): Unit = {
       val hits = code.filter(_._2.contains(word))
