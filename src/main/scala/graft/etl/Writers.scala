@@ -438,17 +438,28 @@ object Writers {
     * bucket ids from the file names and silently demote every later
     * bucketed join to a re-shuffle). The compacted copy is written as
     * [[replaceDir]]'s stage — reading the old table while writing a new
-    * one needs no snapshot — and the catalog entry is re-created over
-    * the swapped files via DDL, as EXTERNAL (a managed input becomes
-    * external at its same location). Returns the new file count.
+    * one needs no snapshot — repartitioned on the bucket hash, so it
+    * lands one file per bucket (per partition), and the catalog entry is
+    * re-created over the swapped files via DDL, as EXTERNAL (a managed
+    * input becomes external at its same location). Returns the new
+    * data-file count.
+    *
+    * A table partitioned by a micro-batch id (the
+    * [[graft.streaming.MicroBatch.Store]] layout) is folded as well:
+    * every partition older than the newest, n, is rewritten into
+    * `<col>=<n-1>` (`greatest(col, n-1)`), and `<col>=<n>` keeps its
+    * rows. A stream starts batch n only after n-1 committed, so n is
+    * the only partition a replay can still replace, and the fold never
+    * moves it under another id.
     *
     * Callers must quiesce writers to the table first — see
     * [[graft.streaming.StreamingCuration.compactState]]'s lock for the
     * streaming case. As a backstop against a writer that slipped past
-    * that contract, the table dir's file listing is re-verified
-    * immediately before the swap: if it changed since the snapshot
-    * read, the compaction ABORTS loudly (stage deleted, original
-    * untouched) instead of silently dropping the concurrent append.
+    * that contract, the table dir's file listing (partition dirs
+    * included) is re-verified immediately before the swap: if it
+    * changed since the snapshot read, the compaction ABORTS loudly
+    * (stage deleted, original untouched) instead of silently dropping
+    * the concurrent append.
     *
     * The catalog entry is dropped just before the swap. A crash from
     * there until the re-CREATE leaves the data durable (at `path` or,
@@ -458,19 +469,33 @@ object Writers {
   def compactBucketedTable(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, keyCol: String, buckets: Int,
       compression: String = DefaultCompression): Int = {
+    import org.apache.spark.sql.functions.{col, greatest, lit}
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmpTbl = s"${table}_compact_tmp"
+    val part = spark.catalog.listColumns(table).collect()
+      .filter(_.isPartition).map(_.name).headOption
+    val schema = spark.table(table).schema
     val schemaDdl = replaceDir(spark, path) { stage =>
-      spark.catalog.refreshTable(table)
-      val snap = spark.table(table)
       val listing0 = dataListing(fs, p)
-      // a bucketed scan yields one partition per bucket, so the write
-      // emits one file per bucket without an extra repartition
+      // a plain read of the files: over a bucketed scan the planner
+      // drops the bucket-hash repartition below as redundant, then
+      // drops the bucketed scan as unneeded, and every task writes
+      // every bucket
+      val snap = spark.read.schema(schema).parquet(path)
+      val newest = part.toSeq.flatMap(c => listing0.map(_._1)
+        .collect { case f if f.startsWith(s"$c=") =>
+          f.drop(c.length + 1).takeWhile(_ != '/').toLong })
+        .maxOption
+      val folded = (part, newest) match {
+        case (Some(c), Some(n)) => snap.withColumn(c, greatest(col(c), lit(n - 1)))
+        case _ => snap
+      }
       spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
-      snap.write.mode("overwrite")
+      folded.repartition(buckets, col(keyCol)).write.mode("overwrite")
         .option("compression", compression)
         .option("path", stage)
+        .partitionBy(part.toSeq: _*)
         .bucketBy(buckets, keyCol).sortBy(keyCol)
         .format("parquet")
         .saveAsTable(tmpTbl)
@@ -486,40 +511,44 @@ object Writers {
       // a MANAGED original's files go with this drop — its rows are
       // already durable in the stage
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      snap.schema.toDDL
+      schema.toDDL
     }
     // bucket ids live in the file names, so DDL keeps the layout live
     registerBucketedTable(spark, table, path, keyCol, buckets,
-      Some(schemaDdl))
-    fs.listStatus(p)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+      Some(schemaDdl), part)
+    dataListing(fs, p).count(_._1.endsWith(".parquet"))
   }
 
-  /** Sorted (name, length) of the data files directly under `p` — the
-    * fingerprint [[compactBucketedTable]] compares to detect a writer
-    * that raced the compaction.
+  /** Sorted (path relative to `p`, length) of the data files under `p`,
+    * partition dirs included — the fingerprint [[compactBucketedTable]]
+    * compares to detect a writer that raced the compaction.
     */
   private def dataListing(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[(String, Long)] =
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(s => (s.getPath.getName, s.getLen))
-      .sortBy(_._1)
+      p: org.apache.hadoop.fs.Path): Seq[(String, Long)] = {
+    def walk(d: org.apache.hadoop.fs.Path, rel: String): Seq[(String, Long)] =
+      fs.listStatus(d).toSeq
+        .filterNot { s =>
+          val n = s.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        .flatMap { s =>
+          val r = rel + s.getPath.getName
+          if (s.isDirectory) walk(s.getPath, s"$r/") else Seq((r, s.getLen))
+        }
+    if (!fs.exists(p)) Seq.empty else walk(p, "").sortBy(_._1)
+  }
 
   /** (Re-)create the catalog entry for a bucketed EXTERNAL parquet table
     * over files already on disk. This is BOTH the maintenance path for a
     * fresh session whose in-memory catalog forgot the table, AND the
     * crash-recovery path for [[compactBucketedTable]]: the dir is put
     * back with [[recoverDir]] first, so a crash mid-swap needs no manual
-    * rename. Schema comes from the files unless supplied. Equivalent
-    * manual DDL:
+    * rename. Schema comes from the files unless supplied (a partition
+    * column is part of it). Equivalent manual DDL:
     * {{{
-    * CREATE TABLE `t` (<schema>) USING PARQUET
+    * CREATE TABLE `t` (<schema>) USING PARQUET [PARTITIONED BY (part)]
     *   CLUSTERED BY (key) SORTED BY (key) INTO n BUCKETS LOCATION 'path'
+    * ALTER TABLE `t` RECOVER PARTITIONS  -- partitioned only
     * }}}
     * `keyCol`/`buckets` MUST match the layout the files were written
     * with (bucket ids live in the file names; a wrong declared count
@@ -527,13 +556,17 @@ object Writers {
     */
   def registerBucketedTable(spark: org.apache.spark.sql.SparkSession,
       table: String, path: String, keyCol: String, buckets: Int,
-      schemaDdl: Option[String] = None): Unit = {
+      schemaDdl: Option[String] = None,
+      partitionCol: Option[String] = None): Unit = {
     recoverDir(spark, path)
     val ddl = schemaDdl.getOrElse(spark.read.parquet(path).schema.toDDL)
+    val partitioned = partitionCol.fold("")(c => s"PARTITIONED BY ($c)")
     spark.sql(
-      s"""CREATE TABLE `$table` ($ddl) USING PARQUET
+      s"""CREATE TABLE `$table` ($ddl) USING PARQUET $partitioned
           CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $buckets BUCKETS
           LOCATION '$path'""")
+    if (partitionCol.isDefined)
+      spark.sql(s"ALTER TABLE `$table` RECOVER PARTITIONS")
   }
 
   /** Bucketed managed table: rows are hash-partitioned into `buckets`

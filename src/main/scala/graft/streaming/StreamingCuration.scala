@@ -11,7 +11,7 @@ import graft.llm.{Curation, TextOps}
 
 /** Always-on corpus curation: the streaming form of q66 test-set
   * decontamination and q67 mixture sampling (the StreamingDedup shape —
-  * per-batch work proportional to the batch, history only read/appended).
+  * per-batch work proportional to the batch, history only read/extended).
   *
   * Per micro-batch of documents:
   *  - every doc is hash-split (q59 rule) and content-fingerprinted ONCE;
@@ -21,8 +21,8 @@ import graft.llm.{Curation, TextOps}
   *    test-doc table, so a training document that arrives AFTER the test
   *    document it contaminates is still caught (arrival order cannot
   *    hide leakage);
-  *  - train fingerprints / test docs append to their state tables;
-  *  - per-language mixture counts (q67's salted-hash rule) append to an
+  *  - train fingerprints / test docs land in their state tables;
+  *  - per-language mixture counts (q67's salted-hash rule) land in an
   *    additive stats table.
   *
   * [[contaminationCounts]] / [[mixtureTotals]] fold the accumulated state
@@ -30,24 +30,31 @@ import graft.llm.{Curation, TextOps}
   * ingested so far (StreamingCurationSpec pins equality over 3 batches).
   *
   * State layout (the 100 TB shape): every growing state table is a
-  * BUCKETED catalog table on its probe key — train_fp / test_docs by fp,
-  * train_grams / test_grams by k ([[StateBuckets]] buckets, data files
-  * under `stateDir` so the path-based readers keep working). Each
+  * bucketed [[MicroBatch.Store]] on its probe key — train_fp / test_docs
+  * by fp, train_grams / test_grams by k, train_vecs / test_vecs by cell
+  * ([[StateBuckets]] buckets, one `batch=<id>` partition per micro-batch
+  * under `stateDir/<table>`, registered in the catalog on open). Each
   * per-batch probe therefore joins a batch-sized side against a stored
   * side that is ALREADY partitioned on the join key: only the batch
   * shuffles, the history never re-exchanges (StreamingCurationSpec pins
   * the single-exchange plan). Probes against history and against the
   * current batch run separately — a union of stored + batch would erase
   * the stored side's bucketing — which is sound because every downstream
-  * fold distinct-counts its hits. [[compactState]] folds the small files
-  * the per-batch appends accumulate, preserving the bucket layout.
+  * fold distinct-counts its hits. Every state and output write replaces
+  * its batch's own partition, so a batch replayed after a lost commit
+  * lands exactly what its first run did (MicroBatchSpec's replay matrix
+  * pins it; the additive mixture sum would otherwise count it twice).
+  * [[compactState]] folds the small files the per-batch writes
+  * accumulate, preserving the bucket layout. A `stateDir` in the flat
+  * layout of older releases (data files directly under a table dir)
+  * fails on open instead of reading as empty history.
   */
 object StreamingCuration {
 
   /** Default buckets per state table — executors × small factor at
     * cluster scale; 32 here to match the session's shuffle partitions so
     * the probe side lands 1:1 on the stored layout. Override with
-    * [[StateBucketsConf]] BEFORE the first append: the count is baked
+    * [[StateBucketsConf]] BEFORE the first batch: the count is baked
     * into the dir's file layout, so it is pinned in a `_graft_buckets`
     * marker at first open and a reopen under a different value fails
     * loudly (mixed bucket layouts in one directory assign rows to wrong
@@ -59,138 +66,76 @@ object StreamingCuration {
   private def fsOf(spark: SparkSession, path: Path) =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Resolve the bucket count for `stateDir`: the configured value on
-    * first open (pinned into the `_graft_buckets` marker), the pinned
-    * value thereafter — raising if an EXPLICITLY set session conf
-    * disagrees rather than letting a catalog-less reopen append a second
-    * layout. With no explicit conf the marker alone governs, so
-    * maintenance sessions (the `compact-state` CLI) need no conf
-    * plumbing to reopen a non-default dir.
+  /** The bucket count for `stateDir` ([[MicroBatch.pinnedBuckets]]):
+    * the configured value on first open, the pinned value thereafter —
+    * raising if an EXPLICITLY set session conf disagrees. With no
+    * explicit conf the marker alone governs, so maintenance sessions
+    * (the `compact-state` CLI) need no conf plumbing to reopen a
+    * non-default dir.
     */
-  private def pinnedBuckets(spark: SparkSession, stateDir: String): Int = {
-    val explicit = spark.conf.getOption(StateBucketsConf).map(_.trim.toInt)
-    val marker = new Path(stateDir, "_graft_buckets")
-    val fs = fsOf(spark, marker)
-    // the claim winner writes content right after createNewFile, so a
-    // concurrent reader can glimpse the empty claimed file — retry
-    // briefly before declaring the marker corrupt
-    def readMarker(): Int = {
-      val deadline = System.currentTimeMillis() + 10000L
-      var txt = ""
-      var done = false
-      while (!done) {
-        val in = fs.open(marker)
-        txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        done = txt.nonEmpty || System.currentTimeMillis() > deadline
-        if (!done) Thread.sleep(50L)
-      }
-      require(txt.nonEmpty,
-        s"bucket marker $marker is empty — its creator likely died " +
-          "mid-claim; delete the marker and reopen the state dir")
-      txt.toInt
-    }
-    def validated(pinned: Int): Int = {
-      explicit.foreach(c => require(c == pinned,
-        s"state dir $stateDir was written with $pinned buckets but " +
-          s"$StateBucketsConf=$c — reopening under a different bucket " +
-          "count would mix file layouts and corrupt bucketed probes"))
-      pinned
-    }
-    if (fs.exists(marker)) validated(readMarker())
-    else {
-      val n = explicit.getOrElse(StateBuckets)
-      fs.mkdirs(new Path(stateDir))
-      // atomic claim: two sessions first-opening the same dir with
-      // different configured counts must NOT both write (the overwrite
-      // form let both pass the no-marker branch and append mixed bucket
-      // layouts); only the createNewFile winner writes, the loser reads
-      // back and validates like any reopen
-      if (fs.createNewFile(marker)) {
-        val out = fs.create(marker, true)
-        try out.write(n.toString.getBytes("UTF-8")) finally out.close()
-        n
-      } else validated(readMarker())
-    }
+  private def pinnedBuckets(spark: SparkSession, stateDir: String): Int =
+    MicroBatch.pinnedBuckets(spark, stateDir,
+      spark.conf.getOption(StateBucketsConf).map(_.trim.toInt),
+      StateBuckets, StateBucketsConf)
+
+  /** The state tables under a `stateDir`: name -> (columns, probe key). */
+  private val StateTables = Map(
+    "train_fp" -> ("fp STRING", "fp"),
+    "test_docs" -> ("doc_id BIGINT, fp STRING", "fp"),
+    "train_grams" -> ("k STRING", "k"),
+    "test_grams" -> ("doc_id BIGINT, k STRING", "k"),
+    "train_vecs" -> ("cell BIGINT, tid BIGINT, tv ARRAY<DOUBLE>", "cell"),
+    "test_vecs" -> ("cell BIGINT, vec_id BIGINT, v ARRAY<DOUBLE>", "cell"))
+
+  /** Batch `b`'s view of the state table `name` under `stateDir`. */
+  private def state(b: MicroBatch.Batch, stateDir: String, name: String,
+      buckets: Int): MicroBatch.Store = {
+    val (cols, key) = StateTables(name)
+    b.store(s"$stateDir/$name", cols, key, buckets)
   }
 
-  /** Deterministic catalog identifier for a state table rooted at `dir`
-    * (the path itself can't be an identifier; the hash keeps two state
-    * roots in one session distinct). Public so downstream operators and
+  /** Catalog identifier of the state table `key` under `dir` (the
+    * [[MicroBatch.Store]]'s table). Public so downstream operators and
     * the spec can reach the bucket-aware catalog entry directly.
     */
-  def stateTable(dir: String, key: String): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"graft_stream_${key}_$h"
-  }
+  def stateTable(dir: String, key: String): String =
+    MicroBatch.tableName(s"$dir/$key")
 
-  /** Append a batch's rows into the bucketed external state table at
-    * `path` (created on first append; later appends must match the
-    * catalog's bucket spec, so the layout can't silently degrade — the
-    * PairStore.appendBucketed contract).
-    *
-    * Concurrency contract with [[compactState]] (the lease):
+  /** Run a batch's state writes under the compaction lease:
     *  - refuses to START while the [[CompactLock]] is held;
-    *  - touches the [[AppendHeartbeat]] before AND after the write, so a
-    *    compaction that acquires the lock mid-append keeps waiting until
-    *    the appends have been quiet for a full settle interval;
-    *  - if the lock appeared DURING the write, fails the batch loudly —
+    *  - touches the [[AppendHeartbeat]] before AND after the writes, so
+    *    a compaction that acquires the lock mid-write keeps waiting
+    *    until the writes have been quiet for a full settle interval;
+    *  - if the lock appeared DURING the writes, fails the batch loudly —
     *    the files may sit on either side of the compaction swap, so the
     *    checkpoint must replay the batch after the compaction (replays
-    *    are safe: every state fold distinct-counts its keys/doc ids).
-    * An append overlapping a compaction therefore either fully lands
-    * (the compaction waited it out) or fully fails — never a silent drop.
+    *    replace the batch's own partitions).
+    * A write overlapping a compaction therefore either fully lands (the
+    * compaction waited it out) or fully fails — never a silent drop.
     */
-  private def appendState(df: DataFrame, table: String, path: String,
-      keyCol: String, buckets: Int): Unit = {
-    val parent = new Path(path).getParent
-    val fs = fsOf(df.sparkSession, parent)
-    val lock = new Path(parent, CompactLock)
+  private def leased(spark: SparkSession, stateDir: String)(
+      writes: => Unit): Unit = {
+    val dir = new Path(stateDir)
+    val fs = fsOf(spark, dir)
+    val lock = new Path(dir, CompactLock)
     require(!fs.exists(lock),
-      s"compactState is running on $parent — appends during compaction " +
+      s"compactState is running on $dir — appends during compaction " +
         "would be dropped by the directory swap; stop the stream first " +
         s"(if no compaction is actually running — e.g. its driver died " +
         s"mid-run — delete the stale $lock file)")
-    touch(fs, new Path(parent, AppendHeartbeat))
-    df.write.mode("append")
-      .option("compression", Writers.DefaultCompression)
-      .option("path", path)
-      .bucketBy(buckets, keyCol).sortBy(keyCol)
-      .format("parquet")
-      .saveAsTable(table)
-    touch(fs, new Path(parent, AppendHeartbeat))
+    touch(fs, new Path(dir, AppendHeartbeat))
+    writes
+    touch(fs, new Path(dir, AppendHeartbeat))
     if (fs.exists(lock))
       throw new IllegalStateException(
-        s"append to $table raced a compaction on $parent (the lock " +
-          "appeared mid-append) — failing the batch loudly so the " +
-          "checkpoint replays it after the compaction finishes")
+        s"state write raced a compaction on $dir (the lock appeared " +
+          "mid-write) — failing the batch loudly so the checkpoint " +
+          "replays it after the compaction finishes")
   }
 
   /** Create-or-overwrite an empty marker file; its mtime is the signal. */
   private def touch(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit =
     fs.create(p, true).close()
-
-  /** The stored state, bucket-aware when the catalog entry is live; a
-    * plain parquet read of the same files when it isn't (fresh session
-    * with an in-memory catalog — correct, just re-shuffles until the
-    * next append re-registers the table). None before the first append.
-    *
-    * refreshTable first: state appends run through the STREAM's cloned
-    * session, which invalidates the clone's relation cache but not this
-    * session's — without the refresh a later batch probes a stale file
-    * list and silently misses the rows the previous batch appended
-    * (caught by StreamingCurationSpec's late-train scenario).
-    */
-  private def readState(spark: SparkSession, table: String,
-      path: String): Option[DataFrame] =
-    if (spark.catalog.tableExists(table)) {
-      spark.catalog.refreshTable(table)
-      Some(spark.table(table))
-    } else {
-      val p = new Path(path)
-      if (fsOf(spark, p).exists(p)) Some(spark.read.parquet(path)) else None
-    }
 
   def start(
       spark: SparkSession,
@@ -201,15 +146,11 @@ object StreamingCuration {
       rates: Map[String, Int],
       defaultRate: Int,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val trainFpDir = s"$stateDir/train_fp"
-    val testDocsDir = s"$stateDir/test_docs"
-    val trainFpTbl = stateTable(stateDir, "train_fp")
-    val testDocsTbl = stateTable(stateDir, "test_docs")
     val buckets = pinnedBuckets(spark, stateDir)
     MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
         s"$outDir/_checkpoint", trigger) { b =>
       // split + fingerprint computed ONCE per batch, reused across the
-      // probe, retro-probe, and both state appends
+      // probe, retro-probe, and both state writes
       val t = b.pins.pin(b.df.select(
           col("doc_id"), Curation.splitCol.as("split"),
           TextOps.fingerprint(col("text")).as("fp")))
@@ -217,36 +158,26 @@ object StreamingCuration {
         .select(col("fp")).distinct()
       val newTest = t.filter(col("split") === "test")
         .select(col("doc_id"), col("fp"))
+      val trainFp = state(b, stateDir, "train_fp", buckets)
+      val testDocs = state(b, stateDir, "test_docs", buckets)
       // new test docs vs train history and vs this batch's own train
       // fps — separate probes keep the stored side's bucketing live
       // (duplicate hits are fine: the fold distinct-counts doc_id)
-      val contStored = readState(spark, trainFpTbl, trainFpDir)
+      val contStored = trainFp.earlier
         .map(st => newTest.join(st, Seq("fp"), "left_semi"))
       val contBatch = newTest.join(newTrain, Seq("fp"), "left_semi")
       // new train fingerprints vs already-stored test docs (late train)
-      val contLate = readState(spark, testDocsTbl, testDocsDir)
+      val contLate = testDocs.earlier
         .map(_.join(newTrain, Seq("fp"), "left_semi"))
-      // state appends FIRST, then the distinct-folded contaminated
-      // output, then the additive mixture counts LAST: if anything up
-      // to the mixture write fails (including an append racing a
-      // compaction), the checkpoint replay re-appends rows that every
-      // downstream fold distinct-counts away — and the one sink whose
-      // fold is NOT idempotent (mixture sums) runs only once, on the
-      // attempt that reaches it. Probing after the append is sound:
-      // the extra self-hits it can surface are exactly contBatch's,
-      // and the fold distinct-counts doc_id.
-      appendState(newTrain, trainFpTbl, trainFpDir, "fp", buckets)
-      appendState(newTest, testDocsTbl, testDocsDir, "fp", buckets)
-      (Seq(contBatch) ++ contStored ++ contLate)
+      leased(spark, stateDir) {
+        trainFp.write(newTrain)
+        testDocs.write(newTest)
+      }
+      b.write((Seq(contBatch) ++ contStored ++ contLate)
         .reduce(_ unionByName _)
-        .select(col("doc_id"))
-        .write.mode("append")
-        .option("compression", Writers.DefaultCompression)
-        .parquet(s"$outDir/contaminated")
-      Curation.mixtureCounts(b.df, rates, defaultRate)
-        .write.mode("append")
-        .option("compression", Writers.DefaultCompression)
-        .parquet(s"$outDir/mixture")
+        .select(col("doc_id")), s"$outDir/contaminated")
+      b.write(Curation.mixtureCounts(b.df, rates, defaultRate),
+        s"$outDir/mixture")
     }
   }
 
@@ -257,7 +188,7 @@ object StreamingCuration {
     * test-doc grams probe the persisted train-gram index, the batch's
     * train grams retro-probe the persisted test-gram table (late-arriving
     * train contamination is still caught), and both state tables grow by
-    * append only — history is never re-tokenized.
+    * one partition per batch — history is never re-tokenized.
     *
     * Hits are stored as (doc_id, k) PAIRS, so folding with distinct
     * counts ([[ngramContaminationTotals]]) is idempotent across batches:
@@ -277,10 +208,6 @@ object StreamingCuration {
       outDir: String,
       n: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val trainGramDir = s"$stateDir/train_grams"
-    val testGramDir = s"$stateDir/test_grams"
-    val trainGramTbl = stateTable(stateDir, "train_grams")
-    val testGramTbl = stateTable(stateDir, "test_grams")
     val buckets = pinnedBuckets(spark, stateDir)
     MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
         s"$outDir/_checkpoint", trigger) { b =>
@@ -289,25 +216,22 @@ object StreamingCuration {
         .select(col("k")).distinct()
       val newTest = grams.filter(col("split") === "test")
         .select(col("doc_id"), col("k"))
+      val trainGrams = state(b, stateDir, "train_grams", buckets)
+      val testGrams = state(b, stateDir, "test_grams", buckets)
       // forward probes: vs stored train grams (bucketed side stays
       // exchange-free) and vs this batch's own train grams
-      val hitsStored = readState(spark, trainGramTbl, trainGramDir)
+      val hitsStored = trainGrams.earlier
         .map(st => newTest.join(st, Seq("k"), "left_semi"))
       val hitsBatch = newTest.join(newTrain, Seq("k"), "left_semi")
       // retro-probe: new train grams vs already-stored test grams
-      val hitsLate = readState(spark, testGramTbl, testGramDir)
+      val hitsLate = testGrams.earlier
         .map(_.join(newTrain, Seq("k"), "left_semi"))
-      // appends before the hits write (see start(): replays after a
-      // loud append-race failure re-append rows the distinct folds
-      // ignore; self-hits surfaced by probing post-append are exactly
-      // hitsBatch's pairs)
-      appendState(newTrain, trainGramTbl, trainGramDir, "k", buckets)
-      appendState(newTest, testGramTbl, testGramDir, "k", buckets)
-      (Seq(hitsBatch) ++ hitsStored ++ hitsLate)
-        .reduce(_ unionByName _)
-        .write.mode("append")
-        .option("compression", Writers.DefaultCompression)
-        .parquet(s"$outDir/gram_hits")
+      leased(spark, stateDir) {
+        trainGrams.write(newTrain)
+        testGrams.write(newTest)
+      }
+      b.write((Seq(hitsBatch) ++ hitsStored ++ hitsLate)
+        .reduce(_ unionByName _), s"$outDir/gram_hits")
     }
   }
 
@@ -322,8 +246,8 @@ object StreamingCuration {
     * vectors probe the persisted train-vector state within their cell,
     * the batch's train vectors retro-probe the persisted test vectors
     * (a near-duplicate of an eval item arriving AFTER it is still
-    * caught), and both state tables grow by append only — history is
-    * never re-embedded or re-assigned.
+    * caught), and both state tables grow by one partition per batch —
+    * history is never re-embedded or re-assigned.
     *
     * Hits land as (vec_id, tid, sim) PAIRS so the
     * [[semanticContamination]] fold is idempotent across replays
@@ -342,10 +266,6 @@ object StreamingCuration {
       outDir: String,
       minCos: Double = 0.35,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val trainDir = s"$stateDir/train_vecs"
-    val testDir = s"$stateDir/test_vecs"
-    val trainTbl = stateTable(stateDir, "train_vecs")
-    val testTbl = stateTable(stateDir, "test_vecs")
     val buckets = pinnedBuckets(spark, stateDir)
     val cb = spark.read.parquet(codebookDir).select(col("cell"), col("cv"))
     MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
@@ -368,20 +288,17 @@ object StreamingCuration {
         test.join(train, Seq("cell"))
           .filter(sim >= minCos)
           .select(col("vec_id"), col("tid"), sim.as("sim"))
-      val hitsStored = readState(spark, trainTbl, trainDir)
-        .map(st => hits(newTest, st))
+      val trainVecs = state(b, stateDir, "train_vecs", buckets)
+      val testVecs = state(b, stateDir, "test_vecs", buckets)
+      val hitsStored = trainVecs.earlier.map(st => hits(newTest, st))
       val hitsBatch = hits(newTest, newTrain)
-      val hitsLate = readState(spark, testTbl, testDir)
-        .map(st => hits(st, newTrain))
-      // appends first (see start(): a replay after an append-race
-      // failure re-appends rows the distinct fold ignores)
-      appendState(newTrain, trainTbl, trainDir, "cell", buckets)
-      appendState(newTest, testTbl, testDir, "cell", buckets)
-      (Seq(hitsBatch) ++ hitsStored ++ hitsLate)
-        .reduce(_ unionByName _)
-        .write.mode("append")
-        .option("compression", Writers.DefaultCompression)
-        .parquet(s"$outDir/sem_hits")
+      val hitsLate = testVecs.earlier.map(st => hits(st, newTrain))
+      leased(spark, stateDir) {
+        trainVecs.write(newTrain)
+        testVecs.write(newTest)
+      }
+      b.write((Seq(hitsBatch) ++ hitsStored ++ hitsLate)
+        .reduce(_ unionByName _), s"$outDir/sem_hits")
     }
   }
 
@@ -401,7 +318,7 @@ object StreamingCuration {
       .orderBy(col("vec_id"))
 
   /** Name of the per-state-dir compaction lock file — present while
-    * [[compactState]] runs; [[appendState]] refuses to append under it.
+    * [[compactState]] runs; [[leased]] refuses to write state under it.
     * Contains its owner + claim timestamp for stale-lock forensics. If
     * the owning driver died mid-compaction the lock stays behind and
     * trips every append and compaction: it is then safe to DELETE the
@@ -410,41 +327,47 @@ object StreamingCuration {
     */
   val CompactLock = "_graft_compacting"
 
-  /** Mtime-bearing marker [[appendState]] touches around every state
-    * write; [[compactState]]'s lease wait keys off its age.
+  /** Mtime-bearing marker [[leased]] touches around every batch's state
+    * writes; [[compactState]]'s lease wait keys off its age.
     */
   val AppendHeartbeat = "_graft_last_append"
 
-  /** Fold the small files the per-batch appends accumulate in every
+  /** Fold the small files the per-batch writes accumulate in every
     * state table under `stateDir`, PRESERVING the bucket layout (a plain
     * directory rewrite would strip the bucket ids from the file names
-    * and silently demote every later probe to a re-shuffle). Returns
-    * per-table file counts after compaction.
+    * and silently demote every later probe to a re-shuffle). Every
+    * partition older than a table's newest, n, folds into
+    * `batch=<n-1>`; `batch=<n>` keeps its rows, so the one batch a
+    * replay can still rewrite replaces only its own partition
+    * ([[Writers.compactBucketedTable]]). A table the catalog lacks (a
+    * maintenance session such as the `compact-state` CLI) is opened
+    * the way the stream opens it ([[MicroBatch.openTable]]) under the
+    * dir's pinned bucket count. Returns per-table file counts after
+    * compaction.
     *
     * Crash-safe: the compacted copy is written to a SIBLING path first —
     * reading the old table while writing a new one needs no snapshot, so
     * the original files stay the durable source of truth until the new
     * copy is complete — then swapped in with [[Writers.replaceDir]]. At
     * every instant a complete copy of the state exists ON DISK, and a
-    * crash mid-swap is put back mechanically by the next compaction (it
-    * runs [[Writers.recoverDir]] before re-registering a table the
-    * catalog lacks); an executor loss mid-write loses only the stage.
-    * The earlier
-    * in-place form overwrote the only durable copy from a
-    * localCheckpoint snapshot, whose executor-memory blocks cannot be
-    * recomputed after the truncate.
+    * crash mid-swap is put back mechanically by the next compaction or
+    * stream open (both run [[Writers.recoverDir]] first); an executor
+    * loss mid-write loses only the stage. The earlier in-place form
+    * overwrote the only durable copy from a localCheckpoint snapshot,
+    * whose executor-memory blocks cannot be recomputed after the
+    * truncate.
     *
     * Concurrency with a RUNNING stream on the same stateDir is a LEASE,
-    * not just a tripwire (the r8 form could still drop an append that
+    * not just a tripwire (the r8 form could still drop a write that
     * was in flight when the lock appeared):
-    *  - the [[CompactLock]] refuses concurrent appends and compactions;
+    *  - the [[CompactLock]] refuses concurrent writes and compactions;
     *  - after acquiring the lock, the compaction WAITS until the newest
-    *    [[AppendHeartbeat]] is at least `settleMillis` old — an append
-    *    that slipped past the lock check heartbeats before and after its
-    *    write, so the swap cannot start while one is plausibly in
-    *    flight (set `settleMillis` >= the stream's trigger interval);
-    *  - an append that completes under the lock fails ITS batch loudly
-    *    (see [[appendState]]) — replayed by the checkpoint after the
+    *    [[AppendHeartbeat]] is at least `settleMillis` old — a write
+    *    that slipped past the lock check heartbeats before and after
+    *    it, so the swap cannot start while one is plausibly in flight
+    *    (set `settleMillis` >= the stream's trigger interval);
+    *  - a write that completes under the lock fails ITS batch loudly
+    *    (see [[leased]]) — replayed by the checkpoint after the
     *    compaction, idempotently;
     *  - as a final backstop, [[Writers.compactBucketedTable]] re-checks
     *    the dir listing right before its swap and aborts if it changed.
@@ -501,24 +424,13 @@ object StreamingCuration {
           Thread.sleep(math.min(250L, math.max(50L, settleMillis / 4)))
         }
       }
-      val tables = Seq(
-        ("train_fp", "fp"), ("test_docs", "fp"),
-        ("train_grams", "k"), ("test_grams", "k"),
-        ("train_vecs", "cell"), ("test_vecs", "cell"))
-      tables.flatMap { case (name, keyCol) =>
-        val tbl = stateTable(stateDir, name)
+      StateTables.flatMap { case (name, (cols, key)) =>
         val path = s"$stateDir/$name"
-        // a maintenance session (the compact-state CLI) starts with an
-        // empty in-memory catalog: re-register the bucketed entry from
-        // the files (put back first if a crashed swap left them aside) +
-        // the pinned bucket count before compacting
-        if (!spark.catalog.tableExists(tbl) &&
-            Writers.recoverDir(spark, path) != "missing")
-          Writers.registerBucketedTable(spark, tbl, path, keyCol, buckets)
-        if (!spark.catalog.tableExists(tbl)) None
-        else Some(name -> Writers.compactBucketedTable(
-          spark, tbl, path, keyCol, buckets))
-      }.toMap
+        if (Writers.recoverDir(spark, path) == "missing") None
+        else Some(name -> Writers.compactBucketedTable(spark,
+          MicroBatch.openTable(spark, path, cols, key, buckets), path, key,
+          buckets))
+      }
     } finally fs.delete(lock, false)
   }
 
@@ -550,8 +462,6 @@ object StreamingCuration {
   def contaminationCounts(spark: SparkSession, stateDir: String,
       outDir: String): DataFrame = {
     val fs = fsOf(spark, new Path(stateDir))
-    // distinct, not count(1): a batch replayed after an append-race
-    // failure re-appends its test docs, and n_test must not inflate
     val nTest = spark.read.parquet(s"$stateDir/test_docs")
       .agg(countDistinct(col("doc_id")).as("n_test"))
     val contDir = s"$outDir/contaminated"

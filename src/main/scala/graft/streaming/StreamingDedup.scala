@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.etl.Writers
 import graft.llm.Dedup
 
 /** Always-on near-dup deduplication: the streaming form of
@@ -20,141 +18,34 @@ import graft.llm.Dedup
   * per-batch work is proportional to the batch, the historical index
   * is only ever read and extended.
   *
-  * At 100 TB the index parquet is partitioned/bucketed by band_hash so
-  * the probe join co-locates — `buckets > 0` lands EXACTLY that layout
-  * (the catalog-bucketed index form; stored side reads exchange-free);
-  * plain parquet stays the default and the join shape is identical.
+  * Index layout: every monitor here keeps its index as a
+  * [[MicroBatch.Store]] under `indexDir` (one `batch=<id>` partition per
+  * micro-batch, probes read only `batch < id`, a replayed batch replaces
+  * its own partition). `buckets > 0` selects the catalog table BUCKETED
+  * BY THE PROBE JOIN KEY ([[graft.llm.PairStore]]'s d1-bucket convention
+  * applied to the always-on probes, VERDICT r18 #4), so the per-batch
+  * probe join reads the corpus index EXCHANGE-FREE and only the
+  * (batch-sized) new side shuffles. Without it the index re-shuffles at
+  * every micro-batch: the one per-batch cost that grows with the CORPUS
+  * instead of the batch (measured in StreamingDedupRehearsal / SCALE.md
+  * r19). Plain parquet stays the default (buckets = 0): bucket specs
+  * live in the session catalog (the PairStore caveat), and the count is
+  * pinned per `indexDir`, so a reopen under a different `buckets`
+  * raises. Pick buckets == spark.sql.shuffle.partitions (32 here — the
+  * PairStore.NumBuckets convention; StreamingDedupSpec's bucketed gram
+  * index test pins the exchange-free stored side on the span monitor's
+  * real probe).
+  *
   * Intra-batch duplicates are also reported
   * (minhashCandidates within the batch), so the dedup decision is
   * complete: a doc is new iff it has no candidate in EITHER output.
   */
 object StreamingDedup {
 
-  /** Catalog-bucketed stream-index layout — [[graft.llm.PairStore]]'s
-    * d1-bucket convention applied to the always-on probes (VERDICT
-    * r18 #4): the persisted index lands as a catalog parquet table
-    * BUCKETED BY THE PROBE JOIN KEY and partitioned by micro-batch
-    * id, so the planner sees the stored side pre-partitioned on the
-    * key — the per-batch probe join reads the corpus index
-    * EXCHANGE-FREE and only the (batch-sized) new side shuffles.
-    * Without it the index re-shuffles at every micro-batch: the one
-    * per-batch cost that grows with the CORPUS instead of the batch
-    * (measured in StreamingDedupRehearsal / SCALE.md r19).
-    * Plain-directory layout stays the default (buckets = 0): bucket
-    * specs live in the session catalog (the PairStore caveat — a
-    * warehouse deployment makes them durable across sessions), and
-    * [[StoredIndex]] re-registers a prior session's partitions on
-    * first touch. Writes keep the replay-idempotence contract: one
-    * `batch=<id>` partition per micro-batch, a replayed batch
-    * REPLACES its own partition, probes read only `batch < bid`.
-    *
-    * BUCKET COUNT RULE: pick buckets == spark.sql.shuffle.partitions
-    * (32 here — the PairStore.NumBuckets convention). With FEWER
-    * buckets than the session's partitions the planner anchors the
-    * join's co-partitioning at the larger count and re-shuffles the
-    * stored side anyway (measured, SCALE.md r19: 8 buckets under a
-    * 32-partition session → `Exchange hashpartitioning(g, 32)` ABOVE
-    * the bucketed scan; 32 buckets → no stored-side exchange, which
-    * StreamingDedupSpec's bucketed gram index test pins on the span
-    * monitor's real left-semi probe). */
-  private def idxTableName(dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    s"graft_sidx_${md.take(12)}"
-  }
-
-  /** Run `body` with bucketed scans FORCED on (scoped, restored
-    * after): Spark's DisableUnnecessaryBucketedScan heuristic
-    * silently falls back to a plain scan — "Bucketed: false (disabled
-    * by query planner)" — when it judges the extra parallelism of a
-    * full shuffle worth more than the avoided exchange (e.g.
-    * numBuckets < shuffle partitions), which re-introduces EXACTLY
-    * the corpus-index shuffle this layout exists to remove (measured:
-    * per-batch shuffle-write tracked the corpus with the heuristic
-    * on, flat with it off — StreamingDedupRehearsal / SCALE.md r19).
-    * The micro-batch is the right scope: the probe is the only reader
-    * here, and the stored side's reduced parallelism (numBuckets
-    * tasks) is the documented bucketed-join trade. */
-  private def withBucketedScan[A](spark: SparkSession, on: Boolean)(
-      body: => A): A =
-    if (!on) body
-    else {
-      val k = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val prev = spark.conf.get(k)
-      spark.conf.set(k, "false")
-      try body finally spark.conf.set(k, prev)
-    }
-
-  /** A monitor's stored index for one micro-batch, in the layout
-    * `buckets` selects: `batch=<id>` parquet partitions under `dir`
-    * (0), or the bucketed catalog table over the same partitions
-    * (> 0). Either way the batch reads only EARLIER batches and
-    * replaces its own partition, so a batch replayed after a lost
-    * commit reproduces itself instead of adding a second copy. */
-  private final class StoredIndex(spark: SparkSession, b: MicroBatch.Batch,
-      dir: String, cols: String, key: String, buckets: Int) {
-
-    /** The bucketed table over `dir`, registered in the session catalog
-      * on first touch (re-registering a prior session's partitions). */
-    private val table: Option[String] =
-      if (buckets <= 0) None
-      else {
-        val name = idxTableName(dir)
-        if (!spark.catalog.tableExists(name)) {
-          // RECOVER PARTITIONS lists the location — make sure it exists
-          // (first batch of a fresh stream creates the table before any
-          // partition has landed)
-          b.fs(dir).mkdirs(new Path(dir))
-          spark.sql(
-            s"CREATE TABLE $name ($cols, batch BIGINT) USING PARQUET " +
-              s"PARTITIONED BY (batch) " +
-              s"CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS " +
-              s"LOCATION '$dir'")
-          spark.sql(s"ALTER TABLE $name RECOVER PARTITIONS")
-        }
-        Some(name)
-      }
-
-    /** Every earlier batch's rows; None before the first write. */
-    val earlier: Option[DataFrame] = table match {
-      case Some(name) =>
-        // key-bucketed catalog read: the stored side of the probe join
-        // is pre-partitioned on the key — exchange-free
-        Some(spark.table(name).filter(col("batch") < b.id).drop("batch"))
-      case None if b.exists(dir) =>
-        Some(spark.read.parquet(dir).filter(col("batch") < b.id)
-          .drop("batch"))
-      case None => None
-    }
-
-    /** Replace this batch's partition with `df`. In the bucketed layout
-      * the partition is dropped first, and the pre-write repartition
-      * uses the SAME murmur3-pmod hash as the bucket-id assignment, so
-      * each task holds exactly one bucket's rows and the partition lands
-      * as ONE file per bucket — without it every task can write every
-      * bucket (tasks × buckets small files per batch, and a long-lived
-      * stream's scan cost is driven by file count). Cost: one
-      * batch-sized exchange per write, constant per the flat-probe
-      * contract. */
-    def write(df: DataFrame): Unit = table match {
-      case Some(name) =>
-        spark.sql(s"ALTER TABLE $name DROP IF EXISTS PARTITION (batch=${b.id})")
-        b.fs(dir).delete(new Path(s"$dir/batch=${b.id}"), true)
-        df.repartition(buckets, col(key))
-          .withColumn("batch", lit(b.id))
-          .write.mode("append").format("parquet")
-          .partitionBy("batch")
-          .bucketBy(buckets, key).sortBy(key)
-          .option("compression", Writers.DefaultCompression)
-          .saveAsTable(name)
-      case None => b.write(df, dir)
-    }
-  }
-
   /** Start the streaming dedup. `docs` schema must carry doc_id + text.
     * Candidates (d_new, d_old, est_jaccard) land under
     * `outDir/candidates/batch=<id>`; the growing band index under
-    * `indexDir` ([[StoredIndex]]).
+    * `indexDir`.
     */
   def start(
       spark: SparkSession,
@@ -169,16 +60,14 @@ object StreamingDedup {
         s"$outDir/_checkpoint", trigger) { b =>
       // bands computed ONCE per batch, reused for probe + append
       val batchBands = b.pins.pin(Dedup.minhashBands(b.df))
-      withBucketedScan(spark, buckets > 0) {
-        val idx = new StoredIndex(spark, b, indexDir,
-          "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, band_hash BIGINT",
-          "band_hash", buckets)
-        idx.earlier.foreach { corpus =>
-          b.write(Dedup.incrementalCandidatesFromBands(
-            batchBands, corpus, minEstJaccard), s"$outDir/candidates")
-        }
-        idx.write(batchBands)
+      val idx = b.store(indexDir,
+        "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, band_hash BIGINT",
+        "band_hash", buckets)
+      idx.earlier.foreach { corpus =>
+        b.write(Dedup.incrementalCandidatesFromBands(
+          batchBands, corpus, minEstJaccard), s"$outDir/candidates")
       }
+      idx.write(batchBands)
     }
 
   /** Always-on CONTENT-LEVEL MEDIA dedup — [[start]]'s shape for the
@@ -212,16 +101,13 @@ object StreamingDedup {
       // bands computed ONCE per batch, reused for probe + append
       val batchBands = b.pins.pin(Multimodal.phashBands(
         b.df.select(col("doc_id"), unbase64(col("media_b64")).as("media"))))
-      withBucketedScan(spark, buckets > 0) {
-        val idx = new StoredIndex(spark, b, indexDir,
-          "doc_id BIGINT, phash BIGINT, band INT, chunk BIGINT",
-          "chunk", buckets)
-        idx.earlier.foreach { corpus =>
-          b.write(Multimodal.incrementalPhashCandidates(
-            batchBands, corpus, maxHamming), s"$outDir/candidates")
-        }
-        idx.write(batchBands)
+      val idx = b.store(indexDir,
+        "doc_id BIGINT, phash BIGINT, band INT, chunk BIGINT", "chunk", buckets)
+      idx.earlier.foreach { corpus =>
+        b.write(Multimodal.incrementalPhashCandidates(
+          batchBands, corpus, maxHamming), s"$outDir/candidates")
       }
+      idx.write(batchBands)
     }
   }
 
@@ -282,50 +168,48 @@ object StreamingDedup {
       // spread — 32 pinned tasks per small batch is pure overhead)
       val docsB = b.df.select(col("doc_id"), col("text"))
       val grams = b.pins.pin(Dedup.positionalGrams(docsB, minRun, wide = false))
-      withBucketedScan(spark, buckets > 0) {
-        // bucketed form: the index reads g-pre-partitioned through
-        // the catalog — every probe join below leaves the stored
-        // side exchange-free; only the batch's grams shuffle
-        val idx = new StoredIndex(spark, b, indexDir,
-          "doc_id BIGINT, p BIGINT, g BIGINT", "g", buckets)
-        val spans = idx.earlier.map { earlier =>
-          val hits = earlier
-            .join(grams.select(col("g")).distinct(), Seq("g"), "left_semi")
-          val hot = hits.groupBy(col("g")).agg(count(lit(1)).as("dfc"))
-            .filter(col("dfc") > maxDf)
-            .select(col("g"))
-          val m = grams
-            .select(col("doc_id").as("d1"), col("p").as("p1"), col("g"))
-            .join(hot, Seq("g"), "left_anti")
-            .join(hits.select(col("doc_id").as("d2"), col("p").as("p2"),
-              col("g")), Seq("g"))
-            // a doc_id re-ingested in a later batch would self-match
-            // on diagonal 0 and silently EMPTY its own clean output —
-            // the probe contract is new-vs-earlier
-            .filter(col("d1") =!= col("d2"))
-            .select(col("d1"), col("d2"), col("p1"), col("p2"))
-          // reused by the span write AND the clean derivation
-          val islands = b.pins.pin(Dedup.diagonalIslands(m, minRun))
-          b.write(islands
-            .select(col("d1").as("d_new"), col("d2").as("d_old"),
-              col("p1").as("p_new"), col("p2").as("p_old"), col("len")),
-            s"$outDir/spans")
-          islands
-        }
-        // span-cut output: the new doc's copy of every matched run is
-        // the duplicate (the corpus came first — keep-first by
-        // arrival); with no prior index the batch passes through
-        val cov = spans match {
-          case Some(sp) =>
-            sp.select(col("d1").as("doc_id"), col("p1").as("s"),
-              (col("p1") + col("len") - 1).as("e"))
-          case None =>
-            docsB.select(col("doc_id"), lit(1L).as("s"), lit(0L).as("e"))
-              .limit(0)
-        }
-        b.write(Dedup.cutIntervals(docsB, cov), s"$outDir/clean")
-        idx.write(grams)
+      // bucketed form: the index reads g-pre-partitioned through the
+      // catalog — every probe join below leaves the stored side
+      // exchange-free; only the batch's grams shuffle
+      val idx = b.store(indexDir,
+        "doc_id BIGINT, p BIGINT, g BIGINT", "g", buckets)
+      val spans = idx.earlier.map { earlier =>
+        val hits = earlier
+          .join(grams.select(col("g")).distinct(), Seq("g"), "left_semi")
+        val hot = hits.groupBy(col("g")).agg(count(lit(1)).as("dfc"))
+          .filter(col("dfc") > maxDf)
+          .select(col("g"))
+        val m = grams
+          .select(col("doc_id").as("d1"), col("p").as("p1"), col("g"))
+          .join(hot, Seq("g"), "left_anti")
+          .join(hits.select(col("doc_id").as("d2"), col("p").as("p2"),
+            col("g")), Seq("g"))
+          // a doc_id re-ingested in a later batch would self-match
+          // on diagonal 0 and silently EMPTY its own clean output —
+          // the probe contract is new-vs-earlier
+          .filter(col("d1") =!= col("d2"))
+          .select(col("d1"), col("d2"), col("p1"), col("p2"))
+        // reused by the span write AND the clean derivation
+        val islands = b.pins.pin(Dedup.diagonalIslands(m, minRun))
+        b.write(islands
+          .select(col("d1").as("d_new"), col("d2").as("d_old"),
+            col("p1").as("p_new"), col("p2").as("p_old"), col("len")),
+          s"$outDir/spans")
+        islands
       }
+      // span-cut output: the new doc's copy of every matched run is
+      // the duplicate (the corpus came first — keep-first by
+      // arrival); with no prior index the batch passes through
+      val cov = spans match {
+        case Some(sp) =>
+          sp.select(col("d1").as("doc_id"), col("p1").as("s"),
+            (col("p1") + col("len") - 1).as("e"))
+        case None =>
+          docsB.select(col("doc_id"), lit(1L).as("s"), lit(0L).as("e"))
+            .limit(0)
+      }
+      b.write(Dedup.cutIntervals(docsB, cov), s"$outDir/clean")
+      idx.write(grams)
     }
   }
 
@@ -364,35 +248,33 @@ object StreamingDedup {
       val vocabB = graft.llm.Fuzzy.vocab(b.df) // (tok, c)
       // variants computed ONCE per batch, reused for probe + append
       val vars = b.pins.pin(graft.llm.Fuzzy.deletionVariants(vocabB))
-      withBucketedScan(spark, buckets > 0) {
-        // variant-bucketed form: the candidate join (the corpus-sized
-        // one) leaves the stored side exchange-free; the tok-distinct
-        // anti-join side reduces map-side to vocabulary size before its
-        // exchange either way
-        val idx = new StoredIndex(spark, b, indexDir,
-          "tok STRING, variant STRING", "variant", buckets)
-        idx.earlier.foreach { earlier =>
-          // novel spellings only: a token already in the earlier
-          // vocabulary is established, not a typo alert
-          val novel = vars.join(
-            earlier.select(col("tok")).distinct(), Seq("tok"), "left_anti")
-          val cands = novel.as("n")
-            .join(earlier.select(col("tok").as("tok_known"), col("variant"))
-              .distinct(), Seq("variant"))
-            .select(col("tok").as("tok_new"), col("tok_known"))
-            .distinct()
-          b.write(cands
-            .withColumn("dist",
-              levenshtein(col("tok_new"), col("tok_known")).cast("long"))
-            .filter(col("dist") > 0 &&
-              col("dist") <= graft.llm.Fuzzy.MaxDist)
-            .join(vocabB.select(col("tok").as("tok_new"),
-              col("c").as("c_new")), Seq("tok_new"))
-            .select(col("tok_new"), col("tok_known"), col("dist"),
-              col("c_new")), s"$outDir/alerts")
-        }
-        idx.write(vars)
+      // variant-bucketed form: the candidate join (the corpus-sized
+      // one) leaves the stored side exchange-free; the tok-distinct
+      // anti-join side reduces map-side to vocabulary size before its
+      // exchange either way
+      val idx = b.store(indexDir,
+        "tok STRING, variant STRING", "variant", buckets)
+      idx.earlier.foreach { earlier =>
+        // novel spellings only: a token already in the earlier
+        // vocabulary is established, not a typo alert
+        val novel = vars.join(
+          earlier.select(col("tok")).distinct(), Seq("tok"), "left_anti")
+        val cands = novel.as("n")
+          .join(earlier.select(col("tok").as("tok_known"), col("variant"))
+            .distinct(), Seq("variant"))
+          .select(col("tok").as("tok_new"), col("tok_known"))
+          .distinct()
+        b.write(cands
+          .withColumn("dist",
+            levenshtein(col("tok_new"), col("tok_known")).cast("long"))
+          .filter(col("dist") > 0 &&
+            col("dist") <= graft.llm.Fuzzy.MaxDist)
+          .join(vocabB.select(col("tok").as("tok_new"),
+            col("c").as("c_new")), Seq("tok_new"))
+          .select(col("tok_new"), col("tok_known"), col("dist"),
+            col("c_new")), s"$outDir/alerts")
       }
+      idx.write(vars)
     }
   }
 
@@ -440,9 +322,9 @@ object StreamingDedup {
     * survivors under `outDir/unique`, and records its fingerprints in
     * the seen-set.
     *
-    * Exactly-once by construction, without locks: the seen-set is laid
-    * out as one `batch=<id>` partition per micro-batch, the probe reads
-    * only partitions with `batch < current`, and BOTH writes overwrite
+    * Exactly-once by construction, without locks: the seen-set is a
+    * [[MicroBatch.Store]] (one `batch=<id>` partition per micro-batch,
+    * the probe reads only `batch < current`), and BOTH writes overwrite
     * their own batch partition — so a replayed batch recomputes the
     * identical survivor set (its own partial state partition is
     * invisible to the probe) and overwrites, never duplicates.
@@ -452,10 +334,9 @@ object StreamingDedup {
     * batch-sized) hits are broadcast back for the anti join — the
     * historical seen-set is scanned map-side but NEVER shuffled, the
     * per-batch exchange cost is the batch's own fingerprints. At 100 TB
-    * the fp partitions compact like any small-file state (see
-    * StreamingCuration.compactState for the lease pattern; here
-    * compaction must preserve the batch=N layout the idempotency
-    * depends on, so fold files WITHIN partitions only).
+    * the fp partitions compact partition by partition into a new dir
+    * ([[graft.etl.Writers.compactFiles]]), which keeps the
+    * `batch=<id>` layout the replay contract depends on.
     */
   def startExact(
       spark: SparkSession,
@@ -473,19 +354,17 @@ object StreamingDedup {
         .select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1).drop("rn"))
-      val survivors =
-        if (b.exists(stateDir)) {
-          val seen = spark.read.parquet(stateDir)
-            .filter(col("batch") < b.id) // replay: own partial state invisible
-          val hits = seen
-            .join(broadcast(batchDocs.select(col("fp"))), Seq("fp"), "left_semi")
-            .select(col("fp")).distinct()
-          batchDocs.join(broadcast(hits), Seq("fp"), "left_anti")
-        } else batchDocs
+      val seen = b.store(stateDir, "fp STRING")
+      val survivors = seen.earlier.fold(batchDocs) { earlier =>
+        val hits = earlier
+          .join(broadcast(batchDocs.select(col("fp"))), Seq("fp"), "left_semi")
+          .select(col("fp")).distinct()
+        batchDocs.join(broadcast(hits), Seq("fp"), "left_anti")
+      }
       val kept = b.pins.pin(survivors)
       b.write(kept.select(col("doc_id"), col("text"), col("fp")),
         s"$outDir/unique")
-      b.write(kept.select(col("fp")), stateDir)
+      seen.write(kept.select(col("fp")))
     }
   }
 }

@@ -261,8 +261,8 @@ object StreamingGeo {
     Geo.bandedPoints(batch)
 
   /** The index columns of a [[points]] row. */
-  private val PtCols = Seq("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx")
-    .map(col)
+  private val PtNames = Seq("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx")
+  private val PtCols = PtNames.map(col)
 
   /** The landing dir of [[GeoEv]] parquet fixes every monitor here reads. */
   private def geoSource(spark: SparkSession, landingDir: String): DataFrame =
@@ -321,13 +321,11 @@ object StreamingGeo {
       val spark = pts.sparkSession
       val span = hourSpan(probe)
       val own = pts.select(PtCols: _*)
-      val earlier =
-        if (!b.exists(indexDir)) None
-        else Some(spark.read.schema(IndexSchema).parquet(indexDir)
-          .filter(col("batch") < b.id && (span match {
-            case Some((lo, hi)) => col("hour").between(lo, hi)
-            case None           => lit(false)
-          })).select(PtCols: _*))
+      val store = b.store(indexDir, IndexSchema.toDDL)
+      val earlier = store.earlier.map(_.filter(span match {
+        case Some((lo, hi)) => col("hour").between(lo, hi)
+        case None           => lit(false)
+      }).select(PtCols: _*))
       val index =
         if (withOwn) Some(earlier.getOrElse(own.limit(0)).unionByName(own))
         else earlier
@@ -339,7 +337,7 @@ object StreamingGeo {
           maxCellOccupancy, carryProbeCols = carryProbeCols)
       }
       land(hits, span)
-      b.write(hourClustered(pts), indexDir)
+      store.write(hourClustered(pts))
     }
   }
 
@@ -434,12 +432,11 @@ object StreamingGeo {
 
   /** Column layout of the persisted per-batch state, given on every read
     * so a micro-batch never runs a footer-inference job to learn it:
-    * the (hour, cell) position index (with its `batch` partition
-    * column) and the last-fix snapshot. */
+    * the (hour, cell) position index (its [[MicroBatch.Store]] adds the
+    * `batch` partition column) and the last-fix snapshot. */
   private def longs(names: String*): StructType =
     StructType(names.map(StructField(_, LongType)))
-  private val IndexSchema =
-    longs("user_id", "hour", "lat_e6", "lon_e6", "cy", "cx", "batch")
+  private val IndexSchema = longs(PtNames: _*)
   private val LastSchema = longs("user_id", "t", "event_id", "lat_e6", "lon_e6")
 
   /** Ids of the `<dir>/batch=<id>` state snapshots, ascending. */
@@ -664,7 +661,8 @@ object StreamingGeo {
     val fs = new Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(indexDir))) return Seq.empty
-    val byBatch = spark.read.schema(IndexSchema).parquet(indexDir)
+    val byBatch = spark.read.schema(IndexSchema.add("batch", LongType))
+      .parquet(indexDir)
       .groupBy(col("batch"))
       .agg(max(col("hour")))
       .collect().map(r => r.getLong(0) -> r.getLong(1))

@@ -12,30 +12,47 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Dq
 import graft.llm.{Pca, QualityClassifier}
-import graft.streaming.{StreamingCuration, StreamingDq, StreamingIndex,
-  StreamingScore, StreamingSketch}
+import graft.streaming.{StreamingCuration, StreamingDedup, StreamingDq,
+  StreamingIndex, StreamingScore, StreamingSketch}
 
 /** The micro-batch runner's contracts: it is the only place in
-  * `streaming/` that wires a stream, and a monitor stopped after a
-  * batch and restarted from its checkpoint lands exactly what an
+  * `streaming/` that wires a stream or reads and writes per-batch
+  * history, and a monitor stopped after a batch and restarted from its
+  * checkpoint — or whose last commit was lost — lands exactly what an
   * uninterrupted run lands.
   */
 class MicroBatchSpec extends AnyFunSuite with TestSpark {
 
-  test("only MicroBatch wires streams: no other streaming/ file names " +
-      "readStream, writeStream or checkpointLocation") {
+  /** `file:line: word` for every line of a `streaming/` source other
+    * than MicroBatch.scala that contains one of `words`. */
+  private def outsideMicroBatch(words: String*): Seq[String] = {
     val dir = Paths.get(sys.props("user.dir"), "src/main/scala/graft/streaming")
     val files = Files.list(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 1, s"no monitor sources under $dir")
-    val offenders = for {
+    for {
       f <- files if f.getFileName.toString != "MicroBatch.scala"
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      word <- Seq("readStream", "writeStream", "checkpointLocation")
+      word <- words
       if line.contains(word)
     } yield s"${f.getFileName}:${i + 1}: $word"
+  }
+
+  test("only MicroBatch wires streams: no other streaming/ file names " +
+      "readStream, writeStream or checkpointLocation") {
+    val offenders =
+      outsideMicroBatch("readStream", "writeStream", "checkpointLocation")
     assert(offenders.isEmpty,
       s"stream wiring outside MicroBatch:\n${offenders.mkString("\n")}")
+  }
+
+  test("only MicroBatch's store reads and writes per-batch history: no " +
+      "other streaming/ file appends, saves a table or filters on batch") {
+    val offenders = outsideMicroBatch(
+      """.mode("append")""", "saveAsTable", """col("batch") <""")
+    assert(offenders.isEmpty,
+      s"history written or read outside MicroBatch.Store:\n${
+        offenders.mkString("\n")}")
   }
 
   /** One restart case: a monitor, the three landing files it is fed
@@ -163,7 +180,28 @@ class MicroBatchSpec extends AnyFunSuite with TestSpark {
         o, Map("en" -> 100, "es" -> 50, "de" -> 25), 10, trigger = t),
       o => rows(spark.read.parquet(s"$o/contaminated")) ++
         rows(spark.read.parquet(s"$o/mixture")) ++
-        rows(StreamingCuration.contaminationCounts(spark, s"$o/state", o))))
+        rows(StreamingCuration.contaminationCounts(spark, s"$o/state", o))),
+    new Monitor("StreamingCuration.startNgramDecon", docFiles,
+      (l, o, t) => StreamingCuration.startNgramDecon(spark, l, docSchema,
+        s"$o/state", o, trigger = t),
+      o => rows(spark.read.parquet(s"$o/gram_hits")) ++
+        rows(spark.read.parquet(s"$o/state/train_grams")) ++
+        rows(StreamingCuration.ngramContaminationTotals(spark, s"$o/state", o))),
+    new Monitor("StreamingDedup.start", docFiles,
+      (l, o, t) => StreamingDedup.start(spark, l, docSchema, s"$o/idx", o,
+        trigger = t),
+      o => rows(spark.read.parquet(s"$o/candidates")) ++
+        rows(spark.read.parquet(s"$o/idx"))),
+    new Monitor("StreamingDedup.start (buckets = 32)", docFiles,
+      (l, o, t) => StreamingDedup.start(spark, l, docSchema, s"$o/idx", o,
+        trigger = t, buckets = 32),
+      o => rows(spark.read.parquet(s"$o/candidates")) ++
+        rows(spark.read.parquet(s"$o/idx"))),
+    new Monitor("StreamingDedup.startExact", docFiles,
+      (l, o, t) => StreamingDedup.startExact(spark, l, docSchema, s"$o/seen",
+        o, trigger = t),
+      o => rows(spark.read.parquet(s"$o/unique")) ++
+        rows(spark.read.parquet(s"$o/seen"))))
 
   /** Land `content` as `name` atomically, so a running query never lists
     * a half-written file. */
@@ -174,14 +212,11 @@ class MicroBatchSpec extends AnyFunSuite with TestSpark {
       StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private def restarted(m: Monitor): Seq[String] = {
-    val (landing, out) = (tmp("mb-land"), tmp("mb-out"))
-    m.files.zipWithIndex.foreach { case (f, i) =>
-      land(landing, s"f$i.json", f)
-      m.start(landing, out, Trigger.AvailableNow()).awaitTermination()
-    }
-    m.landed(out)
-  }
+  /** What `m` lands when each file is drained by a fresh run; with
+    * `replay`, the last batch then reruns as after a lost commit. */
+  private def restarted(m: Monitor, replay: Boolean = false): Seq[String] =
+    m.landed(drain(m.files, replay)((landing, out) =>
+      m.start(landing, out, Trigger.AvailableNow()).awaitTermination()))
 
   private def uninterrupted(m: Monitor): Seq[String] = {
     val (landing, out) = (tmp("mb-land"), tmp("mb-out"))
@@ -202,6 +237,15 @@ class MicroBatchSpec extends AnyFunSuite with TestSpark {
       assert(got == expected,
         s"${m.name} after restarts diverged:\n${got.diff(expected).take(5)}\n" +
           s"vs uninterrupted:\n${expected.diff(got).take(5)}")
+    }
+    test(s"replay: ${m.name} re-run after its last commit was lost lands " +
+        "what an uninterrupted run lands, with no persisted-RDD delta") {
+      val expected = uninterrupted(m)
+      val got = restarted(m, replay = true)
+      assert(got == expected,
+        s"${m.name} after a lost-commit replay diverged:\n${
+          got.diff(expected).take(5)}\nvs uninterrupted:\n${
+          expected.diff(got).take(5)}")
     }
   }
 }

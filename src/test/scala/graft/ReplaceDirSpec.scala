@@ -188,4 +188,53 @@ class ReplaceDirSpec extends AnyFunSuite with TestSpark {
       spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_tmp")
     }
   }
+
+  test("compactBucketedTable on a batch-partitioned table: a racing " +
+      "append inside a partition dir aborts it; a clean run folds the " +
+      "older partitions into batch=n-1 and keeps batch=n") {
+    val tmp = Files.createTempDirectory("graft-swap-part").toString
+    val path = s"$tmp/parts"
+    val table = "swap_part_bkt"
+    spark.range(0, 300).selectExpr("id AS k", "CAST(id AS STRING) AS v",
+        "id % 3 AS batch")
+      .write.option("path", path).partitionBy("batch")
+      .bucketBy(4, "k").sortBy("k")
+      .format("parquet").saveAsTable(table)
+    val protocolConf = "spark.sql.sources.commitProtocolClass"
+    val protocol = spark.conf.get(protocolConf)
+    def rows(): Set[(Long, String, Long)] = {
+      spark.catalog.refreshTable(table)
+      spark.table(table).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    }
+    try {
+      val before = rows()
+      val racer = Paths.get(path, "batch=0", "part-99999-racer.c000.zstd.parquet")
+      RacingCommitProtocol.onCommit =
+        () => Files.write(racer, Array[Byte](1, 2, 3))
+      spark.conf.set(protocolConf, classOf[RacingCommitProtocol].getName)
+      val ex = intercept[IllegalStateException] {
+        Writers.compactBucketedTable(spark, table, path, "k", 4)
+      }
+      assert(ex.getMessage.contains("concurrent append"), ex.getMessage)
+      RacingCommitProtocol.onCommit = () => ()
+      spark.conf.set(protocolConf, protocol)
+      Files.delete(racer)
+      assert(rows() == before)
+
+      val files = Writers.compactBucketedTable(spark, table, path, "k", 4)
+      assert(files <= 8, s"$files files for 2 partitions x 4 buckets")
+      val parts = new java.io.File(path).listFiles().map(_.getName)
+        .filter(_.startsWith("batch=")).sorted.toSeq
+      assert(parts == Seq("batch=1", "batch=2"), s"partitions: $parts")
+      assert(rows() == before.map { case (k, v, b) => (k, v, math.max(b, 1L)) })
+      assert(spark.sql(s"SHOW CREATE TABLE $table").head().getString(0)
+        .contains("4 BUCKETS"))
+    } finally {
+      RacingCommitProtocol.onCommit = () => ()
+      spark.conf.set(protocolConf, protocol)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_tmp")
+    }
+  }
 }

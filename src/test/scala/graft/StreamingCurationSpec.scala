@@ -308,6 +308,29 @@ class StreamingCurationSpec extends AnyFunSuite with TestSpark {
       s"append under a compaction lock did not fail loudly: ${messages(ex)}")
   }
 
+  test("a state dir in the flat layout of older releases fails on open " +
+      "instead of reading as empty history") {
+    val landing = Files.createTempDirectory("sflat-land").toString
+    val state = Files.createTempDirectory("sflat-state").toString
+    val out = Files.createTempDirectory("sflat-out").toString
+    Files.write(Paths.get(landing, "b1.json"),
+      (0L until 50L).map(i =>
+        s"""{"doc_id":$i,"lang":"en","text":"flat doc $i"}""")
+        .mkString("\n").getBytes)
+    // the older layout: data files directly under the table dir
+    spark.range(3).selectExpr("CAST(id AS STRING) AS fp")
+      .write.parquet(s"$state/train_fp")
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingCuration.start(spark, landing, schema, state, out,
+        rates, defaultRate).awaitTermination()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e =>
+        Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.contains("flat layout")),
+      s"an old-layout state dir did not fail loudly: ${messages(ex)}")
+  }
+
   test("a batch whose sink write fails still releases its localCheckpoint snapshot") {
     val landing = Files.createTempDirectory("sleak-land").toString
     val state = Files.createTempDirectory("sleak-state").toString

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.Dedup
-import graft.streaming.StreamingDedup
+import graft.streaming.{MicroBatch, StreamingDedup}
 
 /** Streaming near-dup dedup: each micro-batch probes the persisted band
   * index for candidates against all PRIOR batches, then appends its own
@@ -18,20 +18,6 @@ class StreamingDedupSpec extends AnyFunSuite with TestSpark
 
   private val schema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
-
-  /** Zero-persisted-RDD-delta pin (the r9 pageRank leak class): each
-    * foreachBatch localCheckpoints its batch frame and MUST release it
-    * before the closure returns — in always-on mode a leaked block per
-    * micro-batch accumulates forever.
-    */
-  private def assertNoPersistedRddDelta[A](body: => A): A = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val result = body
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
-      s"foreachBatch leaked persisted RDDs: ${(after -- before).toSeq.sorted}")
-    result
-  }
 
   test("micro-batches probe and extend the persisted band index") {
     val landing = Files.createTempDirectory("sdedup-land").toString
@@ -105,26 +91,11 @@ class StreamingDedupSpec extends AnyFunSuite with TestSpark
 
     def rows(path: String): Seq[String] =
       spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
-    /** Drain each file as its own batch; with `replay`, then delete the
-      * last batch's commit and drain again, so that batch reruns. */
-    def drain(files: Seq[String], replay: Boolean)(
+    /** (candidates, index) after draining `files`, index under `out/idx`. */
+    def landed(files: Seq[String], replay: Boolean)(
         start: (String, String, String) => Unit): (Seq[String], Seq[String]) = {
-      val landing = Files.createTempDirectory("sreplay-land").toString
-      val index = Files.createTempDirectory("sreplay-idx").toString + "/idx"
-      val out = Files.createTempDirectory("sreplay-out").toString
-      files.zipWithIndex.foreach { case (f, i) =>
-        Files.write(Paths.get(landing, s"b$i.json"), f.getBytes)
-        start(landing, index, out)
-      }
-      if (replay) {
-        val last = files.size - 1
-        val commit = Paths.get(out, "_checkpoint", "commits", last.toString)
-        Files.delete(commit)
-        Files.deleteIfExists(commit.resolveSibling(s".$last.crc"))
-        assertNoPersistedRddDelta(start(landing, index, out))
-        assert(Files.exists(commit), "the replayed batch did not commit")
-      }
-      (rows(s"$out/candidates"), rows(index))
+      val out = drain(files, replay)((l, o) => start(l, s"$o/idx", o))
+      (rows(s"$out/candidates"), rows(s"$out/idx"))
     }
     Seq[(String, Seq[String], (String, String, String) => Unit)](
       ("start", textFiles, (l, i, o) =>
@@ -133,14 +104,41 @@ class StreamingDedupSpec extends AnyFunSuite with TestSpark
         StreamingDedup.startMedia(spark, l, mediaSchema, i, o)
           .awaitTermination())
     ).foreach { case (name, files, start) =>
-      val (cands, index) = drain(files, replay = false)(start)
+      val (cands, index) = landed(files, replay = false)(start)
       assert(cands.nonEmpty, s"$name: the fixture must produce candidates")
-      val (cands2, index2) = drain(files, replay = true)(start)
+      val (cands2, index2) = landed(files, replay = true)(start)
       assert(cands2 == cands,
         s"$name: replayed candidates ${cands2.size} vs ${cands.size}")
       assert(index2 == index,
         s"$name: replayed index ${index2.size} vs ${index.size} rows")
     }
+  }
+
+  test("the bucketed index pins its bucket count per dir: a reopen under " +
+      "another count raises instead of mis-routing the bucketed probe") {
+    val landing = Files.createTempDirectory("spin-land").toString
+    val index = Files.createTempDirectory("spin-idx").toString + "/bands"
+    val out = Files.createTempDirectory("spin-out").toString
+    def writeBatch(name: String, ids: Seq[Long]): Unit =
+      Files.write(Paths.get(landing, name), ids.map(i =>
+        s"""{"doc_id":$i,"text":"pinned bucket doc ${i % 20} spark table"}""")
+        .mkString("\n").getBytes)
+    writeBatch("b0.json", 0L until 20L)
+    StreamingDedup.start(spark, landing, schema, index, out, buckets = 16)
+      .awaitTermination()
+    // a fresh session: the catalog entry is gone, files and marker stay
+    spark.sql(s"DROP TABLE IF EXISTS ${MicroBatch.tableName(index)}")
+    writeBatch("b1.json", 100L until 120L)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingDedup.start(spark, landing, schema, index, out, buckets = 32)
+        .awaitTermination()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e =>
+        Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.contains("written with 16 buckets")),
+      s"a reopen under 32 buckets did not fail loudly: ${messages(ex)}")
+    spark.sql(s"DROP TABLE IF EXISTS ${MicroBatch.tableName(index)}")
   }
 
   test("windowed exact dedup: in-window dups drop even before watermark " +
