@@ -195,7 +195,10 @@ object Writers {
     * [[swapOld]], the stage is renamed in (the original is put back if
     * that fails) and the set-aside copy is deleted. If `write` throws,
     * the stage is deleted and `live` is untouched. A `live` that does
-    * not exist yet (or that `write` removed) is simply created.
+    * not exist yet (or that `write` removed) is simply created. A stage
+    * that is gone once `write` returns (cleared as stale by a
+    * concurrent [[recoverDir]]) fails the swap with `live` untouched,
+    * instead of being stamped and swapped in as an empty copy.
     *
     * Both names are dot-prefixed siblings of `live`, so Spark/Hadoop
     * listings of the parent skip them: a reader never double-counts a
@@ -216,6 +219,9 @@ object Writers {
     val out =
       try write(tmp.toString)
       catch { case e: Throwable => fs.delete(tmp, true); throw e }
+    if (!fs.exists(tmp))
+      throw new java.io.IOException(s"replaceDir: stage $tmp vanished " +
+        s"before the swap (a concurrent recoverDir?); $live is untouched")
     val marker = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
     if (!fs.exists(marker)) fs.createNewFile(marker)
     val hadLive = fs.exists(path)

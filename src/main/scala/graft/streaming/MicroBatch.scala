@@ -86,7 +86,10 @@ object MicroBatch {
     * marker raises: the count is baked into the file layout, and a
     * reopen under another count re-registers the table with the wrong
     * spec, so every bucketed probe silently reads the wrong buckets.
-    * `source` names where `requested` came from, for the message. */
+    * `source` names where `requested` came from, for the message. A
+    * monitor pins once, before its first batch, at the dir that owns the
+    * decision: StreamingCuration at its `stateDir` (one count for all
+    * its state tables), StreamingDedup at its `indexDir`. */
   private[streaming] def pinnedBuckets(spark: SparkSession, dir: String,
       requested: Option[Int], default: Int, source: String): Int = {
     val marker = new Path(dir, "_graft_buckets")
@@ -134,13 +137,17 @@ object MicroBatch {
   }
 
   /** Register the bucketed [[Store]] table over `dir` if the session
-    * catalog lacks it, and return its name. A crashed compaction's
-    * set-aside copy is put back first; the bucket count is pinned per
-    * dir ([[pinnedBuckets]]); the DDL is `PARTITIONED BY (batch)
-    * CLUSTERED BY (key)` + `RECOVER PARTITIONS`, so a fresh session
-    * reads a prior session's partitions bucket-aware at once. A dir
-    * holding data files directly under it (the flat layout of older
-    * releases) raises instead of reading as empty history. */
+    * catalog lacks it, and return its name. The DDL is `PARTITIONED BY
+    * (batch) CLUSTERED BY (key)` + `RECOVER PARTITIONS` under
+    * `buckets`, which the caller pinned for `dir` before its first
+    * batch ([[pinnedBuckets]]), so a fresh session reads a prior
+    * session's partitions bucket-aware at once. A crashed compaction's
+    * set-aside copy is put back first ([[Writers.recoverDir]]); that
+    * clears a LIVE compaction's stage as stale, so a caller whose dir
+    * is compacted opens it under the same lease as its writes
+    * (StreamingCuration's `leased`). A dir holding data files directly
+    * under it (the flat layout of older releases) raises instead of
+    * reading as empty history. */
   private[streaming] def openTable(spark: SparkSession, dir: String,
       cols: String, key: String, buckets: Int): String = {
     val name = tableName(dir)
@@ -151,13 +158,13 @@ object MicroBatch {
       val flat = if (!fs.exists(root)) Nil else fs.listStatus(root).toSeq
         .map(_.getPath.getName).filter(n =>
           !n.startsWith("_") && !n.startsWith(".") && !n.contains("="))
-      require(flat.isEmpty,
-        s"$dir holds data files directly under the table dir " +
-          s"(${flat.take(3).mkString(", ")}): that is the flat layout of " +
-          "an older release, which this store would read as empty " +
-          "history. It keeps one batch=<id> partition per micro-batch; " +
-          s"move $dir aside and rebuild it from the landing data")
-      pinnedBuckets(spark, dir, Some(buckets), buckets, "buckets")
+      require(flat.isEmpty, s"$dir holds data files directly under the " +
+        s"table dir (${flat.take(3).mkString(", ")}): the flat layout of an " +
+        "older release, which would read as empty history. To rebuild, move " +
+        s"$dir aside WITH the stream's output dir (its _checkpoint and " +
+        "sinks) and re-drain the landing data under a fresh checkpoint: " +
+        "the old checkpoint marks every landed file processed")
+      fs.mkdirs(root)
       Writers.registerBucketedTable(spark, name, dir, key, buckets,
         Some(s"$cols, batch BIGINT"), Some("batch"))
     }
@@ -173,8 +180,6 @@ object MicroBatch {
     def fs(path: String): FileSystem =
       new Path(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
 
-    def exists(path: String): Boolean = fs(path).exists(new Path(path))
-
     /** Overwrite `dir/batch=<id>` with `df`: a batch replayed after its
       * commit was lost replaces its own partition, never adds a copy. */
     def write(df: DataFrame, dir: String): Unit =
@@ -185,7 +190,8 @@ object MicroBatch {
     /** This batch's view of the history [[Store]] under `dir`, whose
       * rows have the columns `cols` (a DDL list such as `"k STRING, v
       * BIGINT"`); `buckets > 0` selects the catalog table bucketed by
-      * `key`. */
+      * `key` into `buckets`, a count the caller has pinned
+      * ([[pinnedBuckets]]). */
     def store(dir: String, cols: String, key: String = "",
         buckets: Int = 0): Store = new Store(this, dir, cols, key, buckets)
   }
@@ -218,7 +224,6 @@ object MicroBatch {
   final class Store private[MicroBatch] (b: Batch, dir: String,
       cols: String, key: String, buckets: Int) {
     private val spark = b.df.sparkSession
-    private val existed = b.exists(dir)
     private val table =
       if (buckets <= 0) None
       else {
@@ -228,9 +233,11 @@ object MicroBatch {
       }
 
     /** Rows of every `batch < id` partition, without the `batch`
-      * column; None before the first write. */
+      * column; None before the first write. Looked up after the open,
+      * which may have put back a crashed compaction's copy. */
     val earlier: Option[DataFrame] =
-      if (!existed) None
+      if (Option(b.fs(dir).globStatus(new Path(dir, "batch=*")))
+          .forall(_.isEmpty)) None
       else Some(table.fold(spark.read.schema(s"$cols, batch BIGINT")
           .parquet(dir))(spark.table)
         .filter(col("batch") < b.id).drop("batch"))

@@ -101,20 +101,24 @@ object StreamingCuration {
   def stateTable(dir: String, key: String): String =
     MicroBatch.tableName(s"$dir/$key")
 
-  /** Run a batch's state writes under the compaction lease:
-    *  - refuses to START while the [[CompactLock]] is held;
-    *  - touches the [[AppendHeartbeat]] before AND after the writes, so
-    *    a compaction that acquires the lock mid-write keeps waiting
-    *    until the writes have been quiet for a full settle interval;
-    *  - if the lock appeared DURING the writes, fails the batch loudly —
-    *    the files may sit on either side of the compaction swap, so the
+  /** Run one batch under the compaction lease:
+    *  - refuses to START while the [[CompactLock]] is held — before the
+    *    batch opens any state table, because opening one in a fresh
+    *    session puts back a crashed compaction's copy
+    *    ([[MicroBatch.openTable]]), which would clear a live
+    *    compaction's stage as stale;
+    *  - touches the [[AppendHeartbeat]] before AND after the batch, so a
+    *    compaction that acquires the lock mid-batch keeps waiting until
+    *    the state has been quiet for a full settle interval;
+    *  - if the lock appeared DURING the batch, fails it loudly — its
+    *    files may sit on either side of the compaction swap, so the
     *    checkpoint must replay the batch after the compaction (replays
     *    replace the batch's own partitions).
-    * A write overlapping a compaction therefore either fully lands (the
+    * A batch overlapping a compaction therefore either fully lands (the
     * compaction waited it out) or fully fails — never a silent drop.
     */
   private def leased(spark: SparkSession, stateDir: String)(
-      writes: => Unit): Unit = {
+      batch: => Unit): Unit = {
     val dir = new Path(stateDir)
     val fs = fsOf(spark, dir)
     val lock = new Path(dir, CompactLock)
@@ -124,14 +128,22 @@ object StreamingCuration {
         s"(if no compaction is actually running — e.g. its driver died " +
         s"mid-run — delete the stale $lock file)")
     touch(fs, new Path(dir, AppendHeartbeat))
-    writes
+    batch
     touch(fs, new Path(dir, AppendHeartbeat))
     if (fs.exists(lock))
       throw new IllegalStateException(
-        s"state write raced a compaction on $dir (the lock appeared " +
-          "mid-write) — failing the batch loudly so the checkpoint " +
+        s"a batch raced a compaction on $dir (the lock appeared " +
+          "mid-batch) — failing the batch loudly so the checkpoint " +
           "replays it after the compaction finishes")
   }
+
+  /** The monitor's stream over the JSON files landing in `landingDir`,
+    * every batch run under the compaction lease on `stateDir`. */
+  private def run(spark: SparkSession, landingDir: String,
+      schema: StructType, stateDir: String, outDir: String,
+      trigger: Trigger)(body: MicroBatch.Batch => Unit): StreamingQuery =
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+        s"$outDir/_checkpoint", trigger)(b => leased(spark, stateDir)(body(b)))
 
   /** Create-or-overwrite an empty marker file; its mtime is the signal. */
   private def touch(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit =
@@ -147,8 +159,7 @@ object StreamingCuration {
       defaultRate: Int,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val buckets = pinnedBuckets(spark, stateDir)
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, stateDir, outDir, trigger) { b =>
       // split + fingerprint computed ONCE per batch, reused across the
       // probe, retro-probe, and both state writes
       val t = b.pins.pin(b.df.select(
@@ -169,10 +180,8 @@ object StreamingCuration {
       // new train fingerprints vs already-stored test docs (late train)
       val contLate = testDocs.earlier
         .map(_.join(newTrain, Seq("fp"), "left_semi"))
-      leased(spark, stateDir) {
-        trainFp.write(newTrain)
-        testDocs.write(newTest)
-      }
+      trainFp.write(newTrain)
+      testDocs.write(newTest)
       b.write((Seq(contBatch) ++ contStored ++ contLate)
         .reduce(_ unionByName _)
         .select(col("doc_id")), s"$outDir/contaminated")
@@ -209,8 +218,7 @@ object StreamingCuration {
       n: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val buckets = pinnedBuckets(spark, stateDir)
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, stateDir, outDir, trigger) { b =>
       val grams = b.pins.pin(Curation.gramKeys(b.df, n))
       val newTrain = grams.filter(col("split") === "train")
         .select(col("k")).distinct()
@@ -226,10 +234,8 @@ object StreamingCuration {
       // retro-probe: new train grams vs already-stored test grams
       val hitsLate = testGrams.earlier
         .map(_.join(newTrain, Seq("k"), "left_semi"))
-      leased(spark, stateDir) {
-        trainGrams.write(newTrain)
-        testGrams.write(newTest)
-      }
+      trainGrams.write(newTrain)
+      testGrams.write(newTest)
       b.write((Seq(hitsBatch) ++ hitsStored ++ hitsLate)
         .reduce(_ unionByName _), s"$outDir/gram_hits")
     }
@@ -268,8 +274,7 @@ object StreamingCuration {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val buckets = pinnedBuckets(spark, stateDir)
     val cb = spark.read.parquet(codebookDir).select(col("cell"), col("cv"))
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, stateDir, outDir, trigger) { b =>
       import graft.llm.Similarity
       // assign + split computed ONCE per batch, reused by both
       // probes, the retro-probe, and both state appends
@@ -293,10 +298,8 @@ object StreamingCuration {
       val hitsStored = trainVecs.earlier.map(st => hits(newTest, st))
       val hitsBatch = hits(newTest, newTrain)
       val hitsLate = testVecs.earlier.map(st => hits(st, newTrain))
-      leased(spark, stateDir) {
-        trainVecs.write(newTrain)
-        testVecs.write(newTest)
-      }
+      trainVecs.write(newTrain)
+      testVecs.write(newTest)
       b.write((Seq(hitsBatch) ++ hitsStored ++ hitsLate)
         .reduce(_ unionByName _), s"$outDir/sem_hits")
     }
@@ -327,8 +330,8 @@ object StreamingCuration {
     */
   val CompactLock = "_graft_compacting"
 
-  /** Mtime-bearing marker [[leased]] touches around every batch's state
-    * writes; [[compactState]]'s lease wait keys off its age.
+  /** Mtime-bearing marker [[leased]] touches around every batch;
+    * [[compactState]]'s lease wait keys off its age.
     */
   val AppendHeartbeat = "_graft_last_append"
 
@@ -351,7 +354,8 @@ object StreamingCuration {
     * copy is complete — then swapped in with [[Writers.replaceDir]]. At
     * every instant a complete copy of the state exists ON DISK, and a
     * crash mid-swap is put back mechanically by the next compaction or
-    * stream open (both run [[Writers.recoverDir]] first); an executor
+    * stream open (both run [[Writers.recoverDir]] first, the stream's
+    * under its lease); an executor
     * loss mid-write loses only the stage. The earlier in-place form
     * overwrote the only durable copy from a localCheckpoint snapshot,
     * whose executor-memory blocks cannot be recomputed after the
@@ -360,13 +364,14 @@ object StreamingCuration {
     * Concurrency with a RUNNING stream on the same stateDir is a LEASE,
     * not just a tripwire (the r8 form could still drop a write that
     * was in flight when the lock appeared):
-    *  - the [[CompactLock]] refuses concurrent writes and compactions;
+    *  - the [[CompactLock]] refuses concurrent batches (before they
+    *    open a state table) and compactions;
     *  - after acquiring the lock, the compaction WAITS until the newest
-    *    [[AppendHeartbeat]] is at least `settleMillis` old — a write
+    *    [[AppendHeartbeat]] is at least `settleMillis` old — a batch
     *    that slipped past the lock check heartbeats before and after
     *    it, so the swap cannot start while one is plausibly in flight
-    *    (set `settleMillis` >= the stream's trigger interval);
-    *  - a write that completes under the lock fails ITS batch loudly
+    *    (set `settleMillis` >= the stream's batch duration);
+    *  - a batch that completes under the lock fails loudly
     *    (see [[leased]]) — replayed by the checkpoint after the
     *    compaction, idempotently;
     *  - as a final backstop, [[Writers.compactBucketedTable]] re-checks

@@ -42,6 +42,20 @@ import graft.llm.Dedup
   */
 object StreamingDedup {
 
+  /** The monitor's stream over the JSON files landing in `landingDir`,
+    * with `buckets` pinned to `indexDir` before the first batch
+    * ([[MicroBatch.pinnedBuckets]]): a reopen under another count raises
+    * at start; the plain layout (0) pins nothing. */
+  private def run(spark: SparkSession, landingDir: String,
+      schema: StructType, indexDir: String, outDir: String,
+      trigger: Trigger, buckets: Int = 0)(
+      body: MicroBatch.Batch => Unit): StreamingQuery = {
+    if (buckets > 0) MicroBatch.pinnedBuckets(spark, indexDir,
+      Some(buckets), buckets, "buckets")
+    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
+      s"$outDir/_checkpoint", trigger)(body)
+  }
+
   /** Start the streaming dedup. `docs` schema must carry doc_id + text.
     * Candidates (d_new, d_old, est_jaccard) land under
     * `outDir/candidates/batch=<id>`; the growing band index under
@@ -56,8 +70,7 @@ object StreamingDedup {
       minEstJaccard: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow(),
       buckets: Int = 0): StreamingQuery =
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, indexDir, outDir, trigger, buckets) { b =>
       // bands computed ONCE per batch, reused for probe + append
       val batchBands = b.pins.pin(Dedup.minhashBands(b.df))
       val idx = b.store(indexDir,
@@ -96,8 +109,7 @@ object StreamingDedup {
       buckets: Int = 0): StreamingQuery = {
     import org.apache.spark.sql.functions.unbase64
     import graft.llm.Multimodal
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, indexDir, outDir, trigger, buckets) { b =>
       // bands computed ONCE per batch, reused for probe + append
       val batchBands = b.pins.pin(Multimodal.phashBands(
         b.df.select(col("doc_id"), unbase64(col("media_b64")).as("media"))))
@@ -161,8 +173,7 @@ object StreamingDedup {
       trigger: Trigger = Trigger.AvailableNow(),
       buckets: Int = 0): StreamingQuery = {
     import org.apache.spark.sql.functions.count
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, indexDir, outDir, trigger, buckets) { b =>
       // suffix keys computed ONCE per batch, reused for probe + append
       // (wide=false: a micro-batch frame keeps the AQE-coalescible
       // spread — 32 pinned tasks per small batch is pure overhead)
@@ -243,8 +254,7 @@ object StreamingDedup {
       trigger: Trigger = Trigger.AvailableNow(),
       buckets: Int = 0): StreamingQuery = {
     import org.apache.spark.sql.functions.levenshtein
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, indexDir, outDir, trigger, buckets) { b =>
       val vocabB = graft.llm.Fuzzy.vocab(b.df) // (tok, c)
       // variants computed ONCE per batch, reused for probe + append
       val vars = b.pins.pin(graft.llm.Fuzzy.deletionVariants(vocabB))
@@ -347,8 +357,7 @@ object StreamingDedup {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{broadcast, md5, row_number}
-    MicroBatch.run(MicroBatch.source(spark, landingDir, schema, "json"),
-        s"$outDir/_checkpoint", trigger) { b =>
+    run(spark, landingDir, schema, stateDir, outDir, trigger) { b =>
       val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
       val batchDocs = b.pins.pin(b.df // reused by probe + both writes
         .select(col("doc_id"), col("text"), md5(col("text")).as("fp"))

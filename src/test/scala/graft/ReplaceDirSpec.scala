@@ -153,6 +153,24 @@ class ReplaceDirSpec extends AnyFunSuite with TestSpark {
     assert(!exists(Writers.swapTmp(d)) && !exists(Writers.swapOld(d)))
   }
 
+  test("a stage cleared before the swap fails it and leaves the live " +
+      "dir byte-identical, never swapping in an empty copy") {
+    val d = liveDir()
+    tbl(v1.toSeq: _*).write.parquet(d)
+    val before = bytes(d)
+    val ex = intercept[java.io.IOException] {
+      Writers.replaceDir(spark, d) { stage =>
+        tbl(v2.toSeq: _*).write.parquet(stage)
+        // a concurrent open's recoverDir sees `d` live and clears the
+        // complete stage as stale
+        assert(Writers.recoverDir(spark, d) == "clean")
+      }
+    }
+    assert(ex.getMessage.contains("vanished"), ex.getMessage)
+    assert(bytes(d) == before)
+    assert(!exists(Writers.swapTmp(d)) && !exists(Writers.swapOld(d)))
+  }
+
   test("compactBucketedTable aborts when an append races its snapshot: " +
       "original files and catalog entry untouched") {
     val tmp = Files.createTempDirectory("graft-swap-race").toString

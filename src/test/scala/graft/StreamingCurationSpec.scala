@@ -308,6 +308,69 @@ class StreamingCurationSpec extends AnyFunSuite with TestSpark {
       s"append under a compaction lock did not fail loudly: ${messages(ex)}")
   }
 
+  test("a batch under a held compaction lock fails before it opens a " +
+      "state table: the compaction's stage survives") {
+    val landing = Files.createTempDirectory("sstage-land").toString
+    val state = Files.createTempDirectory("sstage-state").toString
+    val out = Files.createTempDirectory("sstage-out").toString
+    def writeBatch(name: String, ids: Seq[Long]): Unit =
+      Files.write(Paths.get(landing, name), ids.map(i =>
+        s"""{"doc_id":$i,"lang":"en","text":"stage doc $i"}""")
+        .mkString("\n").getBytes)
+    writeBatch("b1.json", 0L until 50L)
+    StreamingCuration.start(spark, landing, schema, state, out,
+      rates, defaultRate).awaitTermination()
+    // a compaction mid-run in another session: lock held, its complete
+    // stage of train_fp written, and this session's catalog entry gone
+    val stage = Writers.swapTmp(s"$state/train_fp")
+    spark.range(3).selectExpr("CAST(id AS STRING) AS fp")
+      .write.parquet(stage)
+    Files.write(Paths.get(state, StreamingCuration.CompactLock),
+      Array.emptyByteArray)
+    spark.sql(s"DROP TABLE ${StreamingCuration.stateTable(state, "train_fp")}")
+    writeBatch("b2.json", 100L until 150L)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingCuration.start(spark, landing, schema, state, out,
+        rates, defaultRate).awaitTermination()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e =>
+        Option(e.getMessage).toSeq ++ messages(e.getCause))
+    assert(messages(ex).exists(_.contains("compactState is running")),
+      s"a batch under a compaction lock did not fail loudly: ${messages(ex)}")
+    assert(Files.exists(Paths.get(stage, "_SUCCESS")),
+      "opening the state table under the lock cleared the compaction's stage")
+  }
+
+  test("a stream that opens a state table a crashed compaction left " +
+      "aside reads the restored history, not an empty one") {
+    val landing = Files.createTempDirectory("sopen-land").toString
+    val state = Files.createTempDirectory("sopen-state").toString
+    val out = Files.createTempDirectory("sopen-out").toString
+    val trainId = (0L until 1000L).find(split(_) == "train").get
+    val testId = (0L until 1000L).find(split(_) == "test").get
+    def writeBatch(name: String, id: Long): Unit =
+      Files.write(Paths.get(landing, name),
+        s"""{"doc_id":$id,"lang":"en","text":"a leaked eval passage"}"""
+          .getBytes)
+    def run(): Unit = StreamingCuration.start(spark, landing, schema, state,
+      out, rates, defaultRate).awaitTermination()
+    writeBatch("b1.json", trainId)
+    run()
+    // the crash window between train_fp's swap renames, in a session
+    // whose catalog has no entry for it
+    spark.sql(s"DROP TABLE ${StreamingCuration.stateTable(state, "train_fp")}")
+    Files.move(Paths.get(state, "train_fp"),
+      Paths.get(Writers.swapOld(s"$state/train_fp")))
+    // the test copy of the train doc arrives: it must probe the history
+    writeBatch("b2.json", testId)
+    run()
+    assert(Files.exists(Paths.get(state, "train_fp")))
+    val counts = StreamingCuration.contaminationCounts(spark, state, out).head()
+    assert(counts.getLong(1) == 1L,
+      s"the restored train history was not probed: $counts")
+  }
+
   test("a state dir in the flat layout of older releases fails on open " +
       "instead of reading as empty history") {
     val landing = Files.createTempDirectory("sflat-land").toString
