@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.Cumulative
+
 /** One-command data-quality pack: the classic table-audit set
   * (null-completeness, distinct cardinality, numeric moments, Benford
   * first-digit shares, equi-depth histograms, primary-key uniqueness)
@@ -12,10 +14,10 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: every check is either a single map-side-combined
   * aggregate over the table (null/distinct/moments — |columns| output
-  * rows), a 9-key-per-column aggregate (Benford), or the q153 two-phase
+  * rows), a 9-key-per-column aggregate (Benford), or the q153
   * value-grid cumulative (equi-depth) — nothing here shuffles more than
-  * the value grid, and no unpartitioned window ever sees more than a
-  * bounded digit/block-summary set.
+  * the value grid, and no unpartitioned window ever sees more than the
+  * 9-row digit set.
   */
 object Dq {
 
@@ -128,53 +130,42 @@ object Dq {
     }.reduce(_.unionByName(_)).orderBy(col("col_name"), col("digit"))
   }
 
-  /** Equi-depth histogram over one value column: `nb` buckets with
-    * VALUE-PINNED boundaries — thr_i is the smallest value whose
-    * cumulative count satisfies nb·cum >= i·n (ties land low). The
-    * cumulative pass runs on the VALUE GRID with the ScaleWindows
-    * two-phase shape (local cums partitioned by a value-derived block,
-    * then a window over the bounded block summaries) — no unpartitioned
-    * window ever sees grid-many rows. `blockWidth` pins the block
-    * derivation (q153 uses 10000 for o_totalprice); when <= 0 it is
-    * derived as range/256 from one min/max aggregate.
+  /** Equi-depth histogram over the non-null values of one column (nulls
+    * are `nullProfile`'s to count): `nb` buckets with VALUE-PINNED
+    * boundaries — thr_i is the smallest value whose cumulative count
+    * satisfies nb·cum >= i·n (ties land low). The cumulative runs on the
+    * VALUE GRID through [[Cumulative]], on value blocks of `blockWidth`
+    * (q153 uses 10000 for o_totalprice); when <= 0 it is derived as
+    * range/256 from one min/max aggregate, so <= 257 blocks.
     */
   def equidepthHistogram(df: DataFrame, c: String, nb: Int = 8,
       blockWidth: Double = 0.0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val s = df.sparkSession
+    val vals = df.select(col(c).as("v")).filter(col("v").isNotNull)
     val width =
       if (blockWidth > 0) blockWidth
       else {
-        val r = df.agg(min(col(c)).cast("double"),
-          max(col(c)).cast("double")).head()
+        val r = vals.agg(min(col("v")).cast("double"),
+          max(col("v")).cast("double")).head()
         if (r.isNullAt(0)) 1.0
         else math.max((r.getDouble(1) - r.getDouble(0)) / 256.0, 1e-9)
       }
-    val grid = df
-      .groupBy(col(c).as("v")).agg(count(lit(1)).as("cnt"))
-      .withColumn("blk", floor(col("v").cast("double") / width)
-        .cast("long"))
-    val wLocal = Window.partitionBy(col("blk")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = grid.withColumn("local_cum", sum(col("cnt")).over(wLocal))
-    val wOff = Window.orderBy(col("blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = local.groupBy(col("blk")).agg(sum(col("cnt")).as("bs"))
-      .select(col("blk"),
-        coalesce(sum(col("bs")).over(wOff), lit(0L)).as("off"))
-    val cum = local.join(broadcast(offs), Seq("blk"))
-      .select(col("v"), (col("local_cum") + col("off")).as("cum"))
+    val grid = vals.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
+    val cum = Cumulative.running(
+      grid.withColumn("blk", floor(col("v").cast("double") / width)),
+      Nil, "blk", Seq(col("v")), col("cnt"), Cumulative.Sum,
+      inclusive = true, "cum")
     val n1 = grid.agg(sum(col("cnt")).as("n"))
     val thrArr = cum.crossJoin(broadcast(n1))
       .crossJoin(broadcast(s.range(1, nb).toDF("i")))
       .filter(col("cum") * nb >= col("i") * col("n"))
       .groupBy(col("i")).agg(min(col("v")).as("thr"))
       .agg(sort_array(collect_list(col("thr"))).as("ts"))
-    df.crossJoin(broadcast(thrArr))
+    vals.crossJoin(broadcast(thrArr))
       .select(
-        (size(filter(col("ts"), x => x < col(c))) + 1)
+        (size(filter(col("ts"), x => x < col("v"))) + 1)
           .cast("int").as("bucket"),
-        col(c).as("v"))
+        col("v"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"),
         min(col("v")).as("lo"), max(col("v")).as("hi"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.plans.Cumulative
 import graft.queries.Q
 
 /** Character-level (edit-distance) fuzzy matching over the corpus
@@ -196,31 +197,18 @@ object Fuzzy {
   }
 
   /** Rank every vocabulary token in lexicographic order WITHOUT a global
-    * single-task sort (r12 verdict #1): the two-phase block rank the
-    * repo uses for corpus-scaled grids (q153/q159/q191/q195 —
-    * `queries/Advanced.scala` `avgRanks`). Block = the token's 2-char
-    * prefix; because the block key is a PREFIX of the sort key, tokens
-    * of one block are contiguous in the global token order and block
-    * order == token order, so local rank within a block + the exclusive
-    * sum of earlier blocks' sizes IS the exact global rank. The local
-    * window partitions by block (vocabulary spread over all tasks); the
-    * offset window runs over the block SUMMARIES — bounded by the
-    * alphabet squared, never by the vocabulary — and rides a broadcast.
-    * FuzzySpec pins the plan: no unpartitioned WindowExec over
-    * vocabulary-sized input.
+    * single-task sort (r12 verdict #1): a [[Cumulative]] rank whose
+    * block is the token's 2-char prefix — a prefix of the sort key, so
+    * block order is token order and the block summaries are bounded by
+    * the alphabet squared, never by the vocabulary. FuzzySpec pins the
+    * plan: no unpartitioned WindowExec over vocabulary-sized input.
     */
-  private[graft] def blockRankIds(v: DataFrame): DataFrame = {
-    val blocked = v.select(col("tok"), substring(col("tok"), 1, 2).as("blk"))
-    val local = blocked.withColumn("lr",
-      row_number().over(
-        Window.partitionBy(col("blk")).orderBy(col("tok"))).cast("long"))
-    val wOff = Window.orderBy(col("blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = blocked.groupBy(col("blk")).agg(count(lit(1)).as("bs"))
-      .select(col("blk"), coalesce(sum(col("bs")).over(wOff), lit(0L)).as("off"))
-    local.join(broadcast(offs), Seq("blk"))
-      .select(col("tok"), (col("lr") + col("off")).as("id"))
-  }
+  private[graft] def blockRankIds(v: DataFrame): DataFrame =
+    Cumulative.running(
+        v.select(col("tok"), substring(col("tok"), 1, 2).as("blk")), Nil,
+        "blk", Seq(col("tok")), lit(1L), Cumulative.Sum, inclusive = true,
+        "id")
+      .select(col("tok"), col("id"))
 
   /** Typo-cluster canonicalization: connected components over the fuzzy
     * pair graph, every vocabulary term labeled with its component's

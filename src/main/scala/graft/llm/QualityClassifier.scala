@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Pins, Tables}
+import graft.plans.Cumulative
 import graft.queries.Q
 
 /** Distributed logistic-regression quality classifier — the linear core
@@ -265,19 +266,19 @@ object QualityClassifier {
   )
 
   /** Tie-aware AUC of scores against a stored weight artifact. The
-    * per-distinct-score aggregation bounds the window input at 10 001
-    * rows (the 4-decimal score grid) regardless of corpus size.
+    * per-distinct-score aggregation bounds the cumulative's input at
+    * 10 001 rows (the 4-decimal score grid) regardless of corpus size;
+    * its blocks are the 101 hundredths of [0, 1].
     */
   def aucWith(featsDf: DataFrame, weights: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val g = scoreWith(featsDf, weights)
       .groupBy(col("p_score"))
       .agg(sum(col("y")).as("n_pos"),
         (count(lit(1)) - sum(col("y"))).as("n_neg"))
-    val w = Window.orderBy(col("p_score"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val cum = g.withColumn("neg_below",
-      coalesce(sum(col("n_neg")).over(w), lit(0L)))
+    val cum = Cumulative.running(
+      g.withColumn("blk", floor(col("p_score") * 100)), Nil, "blk",
+      Seq(col("p_score")), col("n_neg"), Cumulative.Sum, inclusive = false,
+      "neg_below")
     val tot = g.agg(sum(col("n_pos")).as("p_tot"),
       sum(col("n_neg")).as("n_tot"))
     cum.crossJoin(broadcast(tot))

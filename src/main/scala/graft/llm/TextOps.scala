@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Pins, Tables}
+import graft.plans.Cumulative
 import graft.queries.Q
 
 /** Text-analysis operators for LLM training-data pipelines, over the
@@ -95,45 +96,23 @@ object TextOps {
     * A single cumsum window keyed on `lang` alone puts an ENTIRE
     * language's rows in one task — `lang` has ~5 distinct values, so at
     * 100 TB that's a multi-TB single-task sort (and AQE's skew splitting
-    * does not apply to Window). Same cure as
-    * [[graft.queries.ScaleWindows.runningSumAtScale]]:
-    *
-    * Phase 1 windows by (lang, doc_id-range block) — `floor(doc_id /
-    * blockSize)` is non-decreasing in the ORDER BY, so each block is a
-    * contiguous slice of the language's doc sequence and its local
-    * exclusive prefix sum is a piece of the global one.
-    *
-    * Phase 2 turns per-(lang, block) token totals into exclusive block
-    * offsets with a window over block SUMMARIES (rows per language =
-    * number of blocks, independent of corpus row rate), then joins the
-    * offset back on the keys phase 1 already partitioned by.
-    *
-    * Token counts are longs, so the regrouped addition is exact —
-    * bit-identical to the single-window form (pinned in SkewSpec).
+    * does not apply to Window). The exclusive running token count is a
+    * [[Cumulative]] per language on doc_id-range blocks of `blockSize`
+    * (non-decreasing in doc_id). Token counts are longs, so the regrouped
+    * addition is exact — bit-identical to the single-window form (pinned
+    * in SkewSpec).
     */
   def packChunks(docsDf: DataFrame, budget: Long,
       blockSize: Long = 1024L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = docsDf.select(
       col("doc_id"), col("lang"),
       when(trim(col("text")) === "", 0)
         .otherwise(size(tokens(col("text")))).cast("long").as("nt"),
       floor(col("doc_id") / blockSize).as("__blk"))
-    val wLocal = Window.partitionBy(col("lang"), col("__blk"))
-      .orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = base.withColumn("local_before",
-      coalesce(sum(col("nt")).over(wLocal), lit(0L)))
-    val wOff = Window.partitionBy(col("lang")).orderBy(col("__blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local
-      .groupBy(col("lang"), col("__blk"))
-      .agg(sum(col("nt")).as("blk_sum"))
-      .select(col("lang"), col("__blk"),
-        coalesce(sum(col("blk_sum")).over(wOff), lit(0L)).as("offset"))
-    local.join(offsets, Seq("lang", "__blk"))
+    Cumulative.running(base, Seq("lang"), "__blk", Seq(col("doc_id")),
+      col("nt"), Cumulative.Sum, inclusive = false, "before")
       .select(col("doc_id"), col("lang"), col("nt"),
-        floor((col("local_before") + col("offset")) / budget).as("chunk"))
+        floor(col("before") / budget).as("chunk"))
   }
 
   /** Fixed-width overlapping character chunks (RAG / long-context
@@ -1345,7 +1324,6 @@ object TextOps {
     // doc_id tie-break and land identically in both engines.
     Q("q102_entropy_gate",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         // two scans by design: the threshold branch prunes `lang`, so
         // its subtree can never canonically match the gate branch and
         // ReuseExchange cannot apply (verified in the executed plan —
@@ -1359,15 +1337,14 @@ object TextOps {
             charEntropy(col("text")).as("entropy"))
         // per-value counts: map-side-combined agg onto a table bounded
         // by the 4-dp value grid (entropy <= ln(charset) < 15 → at most
-        // ~150k distinct values at ANY corpus size — the q118
-        // rounding-bounded-window argument), so the unpartitioned
-        // cumulative window below is driver-safe and scale-free
+        // ~150k distinct values at ANY corpus size); its cumulative runs
+        // on tenth-of-a-nat blocks, <= ~150 of them
         val vc = ent.groupBy(col("entropy")).agg(count(lit(1)).as("c"))
         val total = ent.agg(count(lit(1)).as("n_total"))
-        val cum = vc.crossJoin(broadcast(total))
-          .withColumn("cum", sum(col("c")).over(
-            Window.orderBy(col("entropy"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        val cum = Cumulative.running(vc.crossJoin(broadcast(total))
+            .withColumn("blk", floor(col("entropy") * 10)), Nil, "blk",
+          Seq(col("entropy")), col("c"), Cumulative.Sum, inclusive = true,
+          "cum")
         val thr = cum
           .filter(col("cum") >= floor(lit(0.1) * col("n_total")))
           .agg(min(col("entropy")).as("thr"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.etl.{Dq, Writers}
+import graft.plans.Cumulative
 
 /** Analytic operators beyond the reference's surface that a complete
   * engine needs: rollup with grouping flags, lag/lead deltas, filtered
@@ -1024,12 +1025,10 @@ object Advanced {
     // buckets): 8 buckets with VALUE-PINNED boundaries — thr_i is the
     // smallest price whose cumulative count satisfies 8·cum ≥ i·n, the
     // q102/q144 integer rule, ties landing low. The cumulative pass
-    // runs on the VALUE GRID with the ScaleWindows two-phase shape
-    // (local cums partitioned by a value-derived block, then a window
-    // over the ~60-row block summaries) — no unpartitioned window ever
-    // sees grid-many rows, so near-unique value columns can't funnel
-    // one task. The 7 thresholds fold into one broadcast array and
-    // bucket assignment is a map-side HOF.
+    // runs on the VALUE GRID through Cumulative on ~60 price blocks, so
+    // near-unique value columns can't funnel one task. The 7
+    // thresholds fold into one broadcast array and bucket assignment is
+    // a map-side HOF.
     Q("q153_equidepth_histogram",
       (s, d) => Dq.equidepthHistogram(t(s, d, "orders"), "o_totalprice",
         nb = 8, blockWidth = 10000),
@@ -1169,12 +1168,8 @@ object Advanced {
     // monotone relations). Average tie ranks come off the VALUE GRID,
     // never a per-row window: rank(v) = cum-below + (ties+1)/2 — but
     // the grid of a CONTINUOUS column (price) is near row-cardinality
-    // and the group key has only 3 values, so a plain per-group
-    // cumulative window would sort tens of millions of grid rows in
-    // one task at scale. The cumulative therefore runs the q153
-    // ScaleWindows two-phase shape per group: local integer cums
-    // partitioned by (g, value-derived block), then one window over
-    // the bounded (g, block) summaries for the offsets. Exact integer
+    // and the group key has only 3 values, so the cum-below is a
+    // Cumulative per group on value blocks of `blockW`. Exact integer
     // arithmetic throughout + one double step; two grid joins pair the
     // ranks and one Pearson aggregate (rounded, the q53 convention)
     // finishes.
@@ -1184,22 +1179,12 @@ object Advanced {
             out: String): DataFrame = {
           val grid = rows.groupBy(col("g"), col(vcol).as("v"))
             .agg(count(lit(1)).as("cnt"))
-            .withColumn("blk", floor(col("v") / blockW).cast("long"))
-          val wLocal = Window.partitionBy(col("g"), col("blk"))
-            .orderBy(col("v")).rowsBetween(Window.unboundedPreceding, -1)
-          val local = grid.withColumn("lc",
-            coalesce(sum(col("cnt")).over(wLocal), lit(0L)))
-          // block summaries: |groups| x |value-range / blockW| rows —
-          // bounded by construction, safe to broadcast
-          val wOff = Window.partitionBy(col("g")).orderBy(col("blk"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-          val offs = grid.groupBy(col("g"), col("blk"))
-            .agg(sum(col("cnt")).as("bs"))
-            .select(col("g"), col("blk"),
-              coalesce(sum(col("bs")).over(wOff), lit(0L)).as("off"))
-          local.join(broadcast(offs), Seq("g", "blk"))
+          Cumulative.running(
+              grid.withColumn("blk", floor(col("v") / blockW).cast("long")),
+              Seq("g"), "blk", Seq(col("v")), col("cnt"), Cumulative.Sum,
+              inclusive = false, "below")
             .select(col("g"), col("v").as(vcol),
-              (col("lc") + col("off") + (col("cnt") + 1) / 2.0).as(out))
+              (col("below") + (col("cnt") + 1) / 2.0).as(out))
         }
         val rows = t(s, d, "lineitem").select(col("l_returnflag").as("g"),
           col("l_quantity").as("x"), col("l_extendedprice").as("y"))
@@ -1733,11 +1718,9 @@ object Advanced {
     // user's consecutive events of each type) — the latency-SLO readout
     // ops watches. Percentiles are VALUE-PINNED integers (smallest gap
     // with 100·cum >= p·n, ties low — the q102/q153 rule: no float
-    // interpolation for engines to disagree on). The cumulative runs
-    // the q153 two-phase block shape per event type (hour-width gap
-    // blocks → local cums + a window over block summaries), so a
-    // near-unique second-resolution gap grid never sorts in one task —
-    // the q159 lesson applied up front.
+    // interpolation for engines to disagree on). The cumulative is a
+    // Cumulative per event type on hour-width gap blocks, so a
+    // near-unique second-resolution gap grid never sorts in one task.
     Q("q191_gap_percentiles",
       (s, d) => {
         val wg = Window.partitionBy(col("user_id"), col("event_type"))
@@ -1747,22 +1730,12 @@ object Advanced {
             (unix_timestamp(col("ts")) -
               lag(unix_timestamp(col("ts")), 1).over(wg)).as("gap"))
           .filter(col("gap").isNotNull)
-        val grid = gaps.groupBy(col("event_type"), col("gap"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("blk", floor(col("gap") / 3600).cast("long"))
-        val wLocal = Window.partitionBy(col("event_type"), col("blk"))
-          .orderBy(col("gap"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val local = grid.withColumn("lc", sum(col("cnt")).over(wLocal))
-        val wOff = Window.partitionBy(col("event_type")).orderBy(col("blk"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offs = local.groupBy(col("event_type"), col("blk"))
-          .agg(sum(col("cnt")).as("bs"))
-          .select(col("event_type"), col("blk"),
-            coalesce(sum(col("bs")).over(wOff), lit(0L)).as("off"))
-        val cum = local.join(offs, Seq("event_type", "blk"))
-          .select(col("event_type"), col("gap"),
-            (col("lc") + col("off")).as("cum"))
+        val cum = Cumulative.running(
+          gaps.groupBy(col("event_type"), col("gap"))
+            .agg(count(lit(1)).as("cnt"))
+            .withColumn("blk", floor(col("gap") / 3600).cast("long")),
+          Seq("event_type"), "blk", Seq(col("gap")), col("cnt"),
+          Cumulative.Sum, inclusive = true, "cum")
         val n = gaps.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         val ps = s.createDataFrame(Seq(Tuple1(50), Tuple1(90), Tuple1(99)))
           .toDF("p")
@@ -1857,16 +1830,10 @@ object Advanced {
     // 100-scale for readability), so classification never sits on a
     // float boundary. The supplier table is NOT bounded — it scales
     // with the corpus (TPC-H grows suppliers with SF: ~1e9 rows at
-    // 100 TB), so the descending cumulative runs the q153/q195
-    // two-phase block shape instead of one global window: 256 uniform
-    // value buckets over [min, max] revenue (block math on DOUBLES is
-    // plan-shape only — a block is a contiguous slice of the
-    // descending order, and the DECIMAL sums never touch it), local
-    // running sums per block, then one window over the 256 block
-    // summaries for the exclusive offsets. Equal revenues share a
-    // block (blk is a function of rev alone), so the suppkey tiebreak
-    // stays inside the local window and regrouped DECIMAL addition is
-    // bit-identical to the single-window form.
+    // 100 TB), so the descending cumulative is an un-keyed Cumulative
+    // on 256 uniform blocks of -rev (non-decreasing in the descending
+    // order; equal revenues share a block), and regrouped DECIMAL
+    // addition is bit-identical to the single-window form.
     Q("q193_pareto_abc",
       (s, d) => {
         val rev = t(s, d, "lineitem")
@@ -1875,26 +1842,10 @@ object Advanced {
               (lit(1.0) - col("l_discount")).cast("decimal(4,2)"))
               .as("r"))
           .groupBy(col("l_suppkey")).agg(sum(col("r")).as("rev"))
-        val bounds = rev.agg(min(col("rev")).cast("double").as("lo"),
-          max(col("rev")).cast("double").as("hi"))
-        val blocked = rev.crossJoin(broadcast(bounds))
-          .withColumn("blk", least(lit(255L), greatest(lit(0L),
-            floor((col("rev").cast("double") - col("lo")) * 256.0 /
-              (col("hi") - col("lo") + 1e-9)).cast("long"))))
-          .drop("lo", "hi")
-        val wLocal = Window.partitionBy(col("blk"))
-          .orderBy(col("rev").desc, col("l_suppkey"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val local = blocked.withColumn("lc", sum(col("rev")).over(wLocal))
-        val wOff = Window.orderBy(col("blk").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offs = blocked.groupBy(col("blk"))
-          .agg(sum(col("rev")).as("bs"))
-          .select(col("blk"),
-            coalesce(sum(col("bs")).over(wOff),
-              lit(0).cast("decimal(38,4)")).as("off"))
-        local.join(broadcast(offs), Seq("blk"))
-          .withColumn("cum", col("lc") + col("off"))
+        Cumulative.running(
+            Cumulative.uniformBlocks(rev, Nil, -col("rev"), "blk"), Nil,
+            "blk", Seq(col("rev").desc, col("l_suppkey")), col("rev"),
+            Cumulative.Sum, inclusive = true, "cum")
           .crossJoin(broadcast(rev.agg(sum(col("rev")).as("total"))))
           .select(col("l_suppkey"),
             round(col("rev").cast("double"), 2).as("revenue"),
@@ -1931,9 +1882,9 @@ object Advanced {
     // deterministic per value in both engines), so the percentile
     // bounds are the q102/q153 value-pinned rule, tail counts are
     // integer sums, and the means are exact integer sums with ONE
-    // float division at the end. The cumulative runs the q153/q191
-    // two-phase block shape per flag — a near-unique cent grid never
-    // sorts in one task.
+    // float division at the end. The cumulative is a Cumulative per
+    // flag on 10^6-cent blocks — a near-unique cent grid never sorts in
+    // one task.
     Q("q195_winsorize",
       (s, d) => {
         val base = t(s, d, "lineitem")
@@ -1941,19 +1892,10 @@ object Advanced {
             round(col("l_extendedprice") * 100, 0).cast("long").as("v"))
         val grid = base.groupBy(col("g"), col("v"))
           .agg(count(lit(1)).as("cnt"))
-          .withColumn("blk", floor(col("v") / 1000000).cast("long"))
-        val wLocal = Window.partitionBy(col("g"), col("blk"))
-          .orderBy(col("v"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val local = grid.withColumn("lc", sum(col("cnt")).over(wLocal))
-        val wOff = Window.partitionBy(col("g")).orderBy(col("blk"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offs = local.groupBy(col("g"), col("blk"))
-          .agg(sum(col("cnt")).as("bs"))
-          .select(col("g"), col("blk"),
-            coalesce(sum(col("bs")).over(wOff), lit(0L)).as("off"))
-        val cum = local.join(offs, Seq("g", "blk"))
-          .select(col("g"), col("v"), (col("lc") + col("off")).as("cum"))
+        val cum = Cumulative.running(
+          grid.withColumn("blk", floor(col("v") / 1000000).cast("long")),
+          Seq("g"), "blk", Seq(col("v")), col("cnt"), Cumulative.Sum,
+          inclusive = true, "cum")
         // n per flag from the GRID (Σ cnt — the
         // same integer by construction), not a second count over base:
         // the old base.groupBy(g) shuffled the corpus a second time
@@ -2026,8 +1968,8 @@ object Advanced {
     // p50/p90 seconds-to-convert: the "how long does the funnel take"
     // number q150's counts leave out. Stage times are q150's exact
     // user-keyed min-aggregates; deltas are integer seconds; the
-    // percentiles are VALUE-PINNED on the per-stage delta grid with
-    // the q191 two-phase block cumulative (per stage), so the
+    // percentiles are VALUE-PINNED on the per-stage delta grid with a
+    // Cumulative per stage on hour-width blocks, so the
     // user-cardinality delta grid never sorts in one task.
     Q("q196_funnel_latency",
       (s, d) => {
@@ -2049,21 +1991,12 @@ object Advanced {
             (unix_timestamp(col("t3")) - unix_timestamp(col("t2")))
               .as("secs"))
         val deltas = d1.unionByName(d2)
-        val grid = deltas.groupBy(col("stage"), col("secs"))
-          .agg(count(lit(1)).as("cnt"))
-          .withColumn("blk", floor(col("secs") / 3600).cast("long"))
-        val wLocal = Window.partitionBy(col("stage"), col("blk"))
-          .orderBy(col("secs"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val local = grid.withColumn("lc", sum(col("cnt")).over(wLocal))
-        val wOff = Window.partitionBy(col("stage")).orderBy(col("blk"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offs = local.groupBy(col("stage"), col("blk"))
-          .agg(sum(col("cnt")).as("bs"))
-          .select(col("stage"), col("blk"),
-            coalesce(sum(col("bs")).over(wOff), lit(0L)).as("off"))
-        val cum = local.join(offs, Seq("stage", "blk"))
-          .select(col("stage"), col("secs"), (col("lc") + col("off")).as("cum"))
+        val cum = Cumulative.running(
+          deltas.groupBy(col("stage"), col("secs"))
+            .agg(count(lit(1)).as("cnt"))
+            .withColumn("blk", floor(col("secs") / 3600).cast("long")),
+          Seq("stage"), "blk", Seq(col("secs")), col("cnt"),
+          Cumulative.Sum, inclusive = true, "cum")
         val n = deltas.groupBy(col("stage")).agg(count(lit(1)).as("n"))
         val ps = s.createDataFrame(Seq(Tuple1(50), Tuple1(90))).toDF("p")
         cum.join(n, Seq("stage"))
@@ -2343,39 +2276,24 @@ object Advanced {
     // (q90 mod, q207 HRW); THIS query is the exact-boundary decision
     // report Spark's sampling-based RangePartitioner can't give.
     //
-    // Exact global rank without a global sort: the q193/q195 two-phase
-    // block shape — 256 uniform integer blocks over [min, max] length
-    // (blk is a function of n_chars alone, so ties share a block and
-    // the doc_id tiebreak stays inside the local window), local
-    // row_number per block, exclusive block offsets from a window over
-    // the 256-row block summary on a broadcast. Shard assignment is
-    // pure integer math (rank0 * 16 div N) — no float anywhere, so the
-    // boundary rows can't straddle engines. Same caveat as q193/q195:
-    // blocks are uniform over the VALUE range, so a degenerate corpus
-    // whose keys concentrate in one 1/256th slice concentrates that
-    // block's local sort — on real length distributions the blocks
-    // spread; for a known-degenerate key, block on a finer grid.
+    // Exact global rank without a global sort: a Cumulative rank on
+    // 256 uniform blocks of n_chars (ties share a block). Shard
+    // assignment is pure integer math (rank0 * 16 div N), so the
+    // boundary rows can't straddle engines. Blocks are uniform over the
+    // VALUE range, so a degenerate corpus whose keys concentrate in one
+    // 1/256th slice concentrates that block's local sort — on real
+    // length distributions the blocks spread; for a known-degenerate
+    // key, block on a finer grid.
     Q("q209_range_shards",
       (s, d) => {
         val k = t(s, d, "documents")
           .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
-        val bounds = k.agg(min(col("n_chars")).as("lo"),
-          max(col("n_chars")).as("hi"),
-          count(lit(1)).as("n"))
-        val blocked = k.crossJoin(broadcast(bounds))
-          .withColumn("blk",
-            least(lit(255L), expr("(n_chars - lo) * 256 div (hi - lo + 1)")))
-        val wLocal = Window.partitionBy(col("blk"))
-          .orderBy(col("n_chars"), col("doc_id"))
-        val local = blocked.withColumn("rn", row_number().over(wLocal))
-        val wOff = Window.orderBy(col("blk"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offs = blocked.groupBy(col("blk"))
-          .agg(count(lit(1)).as("bn"))
-          .select(col("blk"), coalesce(sum(col("bn")).over(wOff), lit(0L))
-            .as("off"))
-        local.join(broadcast(offs), Seq("blk"))
-          .withColumn("shard", expr("(off + rn - 1) * 16 div n"))
+        Cumulative.running(
+            Cumulative.uniformBlocks(k, Nil, col("n_chars"), "blk"), Nil,
+            "blk", Seq(col("n_chars"), col("doc_id")), lit(1L),
+            Cumulative.Sum, inclusive = true, "rk")
+          .crossJoin(broadcast(k.agg(count(lit(1)).as("n"))))
+          .withColumn("shard", expr("(rk - 1) * 16 div n"))
           .groupBy(col("shard"))
           .agg(count(lit(1)).as("n_docs"),
             min(col("n_chars")).as("lo_chars"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core.{Pins, Tables}
+import graft.plans.Cumulative
 
 /** Decision-support frontier operators: the remaining classic TPC-H
   * subquery decorrelation shapes (EXISTS with a non-equi correlated
@@ -14,12 +15,12 @@ import graft.core.{Pins, Tables}
   * rolling-window distinct users.
   *
   * Shared scale discipline (the q193/q195 house rules): no global
-  * single-task windows — the skyline runs the two-phase block shape
-  * per group; money accumulates in DECIMAL and rounds BEFORE the
-  * double cast; comparisons that gate membership (the Q22 threshold)
-  * are exact cross-multiplied integers, never a float average; the
-  * rolling-distinct explodes each user-day into its ≤W windows instead
-  * of range-joining days against the corpus.
+  * single-task windows — the skyline and the global ranks run through
+  * [[graft.plans.Cumulative]]; money accumulates in DECIMAL and rounds
+  * BEFORE the double cast; comparisons that gate membership (the Q22
+  * threshold) are exact cross-multiplied integers, never a float
+  * average; the rolling-distinct explodes each user-day into its ≤W
+  * windows instead of range-joining days against the corpus.
   */
 object Frontier {
 
@@ -39,13 +40,10 @@ object Frontier {
     * best `mx` among STRICTLY cheaper rows and (ii) equals the best
     * `mx` at its own price point. Both maxima come from a per-(grp,
     * mn) aggregate — one map-side-combined shuffle, |distinct prices|
-    * rows — run through the q193 two-phase cumulative: 256 uniform
-    * value blocks per group (blk is a function of mn alone, so equal
-    * prices share a block and ties never straddle the boundary), a
-    * local running max per (grp, blk) partition, and one window over
-    * the ≤256-per-group BLOCK SUMMARIES for the exclusive prefix. No
-    * single-task sort at any width of group; the final membership
-    * test is a shuffle join back on (grp, mn) plus a map-side filter.
+    * rows — and the first is its exclusive running max through
+    * [[Cumulative]], on 256 uniform price blocks per group (a group of
+    * any width never sorts in one task); the final membership test is
+    * a shuffle join back on (grp, mn) plus a map-side filter.
     */
   def skyline2d(df: DataFrame, grp: String, mnCol: Column,
       mxCol: Column): DataFrame = {
@@ -55,28 +53,13 @@ object Frontier {
       .filter(col("_mn").isNotNull && col("_mx").isNotNull)
     val g = pts.groupBy(col(grp), col("_mn"))
       .agg(max(col("_mx")).as("_m2"))
-    val bounds = g.groupBy(col(grp))
-      .agg(min(col("_mn")).as("_lo"), max(col("_mn")).as("_hi"))
-    val blocked = g.join(bounds, Seq(grp))
-      .withColumn("_blk", least(lit(255L), greatest(lit(0L),
-        floor((col("_mn") - col("_lo")).cast("double") * 256.0 /
-          ((col("_hi") - col("_lo")).cast("double") + 1e-9)).cast("long"))))
-      .drop("_lo", "_hi")
-    val wLoc = Window.partitionBy(col(grp), col("_blk")).orderBy(col("_mn"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val loc = blocked.withColumn("_lmax", max(col("_m2")).over(wLoc))
-    val wOff = Window.partitionBy(col(grp)).orderBy(col("_blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = blocked.groupBy(col(grp), col("_blk"))
-      .agg(max(col("_m2")).as("_bmax"))
-      .withColumn("_off", max(col("_bmax")).over(wOff))
-      .drop("_bmax")
-    // m1 = best mx among strictly cheaper rows (local prefix within the
-    // block ∨ prefix over earlier blocks); NULL when none exist.
-    val pre = loc.join(offs, Seq(grp, "_blk"))
+    // m1 = best mx among strictly cheaper rows; NULL when none exist
+    val pre = Cumulative.running(
+      Cumulative.uniformBlocks(g, Seq(grp), col("_mn"), "_blk"), Seq(grp),
+      "_blk", Seq(col("_mn")), col("_m2"), Cumulative.Max,
+      inclusive = false, "_m1")
       .select(col(grp), col("_mn"), col("_m2"),
-        greatest(coalesce(col("_lmax"), lit(Long.MinValue)),
-          coalesce(col("_off"), lit(Long.MinValue))).as("_m1"))
+        coalesce(col("_m1"), lit(Long.MinValue)).as("_m1"))
     pts.join(pre, Seq(grp, "_mn"))
       .filter(col("_mx") > col("_m1") && col("_mx") === col("_m2"))
       .drop("_mn", "_mx", "_m1", "_m2")
@@ -162,49 +145,23 @@ object Frontier {
       .orderBy(col("event_type"), col("day"))
   }
 
+  /** Exact GLOBAL dense row-rank (1..n by ascending (`xName`,
+    * `idName`)) without a single-task sort: a [[Cumulative]] rank on
+    * 256 uniform value blocks, so equal values share a block. Adds a
+    * `rank` long column; both inputs must be non-null integral columns.
+    */
+  def blockRank(df: DataFrame, xName: String, idName: String): DataFrame =
+    Cumulative.running(Cumulative.uniformBlocks(df, Nil, col(xName), "_rblk"),
+      Nil, "_rblk", Seq(col(xName), col(idName)), lit(1L),
+      Cumulative.Sum, inclusive = true, "rank")
+      .drop("_rblk")
+
   /** q231's exact Gini fold on any (id, x4) frame with non-negative
     * DECIMAL(38,0) values — exposed for planted specs. Returns one row
     * (n DECIMAL-cast long, sx DECIMAL, gini double): G = (2·Σ rank·x −
-    * (n+1)·Σx)/(n·Σx) over ascending (x4, id) ranks, every sum exact
-    * DECIMAL(38,0), ONE double division. The global rank is the
-    * q209/q193 two-phase block shape — 256 uniform value blocks, local
-    * row_number per block (ties share a block: blk is a function of x4
-    * alone), exclusive count offsets from a window over the block
-    * summaries — so the population never sorts in one task.
+    * (n+1)·Σx)/(n·Σx) over ascending (x4, id) ranks from
+    * [[blockRank]], every sum exact DECIMAL(38,0), ONE double division.
     */
-  /** Exact GLOBAL dense row-rank (1..n by ascending (`xName`,
-    * `idName`)) without a single-task sort — the q209/q193/q231
-    * two-phase block shape factored for reuse: 256 uniform value
-    * blocks (blk is a function of the value alone, so equal values
-    * share a block and ties never straddle a boundary), a local
-    * row_number per block partition, and exclusive count offsets from
-    * one window over the ≤256 block summaries on a broadcast. Adds a
-    * `rank` long column; both inputs must be non-null integral
-    * columns.
-    */
-  def blockRank(df: DataFrame, xName: String, idName: String): DataFrame = {
-    val bounds = df.agg(min(col(xName)).cast("double").as("lo"),
-      max(col(xName)).cast("double").as("hi"))
-    val blocked = df.crossJoin(broadcast(bounds))
-      .withColumn("blk", least(lit(255L), greatest(lit(0L),
-        floor((col(xName).cast("double") - col("lo")) * 256.0 /
-          (col("hi") - col("lo") + 1e-9)).cast("long"))))
-      .drop("lo", "hi")
-    val wLoc = Window.partitionBy(col("blk"))
-      .orderBy(col(xName), col(idName))
-    val wOff = Window.orderBy(col("blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = blocked.groupBy(col("blk"))
-      .agg(count(lit(1)).as("bn"))
-      .select(col("blk"),
-        coalesce(sum(col("bn")).over(wOff), lit(0L)).as("off"))
-    blocked
-      .withColumn("lrn", row_number().over(wLoc))
-      .join(broadcast(offs), Seq("blk"))
-      .withColumn("rank", col("lrn") + col("off"))
-      .drop("blk", "lrn", "off")
-  }
-
   def giniExact(rev: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
     blockRank(rev, "x4", "id")
@@ -574,11 +531,9 @@ object Frontier {
     // suppkey) ranks. Revenue rides exact e4-scaled integers (the
     // decimal(18,2)×(4,2) product has scale 4, so ×10000 is integral)
     // and every sum is DECIMAL(38,0) — the statistic has ONE double
-    // division at the end. The global rank runs the q209 two-phase
-    // block shape: 256 uniform value blocks, local row_number per
-    // block, exclusive count offsets from a window over the block
-    // summaries — the supplier population scales with the corpus and
-    // never sorts in one task.
+    // division at the end. The global rank is [[blockRank]] — the
+    // supplier population scales with the corpus and never sorts in
+    // one task.
     Q("q231_gini",
       (s, d) => {
         val rev = t(s, d, "lineitem")

@@ -1,63 +1,36 @@
 package graft.queries
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core.Tables
+import graft.plans.Cumulative
 
-/** Skew-safe cumulative window aggregation — the two-phase cure for
-  * q21's scale hazard, same idea as [[Sessionize]] but for prefix sums:
-  * a running total windowed by customer alone sorts EVERY row of a hot
-  * customer in one task.
-  *
-  * Phase 1 windows by (customer, time block), where the block is a
-  * non-decreasing function of the window's ORDER BY — so a block is a
-  * contiguous slice of each customer's order sequence and the local
-  * running sum inside it is a piece of the global one.
-  *
-  * Phase 2 turns per-(customer, block) totals into per-block EXCLUSIVE
-  * prefix offsets with a window over block summaries (rows per customer
-  * = number of blocks, bounded by the time range, independent of row
-  * rate), then joins the offset back on (customer, block) — the same
-  * keys phase 1 is already partitioned by.
-  *
-  *   running(row) = local_running(row) + offset(customer, block)
-  *
-  * Sums accumulate in DECIMAL so the regrouped addition order is exact —
-  * bit-identical to the single-window form (double addition would drift
-  * at phase boundaries). SkewSpec pins equality; q58's oracle is q21's
-  * SQL with the same decimal spelling.
+/** Skew-safe cumulative window aggregation — the cure for q21's scale
+  * hazard, same idea as [[Sessionize]] but for prefix sums: a running
+  * total windowed by customer alone sorts EVERY row of a hot customer in
+  * one task. The running total is a [[Cumulative]] per customer on time
+  * blocks; sums accumulate in DECIMAL, so the regrouped addition is
+  * bit-identical to the single-window form (SkewSpec pins equality;
+  * q58's oracle is q21's SQL with the same decimal spelling).
   */
 object ScaleWindows {
 
   /** Per-order running total of o_totalprice within o_custkey, ordered
-    * by (o_orderdate, o_orderkey), computed in two phases. `blockCol`
-    * must be non-decreasing in that order (default: calendar month).
+    * by (o_orderdate, o_orderkey). `blockCol` must be non-decreasing in
+    * that order (default: calendar month).
     */
   def runningSumAtScale(
       orders: DataFrame,
-      blockCol: Column = year(col("o_orderdate")) * 12 + month(col("o_orderdate"))): DataFrame = {
-    val base = orders.select(
-      col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
-      col("o_totalprice").cast("decimal(18,2)").as("v"),
-      blockCol.as("__blk"))
-    val wLocal = Window.partitionBy(col("o_custkey"), col("__blk"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = base.withColumn("local_run", sum(col("v")).over(wLocal))
-    val wOff = Window.partitionBy(col("o_custkey")).orderBy(col("__blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local
-      .groupBy(col("o_custkey"), col("__blk"))
-      .agg(sum(col("v")).as("blk_sum"))
-      .select(col("o_custkey"), col("__blk"),
-        coalesce(sum(col("blk_sum")).over(wOff), lit(0).cast("decimal(18,2)"))
-          .as("offset"))
-    local.join(offsets, Seq("o_custkey", "__blk"))
+      blockCol: Column = year(col("o_orderdate")) * 12 + month(col("o_orderdate"))): DataFrame =
+    Cumulative.running(
+      orders.select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
+        col("o_totalprice").cast("decimal(18,2)").as("v"),
+        blockCol.as("__blk")),
+      Seq("o_custkey"), "__blk", Seq(col("o_orderdate"), col("o_orderkey")),
+      col("v"), Cumulative.Sum, inclusive = true, "running")
       .select(col("o_orderkey"), col("o_custkey"),
-        (col("local_run") + col("offset")).cast("double").as("running"))
-  }
+        col("running").cast("double").as("running"))
 
   def defs: Seq[Q] = Seq(
     // Same semantics as q21 (running total per customer), through the

@@ -117,4 +117,16 @@ class DqSpec extends AnyFunSuite with TestSpark {
       .map(r => r.getLong(0) -> r.getString(2)).toMap
     assert(d(2L) == "a") // 'extra' never appears
   }
+
+  test("equi-depth histogram ignores nulls: buckets of the non-null values") {
+    import spark.implicits._
+    val vals = (1 to 10).map(Option(_)) ++ Seq.fill(6)(Option.empty[Int])
+    def hist(xs: Seq[Option[Int]]) =
+      Dq.equidepthHistogram(xs.toDF("x"), "x", nb = 4).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSeq
+    val want = Seq((1, 3L, 1, 3), (2, 2L, 4, 5), (3, 3L, 6, 8), (4, 2L, 9, 10))
+    assert(hist(vals.filter(_.isDefined)) == want)
+    assert(hist(vals) == want)
+    assert(hist(Seq.fill(3)(Option.empty[Int])).isEmpty)
+  }
 }
