@@ -579,6 +579,17 @@ object TextOps {
       .select(col("doc_id"), round(col("logprob_raw"), 4).as("logprob"))
   }
 
+  /** Each doc's (doc_id, shard, n_tokens): its md5 ":pack" shard among
+    * `shards` and its token count (0 for a null or blank text). The one
+    * sizing of [[packSequences]] and `StreamingPack.sized`, so the batch
+    * and the stream agree on every count and shard. */
+  private[graft] def packSized(docs: DataFrame, shards: Int): DataFrame =
+    docs.select(col("doc_id").cast("long").as("doc_id"),
+      pmod(graft.queries.Stats.h32(col("doc_id"), ":pack"), lit(shards))
+        .cast("int").as("shard"),
+      when(col("text").isNull || trim(col("text")) === "", 0L)
+        .otherwise(size(tokens(col("text"))).cast("long")).as("n_tokens"))
+
   /** Next-fit sequence packing — the training-export step that
     * concatenates documents into fixed-capacity token sequences (every
     * pretraining pipeline packs; unpacked batches waste the tail of
@@ -604,13 +615,7 @@ object TextOps {
       capacity: Long): DataFrame = {
     val spark = docsDf.sparkSession
     import spark.implicits._
-    val sized = docsDf.select(col("doc_id").cast("long").as("doc_id"),
-      pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(":pack"))), 1, 8), 16, 10).cast("long"), lit(shards))
-        .cast("int").as("shard"),
-      when(col("text").isNull || trim(col("text")) === "", 0L)
-        .otherwise(size(tokens(col("text"))).cast("long")).as("n_tokens"))
-    sized.repartition(shards, col("shard"))
+    packSized(docsDf, shards).repartition(shards, col("shard"))
       .sortWithinPartitions(col("shard"), col("doc_id"))
       .as[(Long, Int, Long)]
       .mapPartitions { it =>

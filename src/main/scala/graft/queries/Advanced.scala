@@ -407,9 +407,7 @@ object Advanced {
     val per = events.groupBy(col("user_id"))
       .agg(max(when(col("event_type") === conversion, 1).otherwise(0))
         .as("converted"))
-      .select(col("converted"),
-        pmod(conv(substring(md5(concat(col("user_id").cast("string"),
-          lit(":ab"))), 1, 8), 16, 10).cast("long"), lit(2)).as("arm"))
+      .select(col("converted"), Stats.arm(col("user_id")).as("arm"))
     val counts = per.agg(
       sum(when(col("arm") === 0, 1).otherwise(0)).as("n_a"),
       sum(when(col("arm") === 1, 1).otherwise(0)).as("n_b"),
@@ -484,8 +482,7 @@ object Advanced {
         sum(when(col("event_type") === conversion &&
           col("ts") >= lit(boundary), 1).otherwise(0)).as("y"))
       .select(col("x").cast(dec).as("x"), col("y").cast(dec).as("y"),
-        pmod(conv(substring(md5(concat(col("user_id").cast("string"),
-          lit(":ab"))), 1, 8), 16, 10).cast("long"), lit(2)).as("arm"))
+        Stats.arm(col("user_id")).as("arm"))
     val g = per.agg(
       count(lit(1)).cast(dec).as("n"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -2564,9 +2561,7 @@ object Advanced {
               col("ts") < lit(bnd), 1).otherwise(0)).cast(dec).as("x"),
             sum(when(col("event_type") === "purchase" &&
               col("ts") >= lit(bnd), 1).otherwise(0)).cast(dec).as("y"))
-          .select(col("x"), col("y"),
-            pmod(conv(substring(md5(concat(col("user_id").cast("string"),
-              lit(":ab"))), 1, 8), 16, 10).cast("long"), lit(2)).as("arm"))
+          .select(col("x"), col("y"), Stats.arm(col("user_id")).as("arm"))
         val g = per.agg(
           sum(when(col("arm") === 0, 1).otherwise(0)).cast(dec).as("na"),
           sum(when(col("arm") === 0, col("x")).otherwise(0)).as("sxa"),
@@ -2693,9 +2688,7 @@ object Advanced {
       (s, d) => {
         val arms = t(s, d, "events")
           .select(col("user_id")).distinct()
-          .select(pmod(conv(substring(md5(concat(
-            col("user_id").cast("string"), lit(":ab"))), 1, 8), 16, 10)
-            .cast("long"), lit(2)).as("arm"))
+          .select(Stats.arm(col("user_id")).as("arm"))
           .agg(
             sum(when(col("arm") === 0, 1).otherwise(0)).as("n_a"),
             sum(when(col("arm") === 1, 1).otherwise(0)).as("n_b"))

@@ -36,15 +36,11 @@ object Geo {
 
   private val Dec = "decimal(38,0)"
 
-  /** md5 32-bit uniform of `c` under salt (the q242 addressing rule). */
-  private def h32(c: Column, salt: String): Column =
-    conv(substring(md5(concat(c.cast("string"), lit(salt))), 1, 8), 16, 10)
-      .cast("long")
-
   /** Deterministic position in integer MICRODEGREES: per-user base in
     * [0, 0.5e6) µdeg on each axis, per-event jitter in [-5000, 5000).
     */
-  def positioned(events: DataFrame): DataFrame =
+  def positioned(events: DataFrame): DataFrame = {
+    import Stats.h32
     events.select(col("event_id"), col("user_id"), col("ts"),
       (pmod(h32(col("user_id"), ":blat"), lit(500000L))
         + pmod(h32(col("event_id"), ":jlat"), lit(10000L)) - 5000L)
@@ -52,6 +48,7 @@ object Geo {
       (pmod(h32(col("user_id"), ":blon"), lit(500000L))
         + pmod(h32(col("event_id"), ":jlon"), lit(10000L)) - 5000L)
         .as("lon_e6"))
+  }
 
   /** Haversine meters between two integer-µdeg points — the one
     * double block; callers re-grid the result to whole meters. */

@@ -32,13 +32,15 @@ object Stats {
 
   /** md5-addressed 32-bit uniform hash of `c` under domain-separating
     * salt `salt` — the q59/q152/q242 addressing rule, so the oracle
-    * derives identical integers. Range [0, 2^32). */
-  private def h32(c: Column, salt: String): Column =
+    * derives identical integers. Range [0, 2^32). The one definition:
+    * `Geo.positioned`'s positions, the ":ab" arms, the ":pack" shards
+    * and the ":kmv" sketch all hash through it. */
+  private[graft] def h32(c: Column, salt: String): Column =
     conv(substring(md5(concat(c.cast("string"), lit(salt))), 1, 8), 16, 10)
       .cast("long")
 
   /** Deterministic experiment arm (0/1) of a user id — q242's rule. */
-  private def arm(u: Column): Column = pmod(h32(u, ":ab"), lit(2))
+  private[graft] def arm(u: Column): Column = pmod(h32(u, ":ab"), lit(2))
 
   /** THE ":kmv" member hash — shared with [[graft.etl.KmvStore]] so a
     * persisted sketch and the q247/q271 calibration queries can never

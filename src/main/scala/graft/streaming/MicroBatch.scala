@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -33,8 +35,21 @@ import graft.etl.Writers
   * second copy or probing its own partial output. MicroBatchSpec keeps
   * the other `streaming/` files from appending or filtering on `batch`
   * by hand.
+  *
+  * Spark logs `WARN ResolveWriteToStream: spark.sql.adaptive.enabled is
+  * not supported in streaming DataFrames/Datasets and will be disabled.`
+  * at every query start. The warning is about the streaming plan
+  * itself; a [[run]] body plans its batch frame as a batch query, with
+  * AQE, and the typed-state monitors need none. So the logger that
+  * emits it, `org.apache.spark.sql.execution.streaming.runtime
+  * .ResolveWriteToStream`, is set to ERROR when `MicroBatch` is first
+  * used; every other logger keeps its level.
   */
 object MicroBatch {
+
+  Configurator.setLevel(
+    "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+    Level.ERROR)
 
   /** The landing-dir file source. `format` is parquet, json or csv (csv
     * files carry a header row). The schema is explicit: streaming file

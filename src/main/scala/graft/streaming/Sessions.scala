@@ -83,10 +83,11 @@ object Sessions {
     * arrived"; this is exactly what GroupState TIMEOUTS exist for:
     * each arriving beat re-arms an event-time timeout at
     * lastSeen + gapMs, and when the WATERMARK passes that instant with
-    * no new beats, Spark invokes the group function with
-    * `state.hasTimedOut` — the alert fires from the state store, not
-    * from any row. State self-cleans on firing (remove()), so silent
-    * keys cost nothing after their alert; live keys hold 8 bytes.
+    * no new beats, Spark invokes the group function as timed out
+    * ([[ArrivalOrder.evicting]]) — the alert fires from the state
+    * store, not from any row. State self-cleans on firing (remove()),
+    * so silent keys cost nothing after their alert; live keys hold 8
+    * bytes.
     * (Timeout semantics: firings happen in the first micro-batch whose
     * START watermark has passed the armed instant — Spark advances the
     * watermark between batches, the spec pins this.)
@@ -100,17 +101,13 @@ object Sessions {
       .flatMapGroupsWithState[BeatState, GapAlert](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
         (uid: Long, beats: Iterator[Beat], state) =>
-          if (state.hasTimedOut) {
-            val last = state.get.lastSeenMs
-            state.remove()
-            Iterator(GapAlert(uid, new java.sql.Timestamp(last)))
-          } else {
-            val newest = beats.map(_.ts.getTime).foldLeft(
-              state.getOption.map(_.lastSeenMs).getOrElse(Long.MinValue))(
-              math.max)
-            state.update(BeatState(newest))
-            state.setTimeoutTimestamp(newest + gapMs)
-            Iterator.empty
+          ArrivalOrder.evicting(state, gapMs, (s: BeatState) => s.lastSeenMs)(
+            st => (None,
+              Seq(GapAlert(uid, new java.sql.Timestamp(st.lastSeenMs))))) {
+            before =>
+              val newest = beats.map(_.ts.getTime).max
+              if (before != null && before.lastSeenMs >= newest) (before, Nil)
+              else (BeatState(newest), Nil)
           }
       }
   }

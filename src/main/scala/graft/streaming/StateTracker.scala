@@ -25,7 +25,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigge
 object StateTracker {
 
   final case class TrackEv(user_id: Long, event_type: String, ts: Timestamp,
-      event_id: Long)
+      event_id: Long) extends ArrivalOrder.Event
   final case class TrackState(state: String, sinceMs: Long, n: Long,
       lastMs: Long, lastId: Long)
   final case class ClosedRun(user_id: Long, state: String,
@@ -56,26 +56,26 @@ object StateTracker {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, evs: Iterator[TrackEv], state) =>
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[ClosedRun]
-          evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val t = e.ts.getTime
-            if (st == null)
-              st = TrackState(e.event_type, t, 1L, t, e.event_id)
-            else if (t > st.lastMs ||
-                (t == st.lastMs && e.event_id > st.lastId)) {
-              if (e.event_type == st.state)
-                st = st.copy(n = st.n + 1, lastMs = t, lastId = e.event_id)
-              else {
-                out += ClosedRun(uid, st.state, new Timestamp(st.sinceMs),
-                  new Timestamp(t), st.n)
-                st = TrackState(e.event_type, t, 1L, t, e.event_id)
-              }
-            } // else: replayed or out-of-order event — no-op by the rule
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
+          ArrivalOrder.persistent(state)(transitions(_, evs)((st, t) =>
+            ClosedRun(uid, st.state, new Timestamp(st.sinceMs),
+              new Timestamp(t), st.n)))
       }
+  }
+
+  /** The one run fold of [[runs]] and [[runsEvicting]]: a same-state
+    * event extends the run, another closes it (`close(run, t)`, t the
+    * changing event's ms) and opens the next. */
+  private def transitions[O](st: TrackState, evs: Iterator[TrackEv])(
+      close: (TrackState, Long) => O): (TrackState, Seq[O]) = {
+    val out = Seq.newBuilder[O]
+    def open(e: TrackEv, t: Long) = TrackState(e.event_type, t, 1L, t, e.event_id)
+    val after = ArrivalOrder.fold(st, evs, ArrivalOrder.Ms,
+        (s: TrackState) => (s.lastMs, s.lastId))(open) { (s, e, t) =>
+      if (e.event_type == s.state)
+        s.copy(n = s.n + 1, lastMs = t, lastId = e.event_id)
+      else { out += close(s, t); open(e, t) }
+    }
+    (after, out.result())
   }
 
   /** [[runs]] with an EVENT-TIME eviction story — the form whose state
@@ -106,36 +106,12 @@ object StateTracker {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout()) {
         (uid: Long, evs: Iterator[TrackEv], state) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator.single(RunOut(uid, st.state,
-              new Timestamp(st.sinceMs), new Timestamp(st.lastMs), st.n,
-              "idle"))
-          } else {
-            var st = state.getOption.orNull
-            val out = Seq.newBuilder[RunOut]
-            evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-              val t = e.ts.getTime
-              if (st == null)
-                st = TrackState(e.event_type, t, 1L, t, e.event_id)
-              else if (t > st.lastMs ||
-                  (t == st.lastMs && e.event_id > st.lastId)) {
-                if (e.event_type == st.state)
-                  st = st.copy(n = st.n + 1, lastMs = t, lastId = e.event_id)
-                else {
-                  out += RunOut(uid, st.state, new Timestamp(st.sinceMs),
-                    new Timestamp(t), st.n, "transition")
-                  st = TrackState(e.event_type, t, 1L, t, e.event_id)
-                }
-              } // else: replayed or out-of-order event — no-op by the rule
-            }
-            if (st != null) {
-              state.update(st)
-              state.setTimeoutTimestamp(st.lastMs + idleMs)
-            }
-            out.result().iterator
-          }
+          ArrivalOrder.evicting(state, idleMs, (s: TrackState) => s.lastMs)(
+            st => (None, Seq(RunOut(uid, st.state, new Timestamp(st.sinceMs),
+              new Timestamp(st.lastMs), st.n, "idle"))))(
+            transitions(_, evs)((st, t) => RunOut(uid, st.state,
+              new Timestamp(st.sinceMs), new Timestamp(t), st.n,
+              "transition")))
       }
   }
 

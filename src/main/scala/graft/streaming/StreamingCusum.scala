@@ -43,6 +43,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigge
 object StreamingCusum {
 
   final case class CusumEv(event_type: String, ts: Timestamp, event_id: Long)
+      extends ArrivalOrder.Event
   /** Per-type baseline: expected daily rate sum_t / n_days, exact. */
   final case class CusumBase(event_type: String, sum_t: Long, n_days: Long)
   final case class CusumState(day: Long, dayCount: Long, s: Long,
@@ -62,7 +63,6 @@ object StreamingCusum {
   /** Fold a batch's events into the state, emitting finalized days. */
   private def fold(base: CusumBase, st: CusumState,
       evs: Iterator[CusumEv]): (CusumState, Seq[CusumOut]) = {
-    var s = st
     val out = Seq.newBuilder[CusumOut]
     def close(day: Long, x: Long, cusum: Long): Long = {
       val next = math.max(0L, cusum + base.n_days * x - base.sum_t)
@@ -70,39 +70,33 @@ object StreamingCusum {
         next > base.sum_t, null)
       next
     }
-    evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      val t = e.ts.getTime
-      val day = Math.floorDiv(t, MsPerDay)
-      if (s == null)
-        s = CusumState(day, 1L, 0L, t, e.event_id)
-      else if (t > s.lastMs || (t == s.lastMs && e.event_id > s.lastId)) {
-        if (s.dayCount == 0L) {
-          // idle tombstone: s.day was finalized by the timeout (its row
-          // is already emitted) and s.s is the post-close statistic. A
-          // LATER day resumes with the quiet days zero-folded — the
-          // batch dense-grid rule; an arrival back into the closed day
-          // is dropped (see the Scaladoc idleMs contract).
-          if (day > s.day) {
-            var cusum = s.s
-            var d = s.day + 1
-            while (d < day) { cusum = close(d, 0L, cusum); d += 1 }
-            s = CusumState(day, 1L, cusum, t, e.event_id)
-          }
-        }
-        // day is a monotone function of ts, so t > lastMs implies
-        // day >= s.day — an applied event never lands in a closed day
-        else if (day == s.day)
-          s = CusumState(day, s.dayCount + 1, s.s, t, e.event_id)
-        else {
-          var cusum = close(s.day, s.dayCount, s.s)
-          var d = s.day + 1
-          while (d < day) { cusum = close(d, 0L, cusum); d += 1 }
-          s = CusumState(day, 1L, cusum, t, e.event_id)
-        }
-      }
-      // else: replay at-or-before the watermark — no-op
+    // `cusum` after `s.day`, then every quiet day up to `day` zero-folded
+    def rollTo(s: CusumState, cusum: Long, day: Long, t: Long, id: Long) = {
+      var c = cusum
+      var d = s.day + 1
+      while (d < day) { c = close(d, 0L, c); d += 1 }
+      CusumState(day, 1L, c, t, id)
     }
-    (s, out.result())
+    val after = ArrivalOrder.fold(st, evs, ArrivalOrder.Ms,
+        (s: CusumState) => (s.lastMs, s.lastId))(
+        (e, t) => CusumState(Math.floorDiv(t, MsPerDay), 1L, 0L, t,
+          e.event_id)) { (s, e, t) =>
+      val day = Math.floorDiv(t, MsPerDay)
+      // idle tombstone: s.day was finalized by the timeout (its row is
+      // already emitted) and s.s is the post-close statistic. A LATER
+      // day resumes with the quiet days zero-folded — the batch
+      // dense-grid rule; an arrival back into the closed day is dropped
+      // (see the Scaladoc idleMs contract).
+      if (s.dayCount == 0L) {
+        if (day > s.day) rollTo(s, s.s, day, t, e.event_id) else s
+      }
+      // day is a monotone function of ts, so t > lastMs implies
+      // day >= s.day — an applied event never lands in a closed day
+      else if (day == s.day)
+        CusumState(day, s.dayCount + 1, s.s, t, e.event_id)
+      else rollTo(s, close(s.day, s.dayCount, s.s), day, t, e.event_id)
+    }
+    (after, out.result())
   }
 
   /** The monitor as a typed stream transform. `baseline` is the small
@@ -129,29 +123,25 @@ object StreamingCusum {
           baseline.get(tpe) match {
             case None => Iterator.empty // no target: dropped by contract
             case Some(base) =>
-              if (state.hasTimedOut) {
-                val st = state.get
-                val next = math.max(0L,
-                  st.s + base.n_days * st.dayCount - base.sum_t)
-                // keep a compact tombstone (dayCount = 0) instead of
-                // removing: a returning type resumes from the closed
-                // day with the quiet days zero-folded (see fold), so
-                // the stream matches the batch recompute across idle
-                // gaps. No new timeout: the tombstone is final state
-                // until the type speaks again, bounded by |baseline|.
-                state.update(CusumState(st.day, 0L, next,
-                  st.lastMs, st.lastId))
-                Iterator.single(CusumOut(tpe, dayStr(st.day), st.dayCount,
-                  next, next > base.sum_t, "idle"))
-              } else {
-                val before = state.getOption.orNull
-                val (after, rows) = fold(base, before, evs)
-                if (after ne before) {
-                  state.update(after)
-                  state.setTimeoutTimestamp(after.lastMs + idleMs)
-                }
-                rows.iterator
-              }
+              ArrivalOrder.evicting(state, idleMs, (s: CusumState) => s.lastMs)(
+                st =>
+                  // keep a compact tombstone (dayCount = 0) instead of
+                  // removing: a returning type resumes from the closed
+                  // day with the quiet days zero-folded (see fold), so
+                  // the stream matches the batch recompute across idle
+                  // gaps. It keeps no timeout: it is final state until
+                  // the type speaks again, bounded by |baseline|. A
+                  // tombstone re-armed by a batch that applied nothing
+                  // fires again and stays as it is.
+                  if (st.dayCount == 0L) (Some(st), Nil)
+                  else {
+                    val next = math.max(0L,
+                      st.s + base.n_days * st.dayCount - base.sum_t)
+                    (Some(CusumState(st.day, 0L, next, st.lastMs, st.lastId)),
+                      Seq(CusumOut(tpe, dayStr(st.day), st.dayCount, next,
+                        next > base.sum_t, "idle")))
+                  })(
+                fold(base, _, evs))
           }
       }
   }

@@ -30,11 +30,12 @@ import graft.queries.Geo
   *
   * The typed-state monitors (zone visits, resampling, dark gaps) keep
   * a few bytes per vessel in Spark's state store under the
-  * StateTracker arrival-order rule.
+  * arrival-order rule ([[ArrivalOrder]]).
   */
 object StreamingGeo {
 
   final case class GeoEv(event_id: Long, user_id: Long, ts: Timestamp)
+      extends ArrivalOrder.Event
 
   /** One OPEN co-travel episode — the per-pair state of
     * [[startEpisodes]] (q269's always-on form), snapshotted to
@@ -53,7 +54,7 @@ object StreamingGeo {
   /** [[startZoneVisits]]'s typed input: one fix with its codegen'd
     * zone attribution. */
   final case class ZoneEv(user_id: Long, event_id: Long, ts: Timestamp,
-      zid: Long)
+      zid: Long) extends ArrivalOrder.Event
   /** Per-vessel open-visit state: current zone (may be -1 = open
     * sea — leaving a zone must CLOSE the visit), enter instant, last
     * applied (ts, event_id) idempotency watermark, fix count. */
@@ -111,32 +112,27 @@ object StreamingGeo {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
         (uid: Long, fixes: Iterator[ZoneEv], state) =>
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[ZoneVisit]
-          fixes.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val t = e.ts.getTime
-            if (st == null)
-              st = ZoneState(e.zid, t, t, e.event_id, 1L)
-            else if (t > st.lastMs ||
-                (t == st.lastMs && e.event_id > st.lastId)) {
-              if (e.zid == st.zid)
-                st = st.copy(lastMs = t, lastId = e.event_id, n = st.n + 1)
+          ArrivalOrder.persistent(state) { before =>
+            val out = Seq.newBuilder[ZoneVisit]
+            def enter(e: ZoneEv, t: Long) = ZoneState(e.zid, t, t, e.event_id, 1L)
+            (ArrivalOrder.fold(before, fixes, ArrivalOrder.Ms,
+                (s: ZoneState) => (s.lastMs, s.lastId))(enter) { (s, e, t) =>
+              if (e.zid == s.zid)
+                s.copy(lastMs = t, lastId = e.event_id, n = s.n + 1)
               else {
-                if (st.zid != -1L)
-                  out += ZoneVisit(uid, st.zid, new Timestamp(st.enterMs),
-                    new Timestamp(st.lastMs), st.n)
-                st = ZoneState(e.zid, t, t, e.event_id, 1L)
+                if (s.zid != -1L)
+                  out += ZoneVisit(uid, s.zid, new Timestamp(s.enterMs),
+                    new Timestamp(s.lastMs), s.n)
+                enter(e, t)
               }
-            } // else: replay/straggler — no-op by the rule
+            }, out.result())
           }
-          if (st != null) state.update(st)
-          out.result().iterator
       }, s"$outDir/_checkpoint", trigger, s"$outDir/visits")
   }
 
   /** [[startResample]]'s typed input: one positioned fix. */
   final case class PosEv(user_id: Long, event_id: Long, ts: Timestamp,
-      lat_e6: Long, lon_e6: Long)
+      lat_e6: Long, lon_e6: Long) extends ArrivalOrder.Event
   /** Per-vessel resample state: the LAST fix (epoch seconds + id
     * idempotency watermark + position) — 32 bytes, one per vessel. */
   final case class FixState(lastT: Long, lastId: Long, la: Long, lo: Long)
@@ -154,7 +150,14 @@ object StreamingGeo {
     * the batch q274 on the landed prefix EXACTLY, no open-tail
     * asymmetry (pinned in StreamingGeoSpec). Legs over `maxGapS`
     * emit nothing (a data gap is a gap). Arrival-order contract under
-    * the (ts, event_id) watermark, the StateTracker rule. */
+    * the (ts, event_id) watermark, the [[ArrivalOrder]] rule.
+    *
+    * Precondition of that equality: within one second, a vessel's
+    * `event_id`s rise with `ts`. The mark is in whole seconds
+    * ([[ArrivalOrder.Seconds]]) while `Geo.trackInterpolate` orders by
+    * µs `ts`, so two fixes in one second whose ids run against time
+    * make the stream drop the later fix and interpolate the next leg
+    * from the earlier one. */
   def startResample(spark: SparkSession, landingDir: String,
       outDir: String, stepS: Long = 600L, maxGapS: Long = 21600L,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
@@ -171,31 +174,27 @@ object StreamingGeo {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
         (uid: Long, fixes: Iterator[PosEv], state) =>
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[GridFix]
-          fixes.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val t = Math.floorDiv(e.ts.getTime, 1000L) // = unix_timestamp
-            if (st == null)
-              st = FixState(t, e.event_id, e.lat_e6, e.lon_e6)
-            else if (t > st.lastT ||
-                (t == st.lastT && e.event_id > st.lastId)) {
-              val dt = t - st.lastT
+          ArrivalOrder.persistent(state) { before =>
+            val out = Seq.newBuilder[GridFix]
+            def fix(e: PosEv, t: Long) = FixState(t, e.event_id, e.lat_e6, e.lon_e6)
+            // t in floor-seconds = unix_timestamp
+            (ArrivalOrder.fold(before, fixes, ArrivalOrder.Seconds,
+                (s: FixState) => (s.lastT, s.lastId))(fix) { (s, e, t) =>
+              val dt = t - s.lastT
               if (dt > 0 && dt <= maxGapS) {
-                val gs = st.lastT - st.lastT % stepS + stepS
+                val gs = s.lastT - s.lastT % stepS + stepS
                 val ge = t - t % stepS
                 var g = gs
                 while (g <= ge) {
                   out += GridFix(uid, g,
-                    hup(st.la, e.lat_e6, g - st.lastT, dt),
-                    hup(st.lo, e.lon_e6, g - st.lastT, dt))
+                    hup(s.la, e.lat_e6, g - s.lastT, dt),
+                    hup(s.lo, e.lon_e6, g - s.lastT, dt))
                   g += stepS
                 }
               }
-              st = FixState(t, e.event_id, e.lat_e6, e.lon_e6)
-            } // else: replay/straggler — no-op by the rule
+              fix(e, t)
+            }, out.result())
           }
-          if (st != null) state.update(st)
-          out.result().iterator
       }, s"$outDir/_checkpoint", trigger, s"$outDir/grid")
   }
 
@@ -222,7 +221,7 @@ object StreamingGeo {
     * matches the batch q280's second-granular string render exactly
     * (sub-second fixes floor to their second in both forms).
     * Arrival-order contract under the (ts, event_id) watermark, the
-    * StateTracker rule. */
+    * [[ArrivalOrder]] rule. */
   def startDarkGaps(spark: SparkSession, landingDir: String,
       outDir: String, minGapS: Long = 21600L,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
@@ -236,21 +235,17 @@ object StreamingGeo {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
         (uid: Long, fixes: Iterator[GeoEv], state) =>
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[DarkGap]
-          fixes.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-            val t = Math.floorDiv(e.ts.getTime, 1000L)
-            if (st == null) st = GapState(t, e.event_id)
-            else if (t > st.lastT ||
-                (t == st.lastT && e.event_id > st.lastId)) {
-              if (t - st.lastT >= minGapS)
-                out += DarkGap(uid, new Timestamp(st.lastT * 1000L),
-                  new Timestamp(t * 1000L), t - st.lastT)
-              st = GapState(t, e.event_id)
-            } // else: replay/straggler — no-op by the rule
+          ArrivalOrder.persistent(state) { before =>
+            val out = Seq.newBuilder[DarkGap]
+            (ArrivalOrder.fold(before, fixes, ArrivalOrder.Seconds,
+                (s: GapState) => (s.lastT, s.lastId))(
+                (e, t) => GapState(t, e.event_id)) { (s, e, t) =>
+              if (t - s.lastT >= minGapS)
+                out += DarkGap(uid, new Timestamp(s.lastT * 1000L),
+                  new Timestamp(t * 1000L), t - s.lastT)
+              GapState(t, e.event_id)
+            }, out.result())
           }
-          if (st != null) state.update(st)
-          out.result().iterator
       }, s"$outDir/_checkpoint", trigger, s"$outDir/gaps")
   }
 

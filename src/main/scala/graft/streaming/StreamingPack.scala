@@ -1,9 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-
 
 /** Always-on sequence packing — the streaming form of the batch q260
   * (`TextOps.packSequences`): documents arriving in micro-batches are
@@ -23,7 +21,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQ
   * — the StreamingAb replay discipline.
   *
   * Scale shape: token counts and shard addressing are map-side
-  * expressions (identical to the batch form's, md5 ":pack"); the one
+  * expressions (the batch form's own, md5 ":pack"); the one
   * exchange per batch is the |shards|-group state shuffle carrying
   * (doc_id, shard, n_tokens) triples. The per-shard fold sorts ONLY
   * the batch's slice of the shard (micro-batches are bounded by
@@ -38,20 +36,13 @@ object StreamingPack {
   final case class Assign(doc_id: Long, shard: Int, n_tokens: Long,
       bin: Long)
 
-  /** Map-side sizing + shard addressing — the exact expressions of
-    * `TextOps.packSequences` so batch and streaming agree on every
-    * token count and shard.
+  /** Map-side sizing + shard addressing — `TextOps.packSequences`'
+    * own ([[graft.llm.TextOps.packSized]]), so batch and streaming
+    * agree on every token count and shard.
     */
   def sized(docs: DataFrame, shards: Int): Dataset[Sized] = {
     import docs.sparkSession.implicits._
-    docs.select(col("doc_id").cast("long").as("doc_id"),
-      pmod(conv(substring(md5(concat(col("doc_id").cast("string"),
-        lit(":pack"))), 1, 8), 16, 10).cast("long"), lit(shards))
-        .cast("int").as("shard"),
-      when(col("text").isNull || trim(col("text")) === "", 0L)
-        .otherwise(size(graft.llm.TextOps.tokens(col("text")))
-          .cast("long")).as("n_tokens"))
-      .as[Sized]
+    graft.llm.TextOps.packSized(docs, shards).as[Sized]
   }
 
   /** Cross-batch next-fit: continue each shard's open (bin, fill);

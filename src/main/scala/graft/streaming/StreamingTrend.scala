@@ -30,7 +30,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery, Trigge
 object StreamingTrend {
 
   final case class TrendEv(user_id: Long, ts: Timestamp, event_id: Long,
-      value: Double)
+      value: Double) extends ArrivalOrder.Event
   final case class TrendState(level: Double, n: Long, lastMs: Long,
       lastId: Long)
   /** One row per (batch, user) with applied events: the level AFTER
@@ -39,19 +39,18 @@ object StreamingTrend {
   final case class TrendOut(user_id: Long, n_events: Long, level: Double,
       closed_by: String)
 
-  private def fold(st: TrendState, evs: Iterator[TrendEv], alpha: Double)
-      : TrendState = {
-    var s = st
-    evs.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foreach { e =>
-      val t = e.ts.getTime
-      if (s == null)
-        s = TrendState(e.value, 1L, t, e.event_id)
-      else if (t > s.lastMs || (t == s.lastMs && e.event_id > s.lastId))
-        s = TrendState(alpha * e.value + (1.0 - alpha) * s.level,
-          s.n + 1, t, e.event_id)
-      // else: replayed or out-of-order event — no-op by the rule
+  /** The batch's applied events folded into the level, and the one
+    * live snapshot row when any applied. */
+  private def fold(uid: Long, st: TrendState, evs: Iterator[TrendEv],
+      alpha: Double): (TrendState, Seq[TrendOut]) = {
+    val after = ArrivalOrder.fold(st, evs, ArrivalOrder.Ms,
+        (s: TrendState) => (s.lastMs, s.lastId))(
+        (e, t) => TrendState(e.value, 1L, t, e.event_id)) { (s, e, t) =>
+      TrendState(alpha * e.value + (1.0 - alpha) * s.level, s.n + 1, t,
+        e.event_id)
     }
-    s
+    (after,
+      if (after eq st) Nil else Seq(TrendOut(uid, after.n, after.level, null)))
   }
 
   /** Unbounded-|users| contract (the StateTracker `runs` convention):
@@ -66,13 +65,7 @@ object StreamingTrend {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.NoTimeout()) {
         (uid: Long, evs: Iterator[TrendEv], state) =>
-          val before = state.getOption.orNull
-          val after = fold(before, evs, alpha)
-          if (after eq before) Iterator.empty
-          else {
-            state.update(after)
-            Iterator.single(TrendOut(uid, after.n, after.level, null))
-          }
+          ArrivalOrder.persistent(state)(fold(uid, _, evs, alpha))
       }
   }
 
@@ -92,20 +85,9 @@ object StreamingTrend {
         org.apache.spark.sql.streaming.OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout()) {
         (uid: Long, evs: Iterator[TrendEv], state) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator.single(TrendOut(uid, st.n, st.level, "idle"))
-          } else {
-            val before = state.getOption.orNull
-            val after = fold(before, evs, alpha)
-            if (after eq before) Iterator.empty
-            else {
-              state.update(after)
-              state.setTimeoutTimestamp(after.lastMs + idleMs)
-              Iterator.single(TrendOut(uid, after.n, after.level, null))
-            }
-          }
+          ArrivalOrder.evicting(state, idleMs, (s: TrendState) => s.lastMs)(
+            st => (None, Seq(TrendOut(uid, st.n, st.level, "idle"))))(
+            fold(uid, _, evs, alpha))
       }
   }
 

@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Session
-import graft.queries.Geo
+import graft.queries.{Geo, Stats}
 
 /** Port-heavy (hot-cell) rehearsal for the banded proximity join
   * ([[graft.queries.Geo.proximityPairs]] / q264): the within-cell
@@ -31,10 +31,6 @@ import graft.queries.Geo
   *        [hours] [multSteps]
   */
 object GeoSkewRehearsal {
-
-  private def h32(c: Column, salt: String): Column =
-    conv(substring(md5(concat(c.cast("string"), lit(salt))), 1, 8), 16, 10)
-      .cast("long")
 
   /** `runMain graft.tools.GeoSkewRehearsal poison [n] [cap]` — the
     * POISON-CELL regime the md5 miner cannot produce (it is a data
@@ -93,9 +89,9 @@ object GeoSkewRehearsal {
     // modal cell — enough for a five-digit single-port fleet.
     val candidates = spark.range(1L, 120000000L).toDF("user_id")
       .select(col("user_id"),
-        ((pmod(h32(col("user_id"), ":blat"), lit(500000L)) + 5000L)
+        ((pmod(Stats.h32(col("user_id"), ":blat"), lit(500000L)) + 5000L)
           .divide(5000L)).cast("long").as("bcy"),
-        ((pmod(h32(col("user_id"), ":blon"), lit(500000L)) + 5000L)
+        ((pmod(Stats.h32(col("user_id"), ":blon"), lit(500000L)) + 5000L)
           .divide(5000L)).cast("long").as("bcx"))
     val modal = candidates.groupBy(col("bcy"), col("bcx"))
       .agg(count(lit(1)).as("n"))

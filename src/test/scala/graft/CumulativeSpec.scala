@@ -8,8 +8,6 @@ import scala.util.Random
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -25,8 +23,7 @@ import graft.queries.Registry
   * runs), and a source guard that keeps block-ordered windows inside the
   * primitive.
   */
-class CumulativeSpec extends AnyFunSuite with TestSpark
-    with AdaptiveSparkPlanHelper {
+class CumulativeSpec extends AnyFunSuite with TestSpark {
 
   private val schema = StructType(Seq(
     StructField("k", LongType), StructField("o", LongType),
@@ -138,8 +135,7 @@ class CumulativeSpec extends AnyFunSuite with TestSpark
       try RunMetrics.measure(spark)(Registry.queries(q)(spark, sf).collect())
       finally spark.listenerManager.unregister(listener)
       assert(seen.nonEmpty, s"$q: no SQL execution seen")
-      val windows = seen.toSeq.flatMap(qe =>
-        collectWithSubqueries(qe.executedPlan) { case w: WindowExec => w })
+      val windows = seen.toSeq.flatMap(windowExecs)
       assert(windows.nonEmpty, s"$q: no WindowExec seen")
       val bad = windows.filter(_.partitionSpec.isEmpty)
       assert(bad.isEmpty, s"$q plans an unpartitioned window:\n" +

@@ -126,13 +126,12 @@ class FuzzySpec extends AnyFunSuite with TestSpark {
     // block-summary offset pass, distinguished by its input: a
     // vocabulary-cardinality window would carry `tok`, the summary
     // window only (blk, bs).
-    import org.apache.spark.sql.execution.window.WindowExec
     val ids = Fuzzy.blockRankIds(Fuzzy.vocab(docs))
     ids.collect()
-    val bad = ids.queryExecution.executedPlan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty &&
-        w.child.output.exists(_.name == "tok") => w
-    }
+    val windows = windowExecs(ids.queryExecution)
+    assert(windows.nonEmpty, "no WindowExec seen")
+    val bad = windows.filter(w => w.partitionSpec.isEmpty &&
+      w.child.output.exists(_.name == "tok"))
     assert(bad.isEmpty, s"vocabulary-sized unpartitioned window: $bad")
     // substring scale paths carry no forced-broadcast join hints on
     // corpus-derived sides; the offs broadcast here is bounded by the

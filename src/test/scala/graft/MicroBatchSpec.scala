@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.Dq
 import graft.llm.{Pca, QualityClassifier}
 import graft.streaming.{StreamingCuration, StreamingDedup, StreamingDq,
-  StreamingIndex, StreamingScore, StreamingSketch}
+  StreamingGeo, StreamingIndex, StreamingScore, StreamingSketch}
+import graft.streaming.StreamingGeo.GeoEv
 
 /** The micro-batch runner's contracts: it is the only place in
   * `streaming/` that wires a stream or reads and writes per-batch
@@ -24,14 +25,14 @@ import graft.streaming.{StreamingCuration, StreamingDedup, StreamingDq,
 class MicroBatchSpec extends AnyFunSuite with TestSpark {
 
   /** `file:line: word` for every line of a `streaming/` source other
-    * than MicroBatch.scala that contains one of `words`. */
-  private def outsideMicroBatch(words: String*): Seq[String] = {
+    * than `owner` that contains one of `words`. */
+  private def outside(owner: String)(words: String*): Seq[String] = {
     val dir = Paths.get(sys.props("user.dir"), "src/main/scala/graft/streaming")
     val files = Files.list(dir).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 1, s"no monitor sources under $dir")
     for {
-      f <- files if f.getFileName.toString != "MicroBatch.scala"
+      f <- files if f.getFileName.toString != owner
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       word <- words
       if line.contains(word)
@@ -40,26 +41,41 @@ class MicroBatchSpec extends AnyFunSuite with TestSpark {
 
   test("only MicroBatch wires streams: no other streaming/ file names " +
       "readStream, writeStream or checkpointLocation") {
-    val offenders =
-      outsideMicroBatch("readStream", "writeStream", "checkpointLocation")
+    val offenders = outside("MicroBatch.scala")(
+      "readStream", "writeStream", "checkpointLocation")
     assert(offenders.isEmpty,
       s"stream wiring outside MicroBatch:\n${offenders.mkString("\n")}")
   }
 
   test("only MicroBatch's store reads and writes per-batch history: no " +
       "other streaming/ file appends, saves a table or filters on batch") {
-    val offenders = outsideMicroBatch(
+    val offenders = outside("MicroBatch.scala")(
       """.mode("append")""", "saveAsTable", """col("batch") <""")
     assert(offenders.isEmpty,
       s"history written or read outside MicroBatch.Store:\n${
         offenders.mkString("\n")}")
   }
 
+  test("only ArrivalOrder keeps the typed-state replay rule: no other " +
+      "streaming/ file sorts by (ts, event_id), compares an event id " +
+      "with a mark or sets or reads a state timeout") {
+    // Funnel's stage rule (stage time strictly after the last stage, no
+    // event id) is its own and is named none of these words
+    val offenders = outside("ArrivalOrder.scala")(
+      "(e.ts.getTime, e.event_id)", "event_id >", "event_id <",
+      "setTimeoutTimestamp", "hasTimedOut")
+    assert(offenders.isEmpty,
+      s"replay rule outside ArrivalOrder:\n${offenders.mkString("\n")}")
+  }
+
   /** One restart case: a monitor, the three landing files it is fed
-    * (one micro-batch each) and a canonical dump of what it landed. */
+    * (one micro-batch each, JSON lines landed as JSON, or as parquet
+    * under the `parquet` schema) and a canonical dump of what it
+    * landed. */
   private final class Monitor(val name: String, val files: Seq[String],
       val start: (String, String, Trigger) => StreamingQuery,
-      val landed: String => Seq[String])
+      val landed: String => Seq[String],
+      val parquet: Option[StructType] = None)
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -98,6 +114,20 @@ class MicroBatchSpec extends AnyFunSuite with TestSpark {
   private def vecDf(ids: Range, dim: Int) = spark.createDataFrame(
     spark.sparkContext.parallelize(
       ids.map(i => Row(i.toLong, i % 3, vec(i, dim))), 2), vecSchema)
+
+  private val geoSchema = Some(Encoders.product[GeoEv].schema)
+
+  /** Three batches of vessel fixes: in batch b each of 200 vessels
+    * reports at b·`stepS` and 600 s later, so the typed state carries
+    * each vessel's last fix (and open zone visit) across batches. */
+  private def geoFiles(stepS: Long): Seq[String] = (0 until 3).map { b =>
+    (1 to 200).flatMap { u =>
+      Seq(0L, 600L).zipWithIndex.map { case (dt, k) =>
+        val at = java.time.Instant.ofEpochSecond(1700000000L + b * stepS + dt)
+        s"""{"event_id":${u * 10 + 2 * b + k},"user_id":$u,"ts":"$at"}"""
+      }
+    }.mkString("\n")
+  }
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
@@ -201,28 +231,28 @@ class MicroBatchSpec extends AnyFunSuite with TestSpark {
       (l, o, t) => StreamingDedup.startExact(spark, l, docSchema, s"$o/seen",
         o, trigger = t),
       o => rows(spark.read.parquet(s"$o/unique")) ++
-        rows(spark.read.parquet(s"$o/seen"))))
-
-  /** Land `content` as `name` atomically, so a running query never lists
-    * a half-written file. */
-  private def land(landing: String, name: String, content: String): Unit = {
-    val staged = Files.createTempFile("mb-stage", ".json")
-    Files.write(staged, content.getBytes("UTF-8"))
-    Files.move(staged, Paths.get(landing, name),
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+        rows(spark.read.parquet(s"$o/seen"))),
+    new Monitor("StreamingGeo.startZoneVisits", geoFiles(1200L),
+      (l, o, t) => StreamingGeo.startZoneVisits(spark, l, o, t),
+      o => rows(spark.read.parquet(s"$o/visits")), geoSchema),
+    new Monitor("StreamingGeo.startResample", geoFiles(1200L),
+      (l, o, t) => StreamingGeo.startResample(spark, l, o, trigger = t),
+      o => rows(spark.read.parquet(s"$o/grid")), geoSchema),
+    new Monitor("StreamingGeo.startDarkGaps", geoFiles(30000L),
+      (l, o, t) => StreamingGeo.startDarkGaps(spark, l, o, trigger = t),
+      o => rows(spark.read.parquet(s"$o/gaps")), geoSchema))
 
   /** What `m` lands when each file is drained by a fresh run; with
     * `replay`, the last batch then reruns as after a lost commit. */
   private def restarted(m: Monitor, replay: Boolean = false): Seq[String] =
-    m.landed(drain(m.files, replay)((landing, out) =>
+    m.landed(drain(m.files, replay, m.parquet)((landing, out) =>
       m.start(landing, out, Trigger.AvailableNow()).awaitTermination()))
 
   private def uninterrupted(m: Monitor): Seq[String] = {
     val (landing, out) = (tmp("mb-land"), tmp("mb-out"))
     val q = m.start(landing, out, Trigger.ProcessingTime("100 milliseconds"))
     try m.files.zipWithIndex.foreach { case (f, i) =>
-      land(landing, s"f$i.json", f)
+      landFile(landing, s"f$i", f, m.parquet)
       q.processAllAvailable()
     } finally q.stop()
     m.landed(out)

@@ -37,13 +37,12 @@ class QueriesSmokeSpec extends AnyFunSuite with TestSpark {
     // partition (a near-unique value grid in ONE task is the q159 bug
     // class). Global-window queries (q188's bounded day grid) are
     // bounded by construction and excluded by design.
-    import org.apache.spark.sql.execution.window.WindowExec
     for (q <- Seq("q191_gap_percentiles", "q195_winsorize")) {
       val df = Registry.queries(q)(spark, sf)
       df.collect() // materialize the AQE-final plan
-      val bad = df.queryExecution.executedPlan.collect {
-        case w: WindowExec if w.partitionSpec.isEmpty => w
-      }
+      val windows = windowExecs(df.queryExecution)
+      assert(windows.nonEmpty, s"$q: no WindowExec seen")
+      val bad = windows.filter(_.partitionSpec.isEmpty)
       assert(bad.isEmpty, s"$q has unpartitioned windows: $bad")
     }
   }
@@ -54,13 +53,12 @@ class QueriesSmokeSpec extends AnyFunSuite with TestSpark {
     // one unpartitioned window allowed is the 256-row block-summary
     // offset pass — distinguished by its input: a supplier-cardinality
     // window would carry l_suppkey, the summary window only (blk, bs).
-    import org.apache.spark.sql.execution.window.WindowExec
     val df = Registry.queries("q193_pareto_abc")(spark, sf)
     df.collect()
-    val bad = df.queryExecution.executedPlan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty &&
-        w.child.output.exists(_.name.contains("l_suppkey")) => w
-    }
+    val windows = windowExecs(df.queryExecution)
+    assert(windows.nonEmpty, "no WindowExec seen")
+    val bad = windows.filter(w => w.partitionSpec.isEmpty &&
+      w.child.output.exists(_.name.contains("l_suppkey")))
     assert(bad.isEmpty, s"supplier-cardinality unpartitioned window: $bad")
   }
 

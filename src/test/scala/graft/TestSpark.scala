@@ -1,8 +1,14 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.types.StructType
 import org.scalatest.Suite
 
 import graft.core.Session
@@ -28,18 +34,52 @@ trait TestSpark { this: Suite =>
     result
   }
 
-  /** Land each of `files` as `b<i>.json` in a fresh landing dir and
-    * drain it, so each file is its own micro-batch; `start(landing,
-    * out)` runs the monitor to termination. With `replay`, then delete
-    * the last batch's commit and drain once more, so that batch reruns
-    * as after a lost commit (with no persisted-RDD delta). Returns
-    * `out`. */
-  def drain(files: Seq[String], replay: Boolean)(
+  /** Every WindowExec of `qe`'s executed plan, its subqueries included.
+    * Under AQE the executed plan is an `AdaptiveSparkPlanExec` leaf, so
+    * a plain `executedPlan.collect` finds nothing; this walks into its
+    * current plan and query stages. Run the query first to see the
+    * final plan. */
+  def windowExecs(qe: QueryExecution): Seq[WindowExec] =
+    TestSpark.Aqe.collectWithSubqueries(qe.executedPlan) {
+      case w: WindowExec => w
+    }
+
+  /** Land `content`, JSON lines, as `landing/<name>.json`; with a
+    * `parquet` schema, as one parquet file `landing/<name>.parquet` of
+    * those rows read under that schema. The move into `landing` is
+    * atomic, so a running query never lists a half-written file. */
+  def landFile(landing: String, name: String, content: String,
+      parquet: Option[StructType] = None): Unit = {
+    val staged = parquet match {
+      case None =>
+        val f = Files.createTempFile("land-stage", ".json")
+        Files.write(f, content.getBytes("UTF-8"))
+      case Some(schema) =>
+        val dir = Files.createTempDirectory("land-stage").toString
+        spark.read.schema(schema)
+          .json(spark.createDataset(content.split("\n").toSeq)(Encoders.STRING))
+          .coalesce(1).write.mode("overwrite").parquet(dir)
+        Files.list(Paths.get(dir)).iterator().asScala
+          .filter(_.toString.endsWith(".parquet")).next()
+    }
+    val ext = if (parquet.isEmpty) "json" else "parquet"
+    Files.move(staged, Paths.get(landing, s"$name.$ext"),
+      StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Land each of `files` as `b<i>` ([[landFile]]) in a fresh landing
+    * dir and drain it, so each file is its own micro-batch;
+    * `start(landing, out)` runs the monitor to termination. With
+    * `replay`, then delete the last batch's commit and drain once more,
+    * so that batch reruns as after a lost commit (with no persisted-RDD
+    * delta). Returns `out`. */
+  def drain(files: Seq[String], replay: Boolean,
+      parquet: Option[StructType] = None)(
       start: (String, String) => Unit): String = {
     val landing = Files.createTempDirectory("drain-land").toString
     val out = Files.createTempDirectory("drain-out").toString
     files.zipWithIndex.foreach { case (f, i) =>
-      Files.write(Paths.get(landing, s"b$i.json"), f.getBytes("UTF-8"))
+      landFile(landing, s"b$i", f, parquet)
       start(landing, out)
     }
     if (replay) {
@@ -55,6 +95,8 @@ trait TestSpark { this: Suite =>
 }
 
 object TestSpark {
+  private object Aqe extends AdaptiveSparkPlanHelper
+
   lazy val shared: SparkSession = {
     val s = Session.builder("local[4]", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

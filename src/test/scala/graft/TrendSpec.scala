@@ -352,14 +352,13 @@ class TrendSpec extends AnyFunSuite with TestSpark {
     // 256-row block-summary offset pass, distinguished by its input —
     // a corpus-cardinality window would carry doc_id, the summary
     // window only (blk, bn)
-    import org.apache.spark.sql.execution.window.WindowExec
     val df = Registry.queries("q209_range_shards")(
       spark, "/root/testdata/sf0.001")
     df.collect()
-    val bad = df.queryExecution.executedPlan.collect {
-      case w: WindowExec if w.partitionSpec.isEmpty &&
-        w.child.output.exists(_.name == "doc_id") => w
-    }
+    val windows = windowExecs(df.queryExecution)
+    assert(windows.nonEmpty, "no WindowExec seen")
+    val bad = windows.filter(w => w.partitionSpec.isEmpty &&
+      w.child.output.exists(_.name == "doc_id"))
     assert(bad.isEmpty, s"corpus-sized unpartitioned window: $bad")
   }
 
