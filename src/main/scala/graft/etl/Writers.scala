@@ -44,12 +44,16 @@ object Writers {
 
   /** OP-07: dated partition layout — one partition dir per ingest date
     * (UTC, from the session timezone pinned in Session). Readers prune
-    * on ingest_date for free (partition pruning).
+    * on ingest_date for free (partition pruning). A write replaces only
+    * its own date's partition (dynamic partition overwrite, set on this
+    * writer): a same-day re-run does not append a second copy, and other
+    * days' partitions stay.
     */
   def datePartitioned(df: DataFrame, path: String,
       compression: String = DefaultCompression): Unit =
     df.withColumn("ingest_date", current_date())
-      .write.mode("append")
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .option("compression", compression)
       .partitionBy("ingest_date")
       .parquet(path)
@@ -287,7 +291,8 @@ object Writers {
     * swapped in with [[replaceDir]]. Refuses PARTITIONED layouts:
     * reading them through `spark.read.parquet(dir)` would fold the
     * partition columns into the data files and flatten the layout — use
-    * [[compactFiles]], which compacts partition-by-partition.
+    * [[compactFiles]], which compacts partition-by-partition. An append
+    * that races the compaction aborts it ([[unraced]]).
     */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
       targetMB: Int = 512): Int =
@@ -300,17 +305,19 @@ object Writers {
           .mkString(", ")}…) — in-place compaction would flatten the " +
           "layout; use compactFiles, which preserves it partition-by-" +
           "partition")
-      val bytes = fs.getContentSummary(path).getLength
-      val n = math.max(1, math.ceil(bytes / (targetMB * 1024.0 * 1024.0)).toInt)
-      spark.read.parquet(dir)
-        // coalesce, not repartition: a narrow concat of input partitions —
-        // compaction has no reason to pay a full re-exchange of the table
-        // (same rule as [[compactFiles]], the to-a-new-dir sibling)
-        .coalesce(n)
-        .write.mode("overwrite")
-        .option("compression", DefaultCompression)
-        .parquet(stage)
-      n
+      unraced(fs, path) { _ =>
+        val bytes = fs.getContentSummary(path).getLength
+        val n = math.max(1, math.ceil(bytes / (targetMB * 1024.0 * 1024.0)).toInt)
+        spark.read.parquet(dir)
+          // coalesce, not repartition: a narrow concat of input partitions —
+          // compaction has no reason to pay a full re-exchange of the table
+          // (same rule as [[compactFiles]], the to-a-new-dir sibling)
+          .coalesce(n)
+          .write.mode("overwrite")
+          .option("compression", DefaultCompression)
+          .parquet(stage)
+        n
+      }
     }
 
   /** Latest-wins UPSERT (merge-on-write, SCD type 1) without a table
@@ -461,11 +468,9 @@ object Writers {
     * Callers must quiesce writers to the table first — see
     * [[graft.streaming.StreamingCuration.compactState]]'s lock for the
     * streaming case. As a backstop against a writer that slipped past
-    * that contract, the table dir's file listing (partition dirs
-    * included) is re-verified immediately before the swap: if it
-    * changed since the snapshot read, the compaction ABORTS loudly
-    * (stage deleted, original untouched) instead of silently dropping
-    * the concurrent append.
+    * that contract, the compacted copy is written under [[unraced]]:
+    * an append that lands meanwhile aborts the compaction loudly (stage
+    * deleted, original untouched) instead of being silently dropped.
     *
     * The catalog entry is dropped just before the swap. A crash from
     * there until the re-CREATE leaves the data durable (at `path` or,
@@ -483,37 +488,30 @@ object Writers {
       .filter(_.isPartition).map(_.name).headOption
     val schema = spark.table(table).schema
     val schemaDdl = replaceDir(spark, path) { stage =>
-      val listing0 = dataListing(fs, p)
-      // a plain read of the files: over a bucketed scan the planner
-      // drops the bucket-hash repartition below as redundant, then
-      // drops the bucketed scan as unneeded, and every task writes
-      // every bucket
-      val snap = spark.read.schema(schema).parquet(path)
-      val newest = part.toSeq.flatMap(c => listing0.map(_._1)
-        .collect { case f if f.startsWith(s"$c=") =>
-          f.drop(c.length + 1).takeWhile(_ != '/').toLong })
-        .maxOption
-      val folded = (part, newest) match {
-        case (Some(c), Some(n)) => snap.withColumn(c, greatest(col(c), lit(n - 1)))
-        case _ => snap
+      unraced(fs, p) { listing0 =>
+        // a plain read of the files: over a bucketed scan the planner
+        // drops the bucket-hash repartition below as redundant, then
+        // drops the bucketed scan as unneeded, and every task writes
+        // every bucket
+        val snap = spark.read.schema(schema).parquet(path)
+        val newest = part.toSeq.flatMap(c => listing0.map(_._1)
+          .collect { case f if f.startsWith(s"$c=") =>
+            f.drop(c.length + 1).takeWhile(_ != '/').toLong })
+          .maxOption
+        val folded = (part, newest) match {
+          case (Some(c), Some(n)) => snap.withColumn(c, greatest(col(c), lit(n - 1)))
+          case _ => snap
+        }
+        spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
+        folded.repartition(buckets, col(keyCol)).write.mode("overwrite")
+          .option("compression", compression)
+          .option("path", stage)
+          .partitionBy(part.toSeq: _*)
+          .bucketBy(buckets, keyCol).sortBy(keyCol)
+          .format("parquet")
+          .saveAsTable(tmpTbl)
+        spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
       }
-      spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
-      folded.repartition(buckets, col(keyCol)).write.mode("overwrite")
-        .option("compression", compression)
-        .option("path", stage)
-        .partitionBy(part.toSeq: _*)
-        .bucketBy(buckets, keyCol).sortBy(keyCol)
-        .format("parquet")
-        .saveAsTable(tmpTbl)
-      spark.sql(s"DROP TABLE IF EXISTS `$tmpTbl`")
-      // concurrent-writer backstop: the stage was derived from the
-      // listing as of `listing0`; any change since means an append raced
-      // the compaction and the swap could drop its files
-      if (dataListing(fs, p) != listing0)
-        throw new IllegalStateException(
-          s"compact: $path changed while the compacted copy was being " +
-            "written (a concurrent append?) — aborting with the original " +
-            "table untouched; quiesce writers and re-run")
       // a MANAGED original's files go with this drop — its rows are
       // already durable in the stage
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
@@ -525,9 +523,29 @@ object Writers {
     dataListing(fs, p).count(_._1.endsWith(".parquet"))
   }
 
+  /** The concurrent-writer backstop of every in-place compaction
+    * ([[compact]], [[compactBucketedTable]], `IvfStore.compact`), run
+    * inside [[replaceDir]]'s write step: `body` derives the compacted
+    * copy from the table at `p` as [[dataListing]] lists it (passed in)
+    * and, if the listing changed by the time `body` returns, an append
+    * raced the compaction and the swap would delete its files, so this
+    * throws (the stage is deleted, the original untouched).
+    */
+  private[graft] def unraced[A](fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path)(body: Seq[(String, Long)] => A): A = {
+    val before = dataListing(fs, p)
+    val out = body(before)
+    if (dataListing(fs, p) != before)
+      throw new IllegalStateException(
+        s"compact: $p changed while the compacted copy was being " +
+          "written (a concurrent append?) — aborting with the original " +
+          "table untouched; quiesce writers and re-run")
+    out
+  }
+
   /** Sorted (path relative to `p`, length) of the data files under `p`,
-    * partition dirs included — the fingerprint [[compactBucketedTable]]
-    * compares to detect a writer that raced the compaction.
+    * partition dirs included — the fingerprint [[unraced]] compares to
+    * detect a writer that raced a compaction.
     */
   private def dataListing(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Seq[(String, Long)] = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Pins, Tables}
 import graft.functions.{Fns, MinHashSig => MinHashSigExpr}
+import graft.plans.Clones
 import graft.queries.Q
 
 /** Deduplication operators for LLM training-data pipelines, over the
@@ -382,9 +383,9 @@ object Dedup {
     * on a clone-heavy corpus the direct form pays Σ(clone-group size)²
     * join rows PER GRAM POSITION (every gram of every clone matches
     * every other clone — the worst case the 10×-replica rehearsal
-    * corpus IS by construction). Collapse exact clones (md5(text), min
-    * doc_id represents) BEFORE the gram join, run the reduction over
-    * unique texts only, then reconstruct members afterwards:
+    * corpus IS by construction). Collapse exact clones
+    * ([[graft.plans.Clones]]) BEFORE the gram join, run the reduction
+    * over unique texts only, then reconstruct members afterwards:
     *  - cross-group rep spans expand to every member combination with
     *    the rep offsets (identical texts ⇒ identical positions),
     *    orientation re-canonicalized to d1 < d2;
@@ -398,42 +399,13 @@ object Dedup {
   def exactSubstringSpansPrecollapsed(df: DataFrame,
       minRun: Int = ExactSubstringMinRun,
       maxDf: Int = DefaultMaxShingleDf): DataFrame = {
-    val fp = df.select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
-    val groups = fp.groupBy(col("fp")).agg(min(col("doc_id")).as("rep"))
-    // the membership maps have one row per UNIQUE text — corpus
-    // cardinality, NOT a small table (billions of rows at 100 TB, far
-    // past any broadcast limit) — so they join the plain shuffle way,
-    // exactly as dedupGroupsPrecollapsed / q147 already do; AQE still
-    // broadcasts when runtime stats say a side is genuinely tiny
-    val members = fp.select(col("doc_id"), col("fp"))
-      .join(groups, Seq("fp"))
-      .select(col("doc_id"), col("rep"))
-    val reps = fp
-      .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("text"))
-    val repSpans = exactSubstringSpans0(reps, minRun, maxDf)
-    val cross = repSpans
-      .join(members.select(col("rep").as("d1"), col("doc_id").as("m1")), Seq("d1"))
-      .join(members.select(col("rep").as("d2"), col("doc_id").as("m2")), Seq("d2"))
-      .select(
-        least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"),
-        when(col("m1") < col("m2"), col("p1")).otherwise(col("p2")).as("p1"),
-        when(col("m1") < col("m2"), col("p2")).otherwise(col("p1")).as("p2"),
-        col("len"))
+    val c = Clones.collapse(df, "text")
     // intra-group: identical texts share everything — one whole-doc
-    // span per member pair (group sizes are exactly the clone
-    // multiplicity; the pair fan-out is the output's own size)
-    val ntok = reps.select(col("doc_id").as("rep_nt"),
-      size(TextOps.tokens(col("text"))).cast("long").as("ntok"))
-    val intra = members.as("a")
-      .join(members.as("b"), col("a.rep") === col("b.rep")
-        && col("a.doc_id") < col("b.doc_id"))
-      .join(ntok.filter(col("ntok") >= minRun),
-        col("a.rep") === col("rep_nt"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        lit(1L).as("p1"), lit(1L).as("p2"), col("ntok").as("len"))
-    cross.unionByName(intra)
+    // span per member pair when the text reaches minRun
+    val whole = c.reps.select(col("doc_id").as("rep"), lit(1L).as("p1"),
+        lit(1L).as("p2"), size(TextOps.tokens(col("text"))).cast("long").as("len"))
+      .filter(col("len") >= minRun)
+    c.pairs(exactSubstringSpans0(c.reps, minRun, maxDf), whole, Seq("p1" -> "p2"))
       .orderBy(col("d1"), col("d2"), col("p1"), col("p2"))
   }
 
@@ -451,7 +423,8 @@ object Dedup {
     * cross-group span intervals (identical texts ⇒ identical offsets,
     * every partner contributes the same rep-level interval). So the
     * merge runs over UNIQUE-text spans only and members are labeled by
-    * one shuffle join on fp. Value-identical to deriving from the direct
+    * one shuffle join on doc_id against the clone groups
+    * ([[graft.plans.Clones]]). Value-identical to deriving from the direct
     * span list — the q139 == q137 equality transfers interval-for-
     * interval (DedupSpec pins the values; the oracle derives from the
     * direct reduction). At the 30x clone rehearsal the direct derivation
@@ -461,19 +434,8 @@ object Dedup {
   def exactSubstringCoverage(df: DataFrame,
       minRun: Int = ExactSubstringMinRun,
       maxDf: Int = DefaultMaxShingleDf): DataFrame = {
-    val fp = df.select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
-    val groups = fp.groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("sz"))
-    // membership maps are corpus-cardinality (one row per unique
-    // text): plain shuffle joins, never forced broadcast — the q139
-    // rule above
-    val members = fp.select(col("doc_id"), col("fp"))
-      .join(groups, Seq("fp"))
-      .select(col("doc_id"), col("rep"), col("sz"))
-    val reps = fp
-      .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("text"))
-    val repSpans = exactSubstringSpans0(reps, minRun, maxDf)
+    val c = Clones.collapse(df, "text")
+    val repSpans = exactSubstringSpans0(c.reps, minRun, maxDf)
     val sp = repSpans
       .select(col("d1").as("rep"), col("p1").as("s"),
         (col("p1") + col("len") - 1).as("e"))
@@ -485,7 +447,7 @@ object Dedup {
     spreadWide(df)
       .select(col("doc_id"),
         size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"))
-      .join(members.select(col("doc_id"), col("rep"), col("sz")), Seq("doc_id"))
+      .join(c.members, Seq("doc_id"))
       .join(repCov, Seq("rep"), "left")
       .select(col("doc_id"), col("n_tokens"),
         when(col("sz") >= 2 && col("n_tokens") >= minRun, col("n_tokens"))
@@ -522,7 +484,8 @@ object Dedup {
     *    group's rep — its min — does, which is the span's
     *    canonicalization);
     * so the interval merge runs over UNIQUE-text spans only, members
-    * are labeled by one shuffle join on fp, and the per-doc cut is a
+    * are labeled by one shuffle join on doc_id against the clone groups
+    * ([[graft.plans.Clones]]), and the per-doc cut is a
     * map-side COMPILED two-pointer pass (the native IntervalCut
     * expression — O(tokens + intervals) per doc, replacing the
     * interpreted filter/exists HOF pair) against the doc's own (merged,
@@ -534,17 +497,8 @@ object Dedup {
   def exactSubstringRemove(df: DataFrame,
       minRun: Int = ExactSubstringMinRun,
       maxDf: Int = DefaultMaxShingleDf): DataFrame = {
-    val fp = df.select(col("doc_id"), col("text"), md5(col("text")).as("fp"))
-    val groups = fp.groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("sz"))
-    // corpus-cardinality membership maps: plain shuffle joins (q139 rule)
-    val members = fp.select(col("doc_id"), col("fp"))
-      .join(groups, Seq("fp"))
-      .select(col("doc_id"), col("rep"), col("sz"))
-    val reps = fp
-      .join(groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("text"))
-    val repSpans = exactSubstringSpans0(reps, minRun, maxDf)
+    val c = Clones.collapse(df, "text")
+    val repSpans = exactSubstringSpans0(c.reps, minRun, maxDf)
     val cut = repSpans.select(col("d2").as("rep"), col("p2").as("s"),
       (col("p2") + col("len") - 1).as("e"))
     val ivs = mergeIntervals(cut, "rep")
@@ -553,7 +507,7 @@ object Dedup {
         col("mx").cast("long").as("mx")))).as("ivs"))
     spreadWide(df)
       .select(col("doc_id"), TextOps.tokens(col("text")).as("ts"))
-      .join(members, Seq("doc_id"))
+      .join(c.members, Seq("doc_id"))
       .join(ivs, Seq("rep"), "left")
       .select(col("doc_id"), col("rep"), col("sz"), col("ts"), col("ivs"),
         size(col("ts")).cast("long").as("n_tokens"))
@@ -857,26 +811,22 @@ object Dedup {
     * exact duplication — at 100 TB this is the more faithful df, and
     * the cheaper one.
     *
-    * Scale shape: the collapse is a slim (doc_id, md5) groupBy with
-    * map-side combine — text never rides its exchange (reps rejoin by
-    * left_semi on doc_id); the expand is one broadcast-able join of
-    * per-doc (rep) against the rep-level component labels.
+    * Scale shape: the collapse ([[graft.plans.Clones]]) is a slim
+    * (doc_id, md5) groupBy with map-side combine — text never rides its
+    * exchange (reps rejoin by left_semi on doc_id); the expand is one
+    * join of per-doc (rep) against the rep-level component labels.
     */
   def dedupGroupsPrecollapsed(df: DataFrame, minJaccard: Double,
       maxDf: Int = DefaultMaxShingleDf): DataFrame = {
-    val keyed = df.select(col("doc_id"), md5(col("text")).as("ek"))
-    val grp = keyed.groupBy(col("ek"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("cnt"))
-    val reps = df.join(
-      grp.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-    val repComp = connectedComponents(hashJaccardPairs(reps, minJaccard, maxDf))
+    val c = Clones.collapse(df, "text")
+    val repComp = connectedComponents(hashJaccardPairs(c.reps, minJaccard, maxDf))
       .select(col("node").as("rep"), col("comp"))
-    keyed.join(grp, Seq("ek"))
+    c.members
       .join(repComp, Seq("rep"), "left")
       // exact-dup members cluster with their rep even when the rep has
       // no near-dup edges; unique singletons stay out (q56's contract:
       // only docs with at least one duplicate relation appear)
-      .filter(col("cnt") > 1 || col("comp").isNotNull)
+      .filter(col("sz") > 1 || col("comp").isNotNull)
       .select(col("doc_id"), coalesce(col("comp"), col("rep")).as("comp"))
   }
 
@@ -1568,42 +1518,20 @@ object Dedup {
     * AllPairs reduction over UNIQUE texts only, then expand members
     * after: a cross-group rep pair holds for every member pair at the
     * SAME jaccard (identical shingle sets), and an intra-group pair is
-    * jaccard 1.0 whenever the clone text has any shingle at all. The
-    * expansion joins are output-sized — unavoidable, the answer itself
-    * is quadratic in clone multiplicity — but nothing quadratic enters
-    * a shuffle key group or a join build side.
+    * jaccard 1.0 whenever the clone text has any shingle at all
+    * ([[graft.plans.Clones.pairs]]).
     */
   def prefixFilteredJaccardPairsPrecollapsed(docsDf: DataFrame,
       minJaccard: Double): DataFrame = {
-    val keyed = docsDf
-      .select(col("doc_id"), md5(col("text")).as("k"))
-    val groups = keyed.groupBy(col("k"))
-      .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("m"))
-    val members = keyed.join(groups, Seq("k"))
-      .select(col("doc_id"), col("rep"))
-    val repCorpus = docsDf.join(
-      groups.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
-    val repPairs = prefixFilteredJaccardPairs(repCorpus, minJaccard)
-    val cross = repPairs
-      .join(members.select(col("rep").as("d1"), col("doc_id").as("m1")),
-        Seq("d1"))
-      .join(members.select(col("rep").as("d2"), col("doc_id").as("m2")),
-        Seq("d2"))
-      .select(least(col("m1"), col("m2")).as("d1"),
-        greatest(col("m1"), col("m2")).as("d2"), col("jaccard"))
+    val c = Clones.collapse(docsDf, "text")
     // intra-group: every member pair of a clone group whose text has at
     // least one shingle (docs under 3 tokens have no shingle set and are
     // outside the contract in both engines)
-    val shingled = repCorpus
+    val shingled = c.reps
       .filter(size(TextOps.tokens(col("text"))) >= 3)
-      .select(col("doc_id").as("rep"))
-    val intra = members.join(shingled, Seq("rep"), "left_semi").as("a")
-      .join(members.as("b"),
-        col("a.rep") === col("b.rep") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-        lit(1.0).as("jaccard"))
-    cross.union(intra).orderBy(col("d1"), col("d2"))
+      .select(col("doc_id").as("rep"), lit(1.0).as("jaccard"))
+    c.pairs(prefixFilteredJaccardPairs(c.reps, minJaccard), shingled)
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** q143's oracle, shared verbatim by the precollapsed form (q147):

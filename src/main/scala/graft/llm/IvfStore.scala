@@ -163,20 +163,25 @@ object IvfStore {
     * ~sqrt(corpus) rows per file). The compacted layout replaces
     * `cells` through [[graft.etl.Writers.replaceDir]]; [[recover]]
     * heals a crash. Callers must quiesce appenders first (same contract
-    * as compactBucketedTable). Returns the new data-file count.
+    * as compactBucketedTable); an append that races the compaction
+    * aborts it ([[graft.etl.Writers.unraced]]). Returns the new data-file
+    * count.
     */
   def compact(spark: SparkSession, dir: String): Int = {
     val cells = s"$dir/cells"
-    Writers.replaceDir(spark, cells) { stage =>
-      spark.read.parquet(cells)
-        .repartition(col("cell"))
-        .write.mode("overwrite")
-        .option("compression", Writers.DefaultCompression)
-        .partitionBy("cell")
-        .parquet(stage)
-    }
     val p = new org.apache.hadoop.fs.Path(cells)
-    dataFileCount(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Writers.replaceDir(spark, cells) { stage =>
+      Writers.unraced(fs, p) { _ =>
+        spark.read.parquet(cells)
+          .repartition(col("cell"))
+          .write.mode("overwrite")
+          .option("compression", Writers.DefaultCompression)
+          .partitionBy("cell")
+          .parquet(stage)
+      }
+    }
+    dataFileCount(fs, p)
   }
 
   /** [[graft.etl.Writers.recoverDir]] on `cells`: returns true if a copy

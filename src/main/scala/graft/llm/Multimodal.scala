@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.core.Tables
 import graft.functions.Fns
+import graft.plans.Clones
 import graft.queries.Q
 
 /** Multimodal-column plumbing: image/audio/video as opaque binary
@@ -277,43 +278,20 @@ object Multimodal {
     * exact-duplicate payload group (31.0 s, 433 MB shuffle, 1.07 GB
     * peak task memory at 10x); collapsing first removes the clone
     * factor from the join entirely and reconstructs the same answer
-    * with one md5 aggregate + two member joins. Same output contract —
-    * MultimodalSpec pins equality and q134 runs under q132's oracle
-    * verbatim (the q74/q56 convention).
+    * with one md5 aggregate + two member joins ([[graft.plans.Clones]]).
+    * Same output contract — MultimodalSpec pins equality and q134 runs
+    * under q132's oracle verbatim (the q74/q56 convention).
     */
   def clipSimilarityPairsPrecollapsed(media: DataFrame, minSim: Double,
       grid: Int = FrameGrid): DataFrame = {
-    val keyed = media.select(col("doc_id"), col("media"),
-      md5(col("media")).as("mk"))
-    val reps = keyed.groupBy(col("mk")).agg(min(col("doc_id")).as("rep_id"))
-    val members = keyed.select(col("mk"), col("doc_id"))
-    val repMedia = keyed.join(reps, Seq("mk"))
-      .filter(col("doc_id") === col("rep_id"))
-      .select(col("doc_id"), col("media"), col("mk"))
-    val rp = clipSimilarityPairs(
-      repMedia.select(col("doc_id"), col("media")), minSim, grid)
+    val c = Clones.collapse(media, "media")
     // groups whose clip has at least one live (non-degenerate) frame
-    val live = frameHashes(repMedia.select(col("doc_id"), col("media")), grid)
+    val live = frameHashes(c.reps, grid)
       .filter(col("fhash") =!= 0L)
-      .select(col("doc_id")).distinct()
-      .join(repMedia.select(col("doc_id"), col("mk")), Seq("doc_id"))
-      .select(col("mk"))
-    val mkOf = repMedia.select(col("doc_id").as("rid"), col("mk"))
-    // cross-group expansion: every member pair across the two groups
-    val cross = rp
-      .join(mkOf.select(col("rid").as("d1"), col("mk").as("mk1")), Seq("d1"))
-      .join(mkOf.select(col("rid").as("d2"), col("mk").as("mk2")), Seq("d2"))
-      .join(members.select(col("mk").as("mk1"), col("doc_id").as("a")), Seq("mk1"))
-      .join(members.select(col("mk").as("mk2"), col("doc_id").as("b")), Seq("mk2"))
-      .select(least(col("a"), col("b")).as("d1"),
-        greatest(col("a"), col("b")).as("d2"), col("sim"))
-    // within-group expansion: byte-identical members pair at sim 1.0
-    val within = members.join(live, Seq("mk"))
-      .select(col("mk"), col("doc_id").as("a"))
-      .join(members.select(col("mk"), col("doc_id").as("b")), Seq("mk"))
-      .filter(col("a") < col("b"))
-      .select(col("a").as("d1"), col("b").as("d2"), lit(1.0).as("sim"))
-    cross.unionByName(within).orderBy(col("d1"), col("d2"))
+      .select(col("doc_id").as("rep")).distinct()
+      .select(col("rep"), lit(1.0).as("sim"))
+    c.pairs(clipSimilarityPairs(c.reps, minSim, grid), live)
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** Shared oracle CTE: rebuild the gradient perceptual hash in SQL from

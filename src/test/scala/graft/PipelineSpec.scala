@@ -15,7 +15,9 @@ import graft.ingest.Ingestor
   */
 class PipelineSpec extends AnyFunSuite with TestSpark {
 
-  test("config to optimized parquet end to end") {
+  /** Serve a 3-row rent_contracts.csv from a loopback server for as long
+    * as `body` runs; `body` gets the parameters.json that names it. */
+  private def withConfig(body: String => Unit): Unit = {
     val csv =
       """id,name,name_ar,qty
         |1,alpha,x,5
@@ -33,14 +35,20 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
     server.start()
     try {
       val base = s"http://127.0.0.1:${server.getAddress.getPort}"
-      val landing = Files.createTempDirectory("graft-pipe-land").toString
-      val out = Files.createTempDirectory("graft-pipe-out").toString
       val cfg = Files.createTempFile("graft-pipe-params", ".json")
       Files.writeString(cfg,
         s"""{"file_urls": ["$base/dl/rent_contracts.csv"],
            |  "s3_path_prefix": "raw", "concurrency": 1}""".stripMargin)
+      body(cfg.toString)
+    } finally server.stop(0)
+  }
 
-      val (report, tables) = Pipeline.run(spark, cfg.toString, landing, out)
+  test("config to optimized parquet end to end") {
+    withConfig { cfg =>
+      val landing = Files.createTempDirectory("graft-pipe-land").toString
+      val out = Files.createTempDirectory("graft-pipe-out").toString
+
+      val (report, tables) = Pipeline.run(spark, cfg, landing, out)
       assert(report.failed.isEmpty, report.failed.mkString("; "))
       // the CSV landed under the dated raw layout before preprocessing
       assert(new java.io.File(
@@ -61,7 +69,36 @@ class PipelineSpec extends AnyFunSuite with TestSpark {
       assert(spark.read.parquet(s"$out/rent_contracts/quarantine").count() == 0)
       // kept + quarantined == ingested rows (the audit invariant)
       assert(t.rows + t.quarantined == 3)
-    } finally server.stop(0)
+    }
+  }
+
+  test("a same-day re-run replaces its own ingest_date partition and " +
+      "keeps other days'") {
+    withConfig { cfg =>
+      val landing = Files.createTempDirectory("graft-pipe-land").toString
+      val out = Files.createTempDirectory("graft-pipe-out").toString
+      for (run <- 1 to 2) {
+        val t = Pipeline.run(spark, cfg, landing, out)._2.head
+        assert(t.rows == 3 && t.quarantined == 0, s"run $run: $t")
+        assert(t.rows + t.quarantined == 3, s"run $run: $t")
+      }
+      // an earlier day's partition survives a re-run of today
+      val optimized = s"$out/rent_contracts/optimized"
+      val today = new java.io.File(optimized).listFiles()
+        .map(_.getName).filter(_.startsWith("ingest_date=")).toSeq
+      assert(today.size == 1, s"partitions: $today")
+      val earlier = java.nio.file.Paths.get(optimized, "ingest_date=2000-01-01")
+      Files.createDirectories(earlier)
+      Files.list(java.nio.file.Paths.get(optimized, today.head))
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .forEach(f => Files.copy(f, earlier.resolve(f.getFileName)))
+      Pipeline.run(spark, cfg, landing, out)
+      val byDay = spark.read.parquet(optimized)
+        .groupBy("ingest_date").count().collect()
+        .map(r => r.get(0).toString -> r.getLong(1)).toMap
+      assert(byDay.values.toSeq == Seq(3L, 3L) &&
+        byDay.contains("2000-01-01"), s"rows per day: $byDay")
+    }
   }
 
   test("dq pack writes the full audit set for a table") {

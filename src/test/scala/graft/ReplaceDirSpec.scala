@@ -12,6 +12,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Writers
+import graft.llm.IvfStore
 
 /** Runs a hook on the driver right after a write job commits — the
   * instant a concurrent appender would land between a compaction's
@@ -54,6 +55,31 @@ class ReplaceDirSpec extends AnyFunSuite with TestSpark {
     Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
       .map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq)
       .toMap
+  }
+
+  /** Run `compaction` while a racer drops a file at `racer` right after
+    * the compacted copy commits: the compaction must abort with the
+    * live dir `live` byte-identical apart from the racer's file, which
+    * survives, and no stage or set-aside copy left behind. */
+  private def assertRaceAborts(live: String, racer: java.nio.file.Path)(
+      compaction: => Unit): Unit = {
+    val protocolConf = "spark.sql.sources.commitProtocolClass"
+    val protocol = spark.conf.get(protocolConf)
+    val before = bytes(live)
+    try {
+      RacingCommitProtocol.onCommit =
+        () => Files.write(racer, Array[Byte](1, 2, 3))
+      spark.conf.set(protocolConf, classOf[RacingCommitProtocol].getName)
+      val ex = intercept[IllegalStateException](compaction)
+      assert(ex.getMessage.contains("concurrent append"), ex.getMessage)
+    } finally {
+      RacingCommitProtocol.onCommit = () => ()
+      spark.conf.set(protocolConf, protocol)
+    }
+    val rel = Paths.get(live).relativize(racer).toString
+    assert(Files.exists(racer), "the racing append was deleted")
+    assert(bytes(live) - rel == before)
+    assert(!exists(Writers.swapTmp(live)) && !exists(Writers.swapOld(live)))
   }
 
   private val v1 = Set(1L -> "old")
@@ -254,5 +280,30 @@ class ReplaceDirSpec extends AnyFunSuite with TestSpark {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS ${table}_compact_tmp")
     }
+  }
+
+  test("Writers.compact aborts when an append races it: the appended " +
+      "file and the original stay") {
+    val d = liveDir()
+    spark.range(0, 100).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+      .repartition(5).write.parquet(d)
+    val racer = Paths.get(d, "part-99999-racer.c000.zstd.parquet")
+    assertRaceAborts(d, racer)(Writers.compact(spark, d))
+    Files.delete(racer)
+    assert(Writers.compact(spark, d) == 1)
+    assert(spark.read.parquet(d).count() == 100)
+  }
+
+  test("IvfStore.compact aborts when an append races it: the appended " +
+      "cell file and the original stay") {
+    val dir = Files.createTempDirectory("graft-swap-ivf").toString
+    val cells = s"$dir/cells"
+    spark.range(0, 100).selectExpr("id AS vec_id", "id % 4 AS cell")
+      .repartition(5).write.partitionBy("cell").parquet(cells)
+    val racer = Paths.get(cells, "cell=0", "part-99999-racer.c000.zstd.parquet")
+    assertRaceAborts(cells, racer)(IvfStore.compact(spark, dir))
+    Files.delete(racer)
+    assert(IvfStore.compact(spark, dir) == 4)
+    assert(spark.read.parquet(cells).count() == 100)
   }
 }
